@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
   *    rows before the final window. Equality with topKWindow is asserted
   *    in SimilaritySpec.
   * Both order by (cosine desc, neighbor_id asc) so results are fully
-  * deterministic under ties.
+  * deterministic under ties. The heaps are [[partitionTopK]], the one
+  * per-partition kernel behind every JVM top-k surface: exact
+  * (topKPartitioned, Gold.search) and IVF-probed (ivfTopK,
+  * Gold.searchIvf). [[kmeansCentroids]] shares its centroid assignment.
   */
 object Similarity {
 
@@ -42,84 +45,54 @@ object Similarity {
   }
 
   /** Map-side top-k: each partition keeps a bounded worst-first heap per
-    * query, so only |partitions|·|queries|·k candidate rows shuffle. The
-    * dot/norm accumulation is sequential IEEE double, identical to the
-    * HOF expression in [[topKWindow]].
+    * query ([[partitionTopK]]), so only |partitions|·|queries|·k
+    * candidate rows shuffle into the final rank window. The dot/norm
+    * accumulation is sequential IEEE double, identical to the HOF
+    * expression in [[topKWindow]].
     *
     * Scale bound: the query side is collected and broadcast — memory is
     * O(|queries|·dim) on driver and executors, NOT corpus-sized. That is
     * the operator's contract (a query batch against a huge corpus, the
     * reference's retrieval shape); for query sets too large to broadcast,
-    * use the bucketed pair join (q40's LSH form) instead. */
+    * use the bucketed pair join (q40's LSH form) instead. Every corpus
+    * vector must have the queries' length (checked per row). */
   def topKPartitioned(spark: SparkSession, queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    val qs: Array[(Long, Array[Float])] = queries
-      .filter(col("qv").isNotNull)
-      .select(col("query_id"), col("qv")).as[(Long, Array[Float])].collect()
-    val qBc = spark.sparkContext.broadcast(qs)
-
-    val partial = corpus.filter(col("cv").isNotNull)
-      .select(col("neighbor_id"), col("cv")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val qarr = qBc.value
-        // hoist the query ids/vectors/norms into flat arrays so the
-        // per-pair loop does no tuple destructuring — the loop body is
-        // the sequential-double dot alone (the kernel runs n·|Q| times;
-        // at the definitional q24 batch that is the whole operator)
-        val nq = qarr.length
-        val qids = new Array[Long](nq)
-        val qvs = new Array[Array[Float]](nq)
-        val qnorm = new Array[Double](nq)
-        var j = 0
-        while (j < nq) {
-          qids(j) = qarr(j)._1; qvs(j) = qarr(j)._2
-          qnorm(j) = math.sqrt(sumsq(qvs(j))); j += 1
-        }
-        // per-query bounded heap ordered worst-first
-        val heaps = Array.fill(nq)(
-          collection.mutable.PriorityQueue.empty[(Double, Long)](
-            Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-        for ((nid, cv) <- it) {
-          val cn = math.sqrt(sumsq(cv))
-          var qi = 0
-          while (qi < nq) {
-            if (qids(qi) != nid) {
-              val raw = dot(qvs(qi), cv) / (qnorm(qi) * cn)
-              // same NaN guard as guardedSim: a zero-norm vector must
-              // never beat a real candidate in the heap comparison
-              val c = if (raw.isNaN) Double.NegativeInfinity else raw
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue((c, nid))
-              else {
-                val (wc, wid) = h.head
-                if (c > wc || (c == wc && nid < wid)) { h.dequeue(); h.enqueue((c, nid)) }
-              }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (c, nid) => (qids(qi), nid, c) }
-        }
-      }.toDF("query_id", "neighbor_id", "cosine")
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    partial.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
+    val (qids, qvs) = collectQueries(queries)
+    rankedFrame(spark, corpus, qids, qvs, k, None)
   }
 
-  /** IVF (inverted-file) approximate top-k: corpus is pre-partitioned by
-    * nearest centroid; a query probes its `nprobe` nearest centroids'
-    * partitions (the standard ANN recall/cost knob — each +1 adds one
-    * more 1/|centroids| corpus slice per query). At 100 TB this turns a
-    * full-corpus scan per query into an nprobe/|centroids| partition
-    * scan. Recall monotonicity in nprobe is asserted in SimilaritySpec.
+  /** IVF (inverted-file) approximate top-k: each corpus vector belongs to
+    * its nearest centroid's partition; a query probes its `nprobe`
+    * nearest centroids' partitions (the standard ANN recall/cost knob —
+    * each +1 adds one more 1/|centroids| corpus slice per query). At
+    * 100 TB this turns a full-corpus scan per query into an
+    * nprobe/|centroids| partition scan. Recall monotonicity in nprobe is
+    * asserted in SimilaritySpec.
     *
-    * centroids: (centroid_id: Long, cvec: Array[Float]) — small,
-    * broadcast (use [[kmeansCentroids]] to train them). Returns the same
-    * shape as [[topKWindow]]. */
+    * centroids: (centroid_id: Long, cvec: Array[Float]) — small, collected
+    * with the queries (use [[kmeansCentroids]] to train them). The probe
+    * lists are chosen on the driver ([[ivfProbe]]); the corpus side runs
+    * in the same per-partition heap kernel as [[topKPartitioned]], which
+    * assigns each row to its nearest centroid and scores it only for the
+    * queries probing that centroid. Both sides use [[guardedCosine]]'s
+    * arithmetic and tiebreaks — centroid assignment is [[nearestCentroid]]'s
+    * (max cosine, lowest centroid_id), probe selection is
+    * [[assignProbes]]'s — so the result equals the relational form
+    * (nearestCentroid ⋈ assignProbes → rank window) and the streamed
+    * index search (StreamingSpec pins it). Returns the same shape as
+    * [[topKWindow]]. NULL vectors are excluded on both sides as in the
+    * other top-k forms; ids must be unique per side. */
+  def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame, k: Int,
+              nprobe: Int = 1): DataFrame = {
+    val (qids, qvs) = collectQueries(queries)
+    val cents = centroids.orderBy(col("centroid_id")).select(col("centroid_id"), col("cvec"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    require(cents.map(_._1).distinct.length == cents.length, "ivfTopK: duplicate centroid_id")
+    require(cents.forall(_._2 != null), "ivfTopK: NULL cvec centroid")
+    rankedFrame(queries.sparkSession, corpus, qids, qvs, k,
+      Some(ivfProbe(qvs, cents.map(_._2.toArray), nprobe)))
+  }
+
   /** Nearest-centroid assignment by a map-side-combinable aggregation:
     * `min(struct(-casim, centroid_id, payload…))` picks the
     * (max-cosine, min-centroid_id) winner per id with PARTIAL
@@ -155,7 +128,8 @@ object Similarity {
     * first under desc) or a min-struct agg (NaN sorts last). Public so
     * every ranking surface (ivfTopK, the streamed-index search) applies
     * the SAME guard — a divergence here would silently change top-k
-    * results between the batch and index paths. */
+    * results between the batch and index paths. [[cosine]] is its
+    * scalar twin for the JVM kernels. */
   def guardedCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     nanvl(graft.plans.GraftExpressions.cosineSimNative(a, b), lit(Double.NegativeInfinity))
   private def guardedSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -178,49 +152,165 @@ object Similarity {
       .drop("casim", "_rk", "cvec")
   }
 
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame, k: Int,
-              nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  // ------------------------------------------------ the JVM vector kernels
+
+  /** Guarded cosine over two equal-length vectors with precomputed norms:
+    * the arithmetic of [[guardedCosine]] (sequential double dot divided by
+    * the product of the two norms, NaN → -Infinity), bit for bit. */
+  private def cosine(a: Array[Float], an: Double, b: Array[Float], bn: Double): Double = {
+    val c = dot(a, b) / (an * bn)
+    if (c.isNaN) Double.NegativeInfinity else c
+  }
+
+  /** Spark's (cosine desc, id asc) rank order: true iff (c1, id1) ranks
+    * before (c2, id2). Primitive comparisons on purpose — -0.0 and 0.0
+    * tie as under Spark's `compareDoubles`, where `Double.compare` (and
+    * `Ordering.Double.TotalOrdering`) would split them. Cosines reach it
+    * NaN-guarded, so the primitive order is total. */
+  private[graft] def ranksBefore(c1: Double, id1: Long, c2: Double, id2: Long): Boolean =
+    c1 > c2 || (c1 == c2 && id1 < id2)
+
+  /** Bounded top-k in [[ranksBefore]] order; the head is the current
+    * worst, so a full heap admits a row only if it ranks before the head. */
+  private[graft] final class TopKHeap[P](k: Int) {
+    private val q = new java.util.PriorityQueue[(Double, Long, P)](
+      (a: (Double, Long, P), b: (Double, Long, P)) =>
+        if (ranksBefore(a._1, a._2, b._1, b._2)) 1
+        else if (ranksBefore(b._1, b._2, a._1, a._2)) -1 else 0)
+    def offer(c: Double, id: Long, payload: P): Unit =
+      if (q.size < k) q.add((c, id, payload))
+      else if (ranksBefore(c, id, q.peek._1, q.peek._2)) { q.poll(); q.add((c, id, payload)) }
+    def iterator: Iterator[(Double, Long, P)] = {
+      import scala.jdk.CollectionConverters._
+      q.iterator.asScala
+    }
+  }
+
+  /** The corpus side of an IVF probe: centroids (index = rank of the
+    * centroid_id) and, per centroid, the queries that probe it. */
+  private[graft] final case class IvfProbe(cents: Array[Array[Float]], queriesOf: Array[Array[Int]])
+
+  /** Each query's top-`nprobe` centroids by (guarded cosine desc,
+    * centroid index asc) — [[assignProbes]]'s window order — inverted
+    * into per-centroid query lists. `cents` are ordered by centroid_id. */
+  private[graft] def ivfProbe(qvs: Array[Array[Float]], cents: Array[Array[Float]],
+                              nprobe: Int): IvfProbe = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    def assign(df: DataFrame, vecCol: String, idCol: String, keep: Int): DataFrame =
-      assignProbes(df, centroids, keep, vecCol, idCol)
-    // each corpus vector lives in exactly ONE partition (agg-min, scales
-    // with partial aggregation); a query probes nprobe of them (window,
-    // query side is small), so (query, neighbor) candidates are unique
-    val corpusAssigned = nearestCentroid(corpus, centroids, "cv", "neighbor_id", Seq("cv"))
-      .drop("casim")
-    val queriesAssigned = assign(queries, "qv", "query_id", nprobe)
-    // probe: join query to its centroid's corpus partition only
-    // guardedSim here too: an unguarded NaN cosine (zero-norm corpus
-    // vector) orders largest under desc, ranking the degenerate vector
-    // top-1 for every query probing its partition
-    val cands = corpusAssigned.join(broadcast(queriesAssigned), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", guardedSim(col("qv"), col("cv")))
+    cents.foreach(checkDim(_, cents(0).length, "cvec"))
+    val cnorm = cents.map(c => math.sqrt(sumsq(c)))
+    val queriesOf = Array.fill(cents.length)(Array.newBuilder[Int])
+    if (cents.nonEmpty) for ((qv, qi) <- qvs.zipWithIndex) {
+      checkDim(qv, cents(0).length, "qv")
+      val qn = math.sqrt(sumsq(qv))
+      val sims = cents.indices.map(j => cosine(qv, qn, cents(j), cnorm(j)))
+      cents.indices.sortWith((a, b) => ranksBefore(sims(a), a, sims(b), b))
+        .take(nprobe).foreach(j => queriesOf(j) += qi)
+    }
+    IvfProbe(cents, queriesOf.map(_.result()))
+  }
+
+  /** Index of `v`'s nearest centroid: max guarded cosine, lowest index on
+    * a tie ([[nearestCentroid]]'s winner). `cents` is non-empty. */
+  private def nearest(v: Array[Float], vn: Double, cents: Array[Array[Float]],
+                      cnorm: Array[Double]): Int = {
+    var best = 0
+    var bestSim = cosine(v, vn, cents(0), cnorm(0))
+    var j = 1
+    while (j < cents.length) {
+      val c = cosine(v, vn, cents(j), cnorm(j))
+      if (c > bestSim) { bestSim = c; best = j }
+      j += 1
+    }
+    best
+  }
+
+  private def checkDim(v: Array[Float], dim: Int, column: String): Unit =
+    if (v.length != dim) throw new IllegalArgumentException(
+      s"column $column holds a vector of length ${v.length}; every vector must have length $dim")
+
+  /** THE top-k kernel, run once per corpus partition: per query a bounded
+    * [[TopKHeap]] of (guarded cosine, neighbor id, payload), skipping
+    * NULL vectors and the query's own id. With a probe, a row is first
+    * assigned to its nearest centroid and scored only for the queries
+    * probing it (IVF); without, for every query (exact). Every vector
+    * must have the queries' length — `column` names it in the error.
+    * Emits (query index, neighbor id, cosine, payload), at most
+    * |queries|·k rows. */
+  private[graft] def partitionTopK[P](rows: Iterator[(Long, Array[Float], P)],
+                                      qids: Array[Long], qvs: Array[Array[Float]], k: Int,
+                                      probe: Option[IvfProbe], column: String)
+      : Iterator[(Int, Long, Double, P)] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val nq = qvs.length
+    val dim = if (nq == 0) 0 else qvs(0).length
+    qvs.foreach(checkDim(_, dim, "qv"))
+    val qnorm = qvs.map(q => math.sqrt(sumsq(q)))
+    val everyQuery = Array.range(0, nq)
+    val cnorm = probe.map(_.cents.map(c => math.sqrt(sumsq(c))))
+    val heaps = Array.fill(nq)(new TopKHeap[P](k))
+    if (nq > 0) for ((nid, cv, payload) <- rows if cv != null) {
+      checkDim(cv, dim, column)
+      val cn = math.sqrt(sumsq(cv))
+      val scored = probe match {
+        case None => everyQuery
+        case Some(p) if p.cents.isEmpty => Array.emptyIntArray
+        case Some(p) => p.queriesOf(nearest(cv, cn, p.cents, cnorm.get))
+      }
+      var i = 0
+      while (i < scored.length) {
+        val qi = scored(i)
+        if (qids(qi) != nid) heaps(qi).offer(cosine(qvs(qi), qnorm(qi), cv, cn), nid, payload)
+        i += 1
+      }
+    }
+    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+      h.iterator.map { case (c, nid, payload) => (qi, nid, c, payload) }
+    }
+  }
+
+  /** The frame form of [[partitionTopK]] over a (neighbor_id, cv) corpus:
+    * heaps per partition, then a rank window over the survivors. */
+  private def rankedFrame(spark: SparkSession, corpus: DataFrame, qids: Array[Long],
+                          qvs: Array[Array[Float]], k: Int, probe: Option[IvfProbe]): DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast((qids, qvs, probe))
+    val partial = corpus.select(col("neighbor_id"), col("cv")).as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        val (ids, vs, p) = bc.value
+        partitionTopK(it.map { case (nid, cv) => (nid, cv, ()) }, ids, vs, k, p, "cv")
+          .map { case (qi, nid, c, _) => (ids(qi), nid, c) }
+      }.toDF("query_id", "neighbor_id", "cosine")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w))
+    partial.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
+  }
+
+  private def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Float]]) = {
+    import queries.sparkSession.implicits._
+    val qs = queries.filter(col("qv").isNotNull)
+      .select(col("query_id"), col("qv")).as[(Long, Array[Float])].collect()
+    (qs.map(_._1), qs.map(_._2))
   }
 
   /** Spherical k-means centroid training for the IVF family: deterministic
     * Lloyd iterations (no RNG — seeds are the `k` lowest-id vectors,
     * renumbered 0..k-1; ties in assignment break by centroid_id asc).
     *
-    * Scale shape: the heavy steps — nearest-centroid assignment
-    * (crossJoin against the BROADCAST k×dim centroid table) and the
-    * per-dimension mean (posexplode + two-level groupBy, map-side
-    * partial aggregation) — are fully distributed; only the k×dim
-    * centroid matrix itself is collected per iteration to re-broadcast,
-    * which also truncates the iterative lineage (the MLlib pattern). An
-    * empty cluster keeps its previous centroid.
+    * Scale shape: one Spark job per Lloyd iteration. Each partition
+    * assigns its vectors to the nearest BROADCAST centroid (the
+    * [[nearestCentroid]] winner, computed with [[guardedCosine]]'s
+    * arithmetic) and folds them into per-centroid sums; a treeAggregate
+    * merges the k×dim partial sums, and only they reach the driver,
+    * which divides once and re-broadcasts. An empty cluster keeps its
+    * previous centroid. The seeds are one more job.
     *
     * The per-dimension mean is EXACT and engine-portable: each component
     * is floored to integer micro-units (floor(x·1e6) — floor, not round,
     * because the engines disagree on rounding mode at exact halves),
-    * summed in integer arithmetic (associative, so partition order
-    * cannot change the result), and divided once as
+    * summed in integer arithmetic (`Math.addExact`; associative, so
+    * partition order cannot change the result), and divided once as
     * float((sum/count)/1e6) — both divisions correctly-rounded IEEE
     * doubles of identical integers. The trained centroids are therefore
     * BIT-IDENTICAL run-to-run and across Spark/DuckDB, which is what
@@ -228,8 +318,12 @@ object Similarity {
     * CTE. Exactness holds while Σ|x|·1e6 per (cluster, dim) < 2^53 —
     * ~9e9 unit-scale rows per cluster, far beyond any real shard.
     *
-    * vectors: (idCol: Long, vecCol: Array[Float]). Returns
-    * (centroid_id: Long 0..k-1, cvec: Array[Float]).
+    * vectors: (idCol: Long, vecCol: Array[Float]), ids unique. NULL
+    * vectors are skipped (neither seeds nor cluster members); every
+    * other vector must have the seeds' length, or training fails with
+    * an error naming `vecCol`. Returns (centroid_id: Long 0..k-1,
+    * cvec: Array[Float]) — fewer than k rows when there are fewer
+    * vectors.
     *
     * `trainSampleCap` bounds the TRAINING set (not the later corpus
     * assignment) to the `cap` vectors with the smallest
@@ -246,11 +340,20 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       trainSampleCap: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
+    trainCentroids(spark, vectors, k, iters, idCol, vecCol, trainSampleCap)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("centroid_id", "cvec")
+  }
+
+  /** [[kmeansCentroids]]' centroids as arrays, index = centroid_id. */
+  private[graft] def trainCentroids(spark: SparkSession, vectors: DataFrame, k: Int, iters: Int,
+                                    idCol: String, vecCol: String,
+                                    trainSampleCap: Long = Long.MaxValue): Array[Array[Float]] = {
+    import spark.implicits._
     require(k >= 1 && iters >= 0, s"bad kmeans config ($k,$iters)")
     val sampled = trainSampleCap != Long.MaxValue
     // repartition after the limit: a mid-plan GlobalLimit collapses to
-    // ONE partition, which would serialize every downstream assignment
-    // join; cache so the top-cap sort runs once, not once per iteration
+    // ONE partition, which would serialize every downstream Lloyd pass;
+    // cache so the top-cap sort runs once, not once per iteration
     val train =
       if (!sampled) vectors
       else vectors.orderBy(
@@ -259,29 +362,41 @@ object Similarity {
         .limit(trainSampleCap.toInt)
         .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
         .cache()
-    var cents: Array[(Long, Array[Float])] = train
+    val live = train.filter(col(vecCol).isNotNull)
+    var cents: Array[Array[Float]] = live
       .orderBy(col(idCol).asc).limit(k)
-      .select(col(idCol), col(vecCol)).as[(Long, Array[Float])].collect()
-      .zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
-    for (_ <- 1 to iters) {
-      val cdf = cents.toSeq.toDF("centroid_id", "cvec")
-      val assigned = nearestCentroid(
-        train.select(col(idCol), col(vecCol)), cdf, vecCol, idCol, Seq(vecCol))
-      val means = assigned
-        .select(col("centroid_id"), posexplode(col(vecCol)))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(sum(floor(col("col").cast("double") * lit(1000000.0))).as("sm"),
-          count(lit(1)).as("cnt"))
-        .withColumn("m",
-          (col("sm").cast("double") / col("cnt").cast("double") / lit(1000000.0)).cast("float"))
-        .groupBy(col("centroid_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
-          .as("cvec"))
-        .as[(Long, Array[Float])].collect().toMap
-      cents = cents.map { case (cid, v) => (cid, means.getOrElse(cid, v)) }
+      .select(col(vecCol)).as[Array[Float]].collect()
+    if (cents.nonEmpty) {
+      val dim = cents(0).length
+      cents.foreach(checkDim(_, dim, vecCol))
+      val stride = dim + 1 // per centroid: dim micro-unit sums, then the member count
+      val rows = live.select(col(vecCol)).as[Array[Float]].rdd
+      for (_ <- 1 to iters) {
+        val bc = spark.sparkContext.broadcast((cents, cents.map(c => math.sqrt(sumsq(c)))))
+        val acc = try rows.treeAggregate(new Array[Long](cents.length * stride))(
+          (acc, v) => {
+            checkDim(v, dim, vecCol)
+            val (cs, cnorm) = bc.value
+            val base = nearest(v, math.sqrt(sumsq(v)), cs, cnorm) * stride
+            var p = 0
+            while (p < dim) {
+              acc(base + p) = Math.addExact(acc(base + p), math.floor(v(p).toDouble * 1e6).toLong)
+              p += 1
+            }
+            acc(base + dim) += 1
+            acc
+          },
+          (a, b) => { var i = 0; while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }; a })
+        finally bc.destroy()
+        cents = cents.indices.map { j =>
+          val cnt = acc(j * stride + dim)
+          if (cnt == 0) cents(j)
+          else Array.tabulate(dim)(p => (acc(j * stride + p).toDouble / cnt.toDouble / 1e6).toFloat)
+        }.toArray
+      }
     }
     if (sampled) train.unpersist(blocking = false)
-    cents.toSeq.toDF("centroid_id", "cvec")
+    cents
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al., "SemDeDup:

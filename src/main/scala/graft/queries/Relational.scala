@@ -212,6 +212,10 @@ object Relational {
     // per-partition distinct-key build side always fits). Identical
     // result set by EXCEPT's own definition: distinct left rows with no
     // match among right KEYS — duplicates on the right never matter.
+    // Precondition: the key is non-null on both sides (o_orderkey and
+    // l_orderkey are). EXCEPT matches NULL to NULL; the equi anti-join
+    // never matches a NULL key, so it would keep a left NULL row that
+    // EXCEPT drops.
     // Measured 4.35 → 3.32 s at the ×100 replica, 0.76 → 0.56 s at
     // sf0.1 (medians of 7 alternating same-JVM reps; rewrite won 13/14).
     "q09_except" -> ((s, dir) => {

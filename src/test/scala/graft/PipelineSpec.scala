@@ -204,6 +204,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows(preVersion) == preRows)
   }
 
+  test("gold retrieval: bounded Spark jobs per call, rows of the relational forms") {
+    import graft.functions.VectorFunctions
+    import graft.operators.Similarity
+    import spark.implicits._
+    val goldPath = s"$tmp/gold-jobs"
+    Gold.upsert(spark, goldPath,
+      Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))).repartition(3), "pk")
+    val text = "Canh bao lu quet"
+    // tripwire: exact search is one scan; IVF is a seed job, one job per
+    // Lloyd iteration and one scan — a per-iteration relational chain or
+    // a join-back would push these up
+    val (hits, searchJobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+      Gold.search(spark, goldPath, text, 3).collect())
+    val (ivfHits, ivfJobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+      Gold.searchIvf(spark, goldPath, text, 3, iters = 3).collect())
+    info(s"Spark jobs per call: search $searchJobs, searchIvf $ivfJobs")
+    assert(searchJobs <= 2, s"Gold.search ran $searchJobs jobs")
+    assert(ivfJobs <= 6, s"Gold.searchIvf(iters = 3) ran $ivfJobs jobs")
+    // identical rows and cosines to the pre-kernel forms: a rank frame
+    // joined back to the table by xxhash64(pk)
+    val corpus = Gold.readTable(spark, goldPath).select(xxhash64(col("pk")).as("neighbor_id"),
+      col("pk"), col("text"), col("vector").as("cv"))
+    val vecs = corpus.select(col("neighbor_id"), col("cv"))
+    val q = Seq((-1L, VectorFunctions.hashEmbed(text, Gold.VectorDim))).toDF("query_id", "qv")
+    def joinedBack(top: DataFrame): Seq[Seq[Any]] = top.join(corpus, "neighbor_id")
+      .select(col("rank"), col("pk"), col("text"), col("cosine")).orderBy(col("rank"))
+      .collect().map(_.toSeq).toSeq
+    assert(hits.length == 3 && hits.map(_.toSeq).toSeq == joinedBack(Similarity.topKWindow(q, vecs, 3)))
+    val cents = RelationalTwins.kmeansCentroids(spark, vecs, 8, 3, "neighbor_id", "cv")
+    assert(ivfHits.nonEmpty &&
+      ivfHits.map(_.toSeq).toSeq == joinedBack(RelationalTwins.ivfTopK(q, vecs, cents, 3, 2)))
+  }
+
   test("crawl fetches each url exactly once across a depth-2 crawl") {
     import spark.implicits._
     val fetches = spark.sparkContext.longAccumulator("fetches")

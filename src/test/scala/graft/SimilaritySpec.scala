@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -957,5 +957,113 @@ class SimilaritySpec extends AnyFunSuite {
       assert(x.filter(_._1 == side).sortBy(_._2).map(_._3).toSeq == (0L to 4L),
         s"$side: ${x.toSeq}")
     }
+  }
+
+  /** The oracle-gate (sf0.01) embeddings. */
+  private def gateEmbeddings: DataFrame = Tables(spark, "/root/testdata/sf0.01", "embeddings")
+
+  /** Edge-case fixture for the kernels: an exact duplicate (ids 0/1, so
+    * the first two k-means seeds coincide and every tie goes to the lower
+    * centroid, leaving the other cluster empty), a zero-norm vector, a
+    * vector with -0.0 components, and seeded pseudo-random vectors. */
+  private def edgeVectors: Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(7)
+    Seq(
+      0L -> Array(1f, 0f, 0f, 0f),
+      1L -> Array(1f, 0f, 0f, 0f),
+      2L -> Array(0f, 1f, 0f, 0f),
+      3L -> Array(0f, 0f, 0f, 0f),
+      4L -> Array(0.5f, 0.5f, 0f, 0f),
+      5L -> Array(-0.0f, 0.25f, -0.0f, -0.75f)) ++
+      (6L until 24L).map(i => i -> Array.fill(4)(rnd.nextFloat() * 2f - 1f))
+  }
+
+  test("kmeansCentroids: one-pass Lloyd equals the relational Lloyd step bit for bit") {
+    import spark.implicits._
+    val e = edgeVectors.toDF("vec_id", "embedding").repartition(3)
+    def same(k: Int, iters: Int, cap: Long = Long.MaxValue, in: DataFrame = e): Unit = {
+      val got = RelationalTwins.bits(Similarity.kmeansCentroids(spark, in, k, iters,
+        trainSampleCap = cap))
+      val want = RelationalTwins.bits(RelationalTwins.kmeansCentroids(spark, in, k, iters,
+        trainSampleCap = cap))
+      assert(got.nonEmpty && got == want, s"k=$k iters=$iters cap=$cap")
+    }
+    same(4, 0)                          // seeds only
+    same(4, 1); same(4, 3)              // duplicate seeds -> an empty cluster
+    same(30, 2)                         // k > rows
+    same(3, 2, cap = 10)                // training sample smaller than n
+    same(1, 2)
+    // the oracle-gate corpus at q47's configuration
+    same(8, 3, in = gateEmbeddings)
+  }
+
+  test("ivfTopK equals the relational nearestCentroid ⋈ assignProbes window form") {
+    import spark.implicits._
+    val vs = edgeVectors
+    val c = vs.toDF("neighbor_id", "cv").repartition(3)
+    val q = (vs.filter(_._1 % 3 == 0) :+ (100L -> Array(0.2f, -0.4f, 0.1f, 0.3f)))
+      .toDF("query_id", "qv")
+    // trained centroids (two coincide) plus a zero-norm centroid
+    val cents = Similarity.kmeansCentroids(spark, vs.toDF("vec_id", "embedding"), 4, 1)
+      .union(Seq((4L, Array(0f, 0f, 0f, 0f))).toDF("centroid_id", "cvec"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (k <- Seq(1, 3, 30); nprobe <- Seq(1, 2, 5)) {
+      val got = rows(Similarity.ivfTopK(q, c, cents, k, nprobe))
+      assert(got.nonEmpty && got == rows(RelationalTwins.ivfTopK(q, c, cents, k, nprobe)),
+        s"k=$k nprobe=$nprobe")
+    }
+    val e = gateEmbeddings
+    val eq = e.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val ec = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
+    val ecents = Similarity.kmeansCentroids(spark, e, 8, 3)
+    assert(rows(Similarity.ivfTopK(eq, ec, ecents, 5, 2)) ==
+      rows(RelationalTwins.ivfTopK(eq, ec, ecents, 5, 2)))
+  }
+
+  test("top-k heap ties -0.0 with 0.0 exactly as Spark's rank window does") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val scored = Seq((0.0, 5L), (-0.0, 3L), (0.0, 4L), (-0.0, 6L), (1.0, 9L), (-0.0, 2L))
+    val heap = new Similarity.TopKHeap[Unit](3)
+    scored.foreach { case (c, id) => heap.offer(c, id, ()) }
+    val w = Window.orderBy(col("cosine").desc, col("id").asc)
+    val want = scored.toDF("cosine", "id").withColumn("r", row_number().over(w))
+      .filter(col("r") <= 3).collect().map(_.getLong(1)).toSet
+    assert(want == Set(9L, 2L, 3L))
+    assert(heap.iterator.map(_._2).toSet == want)
+    // the total order would have split the tie and kept the wrong ids
+    assert(Ordering.Double.TotalOrdering.compare(-0.0, 0.0) != 0)
+  }
+
+  test("vector kernels check their preconditions: ragged vectors fail by column, NULLs skip") {
+    import spark.implicits._
+    def message(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString(" / ")
+    val base = edgeVectors
+    val ragged = (base :+ (50L -> Array(1f, 2f, 3f))).toDF("vec_id", "embedding")
+    // a ragged member (the relational form gave it a NULL cosine, which
+    // sorted first in min(struct) and silently joined centroid 0)
+    val m1 = message(intercept[Exception](Similarity.kmeansCentroids(spark, ragged, 3, 1)))
+    assert(m1.contains("column embedding holds a vector of length 3"), m1)
+    // a ragged seed fails on the driver
+    val m2 = message(intercept[Exception](Similarity.kmeansCentroids(spark,
+      ((-1L -> Array(1f)) +: base).toDF("vec_id", "embedding"), 3, 0)))
+    assert(m2.contains("column embedding holds a vector of length 4"), m2)
+    // IVF: a ragged corpus row fails naming the corpus column
+    val cents = Seq((0L, Array(1f, 0f, 0f, 0f))).toDF("centroid_id", "cvec")
+    val m3 = message(intercept[Exception](Similarity.ivfTopK(
+      Seq((100L, Array(1f, 0f, 0f, 0f))).toDF("query_id", "qv"),
+      ragged.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
+      cents, 3).collect()))
+    assert(m3.contains("column cv holds a vector of length 3"), m3)
+    // NULL vectors are skipped in training — not seeds, not members —
+    // so training equals training without them
+    val nul = null.asInstanceOf[Array[Float]]
+    val withNulls = ((-5L -> nul) +: base :+ (60L -> nul)).toDF("vec_id", "embedding")
+    val without = base.toDF("vec_id", "embedding")
+    for (iters <- Seq(0, 2))
+      assert(RelationalTwins.bits(Similarity.kmeansCentroids(spark, withNulls, 4, iters)) ==
+        RelationalTwins.bits(RelationalTwins.kmeansCentroids(spark, without, 4, iters)))
   }
 }
