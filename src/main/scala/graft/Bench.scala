@@ -49,7 +49,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // optional comma-separated subset (SCALE.md trend runs time only the
     // heavy queries); empty/unset = the full official suite
@@ -64,13 +63,7 @@ object Bench {
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
     // Round-15 (third judge ask): the official artifact must not need an

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-trend data generator: writes an N× replica of a scale-factor
@@ -49,13 +48,9 @@ object ScaleGen {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // reuses an active session (perfbench builds its replica this way):
+    // the shuffle-partition count fixes the replica's file layout
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

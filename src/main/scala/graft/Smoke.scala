@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke main: runs the flagship `SparkEntry.entry` the way the
   * driver does (rows>0 check) and prints the plan + row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.explain("formatted")

@@ -15,26 +15,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Measurement-only hook ([[graft.queries.OptProbe]]): when set, every
-    * [[apply]] is wrapped in [[spreadBySize]] so a query can be A/B-timed
-    * with/without the spread in ONE JVM. Never set outside the probe. */
-  @volatile private[graft] var probeSpreadAll = false
-
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = raw(spark, sfDir, name)
-    if (probeSpreadAll) {
-      val (bytes, files) = pathStats(s"$sfDir/$name.parquet")
-      spreadBySize(spark, df, bytes, files)
-    } else df
-  }
-
-  private def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir) else
       readStamped(spark, s"$sfDir/$name.parquet")
 
   /** Round-19 optimization: per-JVM schema memo, keyed by the table
-    * path + a name:size:mtime fingerprint of its physical files (the
-    * stampedKey staleness contract — a rewrite re-infers). A bare
+    * path and holding the name:size:mtime fingerprint of its physical
+    * files next to the schema inferred from them (the stampedKey
+    * staleness contract — a rewrite re-infers). A bare
     * `spark.read.parquet(path)` runs a footer schema-inference job on
     * the driver EVERY time; at ~175 table reads per bench pass that was
     * ~60 ms × reads ≈ 20% of the whole sf0.1 suite (measured
@@ -42,9 +30,15 @@ object Tables {
     * cost is the inference job, not the data). This is exactly the
     * metadata a catalog/metastore serves at deployment; caching it
     * per-JVM is the path-based equivalent. Results are unchanged: the
-    * cached schema IS the one inference produced on the same files. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+    * cached schema IS the one inference produced on the same files.
+    *
+    * The FULL fingerprint string is compared, not its hash — a collision
+    * between two on-disk states of the same path must never serve a
+    * stale schema. A mismatch re-infers and replaces the path's entry,
+    * so the memo holds one entry per path however often a table is
+    * rewritten (TablesSpec pins both). */
+  private[graft] val schemaCache = scala.collection.concurrent.TrieMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
   private def readStamped(spark: SparkSession, path: String): DataFrame = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -53,13 +47,13 @@ object Tables {
       else Seq(f)
     val sig = walk(new java.io.File(path))
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    // Round-20 (verdict item 7): key on the FULL fingerprint string, not
-    // its 32-bit hashCode — a collision between two on-disk states of
-    // the same path must never serve a stale schema. The map holds one
-    // live entry per table (a rewrite orphans the old key), so the
-    // longer key costs nothing.
-    val sch = schemaCache.getOrElseUpdate(s"$path@$sig",
-      spark.read.parquet(path).schema)
+    val sch = schemaCache.get(path) match {
+      case Some((`sig`, cached)) => cached
+      case _ =>
+        val inferred = spark.read.parquet(path).schema
+        schemaCache.put(path, (sig, inferred))
+        inferred
+    }
     spark.read.schema(sch).parquet(path)
   }
 
@@ -89,12 +83,6 @@ object Tables {
     * The exchange moves only the rows the caller kept (apply it after
     * pushed filters / audit-slice cuts), and every consumer here is
     * aggregation/join-shaped, so row order never reaches a result. */
-  /** Measurement-only hook ([[graft.queries.OptProbe]] `+N` suffix):
-    * when set, [[spreadBySize]] is a no-op so an adopted spread can be
-    * A/B-timed against the plain read in ONE JVM without duplicating
-    * the query. Never set outside the probe. */
-  @volatile private[graft] var probeSpreadNever = false
-
   private[graft] def spreadBySize(spark: SparkSession, df: DataFrame,
                                   bytes: Long, files: Long): DataFrame = {
     val conf = spark.sessionState.conf
@@ -114,14 +102,14 @@ object Tables {
     val totalBytes = bytes + files * openCost
     val maxSplit = maxPB.min(openCost.max(totalBytes / par.max(1L)))
     val splits = ((totalBytes + maxSplit - 1) / maxSplit.max(1L)).max(1L)
-    if (splits < par && !probeSpreadNever) df.repartition(par.toInt) else df
+    if (splits < par) df.repartition(par.toInt) else df
   }
 
   /** [[apply]] + [[spreadBySize]] over the table's own on-disk size —
     * the read for scan-side-compute-heavy queries. */
   def spread(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val (bytes, files) = pathStats(s"$sfDir/$name.parquet")
-    spreadBySize(spark, raw(spark, sfDir, name), bytes, files)
+    spreadBySize(spark, apply(spark, sfDir, name), bytes, files)
   }
 
   /** events.parquet's physical `ts` type has drifted across testdata

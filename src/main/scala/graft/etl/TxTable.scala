@@ -172,10 +172,10 @@ object TxTable {
   private[graft] def resetCounters(): Unit = Seq(fullListings, manifestProbes,
     manifestReads, fastForwardCommits, rebaseRecomputes, cacheHits).foreach(_.set(0))
 
-  // --- immutable-manifest caches (round 18: ScaleProbe txmanifest
-  // measured snapshot resolution at 0.89 s per call on a 100k-dir
-  // table — the regex parse, paid on EVERY read and every
-  // optimistic-loop iteration). A committed manifest (and its stats
+  // --- immutable-manifest caches (round 18:
+  // scale_artifacts/probe_txmanifest_r18.jsonl measured snapshot
+  // resolution at 0.89 s per call on a 100k-dir table — the regex
+  // parse, paid on EVERY read and every optimistic-loop iteration). A committed manifest (and its stats
   // sidecar) is IMMUTABLE: the O_EXCL link can never replace an
   // existing version file, so a parsed result is valid for the file's
   // lifetime. Cache entries are validated by (size, mtime) so the one
@@ -227,8 +227,8 @@ object TxTable {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively)); f.delete(); ()
   }
 
-  /** Test/probe seam: drop both caches so a resolve pays the cold
-    * read+parse path (ScaleProbe txmanifest reports cold and warm). */
+  /** Test seam: drop both caches so a resolve pays the cold
+    * read+parse path. */
   private[graft] def clearResolutionCaches(): Unit = {
     snapCache.synchronized { snapCache.clear(); snapCacheWeight = 0L }
     statsCache.synchronized { statsCache.clear(); statsCacheWeight = 0L }
@@ -429,8 +429,8 @@ object TxTable {
 
   /** Linear scan of the stats sidecar — same results as the regex pair
     * ([[readStatsRegex]], spec-pinned equal), ~20× cheaper on a
-    * 100k-entry sidecar (ScaleProbe txmanifest; the regex engine
-    * re-scans per item). Numeric items were rendered WITHOUT escaping
+    * 100k-entry sidecar (SCALE.md "Round 18: manifest-resolution knee
+    * measured, then removed"; the regex engine re-scans per item). Numeric items were rendered WITHOUT escaping
     * (dir/col are machine-safe there, bug-compatible with StatItem);
     * string items use the shared qs escaping. */
   private[graft] def parseStatsFast(body: String): (Seq[DirStat], Seq[DirStrStat]) = {
@@ -2131,10 +2131,10 @@ object TxTable {
 
   /** Linear manifest scan — the hot resolution path. Same results as
     * [[parseRegex]] (spec-pinned equal on adversarial round-trips),
-    * ~30× cheaper on a 100k-dir manifest (ScaleProbe txmanifest
-    * measured the regex stack at 0.89 s per resolve there — paid by
-    * every read and every optimistic-loop iteration of a standing
-    * pipeline). Strategy mirrors the regex semantics: each field is
+    * ~30× cheaper on a 100k-dir manifest (the regex stack measured
+    * 0.89 s per resolve there, `scale_artifacts/probe_txmanifest_r18.jsonl`
+    * — paid by every read and every optimistic-loop iteration of a
+    * standing pipeline). Strategy mirrors the regex semantics: each field is
     * located by its FIRST `"fld":` occurrence; list bodies end at the
     * first `]` (the write-time encoding constraint guarantees no value
     * contains one); quoted values unescape via [[scanQuoted]]. */

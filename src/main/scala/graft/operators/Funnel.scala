@@ -67,7 +67,7 @@ object Funnel {
                   viaPersist: Boolean = false): Seq[DataFrame] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     // Two materialization backends (round-20 verdict item 8, A/B'd in
-    // OptProbe as q67_funnel_k3 vs q67_persist): `localCheckpoint`
+    // OPTIMIZATION_r20.md §8): `localCheckpoint`
     // truncates lineage into executor-local blocks — the fastest form,
     // but on a CLUSTER an executor loss then fails the query instead of
     // recomputing, and the eager checkpoint materializes the full

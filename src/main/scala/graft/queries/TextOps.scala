@@ -123,7 +123,7 @@ object TextOps {
       // re-scanned and re-shuffled per pass. The obvious fix —
       // tracked-persist the spread+shingled frame once — was A/B'd at
       // round 20 and REJECTED: 19.6 s vs 11.4 s shipped at the ×100
-      // replica, 2.00 vs 1.80 at sf0.1 (OptProbe q48_tracked; caching
+      // replica, 2.00 vs 1.80 at sf0.1 (OPTIMIZATION_r20.md §3; caching
       // the corpus-sized shingle arrays costs more than three codegen
       // re-shingle passes, the same verdict as r19's semi-join variant).
       val docs = Tables.spread(s, dir, "documents")

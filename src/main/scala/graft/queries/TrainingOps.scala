@@ -154,8 +154,10 @@ object TrainingOps {
     * array it must broadcast anyway — never the k·|bench| raw position
     * stream (~4B rows at a 1B-n-gram blacklist). bit_or is idempotent, so
     * duplicate positions need no distinct pass (and no second shuffle).
-    * [[graft.ScaleProbe]] `bloombuild` measures this path's per-element
-    * build cost and driver footprint across 1×/10×/100× bench sizes. */
+    * Its per-element build cost and driver footprint across 1×/10×/100×
+    * bench sizes are in `scale_artifacts/probe_bloombuild_r12.jsonl`
+    * (SCALE.md "Round 11: restored queries, the q47 re-measure, and the
+    * Bloom build"). */
   private[graft] def bloomBitArray(bench: DataFrame, m: Long,
                                    k: Int = BloomK): Array[Long] = {
     val words = bench
@@ -1187,8 +1189,8 @@ object TrainingOps {
   }
 
   /** The q78 body with the stride as a real parameter (q78 fixes it at
-    * [[SpanStride]]; `ScaleProbe spanstride` charts the recall/cost
-    * knob at 4/2/1): per-doc counts of SpanW-token spans starting at
+    * [[SpanStride]]; `scale_artifacts/probe_spanstride_r12.jsonl`
+    * charts the recall/cost knob at 4/2/1): per-doc counts of SpanW-token spans starting at
     * every multiple of `stride`, and how many of them occur ≥2× in the
     * corpus by 60-bit span hash. */
   private[graft] def overlapSpanDetect(docs: DataFrame, stride: Int): DataFrame = {

@@ -114,7 +114,7 @@ object VectorOps {
     * blacklist. */
   private[graft] val LshBucketCap = 96L
 
-  /** q71's core, shared with ScaleProbe's `decontam` mode: flag every
+  /** q71's core: flag every
     * train row whose max cosine to ANY broadcast bench row exceeds
     * `thresh`, with argmax bench_id attribution via the agg-min packed
     * struct (map-side combinable — no n×|bench| shuffle). `train` must
@@ -122,8 +122,9 @@ object VectorOps {
     * precomputed once per row; a zero-norm side divides to NaN → nanvl
     * → -Infinity, so it can never exceed a finite threshold. Cost is
     * O(|train|·|bench|) dot products — linear in the corpus at the
-    * fixed benchmark size of a real deployment (ScaleProbe measures
-    * exactly that; the x-replica gate where bench ∝ n is the
+    * fixed benchmark size of a real deployment (measured flat-to-linear
+    * in `scale_artifacts/probe_decontam_r10.jsonl`, SCALE.md "Round-10
+    * closing queries at 100×"; the x-replica gate where bench ∝ n is the
     * definitional-quadratic measurement, like q24/q69's query batch). */
   private[graft] def semanticDecontaminate(train: DataFrame, bench: DataFrame,
                                            thresh: Double): DataFrame = {
@@ -166,11 +167,15 @@ object VectorOps {
     * measured 311:1 filter rate that shrinks the distinct's shuffle
     * input from the full candidate volume (115 M rows at ×100) to the
     * survivor set (369 k) and deletes the two post-distinct
-    * 115 M-row blob joins the staged form
-    * ([[sq8Prefilter]], kept for the probe's split measurement) pays.
-    * Same soundness as the staged form: the bound can only drop pairs
-    * the exact confirm would drop, so the final pair set is identical
-    * at any scale (SimilaritySpec pins fused ≡ direct). */
+    * 115 M-row blob joins a staged post-distinct filter pays
+    * (SCALE.md "Round 18: q40's confirm stage behind a lossless SQ8
+    * pre-filter", `scale_artifacts/probe_lshprofile_r18.jsonl`).
+    * The bound is provable — `cos(a,b) ≤ sq8_upper_cos(a,b)`
+    * ([[graft.plans.Sq8UpperCos]]: floor-quantization error bounded by
+    * exact integer sums), with a 1e-9 threshold slack absorbing
+    * final-multiply rounding — so it can only drop pairs the exact
+    * confirm would drop, and the final pair set is identical at any
+    * scale (SimilaritySpec pins fused ≡ direct). */
   private[graft] def lshCandidatesVecFiltered(e: DataFrame, tables: Int, bits: Int,
                                               thresh: Double,
                                               twoSided: Boolean = false): DataFrame = {
@@ -205,36 +210,6 @@ object VectorOps {
       .distinct()
   }
 
-  /** Lossless SQ8 pre-filter between the candidate pairs and the exact
-    * confirm (round-17 verdict task 3: the ×100 confirm ratio was 925
-    * candidates per confirmed pair, ~110 s of embedding-fetch joins):
-    * candidates first join the ~80-byte [[graft.plans.Sq8Blob]]
-    * side-cars (one codegen'd pack pass over the corpus) and keep only
-    * pairs whose PROVABLE cosine upper bound
-    * ([[graft.plans.Sq8UpperCos]]: floor-quantization error bounded by
-    * exact integer sums) clears the threshold; only survivors fetch the
-    * full float embeddings for the exact confirm. True pairs can NEVER
-    * be dropped — `cos(a,b) ≤ upper(a,b)` by construction, with a 1e-9
-    * threshold slack absorbing final-multiply rounding — so the result
-    * set, the oracle, and the recall are IDENTICAL to the unfiltered
-    * path at any scale; the saving is the confirm joins' payload
-    * (80 B vs 256+ B per row) times the filtered-out fraction.
-    * Self-sizing like autoBits: q40 engages it only past
-    * [[SqPrefilterMinRows]], below which two extra skinny joins cost
-    * more than they save (the gates keep the direct plan; result
-    * equality is spec-pinned, so the switch is a pure plan choice). */
-  private[graft] def sq8Prefilter(e: DataFrame, cand: DataFrame,
-                                  thresh: Double): DataFrame = {
-    val sq = e.select(col("vec_id"),
-      graft.plans.GraftExpressions.sq8Blob(col("embedding")).as("blob"))
-    cand
-      .join(sq.select(col("vec_id").as("id_a"), col("blob").as("ba")), "id_a")
-      .join(sq.select(col("vec_id").as("id_b"), col("blob").as("bb")), "id_b")
-      .filter(graft.plans.GraftExpressions.sq8UpperCos(col("ba"), col("bb"))
-        > thresh - 1e-9)
-      .select(col("id_a"), col("id_b"))
-  }
-
   /** Corpus size past which q40 fuses the SQ8 filter into its bucket
     * join: at the oracle gates (500 / 2000 vectors) the candidate set
     * is small enough that the wider join rows cost more than they
@@ -249,10 +224,9 @@ object VectorOps {
   private[graft] val SqPrefilterMinRows = 2000L
 
   /** q40's candidate stage alone — the banding/probing/blacklist half,
-    * ending at the distinct (id_a, id_b) pair set; split out so
-    * ScaleProbe's `lshprofile` mode can time it separately from the
-    * exact-confirm half (r16 verdict task 5: q40 is the ×100 tail, and
-    * tuning needs to know which half dominates). */
+    * ending at the distinct (id_a, id_b) pair set; the exact confirm is
+    * [[lshConfirm]] (the ×100 split between the two halves is in
+    * SCALE.md "Round 17: q40's ×100 cost split, measured"). */
   private[graft] def lshCandidatesVec(e: DataFrame, tables: Int, bits: Int,
                                       twoSided: Boolean = false): DataFrame = {
     val idx = e.select(col("vec_id"),
@@ -280,7 +254,8 @@ object VectorOps {
     // the gates) probe sets are symmetric so one direction is lossless;
     // at larger widths the capped sets differ per vector and one-sided
     // probing is a deliberate recall/cost trade (two-sided would double
-    // candidate volume) — ScaleProbe's recall column measures it.
+    // candidate volume) — the recall column of
+    // scale_artifacts/probe_lshwidth_r17.jsonl measures it.
     val x = idxCapped.alias("x"); val y = probe.alias("y")
     val idCond =
       if (twoSided) col("y.vec_id") =!= col("x.vec_id")
@@ -394,8 +369,8 @@ object VectorOps {
     // Brute-force cosine top-5 per query vector (A8). Query side =
     // vec_id % 50 == 0 — DEFINITIONAL: the batch grows with the corpus,
     // so n·|Q| exact pair evaluations is the contract (the honest
-    // "what exact costs" row; the fixed-batch deployment twin is
-    // `ScaleProbe knn`). The PLAN is the map-side top-k
+    // "what exact costs" row; the fixed-batch deployment shape is
+    // scale_artifacts/probe_knn_r17.jsonl). The PLAN is the map-side top-k
     // (topKPartitioned): every pair is still scored exactly, but each
     // partition keeps a bounded per-query heap so only
     // |partitions|·|Q|·k candidate rows reach the final window — the
@@ -1352,8 +1327,8 @@ object VectorOps {
     * at the oracle gates every vec_id is under the cap so the batch is
     * the full % 50 set, and at any replica scale the batch is FIXED —
     * the ADC scan stays n·|batch|·M, linear in corpus (unbounded, the
-    * n·q pair count made one ×100 run 1080 s; ScaleProbe pq measures
-    * the capped shape). */
+    * n·q pair count made one ×100 run 1080 s; the capped shape is in
+    * `scale_artifacts/probe_pq_r12.jsonl`, SCALE.md "Round 12 coda"). */
   private[graft] def pqAdcScored(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions
     val e = Tables(s, dir, "embeddings")
@@ -1375,9 +1350,7 @@ object VectorOps {
 
   /** Per-subspace slice explode: one (id, [carry,] sub, sv) row per
     * vector per subspace — the shared input shape of the q102/q103
-    * encode and of the ADC query tables. ScaleProbe's pq deployment
-    * probe reuses this (and [[pqCodebooks]]/[[pqEncode]]) so the probe
-    * cannot silently drift from the query it times. */
+    * encode and of the ADC query tables. */
   private[graft] def pqSubvectors(df: DataFrame, idCol: String, vecCol: String,
                                   carry: Seq[String] = Nil): DataFrame =
     df.select(col(idCol) +: (carry.map(col) :+ explode(expr(
@@ -1430,9 +1403,9 @@ object VectorOps {
 
   /** BM25 ranked list, rank ≤ k per query (scaladoc at the q75 entry).
     * `queryCap` bounds the query-id space — the gate queries use the
-    * default (every doc_id % 250 doc); ScaleProbe's fixed-batch
-    * deployment probe caps at the identity replica so the SAME queries
-    * run against every corpus scale. */
+    * default (every doc_id % 250 doc); a cap at the identity replica
+    * runs the SAME queries against every corpus scale (the fixed-batch
+    * shape of `scale_artifacts/probe_bm25_r10.jsonl`). */
   private[graft] def bm25Ranked(s: SparkSession, dir: String, k: Int,
                                 queryCap: Long = Long.MaxValue): DataFrame = {
     val (postings, qterms, bigN, bigT) = bm25Parts(s, dir, queryCap)

@@ -115,8 +115,7 @@ object SketchStream {
     array((0 until TrainingOps.CmsD).map(j =>
       struct(lit(j).as("j"), expr(TrainingOps.cmsPosExpr(j)).as("pos"))): _*)
 
-  /** Batch-side (lang, source, h) token-hash rows — q84's input shape.
-    * Shared with `ScaleProbe sketch` (the deployment-shape timer). */
+  /** Batch-side (lang, source, h) token-hash rows — q84's input shape. */
   private[graft] def tokenHashes(batch: DataFrame): DataFrame =
     batch
       .select(col("lang"), col("source"),
@@ -124,8 +123,7 @@ object SketchStream {
       .select(col("lang"), col("source"),
         expr(Idioms.hash60Expr("tok")).as("h"))
 
-  /** Batch-side CMS cells — q85's codegen gram pipeline. Shared with
-    * `ScaleProbe sketch`. */
+  /** Batch-side CMS cells — q85's codegen gram pipeline. */
   private[graft] def batchCells(batch: DataFrame): DataFrame =
     batch
       .withColumn("toks", expr(Idioms.toksExpr))

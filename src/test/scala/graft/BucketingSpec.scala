@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -8,14 +7,9 @@ import java.nio.file.Files
 /** Scale posture: bucketed tables co-locate join keys so repeated
   * fact-to-fact joins run shuffle-free (SURVEY §4 / builder mandate:
   * "co-locate joins via bucketing"). */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with LocalSpark {
 
   private lazy val wh = Files.createTempDirectory("graft-warehouse").toString
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", wh)
-    .config("spark.ui.enabled", "false").getOrCreate()
 
   test("bucketed orders<->lineitem join plans without shuffle exchanges") {
     val dir = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 verdict item 2: query closures that `.cache()` internal
@@ -20,12 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dropped — the spec pins that their count is bounded by the loop
   * shape (edges + init + final round), not rounds × corpus.
   */
-class CacheHygieneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class CacheHygieneSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

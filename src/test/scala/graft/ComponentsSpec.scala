@@ -1,17 +1,12 @@
 package graft
 
 import graft.operators.Components
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components (dedup clusters): min-label propagation must
   * handle multi-hop chains (several iterations), cliques, and isolated
   * pairs; the e2e pair graph is oracle-checked via q51's recursive CTE. */
-class ComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class ComponentsSpec extends AnyFunSuite with LocalSpark {
 
   test("chain, triangle and isolated pair resolve to min-id components") {
     import spark.implicits._

@@ -2,17 +2,12 @@ package graft
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.plans.GraftExpressions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native Catalyst expressions: bit-equality with the HOF forms and the
   * SQL generator surface. */
-class ExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class ExpressionsSpec extends AnyFunSuite with LocalSpark {
 
   test("native cosine_sim is bit-identical to the HOF cosine") {
     val e = Tables(spark, "/root/testdata/sf0.001", "embeddings")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{Reliability, TextFunctions}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -9,12 +8,7 @@ import java.nio.file.Files
 /** Scalar-function and IO-edge coverage: urljoin RFC cases, sanitize,
   * html strip, canonical hash, contact cleaner, quarantine split,
   * JSON array read (S1) / JSON write round-trip (S2). */
-class FunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class FunctionsSpec extends AnyFunSuite with LocalSpark {
 
   test("urljoin handles RFC-3986 relative reference cases") {
     val base = "https://kttv.gov.vn/a/b/c.html"

@@ -9,16 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * SQL-only user must be able to create, load, query, time-travel, and
   * administer graft tables with zero Scala calls and zero paths —
   * the round-19 verdict's Delta-parity gap. */
-class GraftCatalogSpec extends AnyFunSuite {
+class GraftCatalogSpec extends AnyFunSuite with LocalSpark {
 
   private val warehouse: String =
     java.nio.file.Files.createTempDirectory("graft-catalog-wh-").toString
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+  override lazy val spark: SparkSession = {
+    val s = LocalSpark.session()
     // catalogs instantiate lazily on first reference, so runtime conf
     // is enough — and it proves config-only registration (no builder
     // code path needed)

@@ -2,7 +2,7 @@ package graft
 
 import graft.etl.TxTable
 import graft.sources.GraftTableSource
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tail is exactly-once per committed dir across restarts and fails
   * loudly on rewriting versions unless ignoreChanges opts into
   * re-emission (the Delta streaming-source contract). */
-class GraftSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class GraftSourceSpec extends AnyFunSuite with LocalSpark {
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-src-$name").toString + "/t"

@@ -1,18 +1,13 @@
 package graft
 
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Multimodal plumbing: binaryFile ingest, real ImageIO decode,
   * partition-wise feature extraction, frame-offset explode. */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class MultimodalSpec extends AnyFunSuite with LocalSpark {
 
   /** REAL encoded image bytes (deterministic pixels) via the JDK's own
     * encoders — what a crawler would actually land in the binary column. */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.PdfText
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -9,11 +8,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 /** F8 PDF text extraction on hand-built fixtures: a plain content
   * stream and a FlateDecode one, exercising Tj / TJ-with-kerning /
   * quote operators, escapes, octal and hex strings. */
-class PdfSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class PdfSpec extends AnyFunSuite with LocalSpark {
 
   private val content =
     """BT

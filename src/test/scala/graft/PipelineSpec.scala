@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.{Bronze, Gold, Silver}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -9,12 +9,7 @@ import java.nio.file.Files
 /** Golden bronze→silver→gold pipeline test over reference-shaped fixtures
   * (FIXTURES.md §A; SURVEY.md §5 item 3): counts, schemas, dedup,
   * link-filter, metadata-default and retrieval assertions. */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   private lazy val tmp = Files.createTempDirectory("graft-pipeline").toString
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-query plan invariants, swept over EVERY SparkEntry.queries entry
@@ -11,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * linear-at-10× plan into a quadratic one long before a benchmark run
   * would catch it.
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits (builder mandate: ".explain the plan and iterate
@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reaching the parquet scan, column pruning, broadcast dimension joins,
   * native expressions in the codegen path, and single-scan subtrees.
   */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class PlanSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -152,11 +147,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("q102/q103 PQ encode is agg-min partial aggregation, not a window sort") {
     // The q35 pin extended to the PQ encode (round-12 verdict item 1):
-    // both queries (and ScaleProbe's pq probe) build their corpus encode
-    // through VectorOps.pqEncode, so pinning the helper's plan pins all
-    // three. A row_number window here would sort-shuffle every n·M·Ks
-    // candidate row; the agg-min form shuffles ONE packed row per
-    // (vec_id, sub).
+    // both queries build their corpus encode through VectorOps.pqEncode,
+    // so pinning the helper's plan pins both. A row_number window here
+    // would sort-shuffle every n·M·Ks candidate row; the agg-min form
+    // shuffles ONE packed row per (vec_id, sub).
     import org.apache.spark.sql.functions.col
     val vo = graft.queries.VectorOps
     val e = Tables(spark, dir, "embeddings")

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-strategy pins for the relational operators — currently the
   * q91 range join, whose suite entry runs the linear difference-array
   * sweep while the pair-producing binned join stays verified here. */
-class RelationalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RelationalSpec extends AnyFunSuite with LocalSpark {
 
   test("q91 sweep ≡ binned range join, row-for-row, at sf0.01 and sf0.001") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {

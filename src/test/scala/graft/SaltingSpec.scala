@@ -1,18 +1,13 @@
 package graft
 
 import graft.operators.Salting
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Salted two-phase aggregation / replicated-salt join must equal their
   * direct forms exactly. */
-class SaltingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class SaltingSpec extends AnyFunSuite with LocalSpark {
 
   test("salted count+sum equals direct aggregation exactly") {
     val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")

@@ -2,18 +2,13 @@ package graft
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The 100 TB top-k path (per-partition heaps) must return exactly the
   * declarative window result; hashEmbed invariants. */
-class SimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class SimilaritySpec extends AnyFunSuite with LocalSpark {
 
   test("topKPartitioned equals topKWindow exactly") {
     val e = Tables(spark, "/root/testdata/sf0.001", "embeddings")

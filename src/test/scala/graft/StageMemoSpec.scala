@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{StageMemo, VectorOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in-place table rewrite regenerates, and hit/miss accounting on the
   * shared bench counters (what makes a stage build visible in
   * `reps_raw` instead of silently vanishing from the measurement). */
-class StageMemoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StageMemoSpec extends AnyFunSuite with LocalSpark {
 
   test("materialize builds once, serves identical rows on every later call") {
     import spark.implicits._

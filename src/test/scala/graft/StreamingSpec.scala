@@ -1,19 +1,12 @@
 package graft
 
 import graft.streaming.EventsStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Streaming transforms must agree with their batch twins (q31/q28). */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.streaming.schemaInference", "false")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,12 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the 77 queries assume (events.ts is session-tz TimestampType, vectors
   *     are array<float/double>, ids are integral).
   */
-class TablesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class TablesSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -87,5 +81,23 @@ class TablesSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Tables(spark, tmp, "events"))
     assert(e.getMessage.contains("unsupported physical type"))
     assert(e.getMessage.toLowerCase.contains("double"))
+  }
+
+  test("schema memo keeps one entry per path and serves the newest schema after rewrites") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val path = s"$tmp/t.parquet"
+    val shapes = Seq(
+      Seq("id AS a"),
+      Seq("id AS a", "CAST(id AS STRING) AS b"),
+      Seq("id AS a", "CAST(id AS STRING) AS b", "CAST(id AS DOUBLE) AS c"))
+    for (cols <- shapes) {
+      spark.range(3).selectExpr(cols: _*).write.mode("overwrite").parquet(path)
+      val df = Tables(spark, tmp, "t")
+      assert(df.columns.toSeq == cols.map(_.split(" AS ").last),
+        s"stale schema served after rewrite: ${df.schema.simpleString}")
+      assert(df.count() == 3)
+      assert(Tables.schemaCache.keys.count(_.startsWith(path)) == 1,
+        s"memo grew per rewrite: ${Tables.schemaCache.keys.filter(_.startsWith(path))}")
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an oracle mismatch), and the production near-dup routing (q48) must
   * reproduce its exact verifier (q21) — the q25/q40 pattern applied to
   * the Jaccard family. */
-class TextOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class TextOpsSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hash-compare can't express: semantic ground truth for contamination,
   * determinism of the sample, the quantization error bound, and the
   * two-level cumsum's equivalence to the naive global window. */
-class TrainingOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class TrainingOpsSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.01"
 

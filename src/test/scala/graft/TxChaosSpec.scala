@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.TxTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,12 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * targeted rows, and compaction must change nothing. On the scoped
   * table, threads share PARTITIONS (forcing the fast-forward/rebase
   * paths) but not keys. */
-class TxChaosSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class TxChaosSpec extends AnyFunSuite with LocalSpark {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-chaos").toString + "/t"

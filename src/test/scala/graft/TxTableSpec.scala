@@ -1,7 +1,6 @@
 package graft
 
 import graft.etl.TxTable
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Delta-class commit log (round-13 verdict stretch item 7):
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * two concurrent upserts lose neither writer's rows, and version N-1
   * stays readable after N commits.
   */
-class TxTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class TxTableSpec extends AnyFunSuite with LocalSpark {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-tx").toString + "/table"
