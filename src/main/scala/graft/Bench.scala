@@ -5,53 +5,31 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
-  * Methodology (round-4 hardening, per judge finding that a single timed
-  * pass is ~3x box-contention noise):
-  *   1. warmup pass at the smallest scale factor so JIT + whole-stage
-  *      codegen compile before anything is timed (~7s otherwise lands on
-  *      whichever query runs first);
-  *   2. each query is timed REPS times (default 3) and the per-query
-  *      MEDIAN is reported, so one noisy-neighbor spike on the shared box
-  *      cannot poison the official artifact;
-  *   3. the JSON line goes to stdout AND to a file (default BENCH.json in
-  *      the cwd, override via SPARK_GRAFT_BENCH_OUT) because sbt's [info]
-  *      logger prefix has made the stdout line unparseable in past rounds;
-  *   4. per-query seconds are rounded to 3 decimals (the 9-significant-digit
-  *      doubles made the line ~4.5 KB, which overflowed the driver's stdout
-  *      tail window mid-line in round 6), the line is printed BEFORE the
-  *      closing log flush as well as last, and the log level is held at
-  *      ERROR during the timed region so WARN spam cannot push it out of
-  *      the tail window;
-  *   5. round-10 telemetry, so a judge can adjudicate box-contention swings
-  *      from the artifact alone (r8's q49/q23/q24 and r9's q21/q22/q51
-  *      "regressions" each cost a session to re-measure): the line carries
-  *      `loadavg_before`/`loadavg_after` (1-min /proc/loadavg around the
-  *      timed region) and per-query `spread` = max/min of the reps (1
-  *      decimal); any query whose spread exceeds 3x is re-timed with two
-  *      extra reps and reports the median of all five — a transient spike
-  *      must out-vote three clean reps to reach the artifact; round-16:
-  *      each re-repped query also carries its RAW rep times in a
-  *      `reps_raw` map ([[first-round reps], [re-rep reps]], flagged
-  *      queries only so the line stays bounded) — a 49x spike is then
-  *      adjudicable from the artifact without an idle re-run;
-  *   6. round-12 self-annotation: `n_ok` = how many queries the `value`
-  *      total covers (so a partial total with a non-empty errors map can't
-  *      be compared against a full-suite one), and `contended`:true when
-  *      loadavg_before > 1.5 or any query's post-re-rep spread still
-  *      exceeds 3x — the artifact itself says "this run saw a loaded box".
+  * The contract:
+  *   1. a warmup pass on sf0.001 compiles JIT and codegen before anything
+  *      is timed;
+  *   2. each query is timed REPS times (default 3) and reports the MEDIAN;
+  *      a query whose spread (max/min) exceeds 3x is re-timed with five
+  *      fresh reps and reports their median, with its raw rep times in
+  *      `reps_raw`;
+  *   3. the line goes to stdout, before and after the teardown, and to a
+  *      file (BENCH.json, or SPARK_GRAFT_BENCH_OUT); seconds are rounded
+  *      to 3 decimals and the log level is ERROR while timing, so the line
+  *      stays short and last in the stdout tail;
+  *   4. the line carries `loadavg_before`/`loadavg_after`, per-query
+  *      `spread`, `n_ok` (how many queries the total covers) and
+  *      `contended` (loadavg_before > 1.5 or a spread still over 3x).
   *
   * A SPARK_GRAFT_BENCH_QUERIES subset run tags the line with
   * "metric":"total_subset" and defaults the out file to BENCH_subset.json,
-  * so a partial total can never masquerade as (or clobber) the official
-  * full-suite BENCH.json; unknown query names abort instead of silently
-  * timing nothing.
+  * so a partial total never overwrites the full-suite BENCH.json; unknown
+  * query names abort.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // optional comma-separated subset (SCALE.md trend runs time only the
-    // heavy queries); empty/unset = the full official suite
+    // optional comma-separated subset; empty/unset = the full suite
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
     only.foreach { names =>
@@ -66,12 +44,9 @@ object Bench {
     val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
-    // Round-15 (third judge ask): the official artifact must not need an
-    // idle re-run to interpret, so GATE the launch on ambient load —
-    // poll the 1-min loadavg and wait while it exceeds the contention
-    // threshold, up to SPARK_GRAFT_BENCH_WAIT_SECS (default 900 s; 0
-    // disables). If the box never quiets, proceed anyway: the
-    // `contended` stamp below still marks the artifact honestly.
+    // wait for the 1-min loadavg to fall below the contention threshold,
+    // up to SPARK_GRAFT_BENCH_WAIT_SECS (default 900 s; 0 disables), then
+    // run anyway: the `contended` stamp still marks a loaded box
     val waitCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SECS", "900").toLong
     val waitT0 = System.nanoTime()
     while (loadavg() > 1.5 && (System.nanoTime() - waitT0) / 1e9 < waitCap) {
@@ -79,10 +54,8 @@ object Bench {
       Thread.sleep(15000)
     }
 
-    // Ambient load must be sampled BEFORE the warmup pass: warmup itself
-    // runs every query on 32 threads and drives the 1-min loadavg past
-    // the contention threshold, which would stamp every artifact
-    // `contended` regardless of what else the box was doing.
+    // sampled before the warmup, which itself drives the loadavg past the
+    // threshold
     val loadBefore = loadavg()
 
     val warmDir = "/root/testdata/sf0.001"
@@ -92,31 +65,18 @@ object Bench {
         try { TempCaches.releaseAll(); spark.catalog.clearCache() }
         catch { case _: Throwable => () }
       }
-      // Round-15: drain the warmup's wake — 104 queries leave thousands
-      // of broadcast/shuffle weak refs for the ContextCleaner, and that
-      // churn was landing on whichever heavy query ran FIRST in the
-      // timed region (q104 measured 4.0 s in-suite vs 1.05 s isolated,
-      // both idle). Forced GC enqueues the refs, the settle lets the
-      // cleaner work through them OUTSIDE the timed region (the JMH
-      // between-iterations hygiene step).
+      // let the ContextCleaner drain the warmup's broadcast/shuffle refs
+      // outside the timed region, not inside the first timed query
       System.gc()
       Thread.sleep(3000)
       System.gc()
     }
 
-    // A failing query reports -1.000, NOT the elapsed time of the throw:
-    // round 10's four broken queries appeared as 0.065-0.080 s entries
-    // indistinguishable from genuinely fast ones, flattering the total.
-    // The exception class is carried into an "errors" map on the JSON line
-    // so the artifact itself says WHAT broke.
+    // a failing query reports -1.000, never the time to the throw, and
+    // its exception class goes into the line's "errors" map
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Cache hygiene between reps (round-13 verdict item 2): a query
-    // closure may tracked-persist frames it reuses internally; release
-    // them (plus anything else in the catalog cache) once the rep's
-    // action completes, OUTSIDE the timed region — cache population cost
-    // is already inside it. Without this, 104 queries × reps accumulated
-    // hundreds of cached frames and storage eviction taxed every later
-    // query (the r13 q51/q52/q09 anomalies' prime suspect).
+    // each rep releases the frames its query cached, outside the timed
+    // region, so no later query pays their eviction
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -135,14 +95,8 @@ object Bench {
     }
 
     spark.sparkContext.setLogLevel("ERROR") // WARN spam must not dilute the stdout tail
-    // (median, spread=max/min of the reps that produced it). A spread > 3x
-    // means one rep saw a different box than the others — re-time with two
-    // extra reps so the transient must out-vote three clean ones.
-    // Round-16 (verdict task 7): a re-repped query additionally reports
-    // its RAW rep times — [first-round reps, re-rep reps] — so a
-    // q94-style 49x spike is adjudicable from the artifact alone (which
-    // rep spiked, by how much, and that the median out-voted it). Only
-    // flagged queries carry the field, so the line stays bounded.
+    // (median, spread = max/min of the reps that produced it, raw reps of
+    // a re-repped query)
     val results: Seq[(String, (Double, Double, Option[(Seq[Double], Seq[Double])]))] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -156,9 +110,8 @@ object Bench {
           val firstRaw = (1 to reps).map(_ => timeOnce(name, fn))
           val first = stats(firstRaw)
           if (reps > 1 && first._1 >= 0 && first._2 > 3.0) {
-            // re-rep protocol unchanged since round 10: the reported
-            // median is over the FIVE fresh reps (reps + 2), so the
-            // transient must out-vote three clean ones to survive
+            // the median of reps + 2 fresh reps: a transient must
+            // out-vote three clean ones
             val rerepRaw = (1 to reps).map(_ => timeOnce(name, fn)) ++
               (1 to 2).map(_ => timeOnce(name, fn))
             val fin = stats(rerepRaw)
@@ -170,23 +123,14 @@ object Bench {
     def r1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, (m, _, _)) => "\"" + k + "\":" + r3(m) }
       .mkString("{", ",", "}")
-    // Spread is emitted ONLY where it says something (>= 1.2x across reps,
-    // or the -1 error marker): the full 77-entry map made the JSON line
-    // ~9 KB and the round-10 archive's tail window truncated it mid-object.
-    // An absent key means "reps agreed within 1.2x" by contract.
+    // spread only where it is >= 1.2x or the -1 error marker; an absent
+    // key means the reps agreed within 1.2x
     val spreads = results.collect {
       case (k, (_, sp, _)) if sp >= 1.2 || sp < 0 => "\"" + k + "\":" + r1(sp)
     }.mkString("{", ",", "}")
-    // raw reps for the (rare) re-repped queries only: [[first], [rerep]];
-    // the reported median is over the rerep array by the protocol above.
-    // Round-20 (verdict item 7): the ONE-LINE contract broke in round 18
-    // when a noisy box re-repped enough queries that the line overflowed
-    // the driver's stdout tail capture mid-object (BENCH_r18.json
-    // parsed:null — a whole round without machine-readable prev). Bound
-    // the line: at most 8 reps_raw entries ride it (the widest-spread
-    // ones — the entries a reader actually adjudicates); the FULL map
-    // goes to a sidecar file next to the out file. Nothing else on the
-    // line changes; the timing methodology is untouched.
+    // raw reps of re-repped queries, [[first], [rerep]]: the line carries
+    // the 8 widest-spread entries, so it stays bounded; the full map goes
+    // to a `.reps_raw` file next to the out file
     val repsRawAll = results.collect {
       case (k, (_, sp, Some((f, rr)))) =>
         (k, sp, "\"" + k + "\":[" + f.map(r3).mkString("[", ",", "]") + "," +
@@ -195,31 +139,21 @@ object Bench {
     val repsRaw = repsRawAll.sortBy(-_._2).take(8).sortBy(_._1)
       .map(_._3).mkString("{", ",", "}")
     val repsRawFull = repsRawAll.map(_._3).mkString("{", ",", "}")
-    // total sums only the healthy medians; error entries are -1 markers.
-    // n_ok says how many queries that total covers, so a partial total
-    // (errors non-empty) can never be misread as a full-suite number in a
-    // cross-round comparison.
+    // the total sums the healthy medians only; n_ok counts them
     val healthy = results.map(_._2._1).filter(_ >= 0)
     val total = healthy.sum
     val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    // The box is shared: a loaded driver machine has produced 1.5x "regressions"
-    // that were pure contention (r11: 58.4 s vs 37.7 s idle). Stamp the
-    // condition on the artifact so cross-round readers see it without
-    // re-deriving it from loadavg/spread themselves.
     val contended = loadBefore > 1.5 ||
       results.exists { case (_, (_, sp, _)) => sp > 3.0 }
     val metric = if (only.isDefined) "total_subset" else "total"
-    // Trained-artifact memo telemetry (round-15 advisor): with the
-    // train-once memos, the first timed rep of each ANN family trains
-    // (miss) and later reps reuse (hit) — the per-query MEDIAN therefore
-    // reports the deployment (trained) shape by construction. The
-    // counters make that legible on the artifact itself.
+    // trained-artifact memo hits and misses: an ANN query's first rep
+    // trains, later reps reuse, so its median is the trained shape
     val memo = s"""{"hits":${graft.queries.VectorOps.memoHits.get},"misses":${graft.queries.VectorOps.memoMisses.get}}"""
     val line =
       s"""{"metric":"$metric","value":${r3(total)},"unit":"sec","n_ok":${healthy.size},"contended":$contended,"queries":$qs,"sf":"$sfDir","reps":$reps,"errors":$errJson,"loadavg_before":${r1(loadBefore)},"loadavg_after":${r1(loadAfter)},"memo":$memo,"spread":$spreads,"reps_raw":$repsRaw}"""
-    // Emit the line FIRST and LAST around the teardown: whichever end of the
-    // driver's stdout window survives, a complete copy of the line is in it.
+    // printed before and after the teardown, so either end of a truncated
+    // stdout tail holds a complete copy
     println(line)
     Console.out.flush()
     try {

@@ -19,6 +19,7 @@ import scala.jdk.CollectionConverters._
   * {{{
   *   data/v<version>-<uuid>/   parquet dirs, immutable once committed
   *   _txlog/v<version>.json    manifest: {version, action, dirs:[...], parts:[...]}
+  *   _txlog/index/v<N>.<kind>  advisory index trained on version N ([[indexAt]])
   * }}}
   *
   * Commit protocol (per version N):
@@ -569,6 +570,73 @@ object TxTable {
         .filter(_.getFileName.toString.startsWith(prefix))
         .foreach(Files.deleteIfExists(_))
     } catch { case _: Exception => () }
+
+  // --- version-keyed index sidecars: `_txlog/index/v<N>.<kind>` holds an
+  // index of `kind` trained on version N's snapshot (Gold's IVF
+  // centroids). Advisory and immutable like the stats sidecar: the table
+  // is correct without any, and a reader of version V uses the newest
+  // one of its kind trained at or before V, so the commits that keep an
+  // index never touch it. A "refresh" commit (a full replace) is a
+  // boundary: no index trained before it is selected at or after it,
+  // even while the refresh's own index is not yet published. The bytes
+  // are the owner's format; this layer names, publishes, selects,
+  // vacuums and clones them. ---
+
+  private def indexDir(root: String): Path = logDir(root).resolve("index")
+  private def indexFile(root: String, version: Long, kind: String): Path =
+    indexDir(root).resolve(f"v$version%08d.$kind")
+  private val IndexName = """v(\d{8})\.([A-Za-z0-9_-]+)""".r
+
+  /** Every published index as (kind, trained-at version, path): ONE
+    * listing of the index directory, whose size grows with trainings,
+    * not with data files. */
+  private def indexes(root: String): Seq[(String, Long, Path)] =
+    listDir(indexDir(root)).flatMap(p => p.getFileName.toString match {
+      case IndexName(v, kind) => Some((kind, v.toLong, p))
+      case _ => None
+    })
+
+  /** Per kind, the index a reader of `version` selects: the newest
+    * trained at or before it, unless a refresh commit lies after it.
+    * Finding the newest refresh reads the (cached) manifests from
+    * `version` down to the oldest candidate; it stops at a vacuumed
+    * manifest, because [[vacuum]] deletes the indexes a refresh below
+    * its horizon made unselectable before it deletes any manifest. */
+  private def indexesAt(root: String, version: Long): Iterable[(String, Long, Path)] = {
+    val newest = indexes(root).filter(_._2 <= version).groupBy(_._1).values.map(_.maxBy(_._2))
+    if (newest.isEmpty) newest
+    else {
+      val refreshed = Iterator.iterate(version)(_ - 1).takeWhile(_ > newest.map(_._2).min)
+        .map(v => v -> actionAt(root, v)).takeWhile(_._2.nonEmpty)
+        .collectFirst { case (v, Some("refresh")) => v }
+      newest.filter(i => refreshed.forall(i._2 >= _))
+    }
+  }
+
+  /** Version `v`'s commit action, or None once it is vacuumed. */
+  private def actionAt(root: String, v: Long): Option[String] =
+    try Some(snapshot(root, v).action)
+    catch { case _: IllegalArgumentException | _: java.io.IOException => None }
+
+  /** The `kind` index a reader of `version` uses, as (trained-at
+    * version, path): the newest trained at or before it and not before
+    * its newest refresh ([[indexesAt]]). */
+  private[graft] def indexAt(root: String, kind: String, version: Long): Option[(Long, Path)] =
+    indexesAt(root, version).find(_._1 == kind).map(i => (i._2, i._3))
+
+  /** Publish `bytes` as the `kind` index trained at `version`: a temp
+    * file, then an atomic rename. Concurrent trainers of a deterministic
+    * index write identical bytes, so the last rename changes nothing. */
+  private[graft] def publishIndex(root: String, version: Long, kind: String,
+                                  bytes: Array[Byte]): Unit = {
+    require(IndexName.matches(f"v$version%08d.$kind"), s"bad index kind '$kind'")
+    Files.createDirectories(indexDir(root))
+    val tmp = indexDir(root).resolve(s".idx-tmp-${UUID.randomUUID()}")
+    Files.write(tmp, bytes)
+    Files.move(tmp, indexFile(root, version, kind),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** Advisory latest-version pointer (Delta's `_last_checkpoint`
     * analogue). Best-effort: written via atomic rename after every
@@ -1678,8 +1746,9 @@ object TxTable {
     * either side unlinks only its own paths, and the shared bytes live
     * until BOTH sides drop them — the clone stays readable after the
     * source is vacuumed to nothing (spec-pinned). Schema, declared
-    * stats/bloom columns, partition scoping, the stats sidecar, and
-    * the Bloom filter files all carry (dirs are content-identical,
+    * stats/bloom columns, partition scoping, the stats sidecar, the
+    * Bloom filter files and the indexes `version` selects (as the
+    * clone's version-0 indexes) all carry (dirs are content-identical,
     * so the re-keyed stats stay exact); the txn ledger does NOT — a
     * clone is a new table and a replayed writer must not be suppressed
     * by the original's history. S3-class stores have no link(2); a
@@ -1721,6 +1790,14 @@ object TxTable {
       s.statsCols, s.schemaDdl, s.layout, s.bloomCols)
     val won = tryCommitAnchored(dst, snap, stats, strStats)
     if (!won) mapped.foreach(m => dropData(dst, m._2))
+    // the selected indexes become the clone's version-0 indexes; only the
+    // winner links them, so a loser never names a file of the winner's v0
+    else indexesAt(src, s.version).foreach { case (kind, _, p) =>
+      try {
+        Files.createDirectories(indexDir(dst))
+        Files.createLink(indexFile(dst, 0L, kind), p)
+      } catch { case _: Exception => () } // advisory, like the blooms
+    }
     won
   }
 
@@ -2088,13 +2165,22 @@ object TxTable {
     *    commit, so without the grace window vacuum could delete a dir
     *    an about-to-win commit references — a torn latest version (the
     *    advisor's race; Delta guards the same window with its retention
-    *    period). Pass graceMs = 0 only when no writer can be in flight. */
+    *    period). Pass graceMs = 0 only when no writer can be in flight.
+    * Index sidecars go too once no retained version selects them: per
+    * kind, the one `keepFrom` selects and every newer one stay. They go
+    * first, while the manifests that place a refresh are still there
+    * (see [[indexesAt]]). */
   def vacuum(root: String, keepFrom: Long,
              graceMs: Long = DefaultVacuumGraceMs): Unit = {
     val latest = latestVersion(root)
     require(keepFrom <= latest, s"keepFrom $keepFrom beyond latest $latest")
     val keep = (keepFrom to latest).filter(v => Files.exists(manifest(root, v)))
       .flatMap(v => snapshot(root, v).dirs).toSet
+    // an index no retained version selects: at or before keepFrom, and
+    // not the one keepFrom selects
+    val selected = indexesAt(root, keepFrom).map(i => i._1 -> i._2).toMap
+    indexes(root).filter { case (kind, v, _) => v <= keepFrom && !selected.get(kind).contains(v) }
+      .foreach(i => Files.deleteIfExists(i._3))
     (0L until keepFrom).foreach { v =>
       Files.deleteIfExists(manifest(root, v))
       Files.deleteIfExists(statsFile(root, v))

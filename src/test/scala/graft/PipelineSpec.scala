@@ -232,6 +232,187 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
       ivfHits.map(_.toSeq).toSeq == joinedBack(RelationalTwins.ivfTopK(q, vecs, cents, 3, 2)))
   }
 
+  /** Gold rows over one-chunk documents, one per text. */
+  private def goldOf(texts: String*): DataFrame = goldOfDim(Gold.VectorDim, texts: _*)
+  private def goldOfDim(dim: Int, texts: String*): DataFrame = {
+    import spark.implicits._
+    Gold.build(texts.map(t => (t, Map("source" -> s"https://s/${t.hashCode}")))
+      .toDF("split_content", "metadata"), dim)
+  }
+
+  private val probe = "Canh bao lu quet"
+  private val defaultIndex = s"ivf-c${Gold.IvfCentroids}-i${Gold.IvfIters}"
+
+  /** Names in the table's index directory, temp files included. */
+  private def indexFiles(path: String): Set[String] =
+    Option(new java.io.File(s"$path/_txlog/index").list()).map(_.toSet).getOrElse(Set.empty)
+
+  private def jobsOf[T](body: => T): (T, Int) = org.apache.spark.JobCounter(spark.sparkContext)(body)
+
+  /** A search result's (rank, pk, text, cosine) rows, and the same rows of
+    * a rank frame over the table's latest snapshot, joined back by
+    * xxhash64(pk). */
+  private def searchRows(hits: Array[Row]): Seq[Seq[Any]] = hits.map(_.toSeq).toSeq
+  private def joinedBack(path: String, top: DataFrame => DataFrame): Seq[Seq[Any]] = {
+    val corpus = Gold.readTable(spark, path).select(xxhash64(col("pk")).as("neighbor_id"),
+      col("pk"), col("text"), col("vector").as("cv"))
+    top(corpus.select(col("neighbor_id"), col("cv"))).join(corpus, "neighbor_id")
+      .select(col("rank"), col("pk"), col("text"), col("cosine")).orderBy(col("rank"))
+      .collect().map(_.toSeq).toSeq
+  }
+  private def queryFrame: DataFrame = queryFrameDim(Gold.VectorDim)
+  private def queryFrameDim(dim: Int): DataFrame = {
+    import spark.implicits._
+    Seq((-1L, graft.functions.VectorFunctions.hashEmbed(probe, dim))).toDF("query_id", "qv")
+  }
+
+  /** The retrain-per-call form: relational k-means on the snapshot, then
+    * the relational IVF search. */
+  private def retrainedRows(path: String, dim: Int = Gold.VectorDim): Seq[Seq[Any]] =
+    joinedBack(path, vecs => RelationalTwins.ivfTopK(queryFrameDim(dim), vecs,
+      RelationalTwins.kmeansCentroids(spark, vecs, Gold.IvfCentroids, Gold.IvfIters,
+        "neighbor_id", "cv"), 3, 2))
+
+  private def storedFrame(path: String): DataFrame = {
+    import spark.implicits._
+    Gold.loadIndex(path, graft.etl.TxTable.latestVersion(path), Gold.IvfCentroids, Gold.IvfIters).get._2
+      .zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq.toDF("centroid_id", "cvec")
+  }
+
+  test("gold IVF index: refresh trains it, upserts keep it, a second refresh replaces it") {
+    import graft.etl.TxTable
+    val goldPath = s"$tmp/gold-index"
+    Gold.refresh(Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))).repartition(3), goldPath)
+    val v1 = TxTable.latestVersion(goldPath)
+    assert(indexFiles(goldPath) == Set(f"v$v1%08d.$defaultIndex"))
+    val (hits, jobs) = jobsOf(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    assert(jobs == 1, s"searchIvf after refresh ran $jobs jobs")
+    // the stored index is today's per-call training on the same snapshot
+    assert(hits.nonEmpty && searchRows(hits) == retrainedRows(goldPath))
+    // an upsert keeps the index; its new rows are assigned at scan time
+    Gold.upsert(spark, goldPath, goldOf((1 to 12).map(i => s"ban tin thoi tiet so $i"): _*), "pk")
+    assert(TxTable.latestVersion(goldPath) == v1 + 1)
+    assert(indexFiles(goldPath) == Set(f"v$v1%08d.$defaultIndex"))
+    val (hits2, jobs2) = jobsOf(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    assert(jobs2 == 1, s"searchIvf after upsert ran $jobs2 jobs")
+    val stored = storedFrame(goldPath)
+    assert(hits2.nonEmpty &&
+      searchRows(hits2) == joinedBack(goldPath,
+        graft.operators.Similarity.ivfTopK(queryFrame, _, stored, 3, 2)))
+    // the rebuild trains a new index on its own snapshot, and searches use it
+    Gold.refresh(goldOf((probe +: (1 to 30).map(i => s"du bao mua lon dot $i")): _*), goldPath)
+    val v3 = TxTable.latestVersion(goldPath)
+    assert(indexFiles(goldPath) == Set(f"v$v1%08d.$defaultIndex", f"v$v3%08d.$defaultIndex"))
+    assert(RelationalTwins.bits(storedFrame(goldPath)) != RelationalTwins.bits(stored))
+    val (hits3, jobs3) = jobsOf(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    assert(jobs3 == 1)
+    assert(hits3.head.getAs[String]("text") == probe && searchRows(hits3) == retrainedRows(goldPath))
+  }
+
+  test("gold IVF index: an index-less table trains on its first search, then reuses it") {
+    import graft.etl.TxTable
+    val goldPath = s"$tmp/gold-indexless"
+    Gold.upsert(spark, goldPath,
+      Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))).repartition(3), "pk")
+    assert(indexFiles(goldPath).isEmpty)
+    val first = Gold.searchIvf(spark, goldPath, probe, 3).collect()
+    val (second, jobs2) = jobsOf(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    assert(jobs2 == 1, s"the second search ran $jobs2 jobs")
+    assert(indexFiles(goldPath) == Set(f"v${TxTable.latestVersion(goldPath)}%08d.$defaultIndex"))
+    assert(searchRows(first) == searchRows(second) && searchRows(first) == retrainedRows(goldPath))
+  }
+
+  test("gold IVF index: empty, all-NULL and short tables store and load their index") {
+    import graft.etl.TxTable
+    def loaded(path: String) = Gold.loadIndex(path, TxTable.latestVersion(path),
+      Gold.IvfCentroids, Gold.IvfIters).map(_._2.length)
+    val empty = s"$tmp/gold-empty"
+    Gold.refresh(goldOf(), empty)
+    assert(loaded(empty).contains(0))
+    assert(Gold.searchIvf(spark, empty, probe, 3).collect().isEmpty)
+    val nulls = s"$tmp/gold-nulls"
+    Gold.refresh(goldOf("a", "b", "c").withColumn("vector", lit(null).cast("array<float>")), nulls)
+    assert(loaded(nulls).contains(0))
+    assert(Gold.searchIvf(spark, nulls, probe, 3).collect().isEmpty)
+    val short = s"$tmp/gold-short"
+    Gold.refresh(goldOf(probe, "du bao 10 ngay", "tin tuc"), short)
+    assert(loaded(short).contains(3))
+    val (hits, jobs) = jobsOf(Gold.searchIvf(spark, short, probe, 3).collect())
+    assert(jobs == 1 && hits.head.getAs[String]("text") == probe)
+    assert(searchRows(hits) == retrainedRows(short))
+  }
+
+  test("gold IVF index: an empty or short index is retrained once the table grows") {
+    import graft.etl.TxTable
+    val more = (1 to 12).map(i => s"ban tin thoi tiet so $i")
+    for ((name, base) <- Seq("empty" -> Nil, "short" -> Seq("du bao 10 ngay", "tin tuc"))) {
+      val goldPath = s"$tmp/gold-grow-$name"
+      Gold.refresh(goldOf(base: _*), goldPath)
+      Gold.upsert(spark, goldPath, goldOf(probe +: more: _*), "pk")
+      val v = TxTable.latestVersion(goldPath)
+      val hits = Gold.searchIvf(spark, goldPath, probe, 3).collect()
+      assert(hits.head.getAs[String]("text") == probe, name)
+      assert(searchRows(hits) == retrainedRows(goldPath), name)
+      assert(Gold.loadIndex(goldPath, v, Gold.IvfCentroids, Gold.IvfIters)
+        .map(i => (i._1, i._2.length)).contains((v, Gold.IvfCentroids)), name)
+      val (_, jobs) = jobsOf(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+      assert(jobs == 1, s"$name: the search after the retrain ran $jobs jobs")
+    }
+  }
+
+  test("gold IVF index: a refresh never searches with an index of the dropped collection") {
+    import graft.etl.TxTable
+    val goldPath = s"$tmp/gold-rebuild"
+    Gold.refresh(Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))), goldPath)
+    val v0 = TxTable.latestVersion(goldPath)
+    // the rebuild changes the vector dimension; its own index is not
+    // there (a search between its commit and its publish, or a failed
+    // publish), while the dropped collection's index is
+    val dim = 32
+    Gold.refresh(goldOfDim(dim, probe +: (1 to 20).map(i => s"du bao mua lon dot $i"): _*), goldPath)
+    val v1 = TxTable.latestVersion(goldPath)
+    Files.delete(java.nio.file.Paths.get(goldPath, "_txlog", "index", f"v$v1%08d.$defaultIndex"))
+    assert(indexFiles(goldPath) == Set(f"v$v0%08d.$defaultIndex"))
+    assert(Gold.loadIndex(goldPath, v1, Gold.IvfCentroids, Gold.IvfIters).isEmpty)
+    assert(Gold.loadIndex(goldPath, v0, Gold.IvfCentroids, Gold.IvfIters).nonEmpty)
+    val hits = Gold.searchIvf(spark, goldPath, probe, 3, dim = dim).collect()
+    assert(hits.head.getAs[String]("text") == probe && searchRows(hits) == retrainedRows(goldPath, dim))
+    assert(indexFiles(goldPath) == Set(f"v$v0%08d.$defaultIndex", f"v$v1%08d.$defaultIndex"))
+  }
+
+  test("gold IVF index: a torn or corrupt index file is ignored and rebuilt") {
+    import graft.etl.TxTable
+    val goldPath = s"$tmp/gold-torn"
+    Gold.refresh(Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))), goldPath)
+    val file = java.nio.file.Paths.get(goldPath, "_txlog", "index",
+      f"v${TxTable.latestVersion(goldPath)}%08d.$defaultIndex")
+    val good = Files.readAllBytes(file)
+    val want = searchRows(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    val flipped = good.clone(); flipped(20) = (flipped(20) ^ 1).toByte
+    for (bad <- Seq(good.take(good.length / 2), flipped, Array.emptyByteArray)) {
+      Files.write(file, bad)
+      assert(Gold.loadIndex(goldPath, TxTable.latestVersion(goldPath),
+        Gold.IvfCentroids, Gold.IvfIters).isEmpty)
+      assert(searchRows(Gold.searchIvf(spark, goldPath, probe, 3).collect()) == want)
+      assert(Files.readAllBytes(file).sameElements(good), "the rebuilt index differs")
+    }
+  }
+
+  test("gold IVF index: two concurrent first searches agree and leave one file") {
+    val goldPath = s"$tmp/gold-race"
+    Gold.upsert(spark, goldPath,
+      Gold.build(Silver.chunk(Bronze.dedupByContent(fixtureBronze))).repartition(3), "pk")
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Seq[Any]]]
+    val threads = (1 to 2).map(_ => new Thread(() =>
+      results.add(searchRows(Gold.searchIvf(spark, goldPath, probe, 3).collect()))))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    val serial = searchRows(Gold.searchIvf(spark, goldPath, probe, 3).collect())
+    assert(results.size == 2 && results.asScala.forall(_ == serial))
+    assert(indexFiles(goldPath).size == 1, indexFiles(goldPath))
+    assert(storedFrame(goldPath).count() == Gold.IvfCentroids)
+  }
+
   test("crawl fetches each url exactly once across a depth-2 crawl") {
     import spark.implicits._
     val fetches = spark.sparkContext.longAccumulator("fetches")

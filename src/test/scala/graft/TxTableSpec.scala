@@ -114,6 +114,50 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(dataDirs == kept, s"unreferenced dirs survived a zero-grace vacuum: $dataDirs vs $kept")
   }
 
+  /** Index sidecar names under the table's `_txlog/index`. */
+  private def indexNames(root: String): Set[String] =
+    Option(new java.io.File(s"$root/_txlog/index").list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("vacuum keeps exactly the index sidecars a retained version can select") {
+    val root = tmp()
+    TxTable.refresh(spark, root, df(1L -> "a"))                              // v0
+    TxTable.publishIndex(root, 0, "ivf", Array[Byte](0))
+    TxTable.publishIndex(root, 0, "other", Array[Byte](0))
+    TxTable.mergeUpsert(spark, root, df(1L -> "A1"), "k")                    // v1
+    TxTable.publishIndex(root, 1, "ivf", Array[Byte](1))
+    TxTable.mergeUpsert(spark, root, df(1L -> "A2"), "k")                    // v2
+    TxTable.mergeUpsert(spark, root, df(1L -> "A3"), "k")                    // v3
+    TxTable.publishIndex(root, 3, "ivf", Array[Byte](3))
+    assert(TxTable.indexAt(root, "ivf", 2).map(_._1).contains(1L))
+    TxTable.vacuum(root, keepFrom = 2, graceMs = 0)
+    // ivf v0 is older than v1, which v2 selects; "other" v0 is still selected
+    assert(indexNames(root) == Set("v00000001.ivf", "v00000003.ivf", "v00000000.other"))
+    assert(TxTable.indexAt(root, "ivf", 2).map(_._1).contains(1L))
+    assert(TxTable.indexAt(root, "other", 3).map(_._1).contains(0L))
+    TxTable.vacuum(root, keepFrom = 3, graceMs = 0)
+    assert(indexNames(root) == Set("v00000003.ivf", "v00000000.other"))
+  }
+
+  test("index selection stops at a refresh; vacuum and clone follow it") {
+    val root = tmp()
+    TxTable.refresh(spark, root, df(1L -> "a"))                              // v0
+    TxTable.publishIndex(root, 0, "ivf", Array[Byte](0))
+    TxTable.mergeUpsert(spark, root, df(2L -> "b"), "k")                     // v1
+    TxTable.refresh(spark, root, df(3L -> "c"))                              // v2, no index yet
+    TxTable.mergeUpsert(spark, root, df(4L -> "d"), "k")                     // v3
+    assert(TxTable.indexAt(root, "ivf", 1).map(_._1).contains(0L))
+    assert(TxTable.indexAt(root, "ivf", 2).isEmpty && TxTable.indexAt(root, "ivf", 3).isEmpty)
+    val clone = tmp()
+    assert(TxTable.cloneTable(spark, root, clone) && indexNames(clone).isEmpty)
+    // v0's index is selectable only below the refresh: vacuum drops it
+    // before the manifests that place the refresh, so it stays unselected
+    TxTable.vacuum(root, keepFrom = 3, graceMs = 0)
+    assert(indexNames(root).isEmpty && TxTable.indexAt(root, "ivf", 3).isEmpty)
+    TxTable.publishIndex(root, 3, "ivf", Array[Byte](3))
+    TxTable.mergeUpsert(spark, root, df(5L -> "e"), "k")                     // v4
+    assert(TxTable.indexAt(root, "ivf", 4).map(_._1).contains(3L))
+  }
+
   test("vacuum grace window protects an in-flight writer's unreferenced data dir") {
     // the r14 advisor's race: writer writes its data dir, vacuum runs
     // before the writer's tryCommit, writer then WINS the commit — with
@@ -859,6 +903,29 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     TxTable.refresh(spark, src, batch(0).filter("k < 0"))
     TxTable.vacuum(src, TxTable.latestVersion(src), graceMs = 0)
     assert(rows(dst).size == 80, "vacuuming the source broke the clone")
+  }
+
+  test("cloneTable carries the indexes its version selects as the clone's version-0 indexes") {
+    val src = tmp()
+    TxTable.refresh(spark, src, df(1L -> "a"))                               // v0
+    TxTable.publishIndex(src, 0, "ivf", Array[Byte](0))
+    TxTable.mergeUpsert(spark, src, df(2L -> "b"), "k")                      // v1
+    TxTable.publishIndex(src, 1, "ivf", Array[Byte](1))
+    TxTable.mergeUpsert(spark, src, df(3L -> "c"), "k")                      // v2
+    TxTable.publishIndex(src, 2, "pq", Array[Byte](2))
+    def bytesAt(root: String, kind: String, v: Long) = TxTable.indexAt(root, kind, v)
+      .map(i => java.nio.file.Files.readAllBytes(i._2).toSeq)
+    val atV1 = tmp()
+    assert(TxTable.cloneTable(spark, src, atV1, version = 1))
+    assert(indexNames(atV1) == Set("v00000000.ivf"))
+    assert(bytesAt(atV1, "ivf", 0).contains(Seq[Byte](1)))
+    val latest = tmp()
+    assert(TxTable.cloneTable(spark, src, latest))
+    assert(indexNames(latest) == Set("v00000000.ivf", "v00000000.pq"))
+    assert(bytesAt(latest, "pq", 0).contains(Seq[Byte](2)))
+    // a second creator changes nothing
+    assert(!TxTable.cloneTable(spark, src, atV1))
+    assert(indexNames(atV1) == Set("v00000000.ivf") && bytesAt(atV1, "ivf", 0).contains(Seq[Byte](1)))
   }
 
   test("whole-table appends are rejected on a partition-scoped layout; corrupt txn ledgers fail loudly") {
