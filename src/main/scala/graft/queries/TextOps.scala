@@ -250,6 +250,68 @@ object TextOps {
           | + 0.4 * (1.0 - stop_ratio)
           | + 0.2 * least(avg_token_len / 10.0, 1.0)""".stripMargin))
 
+  /** q92's corpus pass: directed adjacent-token pair counts (a, b, c)
+    * over every doc, self-loops dropped. */
+  private[graft] def textRankPairs(s: SparkSession, dir: String): DataFrame =
+    Tables.spread(s, dir, "documents")
+      .select(expr(toksExpr).as("tk"))
+      .filter(expr("size(tk) >= 2"))
+      .select(explode(expr(
+        "transform(sequence(1, size(tk) - 1), i -> struct(tk[i-1] AS a, tk[i] AS b))")).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .filter(col("a") =!= col("b"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
+
+  /** Hashes a word, or the first word of a (word, word) edge key, so an
+    * edge and its source word's rank land in the same partition. */
+  private class SrcPartitioner(val numPartitions: Int) extends org.apache.spark.Partitioner {
+    def getPartition(key: Any): Int = {
+      val w = key match { case (a, _) => a; case a => a }
+      Math.floorMod(w.hashCode, numPartitions)
+    }
+    override def equals(o: Any): Boolean = o match {
+      case p: SrcPartitioner => p.numPartitions == numPartitions
+      case _ => false
+    }
+    override def hashCode: Int = numPartitions
+  }
+
+  /** q92's damped power iteration (scaladoc at the q92 entry) over
+    * [[textRankPairs]]' directed counts. Every RDD below is partitioned
+    * by the same source-word partitioner, so each round's join with the
+    * adjacency is narrow and only the reduceByKey shuffles. */
+  private[graft] def textRank(pairCounts: DataFrame): DataFrame = {
+    val s = pairCounts.sparkSession
+    import s.implicits._
+    val part = new SrcPartitioner(s.sessionState.conf.numShufflePartitions)
+    // source word a -> (edges (b, w(a,b) = c(a,b) + c(b,a)), wdeg(a))
+    val adj = graft.TempCaches.tracked(pairCounts.rdd
+      .flatMap { r =>
+        val (a, b, c) = (r.getString(0), r.getString(1), r.getLong(2))
+        Iterator(((a, b), c), ((b, a), c))
+      }
+      .reduceByKey(part, (x: Long, y: Long) => Math.addExact(x, y))
+      .mapPartitions({ it =>
+        val bySrc = scala.collection.mutable.HashMap.empty[String,
+          scala.collection.mutable.ArrayBuffer[(String, Long)]]
+        it.foreach { case ((a, b), w) =>
+          bySrc.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += ((b, w)) }
+        bySrc.iterator.map { case (a, es) =>
+          (a, (es.toArray, es.iterator.map(_._2).reduce(Math.addExact(_, _))))
+        }
+      }, preservesPartitioning = true))
+    var ranks = adj.mapValues(_ => 1000000000L)
+    for (_ <- 1 to 3) {
+      ranks = adj.join(ranks)
+        .flatMap { case (_, ((es, wdeg), score)) =>
+          es.iterator.map { case (b, w) => (b, Math.multiplyExact(score, w) / wdeg) }
+        }
+        .reduceByKey(part, (x: Long, y: Long) => Math.addExact(x, y))
+        .mapValues(sum => Math.addExact(150000000L, Math.multiplyExact(85L, sum) / 100))
+    }
+    ranks.toDF("word", "score")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Text quality scoring (training-data op): length/stopword/word-shape
     // signals combined into one score. All-double arithmetic written
@@ -606,59 +668,21 @@ object TextOps {
     // scaled by 1e9, per-edge contribution is `score * w div wdeg`
     // (integral div), damping is `150e6 + 85*sum div 100` — all sums
     // associative, so Spark and DuckDB agree bit-for-bit regardless of
-    // aggregation order (a float PageRank would drift in ulps).
-    // Scale shape: edges are |V|+|E| rows hash-partitioned on src; each
-    // iteration is one shuffle join (ranks ⋈ edges on src, AQE
-    // broadcasts ranks while |V| is small) + one groupBy dst — the
-    // classic distributed PageRank stage plan, O(iters) stages with no
-    // driver-side state. Vocabulary nodes collapse by key first, so the
-    // corpus-sized pair stream never joins anything.
-    // Round-20 optimization: ONE corpus tokenize/explode pass. The prior
-    // form unioned the RAW corpus pair stream with its flip before the
-    // edge aggregation, so the explode lineage was evaluated twice and
-    // 2·|pairs| rows crossed the edge groupBy's exchange. Now DIRECTED
-    // pair counts aggregate first (map-side combine over the one corpus
-    // pass), the union/flip symmetrization runs over the
-    // VOCABULARY-sized count table, and that table is tracked-persisted
-    // (vocab-sized, harness-released). Counts are integers, so
-    // sum-of-directed-counts ≡ count-over-unioned-stream exactly, and
-    // every downstream expression is unchanged — oracle identical.
-    // Measured 4.91 → 3.88 s at the ×100 replica (5/5 alternating reps
-    // won); at sf0.1 the persist overhead makes it ~0.1-0.2 s slower
-    // within the noise band (1.60 → 1.77 median, rep ranges overlap) —
-    // adopted for the scale shape, which is the round's goal. (r19 had
-    // rejected this rewrite on sf0.1 evidence alone; the ×100 A/B
-    // reverses that call.)
-    "q92_textrank" -> ((s, dir) => {
-      val pc = graft.TempCaches.tracked(
-        Tables.spread(s, dir, "documents")
-          .select(expr(toksExpr).as("tk"))
-          .filter(expr("size(tk) >= 2"))
-          .select(explode(expr(
-            "transform(sequence(1, size(tk) - 1), i -> struct(tk[i-1] AS a, tk[i] AS b))")).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-          .filter(col("a") =!= col("b")) // no self-loops
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c")))
-      val und = pc.union(pc.select(col("b").as("a"), col("a").as("b"), col("c")))
-      val edges = und.groupBy(col("a"), col("b")).agg(sum(col("c")).as("w"))
-      val wdeg = edges.groupBy(col("a")).agg(sum(col("w")).as("wdeg"))
-      val e = edges.join(wdeg, "a")
-        .select(col("a"), col("b"), col("w"), col("wdeg"))
-        .transform(graft.TempCaches.tracked(_)) // reused every iteration; harness-released
-      // seed ranks off the tracked count table's key set (= wdeg's key
-      // set: every word with outgoing weight appears as a directed-pair
-      // src or dst, and the union/flip makes src cover both)
-      var ranks = e.select(col("a").as("word")).distinct()
-        .withColumn("score", lit(1000000000L))
-      for (_ <- 1 to 3) {
-        ranks = e.join(ranks, e("a") === ranks("word"))
-          .select(col("b"), expr("score * w div wdeg").as("c"))
-          .groupBy(col("b"))
-          .agg((lit(150000000L) + expr("85 * sum(c) div 100")).as("score"))
-          .select(col("b").as("word"), col("score"))
-      }
-      ranks
-    }),
+    // aggregation order (a float PageRank would drift in ulps). The RDD
+    // side uses Math.multiplyExact/addExact where ANSI SQL would throw
+    // on overflow, and Long `/` truncates toward zero like `div`.
+    // Plan: ONE corpus pass (tokenize → directed pair counts with a
+    // map-side combine, [[textRankPairs]]), then the co-partitioned RDD
+    // PageRank of the Spark RDD paper over the vocabulary-sized graph
+    // ([[textRank]]): one reduceByKey symmetrizes the counts into
+    // per-source adjacency lists (persisted, harness-released), so wdeg
+    // is a local sum; each round is a narrow join with the adjacency
+    // plus one reduceByKey into the same partitioner, and all three
+    // rounds run in the count's one job (3 jobs per count in all: the
+    // corpus pass's two AQE stages, then that one). No driver-side state, no
+    // single-partition operator. Its earlier relational form is the
+    // test twin RelationalTwins.textRank.
+    "q92_textrank" -> ((s, dir) => textRank(textRankPairs(s, dir))),
 
     // PMI collocation mining (Church & Hanks 1990 — the multi-word-
     // expression detector corpus analysis runs before tokenizer or

@@ -61,6 +61,27 @@ object RelationalTwins {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
   }
 
+  /** q92's relational power iteration, which the co-partitioned RDD form
+    * ([[graft.queries.TextOps.textRank]]) replaced: symmetrize the
+    * directed pair counts by union/flip, weighted degree by groupBy, and
+    * three join + groupBy rounds in integer-exact SQL arithmetic. */
+  def textRank(pc: DataFrame): DataFrame = {
+    val und = pc.union(pc.select(col("b").as("a"), col("a").as("b"), col("c")))
+    val edges = und.groupBy(col("a"), col("b")).agg(sum(col("c")).as("w"))
+    val wdeg = edges.groupBy(col("a")).agg(sum(col("w")).as("wdeg"))
+    val e = edges.join(wdeg, "a").select(col("a"), col("b"), col("w"), col("wdeg"))
+    var ranks = e.select(col("a").as("word")).distinct()
+      .withColumn("score", lit(1000000000L))
+    for (_ <- 1 to 3) {
+      ranks = e.join(ranks, e("a") === ranks("word"))
+        .select(col("b"), expr("score * w div wdeg").as("c"))
+        .groupBy(col("b"))
+        .agg((lit(150000000L) + expr("85 * sum(c) div 100")).as("score"))
+        .select(col("b").as("word"), col("score"))
+    }
+    ranks
+  }
+
   /** Centroids as (id, raw float bits) — equality is bit equality. */
   def bits(cents: DataFrame): Seq[(Long, Seq[Int])] =
     cents.collect().map(r => (r.getLong(0),

@@ -215,6 +215,80 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
     assert(a.nonEmpty && a == b)
   }
 
+  /** (word, score) rows of q92's RDD form and of its relational twin over
+    * the same documents table. */
+  private def q92BothForms(docDir: String): (Map[String, Long], Map[String, Long]) = {
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val rs = df.collect().map(r => r.getString(0) -> r.getLong(1))
+      assert(rs.map(_._1).distinct.length == rs.length, "one row per word")
+      rs.toMap
+    }
+    val got = rows(SparkEntry.queries("q92_textrank")(spark, docDir))
+    val want = rows(RelationalTwins.textRank(TextOps.textRankPairs(spark, docDir)))
+    TempCaches.releaseAll()
+    (got, want)
+  }
+
+  private def docsDir(texts: String*): String = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q92t").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s1", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$tmp/documents.parquet")
+    tmp
+  }
+
+  test("q92's co-partitioned RDD rounds equal the relational twin, row for row") {
+    val (fixture, fixtureTwin) = q92BothForms(dir)
+    assert(fixture.nonEmpty && fixture == fixtureTwin)
+    val shapes = Seq(
+      "empty table" -> Seq(),
+      "fewer than 2 tokens" -> Seq("", "solo", "   "),
+      "self-loop only" -> Seq("a a a"),
+      "one two-word doc" -> Seq("p q"),
+      "two components" -> Seq("a b c a", "b a", "x y z", "z y x w"))
+    for ((name, texts) <- shapes) {
+      val (got, want) = q92BothForms(docsDir(texts: _*))
+      assert(got == want, s"$name: got $got, want $want")
+      name match {
+        case "one two-word doc" =>
+          // w=1 both ways: 1e9·1 div 1 each round → 150e6 + 85e7 = 1e9
+          assert(got == Map("p" -> 1000000000L, "q" -> 1000000000L))
+        case "two components" => assert(got.keySet == Set("a", "b", "c", "x", "y", "z", "w"))
+        case _ => assert(got.isEmpty, s"$name: $got")
+      }
+    }
+  }
+
+  test("q92 scores are the same with 1 and with 4 shuffle partitions") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val four = q92BothForms(dir)._1
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val (one, oneTwin) = try q92BothForms(dir)
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert(four.nonEmpty && one == four && oneTwin == four)
+  }
+
+  test("q92's count runs in at most 6 Spark jobs (22 in the relational form)") {
+    TempCaches.releaseAll()
+    val (n, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+      SparkEntry.queries("q92_textrank")(spark, dir).count())
+    TempCaches.releaseAll()
+    assert(n > 0 && jobs <= 6, s"q92 counted $n rows in $jobs jobs")
+  }
+
+  test("the BM25 vocabulary-hash audit passes the fixture vocabulary and fails a planted collision") {
+    val toks = Tables(spark, dir, "documents")
+      .select(explode(expr(graft.queries.Idioms.toksExpr)).as("tok"))
+      .withColumn("hk", xxhash64(col("tok")))
+    graft.queries.VectorOps.requireHashInjective(toks, "tok", "hk")
+    val nTok = toks.select(col("tok")).distinct().count()
+    val e = intercept[IllegalArgumentException](
+      graft.queries.VectorOps.requireHashInjective(toks.withColumn("hk", lit(7L)), "tok", "hk"))
+    assert(nTok > 1 && e.getMessage.contains(s"$nTok distinct tok values but 1 distinct hk"),
+      e.getMessage)
+  }
+
   test("q99: PMI collocations match a full Scala recount of the ratio + pl2 arithmetic") {
     val docs = Tables(spark, dir, "documents").select(col("text")).collect()
       .map(_.getString(0).split(' ').filter(_.nonEmpty)).filter(_.length >= 2)
