@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The contract:
   *   1. a warmup pass on sf0.001 compiles JIT and codegen before anything
-  *      is timed;
+  *      is timed; it runs the queries the run times (the whole suite, or
+  *      the SPARK_GRAFT_BENCH_QUERIES subset);
   *   2. each query is timed REPS times (default 3) and reports the MEDIAN;
   *      a query whose spread (max/min) exceeds 3x is re-timed with five
   *      fresh reps and reports their median, with its raw rep times in
@@ -36,6 +37,7 @@ object Bench {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     }
+    val selected = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "BENCH_subset.json" else "BENCH.json")
     def loadavg(): Double =
@@ -60,7 +62,7 @@ object Bench {
 
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      SparkEntry.queries.foreach { case (_, fn) =>
+      selected.foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
         try { TempCaches.releaseAll(); spark.catalog.clearCache() }
         catch { case _: Throwable => () }
@@ -98,9 +100,7 @@ object Bench {
     // (median, spread = max/min of the reps that produced it, raw reps of
     // a re-repped query)
     val results: Seq[(String, (Double, Double, Option[(Seq[Double], Seq[Double])]))] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
+      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
           def stats(ts: Seq[Double]): (Double, Double) =
             if (ts.exists(_ < 0)) (-1.0, -1.0) // any erroring rep = broken query
             else {

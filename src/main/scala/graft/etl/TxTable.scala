@@ -39,6 +39,21 @@ import scala.jdk.CollectionConverters._
   *     instead of losing one (TxTableSpec). A crash between temp-write
   *     and link leaves only an ignored `.tmp-*` file.
   *
+  * Every retrying writer runs that loop as ONE private `commitLoop`
+  * and only supplies an attempt: a function from the base snapshot to
+  * either a no-op at a version (a replayed txn batch, a restore to the
+  * current version, an evolve to the same schema) or a proposal — the
+  * new manifest (whose metadata defaults to the base's: stats and bloom
+  * columns, schema, layout, txn ledger), the fresh dirs the attempt
+  * wrote, and any stats it already computed. The loop owns the rest:
+  * reading the base, the whole-table-on-scoped-layout refusal, appId
+  * validation and the replay check, the txn tag, the fresh dirs' stats
+  * and Bloom filters, the race for base+1, and on a loss dropping the
+  * fresh dirs (or, for a scoped merge whose winner is disjoint,
+  * re-basing them onto the winner) before the retry. Only the
+  * fixed-target commits ([[create]], [[migrate]], [[cloneTable]])
+  * commit outside it.
+  *
   * Reads: [[read]] resolves the manifest at `version` (default:
   * latest) and scans exactly its listed dirs — old versions stay
   * readable forever (time travel) because data dirs are immutable and
@@ -962,48 +977,112 @@ object TxTable {
     dropBlooms(root, rel)
   }
 
+  /** What a writer's attempt on [[commitLoop]]'s base snapshot returns. */
+  private sealed trait Attempt
+  /** Nothing to commit: the writer returns `version`. */
+  private final case class NoOp(version: Long) extends Attempt
+  /** `snap` is the manifest to commit; the loop sets its version.
+    * `fresh` are the dirs the attempt wrote: the loop stats and blooms
+    * them and drops them on a loss. `stats`/`strStats` are stats the
+    * attempt already has; `statted` names the declared columns they
+    * cover on the fresh dirs. `fastForward` re-bases the same fresh
+    * dirs onto the winner's snapshot after a loss (None: recompute). */
+  private final case class Proposal(snap: Snapshot, fresh: Seq[String] = Nil,
+                                    stats: Seq[DirStat] = Nil,
+                                    strStats: Seq[DirStrStat] = Nil,
+                                    statted: Seq[String] = Nil,
+                                    fastForward: Option[Snapshot => Option[Snapshot]] = None)
+    extends Attempt
+
+  /** A manifest over `entries` that keeps `base`'s table metadata:
+    * stats and bloom columns, schema, layout and txn ledger. */
+  private def next(base: Option[Snapshot], action: String,
+                   entries: Seq[(String, String)]): Snapshot =
+    base.getOrElse(Snapshot(-1L, action, Nil))
+      .copy(action = action, dirs = entries.map(_._1), parts = entries.map(_._2))
+
+  private def required(root: String, base: Option[Snapshot]): Snapshot = {
+    require(base.nonEmpty, s"TxTable at $root has no committed version")
+    base.get
+  }
+
+  /** Write `df` as one fresh whole-table dir after `kept`. */
+  private def written(root: String, base: Option[Snapshot], action: String,
+                      df: DataFrame, ddl: String,
+                      kept: Seq[(String, String)] = Nil): Proposal = {
+    val rel = writeData(root, base.fold(0L)(_.version + 1), df)
+    Proposal(next(base, action, kept :+ (rel -> "")).copy(schemaDdl = ddl), Seq(rel))
+  }
+
+  /** The optimistic commit loop every retrying writer runs (see "Commit
+    * protocol" in the object doc). `wholeTable` names the action of a
+    * writer that adds a whole-table entry, which a partition-scoped
+    * layout refuses; `txn` tags the commit with (appId, batchId) and
+    * makes a replayed batch a no-op. */
+  private def commitLoop(spark: SparkSession, root: String, wholeTable: String = "",
+                         txn: Option[(String, Long)] = None)(
+      attempt: Option[Snapshot] => Attempt): Long = {
+    txn.foreach { case (appId, _) =>
+      require(appId.nonEmpty, "appId must be non-empty")
+      // same manifest-encoding constraint as partition values: a ']'
+      // truncates the bracket-delimited list on re-parse, desyncing the
+      // apps/ids lists (the sink sanitizes its derived ids before calling)
+      require(!appId.contains("]"),
+        s"appId '$appId' is not representable in the manifest encoding " +
+          "(must not contain ']')")
+    }
+    var committed = -1L
+    while (committed < 0) {
+      val baseV = latestVersion(root)
+      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
+      // a whole-table ("") entry on a partition-scoped layout makes
+      // every later scoped merge fail its partitioned-history check —
+      // permanently. Fail THIS call instead (refresh is exempt: a full
+      // replace legitimately re-establishes layout)
+      if (wholeTable.nonEmpty) base.foreach(s => require(s.entries.forall(_._2.isEmpty),
+        s"TxTable $root has a partition-scoped layout — a whole-table $wholeTable would " +
+          "permanently break scoped merges; use mergeUpsertPartitioned (from a " +
+          "streaming sink, through foreachBatch), or refresh to deliberately re-layout"))
+      val replay = txn.exists { case (app, id) => base.exists(_.txns.get(app).exists(_ >= id)) }
+      (if (replay) NoOp(baseV) else attempt(base)) match {
+        case NoOp(v) => committed = v
+        case p: Proposal =>
+          val tagged = txn.fold(p.snap) { case (app, id) =>
+            val txns = p.snap.txns + (app -> id)
+            p.snap.copy(txnApps = txns.keys.toSeq, txnIds = txns.keys.toSeq.map(txns))
+          }
+          val (st, strSt) = dirStatsOf(spark, root, p.fresh,
+            tagged.statsCols.filterNot(p.statted.contains))
+          buildBlooms(spark, root, p.fresh, tagged.bloomCols)
+          var snap = Option(tagged.copy(version = baseV + 1))
+          while (committed < 0 && snap.nonEmpty) {
+            if (tryCommitAnchored(root, snap.get, p.stats ++ st, p.strStats ++ strSt)) {
+              committed = snap.get.version
+              if (committed > baseV + 1) fastForwardCommits.incrementAndGet()
+            } else snap = p.fastForward.flatMap(_(snapshot(root)))
+          }
+          if (committed < 0) {
+            if (p.fastForward.nonEmpty) rebaseRecomputes.incrementAndGet()
+            p.fresh.foreach(dropData(root, _))
+          }
+      }
+    }
+    committed
+  }
+
   /** Full-replace commit — the reference's `drop_old=True` refresh with
     * history kept. Returns the committed version. `evolve` permits a
     * schema change (recorded for subsequent commits to enforce). */
   def refresh(spark: SparkSession, root: String, df: DataFrame,
               evolve: Boolean = false): Long =
-    commitLoop(root, evolve) { base =>
-      (df, "refresh")
+    commitLoop(spark, root) { base =>
+      written(root, base, "refresh", df, resolveSchema(root, base, df, evolve))
     }
 
   /** Append-only commit: prior snapshot's dirs + the new batch. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
-             evolve: Boolean = false): Long = {
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
-      // a whole-table ("") entry on a partition-scoped layout makes
-      // every later scoped merge fail its partitioned-history check —
-      // permanently. Fail THIS call instead (r17 reviewer; refresh is
-      // exempt: a full replace legitimately re-establishes layout)
-      base.foreach(s => require(s.entries.forall(_._2.isEmpty),
-        s"TxTable $root has a partition-scoped layout — append would " +
-          "permanently break scoped merges; use mergeUpsertPartitioned " +
-          "(or refresh to deliberately re-layout)"))
-      val ddl = resolveSchema(root, base, batch, evolve)
-      val statsCols = base.map(_.statsCols).getOrElse(Nil)
-      val bloomCols = base.map(_.bloomCols).getOrElse(Nil)
-      val target = baseV + 1
-      val rel = writeData(root, target, batch)
-      val (fresh, freshStr) = dirStatsOf(spark, root, Seq(rel), statsCols)
-      buildBlooms(spark, root, Seq(rel), bloomCols)
-      val baseEntries = base.map(_.entries).getOrElse(Nil) :+ (rel, "")
-      val snap = Snapshot(target, "append", baseEntries.map(_._1),
-        baseEntries.map(_._2), statsCols, ddl, base.map(_.layout).getOrElse(""),
-        bloomCols, base.toSeq.flatMap(_.txnApps), base.toSeq.flatMap(_.txnIds))
-      if (tryCommitAnchored(root, snap, fresh, freshStr)) {
-        v = target; done = true
-      } else dropData(root, rel)
-    }
-    v
-  }
+             evolve: Boolean = false): Long =
+    commitLoop(spark, root, wholeTable = "append")(appending(root, batch, evolve))
 
   /** Idempotent append for replayable writers (Delta's `txn` recipe —
     * the streaming-sink contract): commit `batch` tagged with
@@ -1017,68 +1096,24 @@ object TxTable {
     * engine's batch counter provides. */
   def appendIdempotent(spark: SparkSession, root: String, batch: DataFrame,
                        appId: String, batchId: Long,
-                       evolve: Boolean = false): Long = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    // same manifest-encoding constraint as partition values: a ']'
-    // truncates the bracket-delimited list on re-parse, desyncing the
-    // apps/ids lists — which now fails loudly at read, but better to
-    // refuse the write (the sink sanitizes its derived ids before
-    // calling)
-    require(!appId.contains("]"),
-      s"appId '$appId' is not representable in the manifest encoding " +
-        "(must not contain ']')")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
-      base.foreach(s => require(s.entries.forall(_._2.isEmpty),
-        s"TxTable $root has a partition-scoped layout — a whole-table " +
-          "append would permanently break scoped merges; route the sink " +
-          "through foreachBatch + mergeUpsertPartitioned instead"))
-      val already = base.exists(_.txns.get(appId).exists(_ >= batchId))
-      if (already) { v = baseV; done = true }
-      else {
-        val ddl = resolveSchema(root, base, batch, evolve)
-        val statsCols = base.map(_.statsCols).getOrElse(Nil)
-        val bloomCols = base.map(_.bloomCols).getOrElse(Nil)
-        val target = baseV + 1
-        val rel = writeData(root, target, batch)
-        val (fresh, freshStr) = dirStatsOf(spark, root, Seq(rel), statsCols)
-        buildBlooms(spark, root, Seq(rel), bloomCols)
-        val baseEntries = base.map(_.entries).getOrElse(Nil) :+ (rel, "")
-        val txns = base.map(_.txns).getOrElse(Map.empty) + (appId -> batchId)
-        val snap = Snapshot(target, "append", baseEntries.map(_._1),
-          baseEntries.map(_._2), statsCols, ddl,
-          base.map(_.layout).getOrElse(""), bloomCols,
-          txns.keys.toSeq, txns.keys.toSeq.map(txns))
-        if (tryCommitAnchored(root, snap, fresh, freshStr)) {
-          v = target; done = true
-        } else dropData(root, rel)
-      }
-    }
-    v
-  }
+                       evolve: Boolean = false): Long =
+    commitLoop(spark, root, wholeTable = "append", txn = Some(appId -> batchId))(
+      appending(root, batch, evolve))
+
+  private def appending(root: String, batch: DataFrame, evolve: Boolean)(
+      base: Option[Snapshot]): Attempt =
+    written(root, base, "append", batch, resolveSchema(root, base, batch, evolve),
+      base.toSeq.flatMap(_.entries))
 
   /** Transactional keyed MERGE (last-writer-wins upsert, the
-    * [[Gold.merge]] semantics): optimistic loop — read the latest
-    * snapshot, merge, write, try to commit; on a lost race the merge is
-    * REBASED onto the winner's snapshot and retried, so no concurrent
-    * writer's rows are ever lost. Returns the committed version. */
+    * [[Gold.merge]] semantics): a lost race REBASES the merge onto the
+    * winner's snapshot, so no concurrent writer's rows are ever lost.
+    * Returns the committed version. */
   def mergeUpsert(spark: SparkSession, root: String, incoming: DataFrame,
                   key: String, broadcastKeys: Boolean = true,
                   evolve: Boolean = false): Long =
-    commitLoop(root, evolve) { base =>
-      base match {
-        case None    => (incoming, "merge")
-        case Some(s) =>
-          // gate the INCOMING frame before merging: unionByName inside
-          // Gold.merge would otherwise surface a mismatched schema as an
-          // AnalysisException instead of the contract's rejection
-          resolveSchema(root, Some(s), incoming, evolve)
-          (Gold.merge(read(spark, root, s.version), incoming, key, broadcastKeys), "merge")
-      }
-    }
+    commitLoop(spark, root, wholeTable = "merge")(
+      merging(spark, root, incoming, Seq(key), broadcastKeys, evolve))
 
   /** Delta's RESTORE (`RESTORE TABLE t TO VERSION AS OF v`): make the
     * CURRENT table state equal `version`'s via ONE metadata commit
@@ -1097,23 +1132,14 @@ object TxTable {
     * a no-op returning it. Fails loudly if `version` was vacuumed. */
   def restore(spark: SparkSession, root: String, version: Long): Long = {
     val src = snapshot(root, version) // throws if absent/vacuumed
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      if (baseV == version) return baseV
-      val base = snapshot(root, baseV)
-      val target = baseV + 1
-      val dirs = src.dirs.toSet
-      val stats = readStats(root, version).filter(s => dirs(s.dir))
-      val strStats = readStrStats(root, version).filter(s => dirs(s.dir))
-      val snapNew = Snapshot(target, "restore", src.dirs, src.parts,
-        src.statsCols, src.schemaDdl, src.layout, src.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snapNew, stats, strStats)) { v = target; done = true }
+    val dirs = src.dirs.toSet
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
+      if (base.version == version) NoOp(version)
+      else Proposal(src.copy(action = "restore", txnApps = base.txnApps, txnIds = base.txnIds),
+        stats = readStats(root, version).filter(s => dirs(s.dir)),
+        strStats = readStrStats(root, version).filter(s => dirs(s.dir)))
     }
-    v
   }
 
   /** Idempotent keyed MERGE for replayable writers — [[mergeUpsert]]
@@ -1131,53 +1157,27 @@ object TxTable {
                             appId: String, batchId: Long,
                             evolve: Boolean = false): Long = {
     require(keys.nonEmpty, "mergeUpsertIdempotent needs at least one key column")
-    require(appId.nonEmpty, "appId must be non-empty")
-    require(!appId.contains("]"),
-      s"appId '$appId' is not representable in the manifest encoding " +
-        "(must not contain ']')")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
-      base.foreach(s => require(s.entries.forall(_._2.isEmpty),
-        s"TxTable $root has a partition-scoped layout — a whole-table " +
-          "merge would permanently break scoped merges; route the sink " +
-          "through foreachBatch + mergeUpsertPartitioned instead"))
-      val already = base.exists(_.txns.get(appId).exists(_ >= batchId))
-      if (already) { v = baseV; done = true }
-      else {
-        val ddl = resolveSchema(root, base, incoming, evolve)
-        val merged = base match {
-          case None    => incoming
-          case Some(s) =>
-            if (keys.length == 1)
-              Gold.merge(read(spark, root, s.version), incoming, keys.head)
-            else {
-              // composite key: anti-join the current table against the
-              // batch's (small, broadcastable) key tuples, then union
-              import org.apache.spark.sql.functions.broadcast
-              val cur = read(spark, root, s.version)
-              cur.join(broadcast(incoming.select(keys.map(col): _*).distinct()),
-                keys, "left_anti").unionByName(incoming)
-            }
-        }
-        val statsCols = base.map(_.statsCols).getOrElse(Nil)
-        val bloomCols = base.map(_.bloomCols).getOrElse(Nil)
-        val target = baseV + 1
-        val rel = writeData(root, target, merged)
-        val (fresh, freshStr) = dirStatsOf(spark, root, Seq(rel), statsCols)
-        buildBlooms(spark, root, Seq(rel), bloomCols)
-        val txns = base.map(_.txns).getOrElse(Map.empty) + (appId -> batchId)
-        val snap = Snapshot(target, "merge", Seq(rel), Seq(""), statsCols,
-          ddl, base.map(_.layout).getOrElse(""), bloomCols,
-          txns.keys.toSeq, txns.keys.toSeq.map(txns))
-        if (tryCommitAnchored(root, snap, fresh, freshStr)) {
-          v = target; done = true
-        } else dropData(root, rel)
-      }
+    commitLoop(spark, root, wholeTable = "merge", txn = Some(appId -> batchId))(
+      merging(spark, root, incoming, keys, broadcastKeys = true, evolve))
+  }
+
+  private def merging(spark: SparkSession, root: String, incoming: DataFrame,
+                      keys: Seq[String], broadcastKeys: Boolean, evolve: Boolean)(
+      base: Option[Snapshot]): Attempt = {
+    // gate the INCOMING frame before merging: unionByName would
+    // otherwise surface a mismatched schema as an AnalysisException
+    // instead of the contract's rejection
+    val ddl = resolveSchema(root, base, incoming, evolve)
+    val merged = base.fold(incoming) { s =>
+      val cur = read(spark, root, s.version)
+      if (keys.length == 1) Gold.merge(cur, incoming, keys.head, broadcastKeys)
+      else // composite key: anti-join the table against the batch's
+        // (small, broadcastable) key tuples, then union
+        cur.join(org.apache.spark.sql.functions.broadcast(
+          incoming.select(keys.map(col): _*).distinct()), keys, "left_anti")
+          .unionByName(incoming)
     }
-    v
+    written(root, base, "merge", merged, ddl)
   }
 
   /** Partition-scoped MERGE — the commit shape the class doc promises
@@ -1213,8 +1213,6 @@ object TxTable {
                              broadcastKeys: Boolean = true,
                              evolve: Boolean = false,
                              layout: String = ""): Long = {
-    var v = -1L
-    var done = false
     // touched partitions: one small distinct over the batch, bounded by
     // the table's partition count (driver-safe by the layout's design).
     // NULLs are collected rather than dropped so the contract violation
@@ -1229,9 +1227,7 @@ object TxTable {
     touched.foreach(p => require(p.nonEmpty && !p.contains("]"),
       s"partition value '$p' is not representable in the manifest encoding " +
         "(must be non-empty and must not contain ']')"))
-    while (!done) {
-      val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
+    commitLoop(spark, root) { base =>
       base.foreach { s =>
         require(s.entries.forall(_._2.nonEmpty),
           s"TxTable $root has whole-table entries; partition-scoped merge " +
@@ -1248,11 +1244,8 @@ object TxTable {
               "scoping constant is part of the persistent layout")
       }
       val ddl = resolveSchema(root, base, incoming, evolve)
-      val statsCols = base.map(_.statsCols).getOrElse(Nil)
-      val bloomCols = base.map(_.bloomCols).getOrElse(Nil)
-      val tableLayout = base.map(_.layout).filter(_.nonEmpty).getOrElse(layout)
-      val target = baseV + 1
       val baseEntries = base.toSeq.flatMap(_.entries)
+      def touchedOf(es: Seq[(String, String)]) = touched.map(p => es.filter(_._2 == p).toSet)
       val fresh = touched.map { p =>
         val baseDirsP = baseEntries.filter(_._2 == p).map(_._1)
         val incP = incoming.filter(col(partCol).cast("string") === p)
@@ -1261,45 +1254,26 @@ object TxTable {
           else Gold.merge(
             spark.read.parquet(baseDirsP.map(d => s"$root/$d"): _*),
             incP, key, broadcastKeys)
-        (writeData(root, target, merged), p)
+        (writeData(root, base.fold(0L)(_.version + 1), merged), p)
       }
-      // fresh-dir stats once per attempt (dirs are reused verbatim
-      // across the fast-forward re-diffs below)
-      val (freshStats, freshStrStats) = dirStatsOf(spark, root, fresh.map(_._1), statsCols)
-      buildBlooms(spark, root, fresh.map(_._1), bloomCols)
-      // commit loop: first try at target; on loss, fast-forward over any
-      // disjoint winners (dir names keep the v$target prefix — the name
-      // is cosmetic, the manifest is the binding reference)
-      var conflicted = false
-      while (!done && !conflicted) {
-        val curV = latestVersion(root)
-        val curSnap = if (curV < 0 || curV == baseV) base
-                      else Some(snapshot(root, curV))
-        val curEntries = curSnap.toSeq.flatMap(_.entries)
-        val disjoint = curV == baseV || (
-          curEntries.forall(_._2.nonEmpty) &&
-            // a concurrent schema evolution invalidates the merge output
-            curSnap.forall(s => s.schemaDdl.isEmpty || s.schemaDdl == ddl) &&
-            touched.forall(p =>
-              curEntries.filter(_._2 == p).toSet == baseEntries.filter(_._2 == p).toSet))
-        if (!disjoint) conflicted = true
-        else {
-          val all = curEntries.filterNot(e => touched.contains(e._2)) ++ fresh
-          val snap = Snapshot(curV + 1, "merge", all.map(_._1), all.map(_._2),
-            statsCols, ddl, tableLayout, bloomCols,
-            curSnap.toSeq.flatMap(_.txnApps), curSnap.toSeq.flatMap(_.txnIds))
-          if (tryCommitAnchored(root, snap, freshStats, freshStrStats)) {
-            if (curV != baseV) fastForwardCommits.incrementAndGet()
-            v = curV + 1; done = true
-          } // else: another commit landed first — re-diff against it
-        }
-      }
-      if (!done) { // overlapping writer (or re-layout): recompute merges
-        rebaseRecomputes.incrementAndGet()
-        fresh.foreach(e => dropData(root, e._1))
-      }
+      def kept(es: Seq[(String, String)]) = es.filterNot(e => touched.contains(e._2)) ++ fresh
+      val proposal = next(base, "merge", kept(baseEntries)).copy(schemaDdl = ddl,
+        layout = base.map(_.layout).filter(_.nonEmpty).getOrElse(layout))
+      // a winner that rewrote none of the touched partitions (and kept
+      // the schema and the declared stats/bloom columns the fresh dirs
+      // were statted for) leaves the fresh dirs correct: adopt its
+      // entries for everything else (dir names keep the base's v<N>
+      // prefix — the name is cosmetic, the manifest is the binding
+      // reference)
+      Proposal(proposal, fresh.map(_._1), fastForward = Some(cur =>
+        if (cur.entries.forall(_._2.nonEmpty) &&
+            (cur.schemaDdl.isEmpty || cur.schemaDdl == ddl) &&
+            cur.statsCols == proposal.statsCols && cur.bloomCols == proposal.bloomCols &&
+            touchedOf(cur.entries) == touchedOf(baseEntries))
+          Some(next(Some(proposal), "merge", kept(cur.entries)).copy(
+            version = cur.version + 1, txnApps = cur.txnApps, txnIds = cur.txnIds))
+        else None))
     }
-    v
   }
 
   /** One-shot legacy adoption: commit `df` as version 0 iff no version
@@ -1338,18 +1312,14 @@ object TxTable {
     require(!zOrder || clusterBy.length >= 2,
       "zOrder interleaves multiple columns — pass >= 2 clusterBy columns " +
         "(a single column is just the linear layout)")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version to compact")
-      val base = snapshot(root, baseV)
-      val target = baseV + 1
-      def dirBytes(rel: String): Long = {
-        val s = Files.walk(Paths.get(root, rel))
-        try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-        finally s.close()
-      }
+    def dirBytes(rel: String): Long = {
+      val s = Files.walk(Paths.get(root, rel))
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+      finally s.close()
+    }
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
+      val target = base.version + 1
       // one re-layout dir per partition group (preserves the scoped
       // layout so later partition merges still rewrite only their slice)
       val groups = base.entries.groupBy(_._2).toSeq.sortBy(_._1)
@@ -1361,19 +1331,10 @@ object TxTable {
         else clusteredDirs(spark, root, target, p, df, nOut, clusterBy, zOrder)
       }
       val fresh = freshAll.map(_._1)
-      // declared stats columns not covered by the clustered pass get the
-      // same per-dir min/max every other commit path records
-      val (declared, declaredStr) = dirStatsOf(spark, root, fresh.map(_._1),
-        base.statsCols.filterNot(clusterBy.contains))
-      buildBlooms(spark, root, fresh.map(_._1), base.bloomCols)
-      val snap = Snapshot(target, "compact", fresh.map(_._1), fresh.map(_._2),
-        base.statsCols, base.schemaDdl, base.layout, base.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap, freshAll.flatMap(_._2) ++ declared, declaredStr)) {
-        v = target; done = true
-      } else fresh.foreach(e => dropData(root, e._1))
+      // the clustered pass already stats the clusterBy columns
+      Proposal(next(b, "compact", fresh), fresh.map(_._1),
+        stats = freshAll.flatMap(_._2), statted = clusterBy)
     }
-    v
   }
 
   /** Range-clustered re-layout of one partition group (round 16 — the
@@ -1606,34 +1567,6 @@ object TxTable {
     base.filter(col(column).between(lo, hi))
   }
 
-  /** The shared optimistic-retry skeleton: compute the full replacement
-    * frame off the CURRENT snapshot, write it, race for base+1. Schema
-    * is enforced against the table's recorded DDL (unless `evolve`);
-    * declared stats columns get fresh-dir min/max computed per commit. */
-  private def commitLoop(root: String, evolve: Boolean = false)(
-      replace: Option[Snapshot] => (DataFrame, String)): Long = {
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
-      val (df, action) = replace(base)
-      val ddl = resolveSchema(root, base, df, evolve)
-      val statsCols = base.map(_.statsCols).getOrElse(Nil)
-      val bloomCols = base.map(_.bloomCols).getOrElse(Nil)
-      val target = baseV + 1
-      val rel = writeData(root, target, df)
-      val (fresh, freshStr) = dirStatsOf(df.sparkSession, root, Seq(rel), statsCols)
-      buildBlooms(df.sparkSession, root, Seq(rel), bloomCols)
-      val snap = Snapshot(target, action, Seq(rel), Seq(""), statsCols, ddl,
-        base.map(_.layout).getOrElse(""), bloomCols,
-        base.toSeq.flatMap(_.txnApps), base.toSeq.flatMap(_.txnIds))
-      if (tryCommitAnchored(root, snap, fresh, freshStr)) { v = target; done = true }
-      else dropData(root, rel) // lost the race: discard, rebase, retry
-    }
-    v
-  }
-
   /** Declare (or re-declare) the table's data-skipping stats columns —
     * a metadata commit (action "setstats") that carries every current
     * entry forward BY REFERENCE, records `cols` in the manifest so
@@ -1645,26 +1578,18 @@ object TxTable {
   def setStatsColumns(spark: SparkSession, root: String,
                       cols: Seq[String]): Long = {
     require(cols.nonEmpty, "declare at least one stats column")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      val base = snapshot(root, baseV)
-      val have = (readStats(root, baseV).filter(s => cols.contains(s.col))
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
+      val have = (readStats(root, base.version).filter(s => cols.contains(s.col))
         .map(s => (s.dir, s.col)) ++
-        readStrStats(root, baseV).filter(s => cols.contains(s.col))
+        readStrStats(root, base.version).filter(s => cols.contains(s.col))
           .map(s => (s.dir, s.col))).toSet
       val needing = base.dirs.filter(d => !cols.forall(c => have((d, c))))
       val (freshAll, freshStrAll) = dirStatsOf(spark, root, needing, cols)
-      val fresh = freshAll.filterNot(s => have((s.dir, s.col)))
-      val freshStr = freshStrAll.filterNot(s => have((s.dir, s.col)))
-      val snap = Snapshot(baseV + 1, "setstats", base.dirs, base.parts,
-        cols, base.schemaDdl, base.layout, base.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap, fresh, freshStr)) { v = snap.version; done = true }
+      Proposal(next(b, "setstats", base.entries).copy(statsCols = cols),
+        stats = freshAll.filterNot(s => have((s.dir, s.col))),
+        strStats = freshStrAll.filterNot(s => have((s.dir, s.col))))
     }
-    v
   }
 
   /** Metadata-only schema evolution commit (action "evolve") — the
@@ -1685,12 +1610,8 @@ object TxTable {
                    newSchema: org.apache.spark.sql.types.StructType): Long = {
     val newDdl = org.apache.spark.sql.types.StructType(
       newSchema.fields.map(_.copy(nullable = true))).toDDL
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      val base = snapshot(root, baseV)
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
       require(base.schemaDdl.nonEmpty,
         s"TxTable $root has no recorded schema contract — evolve rides " +
           "a write (append/refresh with evolve = true) on pre-contract tables")
@@ -1701,13 +1622,9 @@ object TxTable {
         s"evolveSchema only APPENDS columns: table has [${base.schemaDdl}], " +
           s"requested [$newDdl] — existing fields must keep their name, " +
           "order, and type (drops/renames/retypes would corrupt old-dir reads)")
-      if (newDdl == base.schemaDdl) return baseV // idempotent no-op
-      val snap = Snapshot(baseV + 1, "evolve", base.dirs, base.parts,
-        base.statsCols, newDdl, base.layout, base.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap)) { v = snap.version; done = true }
+      if (newDdl == base.schemaDdl) NoOp(base.version)
+      else Proposal(next(b, "evolve", base.entries).copy(schemaDdl = newDdl))
     }
-    v
   }
 
   /** Declare (or re-declare) the table's point-lookup Bloom columns — a
@@ -1721,21 +1638,12 @@ object TxTable {
   def setBloomColumns(spark: SparkSession, root: String,
                       cols: Seq[String]): Long = {
     require(cols.nonEmpty, "declare at least one bloom column")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      val base = snapshot(root, baseV)
-      val needing = base.dirs.filter(d =>
-        !cols.forall(c => Files.exists(bloomFile(root, d, c))))
-      buildBlooms(spark, root, needing, cols)
-      val snap = Snapshot(baseV + 1, "setbloom", base.dirs, base.parts,
-        base.statsCols, base.schemaDdl, base.layout, cols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap)) { v = snap.version; done = true }
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
+      buildBlooms(spark, root, base.dirs.filter(d =>
+        !cols.forall(c => Files.exists(bloomFile(root, d, c)))), cols)
+      Proposal(next(b, "setbloom", base.entries).copy(bloomCols = cols))
     }
-    v
   }
 
   /** Zero-copy table fork (Delta's SHALLOW CLONE, adapted to a
@@ -1982,113 +1890,70 @@ object TxTable {
     (ranges, strRanges)
   }
 
-  /** Shared optimistic update loop — [[deleteImpl]]'s shape with a
-    * projection instead of a filter: candidate dirs rewrite every row
-    * through `CASE WHEN cond THEN assignment ELSE old END` per updated
-    * column (schema unchanged — assignments cast to the column's
-    * existing type), everything else carries by reference. */
+  /** The scoped rewrite behind the DELETE/UPDATE family: each candidate
+    * dir (`prune`) is read under the TABLE schema, passed through the
+    * per-dir `rewrite` (given that schema) and written fresh; every
+    * other dir carries by reference. With `dropEmpty`, a rewritten dir
+    * left with no rows drops out of the manifest. Reading under the
+    * table schema matters: a dir written before an evolve commit
+    * physically lacks the appended columns, and a raw read would fail
+    * to resolve a predicate on one — under the recorded schema those
+    * cells are NULL, which the row predicates correctly never match.
+    * Fresh dirs get new names, so a rewritten dir's stale (dir, col)
+    * stats can't leak. */
+  private def rewriteDirs(spark: SparkSession, root: String, action: String,
+                          prune: Snapshot => Set[String], dropEmpty: Boolean)(
+      rewrite: org.apache.spark.sql.types.StructType => DataFrame => DataFrame): Long =
+    commitLoop(spark, root) { b =>
+      val base = required(root, b)
+      val schema = tableSchema(spark, root, base.version)
+      val f = rewrite(schema)
+      val candidates = prune(base)
+      val rewritten: Seq[(String, Option[(String, String)])] =
+        base.entries.filter(e => candidates(e._1)).map { case (dir, part) =>
+          val rel = writeData(root, base.version + 1,
+            f(spark.read.schema(schema).parquet(s"$root/$dir")))
+          // one scan per candidate: rewrite+write in a single pass, then
+          // a parquet METADATA count decides fully-deleted (a separate
+          // isEmpty probe would re-read the whole dir first)
+          if (dropEmpty && spark.read.parquet(s"$root/$rel").count() == 0L) {
+            dropData(root, rel)
+            (dir, None)
+          } else (dir, Some((rel, part)))
+        }
+      val replacement = rewritten.toMap
+      val entries = base.entries.flatMap(e => replacement.getOrElse(e._1, Some(e)))
+      Proposal(next(b, action, entries), rewritten.flatMap(_._2).map(_._1))
+    }
+
+  /** UPDATE: candidate dirs rewrite every row through `CASE WHEN cond
+    * THEN assignment ELSE old END` per updated column (schema unchanged
+    * — assignments cast to the column's existing type). */
   private def updateImpl(spark: SparkSession, root: String, action: String,
                          prune: Snapshot => Set[String],
                          cond: org.apache.spark.sql.Column,
                          set: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     require(set.nonEmpty, "update needs at least one assignment")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      val base = snapshot(root, baseV)
-      val target = baseV + 1
-      val schema = tableSchema(spark, root, baseV)
-      val setMap = set.toMap
+    val setMap = set.toMap
+    rewriteDirs(spark, root, action, prune, dropEmpty = false) { schema =>
       val unknown = set.map(_._1).filterNot(schema.fieldNames.contains)
       require(unknown.isEmpty,
         s"update assigns unknown column(s): ${unknown.mkString(", ")}")
-      val candidates = prune(base)
-      val rewritten: Seq[(String, (String, String))] =
-        base.entries.filter(e => candidates(e._1)).map { case (dir, part) =>
-          val src = spark.read.schema(schema).parquet(s"$root/$dir")
-          val projected = src.select(schema.fields.toIndexedSeq.map { f =>
-            setMap.get(f.name) match {
-              case Some(expr) => org.apache.spark.sql.functions
-                .when(cond, expr.cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*)
-          (dir, (writeData(root, target, projected), part))
+      _.select(schema.fields.toIndexedSeq.map { f =>
+        setMap.get(f.name) match {
+          case Some(expr) => org.apache.spark.sql.functions
+            .when(cond, expr.cast(f.dataType))
+            .otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
         }
-      val replacement = rewritten.toMap
-      val entries = base.entries.map { case e @ (dir, _) =>
-        replacement.getOrElse(dir, e)
-      }
-      val freshRels = rewritten.map(_._2._1)
-      val (fresh, freshStr) = dirStatsOf(spark, root, freshRels, base.statsCols)
-      buildBlooms(spark, root, freshRels, base.bloomCols)
-      val snap = Snapshot(target, action, entries.map(_._1), entries.map(_._2),
-        base.statsCols, base.schemaDdl, base.layout, base.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap, fresh, freshStr)) { v = target; done = true }
-      else freshRels.foreach(dropData(root, _))
+      }: _*)
     }
-    v
   }
 
-  /** Shared optimistic delete loop: candidate dirs (prune) are
-    * rewritten without the matching rows, everything else carries by
-    * reference. Stats/blooms rebuild for the fresh dirs only — carried
-    * dirs keep their exact stats (immutable), and a REWRITTEN dir's
-    * stale (dir, col) stats can't leak because fresh dirs get new
-    * names. */
   private def deleteImpl(spark: SparkSession, root: String, action: String,
                          prune: Snapshot => Set[String],
-                         keep: org.apache.spark.sql.Column): Long = {
-    var v = -1L
-    var done = false
-    while (!done) {
-      val baseV = latestVersion(root)
-      require(baseV >= 0, s"TxTable at $root has no committed version")
-      val base = snapshot(root, baseV)
-      val target = baseV + 1
-      val candidates = prune(base)
-      // read candidates under the TABLE schema (like updateImpl): a
-      // dir written before an evolve commit physically lacks the
-      // appended columns, and a raw read would fail to resolve a
-      // delete predicate on one — under the recorded schema those
-      // cells are NULL, which the keep-predicates correctly never
-      // match (r19: evolve interplay)
-      val readSchema = tableSchema(spark, root, baseV)
-      val rewritten: Seq[(String, Option[(String, String)])] =
-        base.entries.filter(e => candidates(e._1)).map { case (dir, part) =>
-          // one scan per candidate: filter+write in a single pass, then
-          // a parquet METADATA count decides fully-deleted (a separate
-          // isEmpty probe would re-read the whole dir first)
-          val kept = spark.read.schema(readSchema).parquet(s"$root/$dir").filter(keep)
-          val rel = writeData(root, target, kept)
-          if (spark.read.parquet(s"$root/$rel").count() == 0L) {
-            dropData(root, rel)
-            (dir, None) // dir fully deleted
-          } else (dir, Some((rel, part)))
-        }
-      val replacement = rewritten.map { case (old, repl) => old -> repl }.toMap
-      val entries = base.entries.flatMap { case e @ (dir, part) =>
-        replacement.get(dir) match {
-          case None            => Some(e)   // untouched: carried by reference
-          case Some(Some(r))   => Some(r)   // rewritten
-          case Some(None)      => None      // fully deleted
-        }
-      }
-      val freshRels = rewritten.flatMap(_._2).map(_._1)
-      val (fresh, freshStr) = dirStatsOf(spark, root, freshRels, base.statsCols)
-      buildBlooms(spark, root, freshRels, base.bloomCols)
-      val snap = Snapshot(target, action, entries.map(_._1), entries.map(_._2),
-        base.statsCols, base.schemaDdl, base.layout, base.bloomCols,
-        base.txnApps, base.txnIds)
-      if (tryCommitAnchored(root, snap, fresh, freshStr)) { v = target; done = true }
-      else freshRels.foreach(dropData(root, _))
-    }
-    v
-  }
+                         keep: org.apache.spark.sql.Column): Long =
+    rewriteDirs(spark, root, action, prune, dropEmpty = true)(_ => _.filter(keep))
 
   /** The recorded data-skipping state at `version` as a frame — one
     * row per (dir, stat): numeric and string min/max plus whether a

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * `ExtensionsProbe`, whose job is to prove config-only extension
   * registration on a fresh JVM, keeps its own builder. Measurement hooks
   * and probe mains stay out of `src/main`: A/B timing runs through
-  * `graft.Bench` subsets on two trees and through `perfbench`. */
+  * `graft.Bench` subsets on two trees and through `perfbench`. TxTable's
+  * writers share one optimistic commit loop. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -34,5 +35,16 @@ class SourceTripwireSpec extends AnyFunSuite {
     val banned = Seq("probeSpread", "sq8Prefilter", "OptProbe", "ScaleProbe", "DevProbe")
     val hits = for ((p, src) <- sources; b <- banned if src.contains(b)) yield s"$p: $b"
     assert(hits.isEmpty, s"deleted probe code is back: ${hits.mkString(", ")}")
+  }
+
+  test("TxTable commits through one optimistic loop: tryCommitAnchored has at most 3 call sites") {
+    val src = sources.collectFirst { case ("graft/etl/TxTable.scala", s) => s }
+      .getOrElse(fail("graft/etl/TxTable.scala not found"))
+    // the definition aside: the shared loop, migrate and cloneTable
+    val calls = "tryCommitAnchored\\(".r.findAllMatchIn(src)
+      .count(m => !src.substring(0, m.start).endsWith("def "))
+    assert(calls > 0 && calls <= 3,
+      s"$calls tryCommitAnchored call sites: a writer hand-rolls its own retry loop " +
+        "instead of returning an attempt to commitLoop")
   }
 }

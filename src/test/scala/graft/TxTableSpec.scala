@@ -356,6 +356,31 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       s"overlapping rebase lost an update: $all")
   }
 
+  test("a scoped merge that loses to a stats/bloom declaration recomputes instead of reverting it") {
+    import spark.implicits._
+    def pdf(rows: (Long, String, String)*) = rows.toDF("k", "v", "p")
+    Seq[(String, String => Long, TxTable.Snapshot => Seq[String])](
+      ("setStatsColumns", TxTable.setStatsColumns(spark, _, Seq("k")), _.statsCols),
+      ("setBloomColumns", TxTable.setBloomColumns(spark, _, Seq("k")), _.bloomCols)
+    ).foreach { case (name, declare, declared) =>
+      val root = tmp()
+      TxTable.mergeUpsertPartitioned(spark, root, pdf((1L, "a", "x"), (10L, "m", "y")), "k", "p")
+      TxTable.resetCounters()
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      TxTable.beforeCommitHook = () => if (armed.compareAndSet(true, false)) declare(root)
+      try TxTable.mergeUpsertPartitioned(spark, root, pdf((2L, "b", "x")), "k", "p")
+      finally TxTable.beforeCommitHook = () => ()
+      val fin = TxTable.snapshot(root)
+      assert(fin.version == 2 && declared(fin) == Seq("k"), s"$name was reverted: $fin")
+      assert(TxTable.rebaseRecomputes.get() == 1 && TxTable.fastForwardCommits.get() == 0, name)
+      // the recomputed x dir is statted / bloomed for the declared column
+      val xDir = fin.entries.find(_._2 == "x").get._1
+      if (name == "setStatsColumns")
+        assert(TxTable.readStats(root, 2).exists(s => s.dir == xDir && s.col == "k"))
+      else assert(TxTable.readBloom(root, xDir, "k").nonEmpty)
+    }
+  }
+
   test("clustered compact + dir stats: pruned scan reads only overlapping dirs, result exact") {
     import spark.implicits._
     val root = tmp()
@@ -940,6 +965,10 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       TxTable.appendIdempotent(spark, root,
         Seq((2L, "b", "y")).toDF("k", "v", "p"), "app", 0L)
     }
+    intercept[IllegalArgumentException] {
+      TxTable.mergeUpsert(spark, root, Seq((2L, "b", "y")).toDF("k", "v", "p"), "k")
+    }
+    assert(TxTable.latestVersion(root) == 0, "a rejected whole-table write committed")
     // appId carrying ']' would desync the bracket-delimited ledger
     val root2 = tmp()
     intercept[IllegalArgumentException] {
@@ -956,6 +985,71 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       java.nio.file.Paths.get(root2, "_txlog", "_latest.hint"))
     intercept[IllegalStateException] {
       TxTable.appendIdempotent(spark, root2, df(2L -> "b"), "app", 1L)
+    }
+  }
+
+  test("every retrying writer survives a lost race: latest+1, winner's txn kept, metadata carried, no orphan dir") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.StringType
+    type Meta = (String, String, Seq[String], Seq[String])
+    def meta(s: TxTable.Snapshot): Meta = (s.schemaDdl, s.layout, s.statsCols, s.bloomCols)
+    // (writer, the metadata it commits given its base's)
+    val writers: Seq[(String, String => Long, Meta => Meta)] = Seq(
+      ("append", r => TxTable.append(spark, r, df(50L -> "n")), identity),
+      ("appendIdempotent", r => TxTable.appendIdempotent(spark, r, df(50L -> "n"), "w", 0L), identity),
+      ("mergeUpsert", r => TxTable.mergeUpsert(spark, r, df(1L -> "A", 50L -> "n"), "k"), identity),
+      ("mergeUpsertIdempotent",
+        r => TxTable.mergeUpsertIdempotent(spark, r, df(1L -> "A"), Seq("k"), "w", 0L), identity),
+      ("restore", r => TxTable.restore(spark, r, 3L), identity),
+      ("compact", r => TxTable.compact(spark, r), identity),
+      ("setStatsColumns", r => TxTable.setStatsColumns(spark, r, Seq("k", "v")),
+        m => m.copy(_3 = Seq("k", "v"))),
+      ("setBloomColumns", r => TxTable.setBloomColumns(spark, r, Seq("v", "k")),
+        m => m.copy(_4 = Seq("v", "k"))),
+      ("evolveSchema", r => TxTable.evolveSchema(spark, r,
+        TxTable.tableSchema(spark, r).add("extra", StringType)),
+        m => m.copy(_1 = org.apache.spark.sql.types.StructType.fromDDL(m._1)
+          .add("extra", StringType).toDDL)),
+      ("deleteKeys", r => TxTable.deleteKeys(spark, r, "k", Seq(2L)), identity),
+      ("updateKeys", r => TxTable.updateKeys(spark, r, "k", Seq(2L), Seq("v" -> lit("u"))), identity))
+    writers.foreach { case (name, write, expected) =>
+      val root = tmp()
+      TxTable.refresh(spark, root, df(1L -> "a", 2L -> "b", 3L -> "c"))  // v0
+      TxTable.setStatsColumns(spark, root, Seq("k"))                     // v1
+      TxTable.setBloomColumns(spark, root, Seq("k"))                     // v2
+      TxTable.appendIdempotent(spark, root, df(4L -> "d"), "seed", 0L)   // v3
+      TxTable.append(spark, root, df(5L -> "e"))                         // v4
+      val base = TxTable.snapshot(root)
+      // the other writer wins base+1 inside this writer's commit window
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      TxTable.beforeCommitHook = () =>
+        if (armed.compareAndSet(true, false))
+          TxTable.appendIdempotent(spark, root, df(100L -> "o"), "other", 7L)
+      val v = try write(root) finally TxTable.beforeCommitHook = () => ()
+      assert(!armed.get, s"$name: the race never happened")
+      assert(v == base.version + 2 && TxTable.latestVersion(root) == v,
+        s"$name: committed v$v, expected v${base.version + 2} after the winner")
+      val fin = TxTable.snapshot(root)
+      assert(fin.txns.get("other").contains(7L) && fin.txns.get("seed").contains(0L),
+        s"$name: dropped a writer's txn record: ${fin.txns}")
+      assert(meta(fin) == expected(meta(base)), s"$name: metadata not carried forward")
+      if (name != "restore") // a restore undoes the winner's rows by design
+        assert(TxTable.read(spark, root).filter("k = 100").count() == 1,
+          s"$name: lost the winner's rows")
+      // every data dir on disk (and every bloom file) belongs to some
+      // manifest: a loser drops the dirs of its lost attempt
+      val referenced = (0L to v).flatMap(TxTable.snapshot(root, _).dirs).toSet
+      def names(dir: String*): Set[String] = {
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(root, dir: _*))
+        try ls.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+        finally ls.close()
+      }
+      val onDisk = names("data").map("data/" + _)
+      assert(onDisk.subsetOf(referenced), s"$name: orphan dirs ${onDisk -- referenced}")
+      val blooms = names("_txlog", "bloom")
+      val owners = referenced.map(_.replace('/', '_') + ".")
+      assert(blooms.forall(b => owners.exists(b.startsWith)),
+        s"$name: orphan bloom files ${blooms.filterNot(b => owners.exists(b.startsWith))}")
     }
   }
 
