@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   *      stays short and last in the stdout tail;
   *   4. the line carries `loadavg_before`/`loadavg_after`, per-query
   *      `spread`, `n_ok` (how many queries the total covers) and
-  *      `contended` (loadavg_before > 1.5 or a spread still over 3x).
+  *      `contended` (loadavg_before above 0.375 per core — 1.5 on 4
+  *      cores — or a spread still over 3x).
   *
   * A SPARK_GRAFT_BENCH_QUERIES subset run tags the line with
   * "metric":"total_subset" and defaults the out file to BENCH_subset.json,
@@ -43,6 +44,8 @@ object Bench {
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
+    // the contention threshold scales with the box: 0.375 per core
+    val loadLimit = 0.375 * Runtime.getRuntime.availableProcessors
     val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -51,8 +54,8 @@ object Bench {
     // run anyway: the `contended` stamp still marks a loaded box
     val waitCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SECS", "900").toLong
     val waitT0 = System.nanoTime()
-    while (loadavg() > 1.5 && (System.nanoTime() - waitT0) / 1e9 < waitCap) {
-      System.err.println(s"[bench] loadavg ${loadavg()} > 1.5 — waiting for an idle box")
+    while (loadavg() > loadLimit && (System.nanoTime() - waitT0) / 1e9 < waitCap) {
+      System.err.println(s"[bench] loadavg ${loadavg()} > $loadLimit — waiting for an idle box")
       Thread.sleep(15000)
     }
 
@@ -144,7 +147,7 @@ object Bench {
     val total = healthy.sum
     val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val contended = loadBefore > 1.5 ||
+    val contended = loadBefore > loadLimit ||
       results.exists { case (_, (_, sp, _)) => sp > 3.0 }
     val metric = if (only.isDefined) "total_subset" else "total"
     // trained-artifact memo hits and misses: an ANN query's first rep

@@ -1,54 +1,48 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (reference capability A8 — the Milvus vector store's retrieval surface,
   * dags/utils/seed_milvus.py:7-25).
   *
-  * Two equivalent implementations of brute-force top-k:
-  *  - [[topKWindow]]: declarative — broadcast the query side, NaN-guarded
-  *    codegen'd cosine, `row_number` window. Catalyst/codegen
-  *    handles everything; the window shuffles |corpus|×|queries| rows.
-  *  - [[topKPartitioned]]: the 100 TB path — per-partition bounded heaps
-  *    (map-side top-k) reduce the shuffle to |partitions|×|queries|×k
-  *    rows before the final window. Equality with topKWindow is asserted
-  *    in SimilaritySpec.
-  * Both order by (cosine desc, neighbor_id asc) so results are fully
-  * deterministic under ties. The heaps are [[partitionTopK]], the one
-  * per-partition kernel behind every JVM top-k surface: exact
-  * (topKPartitioned, Gold.search) and IVF-probed (ivfTopK,
-  * Gold.searchIvf). [[kmeansCentroids]] shares its centroid assignment.
+  * ONE kernel scores a vector against centroids or queries, with
+  * [[guardedCosine]]'s arithmetic and the (cosine desc, id asc) order:
+  * [[nearest]] picks a vector's centroid and [[partitionTopK]] keeps
+  * per-partition bounded heaps of the best rows per query. Every surface
+  * is a thin frame form over them, with no shuffle before the heaps:
+  *  - [[assign]]: nearest-centroid assignment (q35, q68, q103, the
+  *    stream ingests), a `mapPartitions` over `nearest`;
+  *  - [[probePairs]]/[[probeFrame]]: each query's `nprobe` nearest
+  *    centroids, chosen on the driver ([[ivfProbe]]);
+  *  - [[topKPartitioned]] (exact), [[ivfTopK]] (IVF-probed) and
+  *    [[ivfRanked]] (IVF with a label predicate or stored cells: q90,
+  *    q95, the standing-index searches): the heaps, then one rank
+  *    window over |partitions|·|queries|·k survivors;
+  *  - Gold.search/searchIvf run `partitionTopK` directly, and
+  *    [[kmeansCentroids]] assigns with `nearest`.
+  * The relational forms these replaced — a broadcast cross join ranked
+  * by an agg-min or a rank window — are test oracles
+  * (RelationalTwins), and SimilaritySpec pins each kernel form to its
+  * twin bit for bit. NULL vectors never rank: the top-k forms drop them
+  * (the twins ranked their NULL cosines last), and [[assign]] gives them
+  * the twin's answer (lowest centroid_id, NULL casim).
   */
 object Similarity {
-
-  /** queries: (query_id: Long, qv: Array[Float]); corpus: (neighbor_id,
-    * cv). Returns (query_id, neighbor_id, cosine, rank), rank ≤ k.
-    * NULL vectors are excluded up front on BOTH sides in BOTH forms —
-    * a null embedding is even more degenerate than a zero-norm one
-    * (which already ranks -Infinity) and, unfiltered, it would NPE the
-    * partitioned kernel while the window form quietly ranked it last;
-    * the shared filter keeps the two forms result-identical on any
-    * input (SimilaritySpec pins the null case). */
-  def topKWindow(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val sims = corpus.filter(col("cv").isNotNull)
-      .crossJoin(broadcast(queries.filter(col("qv").isNotNull)))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", guardedSim(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
-  }
 
   /** Map-side top-k: each partition keeps a bounded worst-first heap per
     * query ([[partitionTopK]]), so only |partitions|·|queries|·k
     * candidate rows shuffle into the final rank window. The dot/norm
-    * accumulation is sequential IEEE double, identical to the HOF
-    * expression in [[topKWindow]].
+    * accumulation is sequential IEEE double, identical to
+    * [[guardedCosine]].
+    *
+    * queries: (query_id: Long, qv: Array[Float]); corpus: (neighbor_id,
+    * cv). Returns (query_id, neighbor_id, cosine, rank), rank ≤ k, a
+    * query never ranking its own id. NULL vectors are excluded up front
+    * on both sides.
     *
     * Scale bound: the query side is collected and broadcast — memory is
     * O(|queries|·dim) on driver and executors, NOT corpus-sized. That is
@@ -57,8 +51,8 @@ object Similarity {
     * use the bucketed pair join (q40's LSH form) instead. Every corpus
     * vector must have the queries' length (checked per row). */
   def topKPartitioned(spark: SparkSession, queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val (qids, qvs) = collectQueries(queries)
-    rankedFrame(spark, corpus, qids, qvs, k, None)
+    val (qids, qvs, _) = collectQueries(queries, labeled = false)
+    rankedFrame(corpus, qids, qvs, k, None)
   }
 
   /** IVF (inverted-file) approximate top-k: each corpus vector belongs to
@@ -74,82 +68,108 @@ object Similarity {
     * lists are chosen on the driver ([[ivfProbe]]); the corpus side runs
     * in the same per-partition heap kernel as [[topKPartitioned]], which
     * assigns each row to its nearest centroid and scores it only for the
-    * queries probing that centroid. Both sides use [[guardedCosine]]'s
-    * arithmetic and tiebreaks — centroid assignment is [[nearestCentroid]]'s
-    * (max cosine, lowest centroid_id), probe selection is
-    * [[assignProbes]]'s — so the result equals the relational form
-    * (nearestCentroid ⋈ assignProbes → rank window) and the streamed
-    * index search (StreamingSpec pins it). Returns the same shape as
-    * [[topKWindow]]. NULL vectors are excluded on both sides as in the
-    * other top-k forms; ids must be unique per side. */
+    * queries probing that centroid. Returns the same shape as
+    * [[topKPartitioned]]; ids must be unique per side. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame, k: Int,
-              nprobe: Int = 1): DataFrame = {
-    val (qids, qvs) = collectQueries(queries)
-    val cents = centroids.orderBy(col("centroid_id")).select(col("centroid_id"), col("cvec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    require(cents.map(_._1).distinct.length == cents.length, "ivfTopK: duplicate centroid_id")
-    require(cents.forall(_._2 != null), "ivfTopK: NULL cvec centroid")
-    rankedFrame(queries.sparkSession, corpus, qids, qvs, k,
-      Some(ivfProbe(qvs, cents.map(_._2.toArray), nprobe)))
+              nprobe: Int = 1): DataFrame =
+    ivfRanked(queries, corpus, centroids, k, nprobe)
+
+  /** [[ivfTopK]] with the two variations the filtered and the
+    * standing-index searches need, on the same heaps:
+    *  - `sameLabel`: a per-(query, row) predicate — a row is a candidate
+    *    for a query only when its `clabel` equals (`Some(true)`) or
+    *    differs from (`Some(false)`) the query's `qlabel`. Pre-filter
+    *    semantics: the heaps admit only qualifying rows, so a top-k
+    *    comes back short only when fewer qualifying rows exist. NULL
+    *    labels never qualify (SQL comparison). The frame then carries
+    *    (query_id, qlabel, neighbor_id, clabel, cosine, rank), labels as
+    *    longs.
+    *  - `storedCells`: each corpus row keeps its stored `centroid_id` as
+    *    its cell instead of being re-assigned, so an index searched with
+    *    recentered centroids ranks exactly what its partitions hold.
+    *
+    * Probes are computed on the driver, so the corpus is filtered to
+    * `centroid_id IN (probed cells)` when cells are stored, and to
+    * `clabel IN (query labels)` for `sameLabel = Some(true)`: on an
+    * index partitioned by those columns that is static partition
+    * pruning at the scan. */
+  private[graft] def ivfRanked(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
+                               k: Int, nprobe: Int = 1, sameLabel: Option[Boolean] = None,
+                               storedCells: Boolean = false): DataFrame = {
+    val (qids, qvs, qlabels) = collectQueries(queries, labeled = sameLabel.isDefined)
+    val (cids, cents) = collectCentroids(centroids)
+    val probe = ivfProbe(qvs, cents, nprobe)
+    val probed = cids.indices.filter(probe.queriesOf(_).nonEmpty).map(cids)
+    val pruned = corpus
+      .transform(c => if (storedCells) c.filter(col("centroid_id").isin(probed: _*)) else c)
+      .transform(c => if (sameLabel.contains(true)) c.filter(col("clabel").isin(qlabels.distinct: _*)) else c)
+    rankedFrame(pruned, qids, qvs, k, Some(probe), sameLabel.map((qlabels, _)),
+      if (storedCells) Some(cids) else None)
   }
 
-  /** Nearest-centroid assignment by a map-side-combinable aggregation:
-    * `min(struct(-casim, centroid_id, payload…))` picks the
-    * (max-cosine, min-centroid_id) winner per id with PARTIAL
-    * aggregation — each input partition emits one packed row per id,
-    * instead of the window form's full n×k sort-shuffle. Identical
-    * results to the window form (same sim doubles, same tiebreak; the
-    * struct order never reaches the payload fields because centroid_id
-    * is unique per id) because BOTH forms see the NaN-guarded
-    * similarity: cosine of a zero-norm vector (hashEmbed of empty text
-    * is all-zeros) is NaN, which Spark orders LARGEST — unguarded, the
-    * window form would pick a NaN centroid while min(struct(-sim,…))
-    * would skip it. [[guardedSim]] maps NaN → -Infinity so a NaN
-    * centroid never beats a real one in either form. Use this for
-    * CORPUS-sized sides; the window form stays for small query sides
-    * needing top-nprobe. `carry` columns ride along inside the packed
-    * struct. */
-  def nearestCentroid(df: DataFrame, centroids: DataFrame, vecCol: String,
-                      idCol: String, carry: Seq[String] = Nil): DataFrame = {
-    val packed = struct(
-      (col("casim") * lit(-1.0)).as("neg_sim") +: col("centroid_id").as("cid") +:
-        col("casim").as("sim") +: carry.map(col): _*)
-    df.crossJoin(broadcast(centroids))
-      .withColumn("casim", guardedSim(col(vecCol), col("cvec")))
-      .groupBy(col(idCol))
-      .agg(min(packed).as("_w"))
-      .select(col(idCol) +: col("_w.cid").as("centroid_id") +: col("_w.sim").as("casim") +:
-        carry.map(c => col(s"_w.$c").as(c)): _*)
+  /** Nearest-centroid assignment: each row of `df` gets its max-guarded-
+    * cosine centroid (lowest centroid_id on a tie — [[nearest]]), in one
+    * `mapPartitions` with the centroids collected on the driver and
+    * broadcast; no shuffle, no window. Returns (idCol, centroid_id,
+    * casim, carry…). A NULL vector, or one whose length differs from the
+    * centroids', gets the lowest centroid_id and a NULL casim, as the
+    * relational agg-min twin gave it (its NULL cosines sorted first in
+    * `min(struct)`). Each input row is assigned on its own: unlike the
+    * twin's groupBy, rows sharing an id are not merged. Centroid ids
+    * must be unique and no centroid vector NULL. */
+  def assign(df: DataFrame, centroids: DataFrame, vecCol: String, idCol: String,
+             carry: Seq[String] = Nil): DataFrame = {
+    val (cids, cents) = collectCentroids(centroids)
+    cents.foreach(checkDim(_, cents(0).length, "cvec"))
+    val in = df.select(col(idCol) +: col(vecCol) +: carry.map(col): _*)
+    val fields = in.schema.fields
+    val out = StructType(fields(0) +: StructField("centroid_id", LongType, nullable = false) +:
+      StructField("casim", DoubleType) +: fields.drop(2).toSeq)
+    val bc = df.sparkSession.sparkContext.broadcast((cids, cents))
+    in.mapPartitions { rows =>
+      val (ids, cs) = bc.value
+      val cnorm = cs.map(c => math.sqrt(sumsq(c)))
+      if (cs.isEmpty) Iterator.empty
+      else rows.map { r =>
+        val v = if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray
+        val (j, sim) =
+          if (v == null || v.length != cs(0).length) (0, null)
+          else {
+            val vn = math.sqrt(sumsq(v))
+            val j = nearest(v, vn, cs, cnorm)
+            (j, cosine(v, vn, cs(j), cnorm(j)))
+          }
+        Row.fromSeq(Seq(r.get(0), ids(j), sim) ++ (2 until r.length).map(r.get))
+      }
+    }(Encoders.row(out))
   }
 
   /** Cosine similarity with NaN (zero-norm input) mapped to -Infinity,
     * so "most similar" rankings never prefer a degenerate vector
     * regardless of whether the ranking is a window sort (NaN sorts
     * first under desc) or a min-struct agg (NaN sorts last). Public so
-    * every ranking surface (ivfTopK, the streamed-index search) applies
-    * the SAME guard — a divergence here would silently change top-k
-    * results between the batch and index paths. [[cosine]] is its
-    * scalar twin for the JVM kernels. */
+    * every relational ranking (the q102/q103 PQ encode, SQ8 rescoring,
+    * the twins) applies the SAME guard as the kernel — [[cosine]] is its
+    * scalar twin. */
   def guardedCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     nanvl(graft.plans.GraftExpressions.cosineSimNative(a, b), lit(Double.NegativeInfinity))
-  private def guardedSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    guardedCosine(a, b)
 
-  /** Top-`nprobe` nearest centroids per query (the QUERY side of IVF;
-    * the corpus side is [[nearestCentroid]]'s agg-min — queries are a
-    * bounded batch, so a window over the k-row cross join is fine).
-    * Returns the query rows with `centroid_id` attached, one row per
-    * (query, probed centroid). */
-  def assignProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int,
-                   vecCol: String = "qv", idCol: String = "query_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val w = Window.partitionBy(col(idCol)).orderBy(col("casim").desc, col("centroid_id").asc)
-    queries.crossJoin(broadcast(centroids))
-      .withColumn("casim", guardedSim(col(vecCol), col("cvec")))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= nprobe)
-      .drop("casim", "_rk", "cvec")
+  /** The query side of IVF: each query's `nprobe` nearest centroids
+    * ([[ivfProbe]] on the driver), as (query_id, centroid_id) pairs.
+    * queries: (query_id, qv); NULL vectors probe nothing. */
+  private[graft] def probePairs(queries: DataFrame, centroids: DataFrame,
+                                nprobe: Int): Seq[(Long, Long)] = {
+    val (qids, qvs, _) = collectQueries(queries, labeled = false)
+    val (cids, cents) = collectCentroids(centroids)
+    val probe = ivfProbe(qvs, cents, nprobe)
+    for (j <- cids.indices; qi <- probe.queriesOf(j).toSeq) yield (qids(qi), cids(j))
+  }
+
+  /** The probe frame: the query rows joined to their [[probePairs]], one
+    * row per (query, probed centroid) with `centroid_id` attached. */
+  private[graft] def probeFrame(queries: DataFrame, pairs: Seq[(Long, Long)]): DataFrame = {
+    import queries.sparkSession.implicits._
+    queries.join(broadcast(pairs.toDF("query_id", "centroid_id")), Seq("query_id"))
   }
 
   // ------------------------------------------------ the JVM vector kernels
@@ -191,8 +211,9 @@ object Similarity {
   private[graft] final case class IvfProbe(cents: Array[Array[Float]], queriesOf: Array[Array[Int]])
 
   /** Each query's top-`nprobe` centroids by (guarded cosine desc,
-    * centroid index asc) — [[assignProbes]]'s window order — inverted
-    * into per-centroid query lists. `cents` are ordered by centroid_id. */
+    * centroid index asc) — the relational twin's probe window order —
+    * inverted into per-centroid query lists. `cents` are ordered by
+    * centroid_id. */
   private[graft] def ivfProbe(qvs: Array[Array[Float]], cents: Array[Array[Float]],
                               nprobe: Int): IvfProbe = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
@@ -210,7 +231,7 @@ object Similarity {
   }
 
   /** Index of `v`'s nearest centroid: max guarded cosine, lowest index on
-    * a tie ([[nearestCentroid]]'s winner). `cents` is non-empty. */
+    * a tie (the relational agg-min's winner). `cents` is non-empty. */
   private def nearest(v: Array[Float], vn: Double, cents: Array[Array[Float]],
                       cnorm: Array[Double]): Int = {
     var best = 0
@@ -230,15 +251,19 @@ object Similarity {
 
   /** THE top-k kernel, run once per corpus partition: per query a bounded
     * [[TopKHeap]] of (guarded cosine, neighbor id, payload), skipping
-    * NULL vectors and the query's own id. With a probe, a row is first
-    * assigned to its nearest centroid and scored only for the queries
-    * probing it (IVF); without, for every query (exact). Every vector
-    * must have the queries' length — `column` names it in the error.
-    * Emits (query index, neighbor id, cosine, payload), at most
-    * |queries|·k rows. */
+    * NULL vectors and the query's own id. With a probe, a row is scored
+    * only for the queries probing its cell — its nearest centroid, or
+    * `cell(payload)` (an index into the probe's centroids, negative for
+    * none) when the row stores its cell; without, for every query
+    * (exact). `keep(query index, payload)` is a per-pair predicate
+    * tested before the pair is scored. Every vector must have the
+    * queries' length — `column` names it in the error. Emits (query
+    * index, neighbor id, cosine, payload), at most |queries|·k rows. */
   private[graft] def partitionTopK[P](rows: Iterator[(Long, Array[Float], P)],
                                       qids: Array[Long], qvs: Array[Array[Float]], k: Int,
-                                      probe: Option[IvfProbe], column: String)
+                                      probe: Option[IvfProbe], column: String,
+                                      keep: Option[(Int, P) => Boolean] = None,
+                                      cell: Option[P => Int] = None)
       : Iterator[(Int, Long, Double, P)] = {
     require(k >= 1, s"k must be >= 1, got $k")
     val nq = qvs.length
@@ -247,19 +272,25 @@ object Similarity {
     val qnorm = qvs.map(q => math.sqrt(sumsq(q)))
     val everyQuery = Array.range(0, nq)
     val cnorm = probe.map(_.cents.map(c => math.sqrt(sumsq(c))))
+    val admits = keep.getOrElse((_: Int, _: P) => true)
     val heaps = Array.fill(nq)(new TopKHeap[P](k))
     if (nq > 0) for ((nid, cv, payload) <- rows if cv != null) {
       checkDim(cv, dim, column)
       val cn = math.sqrt(sumsq(cv))
       val scored = probe match {
         case None => everyQuery
-        case Some(p) if p.cents.isEmpty => Array.emptyIntArray
-        case Some(p) => p.queriesOf(nearest(cv, cn, p.cents, cnorm.get))
+        case Some(p) =>
+          val j = cell match {
+            case Some(c) => c(payload)
+            case None => if (p.cents.isEmpty) -1 else nearest(cv, cn, p.cents, cnorm.get)
+          }
+          if (j < 0) Array.emptyIntArray else p.queriesOf(j)
       }
       var i = 0
       while (i < scored.length) {
         val qi = scored(i)
-        if (qids(qi) != nid) heaps(qi).offer(cosine(qvs(qi), qnorm(qi), cv, cn), nid, payload)
+        if (qids(qi) != nid && admits(qi, payload))
+          heaps(qi).offer(cosine(qvs(qi), qnorm(qi), cv, cn), nid, payload)
         i += 1
       }
     }
@@ -269,29 +300,61 @@ object Similarity {
   }
 
   /** The frame form of [[partitionTopK]] over a (neighbor_id, cv) corpus:
-    * heaps per partition, then a rank window over the survivors. */
-  private def rankedFrame(spark: SparkSession, corpus: DataFrame, qids: Array[Long],
-                          qvs: Array[Array[Float]], k: Int, probe: Option[IvfProbe]): DataFrame = {
+    * heaps per partition, then a rank window over the survivors. With
+    * `labels` — the queries' labels, and whether a row's `clabel` must
+    * equal or differ from its query's — the heaps admit only qualifying
+    * rows and the frame also carries (qlabel, clabel); with `cellIds`
+    * (the centroid ids in the probe's order) a row's cell is its stored
+    * `centroid_id`. */
+  private def rankedFrame(corpus: DataFrame, qids: Array[Long], qvs: Array[Array[Float]],
+                          k: Int, probe: Option[IvfProbe],
+                          labels: Option[(Array[Long], Boolean)] = None,
+                          cellIds: Option[Array[Long]] = None): DataFrame = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast((qids, qvs, probe))
-    val partial = corpus.select(col("neighbor_id"), col("cv")).as[(Long, Array[Float])]
+    val bc = spark.sparkContext.broadcast((qids, qvs, probe, labels, cellIds))
+    val partial = corpus
+      .transform(c => if (labels.isDefined) c.filter(col("clabel").isNotNull) else c)
+      .select(col("neighbor_id"), col("cv"),
+        if (labels.isDefined) col("clabel").cast("long") else lit(0L),
+        if (cellIds.isDefined) col("centroid_id").cast("long") else lit(-1L))
+      .as[(Long, Array[Float], Long, Long)]
       .mapPartitions { it =>
-        val (ids, vs, p) = bc.value
-        partitionTopK(it.map { case (nid, cv) => (nid, cv, ()) }, ids, vs, k, p, "cv")
-          .map { case (qi, nid, c, _) => (ids(qi), nid, c) }
-      }.toDF("query_id", "neighbor_id", "cosine")
+        val (ids, vs, p, ls, cs) = bc.value
+        // payload: (clabel, stored centroid_id)
+        val keep = ls.map { case (ql, same) => (qi: Int, lc: (Long, Long)) => (lc._1 == ql(qi)) == same }
+        val cell = cs.map(c => (lc: (Long, Long)) => java.util.Arrays.binarySearch(c, lc._2))
+        partitionTopK(it.map { case (nid, cv, l, c) => (nid, cv, (l, c)) }, ids, vs, k, p, "cv",
+            keep, cell)
+          .map { case (qi, nid, c, (l, _)) => (ids(qi), nid, c, ls.fold(0L)(_._1(qi)), l) }
+      }.toDF("query_id", "neighbor_id", "cosine", "qlabel", "clabel")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    val labelled = if (labels.isDefined) Seq("qlabel", "neighbor_id", "clabel") else Seq("neighbor_id")
     partial.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
+      .select((col("query_id") +: labelled.map(col)) ++ Seq(col("cosine"), col("rank").cast("long")): _*)
   }
 
-  private def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Float]]) = {
+  /** The query batch on the driver: ids, vectors and (`labeled`) the
+    * `qlabel`s as longs; queries with a NULL vector or label are dropped. */
+  private def collectQueries(queries: DataFrame, labeled: Boolean)
+      : (Array[Long], Array[Array[Float]], Array[Long]) = {
     import queries.sparkSession.implicits._
-    val qs = queries.filter(col("qv").isNotNull)
-      .select(col("query_id"), col("qv")).as[(Long, Array[Float])].collect()
-    (qs.map(_._1), qs.map(_._2))
+    val qs = queries.filter(col("qv").isNotNull && (if (labeled) col("qlabel").isNotNull else lit(true)))
+      .select(col("query_id"), col("qv"), if (labeled) col("qlabel").cast("long") else lit(0L))
+      .as[(Long, Array[Float], Long)].collect()
+    (qs.map(_._1), qs.map(_._2), qs.map(_._3))
+  }
+
+  /** Centroids (centroid_id, cvec) on the driver, in centroid_id order
+    * (sorted there: a global sort would add a sampling job). */
+  private def collectCentroids(centroids: DataFrame): (Array[Long], Array[Array[Float]]) = {
+    val cents = centroids.select(col("centroid_id"), col("cvec"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
+    require(cents.map(_._1).distinct.length == cents.length, "duplicate centroid_id")
+    require(cents.forall(_._2 != null), "NULL cvec centroid")
+    (cents.map(_._1), cents.map(_._2.toArray))
   }
 
   /** Spherical k-means centroid training for the IVF family: deterministic
@@ -299,9 +362,8 @@ object Similarity {
     * renumbered 0..k-1; ties in assignment break by centroid_id asc).
     *
     * Scale shape: one Spark job per Lloyd iteration. Each partition
-    * assigns its vectors to the nearest BROADCAST centroid (the
-    * [[nearestCentroid]] winner, computed with [[guardedCosine]]'s
-    * arithmetic) and folds them into per-centroid sums; a treeAggregate
+    * assigns its vectors to the nearest BROADCAST centroid ([[nearest]],
+    * [[guardedCosine]]'s arithmetic) and folds them into per-centroid sums; a treeAggregate
     * merges the k×dim partial sums, and only they reach the driver,
     * which divides once and re-broadcasts. An empty cluster keeps its
     * previous centroid. The seeds are one more job.
@@ -430,7 +492,7 @@ object Similarity {
     * `> thresh` in Spark (a zero-norm vector is never marked dup). */
   def semDedup(vectors: DataFrame, centroids: DataFrame, thresh: Double,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val assigned = nearestCentroid(
+    val assigned = assign(
       vectors.select(col(idCol), col(vecCol)), centroids, vecCol, idCol, Seq(vecCol))
     val a = assigned.select(col("centroid_id"), col(idCol), col(vecCol).as("va"))
     val b = assigned.select(col("centroid_id").as("_cb"), col(idCol).as("_idb"),
@@ -475,7 +537,7 @@ object Similarity {
     // the codegen'd dot alone; dot/(qn·cn) is bit-identical to the full
     // cosine (qn = sqrt(sumsq) is the same double either way), and a
     // zero-norm side divides to NaN → nanvl → -Infinity, exactly
-    // guardedSim's contract
+    // guardedCosine's contract
     val qn = queries.select(col("query_id"), col("qdv"))
       .withColumn("qn", sqrt(expr(graft.functions.VectorFunctions.sumsqExpr("qdv"))))
     val cn = corpus.select(col("neighbor_id"), col("cdv"))
@@ -497,7 +559,7 @@ object Similarity {
     corpus.select(col("neighbor_id"), col("cv"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(queries.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .withColumn("cosine", guardedSim(col("qv"), col("cv")))
+      .withColumn("cosine", guardedCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w2))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))

@@ -699,7 +699,7 @@ object TrainingOps {
     // operator whole-stage-codegen'd; the obvious
     // transform(..., concat_ws(slice)) form runs as INTERPRETED lambda
     // expressions and measured ~5x slower at 100×) — then count per
-    // (doc_id, gram) and top-1 per doc via the q35 agg-min idiom,
+    // (doc_id, gram) and top-1 per doc via the agg-min idiom,
     // min(struct(-cnt, gram)). Both aggregations partial-combine
     // map-side (the second shuffles ONE candidate row per doc per
     // mapper; no per-doc sort ever runs), and the (doc_id, gram) count

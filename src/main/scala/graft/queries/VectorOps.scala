@@ -378,8 +378,8 @@ object VectorOps {
     // exchange (~800M rows at the ×100 replica), which was the
     // operator's entire wall time, not the flops. Results are
     // bit-identical (same sequential-double dot/(qn·cn) tree, same NaN
-    // guard, same tiebreak; topKPartitioned ≡ topKWindow is pinned in
-    // SimilaritySpec, and the oracle hash-gates it at sf0.01).
+    // guard, same tiebreak; topKPartitioned ≡ the relational window twin
+    // is pinned in SimilaritySpec, and the oracle hash-gates it at sf0.01).
     "q24_knn_brute" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       val q = e.filter(col("vec_id") % 50 === 0)
@@ -567,16 +567,16 @@ object VectorOps {
     // 0, q52's held-out convention) exceeds 0.4, reporting the argmax
     // benchmark id as the match. One pass over the corpus against the
     // BROADCAST benchmark via the agg-min form (map-side partial
-    // aggregation, no n×|bench| shuffle) — the same linear template as
-    // q35's assignment; a benchmark set is always tiny vs a 100 TB
-    // corpus, so the broadcast holds at scale.
+    // aggregation, no n×|bench| shuffle) — the linear min(struct)
+    // template; a benchmark set is always tiny vs a 100 TB corpus, so
+    // the broadcast holds at scale.
     // Norms are precomputed ONCE per row (the q25 trick — a benchmark
     // vector's norm would otherwise be recomputed for every one of the
     // n corpus rows it meets in the broadcast join); the per-pair work
     // is the codegen'd dot alone, and dot/(na·nb) is the oracle's exact
     // expression tree (na = sqrt(sumsq) is the same double wherever it
     // is computed), so parity is unchanged. The agg-min packed struct
-    // is nearestCentroid's map-side-combinable form.
+    // is the map-side-combinable min(struct(-sim, id, …)) idiom.
     // The benchmark is bounded by the q25/q102 audit-slice rule
     // (vec_id < Q25Cap): the operator's contract is a FIXED held-out
     // benchmark screened against a GROWING corpus, so the bench side
@@ -598,16 +598,16 @@ object VectorOps {
     }),
 
     // IVF cluster assignment (ANN scale path): centroids = vec_id 0..7;
-    // every vector is assigned to its max-cosine centroid (deterministic
-    // tiebreak) via the map-side-combinable agg-min form — one partial
-    // aggregation instead of a full n×k window sort-shuffle (results
-    // identical; the oracle pins them). A query then probes only its
-    // centroid's partition.
+    // every vector is assigned to its max-cosine centroid (lowest
+    // centroid_id on a tie) by the vector kernel (Similarity.assign): one
+    // mapPartitions over the scan against the broadcast centroids — no
+    // exchange, no window (PlanSpec pins both; the oracle pins the
+    // rows). A query then probes only its centroid's partition.
     "q35_ivf_assign" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      Similarity.nearestCentroid(
+      Similarity.assign(
           e.select(col("vec_id"), col("embedding"), col("label")),
           cents, "embedding", "vec_id", Seq("label"))
         .select(col("vec_id"), col("centroid_id"), col("casim").as("cosine"), col("label"))
@@ -728,38 +728,19 @@ object VectorOps {
     // top-5 among qualifying neighbors, not a post-filtered top-5 that
     // silently comes back short when the filter is selective. The
     // predicate here is same-label-as-query (category-constrained
-    // search); the label rides the corpus assignment as agg-min
-    // payload, so the plan is exactly q45's (one partial-agg
-    // assignment, one broadcast probe join, one per-query window) plus
-    // a codegen'd equality filter between the join and the rank. At
+    // search), tested per (query, row) inside the vector kernel's heaps
+    // with the label riding through as the payload (Similarity.ivfRanked
+    // — q45's plan plus a `label IN (query labels)` scan filter). At
     // deployment `label` becomes a secondary partition column under
-    // `centroid_id` and the predicate prunes files the same way the
-    // probe does.
+    // `centroid_id` and that filter prunes files the way the probe does
+    // (EmbeddingsStream.searchIndexFiltered).
     // Query batch bounded by the audit-slice rule (vec_id < Q25Cap) —
     // same contract as q45/q47: a retrieval batch is fixed, the corpus
     // grows.
     "q90_filtered_ann" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < Q25Cap && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("qlabel"))
-      val c = e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("label").as("clabel"))
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val corpusAssigned = Similarity.nearestCentroid(c, cents, "cv",
-          "neighbor_id", Seq("cv", "clabel")).drop("casim")
-      val probes = Similarity.assignProbes(q, cents, 1)
-      val cands = corpusAssigned.join(broadcast(probes), Seq("centroid_id"))
-        .filter(col("clabel") === col("qlabel") &&
-          col("query_id") =!= col("neighbor_id"))
-        .withColumn("cosine", Similarity.guardedCosine(col("qv"), col("cv")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      cands.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("qlabel").cast("long").as("qlabel"),
-          col("neighbor_id"), col("cosine"), col("rank").cast("long").as("rank"))
+      val (q, c, cents) = labeledIvfInputs(s, dir)
+      Similarity.ivfRanked(q, c, cents, 5, nprobe = 1, sameLabel = Some(true))
+        .select(col("query_id"), col("qlabel"), col("neighbor_id"), col("cosine"), col("rank"))
     }),
 
     // Hard-negative mining (contrastive-training data prep): for each
@@ -769,49 +750,22 @@ object VectorOps {
     // anchor's best same-label candidate (how hard the negative
     // actually is). q90's filtered-IVF shape with the predicate
     // negated, nprobe = 2 (negatives concentrate outside the anchor's
-    // own cluster, so a wider probe keeps recall); positives and
-    // negatives split from ONE shared candidate scan — the corpus is
-    // assigned and joined once, then two cheap branches (a max-agg and
-    // a rank window). Margin is a per-row subtraction of two cosines
+    // own cluster, so a wider probe keeps recall): two kernel calls over
+    // the same probes — the negatives with k = 5 and `!=`, the best
+    // positive with k = 1 and `==` — so no candidate frame is ever
+    // materialized. Margin is a per-row subtraction of two cosines
     // computed by the same kernel on both engines — deterministic.
     // Anchor batch bounded by the audit-slice rule (vec_id < Q25Cap) —
     // a mining run pairs a FIXED anchor set against a growing corpus.
     "q95_hard_negatives" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < Q25Cap && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("qlabel"))
-      val c = e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("label").as("clabel"))
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val corpusAssigned = Similarity.nearestCentroid(c, cents, "cv",
-          "neighbor_id", Seq("cv", "clabel")).drop("casim")
-      val probes = Similarity.assignProbes(q, cents, 2)
-      val cands = corpusAssigned.join(broadcast(probes), Seq("centroid_id"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cosine", Similarity.guardedCosine(col("qv"), col("cv")))
-        // project the embedding arrays AWAY before caching: the cached
-        // frame that feeds both arms needs only ids/labels/cosine
-        // (~40 B/row), not two 64-float vectors per candidate pair
-        // (~600 B/row — at the ×100 replica that cache spilled ~100 GB
-        // and filled the disk; this select is the difference between a
-        // bounded cache and a run-killing one)
-        .select(col("query_id"), col("qlabel"), col("neighbor_id"),
-          col("clabel"), col("cosine"))
-        .transform(graft.TempCaches.tracked(_)) // one candidate scan feeds both arms; harness-released
-      val pos = cands.filter(col("clabel") === col("qlabel"))
-        .groupBy(col("query_id")).agg(max(col("cosine")).as("pos_sim"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      cands.filter(col("clabel") =!= col("qlabel"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .join(pos, Seq("query_id"), "left")
+      val (q, c, cents) = labeledIvfInputs(s, dir)
+      val pos = Similarity.ivfRanked(q, c, cents, 1, nprobe = 2, sameLabel = Some(true))
+        .select(col("query_id"), col("cosine").as("pos_sim"))
+      Similarity.ivfRanked(q, c, cents, 5, nprobe = 2, sameLabel = Some(false))
+        .join(broadcast(pos), Seq("query_id"), "left")
         .withColumn("margin", coalesce(col("pos_sim"), lit(0.0)) - col("cosine"))
-        .select(col("query_id"), col("qlabel").cast("long").as("qlabel"),
-          col("neighbor_id"), col("clabel").cast("long").as("clabel"),
-          col("cosine"), col("rank").cast("long").as("rank"), col("margin"))
+        .select(col("query_id"), col("qlabel"), col("neighbor_id"), col("clabel"),
+          col("cosine"), col("rank"), col("margin"))
     }),
 
     // Embedding-space class report (training diagnostics): per label,
@@ -995,13 +949,14 @@ object VectorOps {
     // floored-micro integer ADC. Scale shape: candidates are only the
     // probed cells' members (the IVF win q102's flat scan lacks), the
     // query batch is the q25-capped fixed set, and every join
-    // broadcasts codebook/query tables — the corpus never shuffles
-    // beyond the coarse assignment's own aggregation.
+    // broadcasts codebook/query tables — the corpus shuffles only in
+    // the PQ encode's partial aggregation (the coarse assignment is the
+    // vector kernel's mapPartitions, the probes are chosen on the driver).
     "q103_ivfadc" -> ((s, dir) => {
       import graft.functions.VectorFunctions
       val e = Tables(s, dir, "embeddings")
       val coarse = coarseCentroidsMemo(s, dir, e)
-      def resOf(frame: DataFrame): DataFrame = Similarity.nearestCentroid(
+      def resOf(frame: DataFrame): DataFrame = Similarity.assign(
           frame.select(col("vec_id"), col("embedding")), coarse,
           "embedding", "vec_id", Seq("embedding"))
         .join(broadcast(coarse), Seq("centroid_id"))
@@ -1020,7 +975,7 @@ object VectorOps {
         pcents, Seq("vec_id", "centroid_id"))
       val q = e.filter(col("vec_id") < Q25Cap && col("vec_id") % 50 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val qtab = Similarity.assignProbes(q, coarse, 2)
+      val qtab = Similarity.probeFrame(q, Similarity.probePairs(q, coarse, 2))
         .join(broadcast(coarse), Seq("centroid_id"))
         .withColumn("qr", expr(
           "zip_with(qv, cvec, (a, b) -> CAST(a AS FLOAT) - CAST(b AS FLOAT))"))
@@ -1278,6 +1233,18 @@ object VectorOps {
     }.toSeq.toDF("centroid_id", "cvec")
   }
 
+  /** q90/q95's inputs: the audit-slice query batch (query_id, qv,
+    * qlabel), the corpus (neighbor_id, cv, clabel) and the centroids
+    * vec_id 0..7 (centroid_id, cvec). */
+  private def labeledIvfInputs(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = Tables(s, dir, "embeddings")
+    (e.filter(col("vec_id") < Q25Cap && col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("label").as("qlabel")),
+      e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"), col("label").as("clabel")),
+      e.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec")))
+  }
+
   /** q103's coarse quantizer, trained once per table contents. */
   private[graft] def coarseCentroidsMemo(s: SparkSession, dir: String,
                                          e: => DataFrame): DataFrame = {
@@ -1373,9 +1340,7 @@ object VectorOps {
     }.reduce(_ unionByName _)
 
   /** PQ encode — the corpus-sized per-(id, sub) argmax, by the pinned
-    * agg-min idiom (`min(struct(-cos, code))`,
-    * Similarity.nearestCentroid Similarity.scala:119), NOT a row_number
-    * window: the window form sort-shuffles every n·M·Ks candidate row,
+    * agg-min idiom (`min(struct(-cos, code))`), NOT a rank window: the window form sort-shuffles every n·M·Ks candidate row,
     * while min(struct) partial-aggregates map-side so the shuffle
     * carries ONE packed row per (id, sub) regardless of Ks.
     * guardedCosine (NaN → -Infinity) keeps a zero-norm slice or

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Atomic swap-in for small standing-state tables that are READ while
@@ -32,6 +33,25 @@ private[graft] object AtomicState {
     FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
   private def oldPath(path: String) = new Path(path + ".old-swap")
+
+  /** Drain every input `source` has available through `batchFn` and
+    * stop: a foreachBatch sink in Append mode under the AvailableNow
+    * trigger, with its offsets checkpointed at `checkpointDir`, so a
+    * re-run processes only new files. Blocks until the drain ends and
+    * returns the finished query. foreachBatch is at-least-once, so
+    * `batchFn` keeps its sink effects replay-idempotent by batchId
+    * ([[appendOnce]], [[alreadyApplied]]). */
+  def drain(source: DataFrame, checkpointDir: String)
+           (batchFn: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = source.writeStream
+      .foreachBatch(batchFn)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
 
   /** Heal the rename gap: if a crash left the state under `.old-swap`
     * (target renamed aside, replacement not yet renamed in), restore

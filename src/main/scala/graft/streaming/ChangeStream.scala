@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming change-data-capture over the landing layer: the
   * streaming complement of the batch q82 snapshot diff. q82 compares
@@ -78,17 +78,9 @@ object ChangeStream {
     * to `cdcDir/changes` and upserting `cdcDir/hashes`. */
   def ingest(spark: SparkSession, srcDir: String, cdcDir: String,
              checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        changeBatch(batch, batchId, cdcDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      changeBatch(batch, batchId, cdcDir)
+    }
   }
 
   /** One ingest micro-batch. Replay-safe under foreachBatch's

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.queries.TrainingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the DOCUMENT side of the pipeline — the
@@ -62,21 +62,14 @@ object DocumentsStream {
     // the LM is reused every micro-batch — materialize it once instead
     // of re-aggregating the reference corpus per batch
     vocab.persist(); totals.persist()
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // appendOnce: a foreachBatch replay (crash between write and
-        // offset commit) must not duplicate the batch's scored rows
-        AtomicState.appendOnce(batch.sparkSession, destDir, batchId) { staging =>
-          TrainingOps.pplScore(batch, vocab, totals)
-            .write.mode("overwrite").parquet(staging)
-        }
+    val q = AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      // appendOnce: a foreachBatch replay (crash between write and
+      // offset commit) must not duplicate the batch's scored rows
+      AtomicState.appendOnce(batch.sparkSession, destDir, batchId) { staging =>
+        TrainingOps.pplScore(batch, vocab, totals)
+          .write.mode("overwrite").parquet(staging)
       }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     vocab.unpersist(); totals.unpersist()
     q
   }

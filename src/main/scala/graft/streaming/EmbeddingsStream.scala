@@ -4,7 +4,7 @@ import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the EMBEDDING side of the pipeline: the
@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * standing IVF index instead, which is exactly this shape).
   *
   *  - [[ivfIngest]]: each arriving micro-batch of vectors is assigned to
-  *    its nearest static centroid ([[Similarity.nearestCentroid]], the
-  *    SAME agg-min the batch q35 oracle checks) and appended to a
+  *    its nearest static centroid ([[Similarity.assign]], the SAME
+  *    kernel the batch q35 oracle checks) and appended to a
   *    parquet index PARTITIONED BY `centroid_id`. Assignment is
   *    state-free given fixed centroids — a vector's partition depends
   *    only on itself — so micro-batch boundaries cannot change the
@@ -25,15 +25,19 @@ import org.apache.spark.sql.types._
   *    exactly-once replay via the checkpoint).
   *
   *  - [[searchIndex]]: top-k retrieval AGAINST the standing index. The
-  *    probe set ([[Similarity.assignProbes]], top-`nprobe` centroids per
-  *    query) is broadcast and joined on `centroid_id` — the index's
-  *    PARTITION column — so dynamic partition pruning skips every
-  *    unprobed partition's files at the scan (PlanSpec pins the
-  *    `dynamicpruning` expression on the scan). At 100 TB this is the
-  *    difference between reading k/nprobe-th of the index and reading
-  *    all of it; results are bit-equal to [[Similarity.ivfTopK]] over
-  *    the same corpus + centroids because both sides apply the same
-  *    guarded cosine and (desc cosine, asc id) tiebreak.
+  *    probe set (top-`nprobe` centroids per query) is computed on the
+  *    driver, so the scan is filtered to `centroid_id IN (probed)` —
+  *    the index's PARTITION column — and static partition pruning
+  *    skips every unprobed partition's files (PlanSpec pins the
+  *    partition filter and the file count). At 100 TB this is the
+  *    difference between reading nprobe/k-th of the index and reading
+  *    all of it. The ranking is the vector kernel's
+  *    ([[Similarity.ivfRanked]]), and each row keeps its STORED
+  *    `centroid_id` as its cell — it is never re-assigned — so an
+  *    index searched with the centroids it was built with equals
+  *    [[Similarity.ivfTopK]] over the same corpus, and one searched
+  *    with recentered centroids ranks exactly what its probed
+  *    partitions hold.
   *
   * Centroids stay static here (the faiss/Milvus deployment shape:
   * retrain offline, re-assign on rebuild); drift is handled by the batch
@@ -69,18 +73,10 @@ object EmbeddingsStream {
                 subpartitionByLabel: Boolean = false,
                 pqCodebooks: DataFrame = null,
                 storeRaw: Boolean = true): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, centroids, indexDir, statsDir,
-          subpartitionByLabel, pqCodebooks, storeRaw)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      ingestBatch(batch, batchId, centroids, indexDir, statsDir,
+        subpartitionByLabel, pqCodebooks, storeRaw)
+    }
   }
 
   /** One ivfIngest micro-batch — exposed so StreamingSpec can replay it
@@ -93,7 +89,7 @@ object EmbeddingsStream {
                                  pqCodebooks: DataFrame = null,
                                  storeRaw: Boolean = true): Unit = {
     val ss = batch.sparkSession
-    val assigned = Similarity.nearestCentroid(
+    val assigned = Similarity.assign(
         batch.select(col("vec_id"), col("embedding")),
         centroids, "embedding", "vec_id", Seq("embedding"))
       .select(col("centroid_id"), col("vec_id"), col("casim"), col("embedding"))
@@ -186,17 +182,9 @@ object EmbeddingsStream {
   def semDedupIngest(spark: SparkSession, srcDir: String, centroids: DataFrame,
                      indexDir: String, dedupDir: String, checkpointDir: String,
                      thresh: Double): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semDedupBatch(batch, batchId, centroids, indexDir, dedupDir, thresh)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      semDedupBatch(batch, batchId, centroids, indexDir, dedupDir, thresh)
+    }
   }
 
   /** One semDedupIngest micro-batch — exposed so StreamingSpec can
@@ -206,7 +194,7 @@ object EmbeddingsStream {
                                    centroids: DataFrame, indexDir: String,
                                    dedupDir: String, thresh: Double): Unit = {
     val ss = batch.sparkSession
-    val assigned = Similarity.nearestCentroid(
+    val assigned = Similarity.assign(
         batch.select(col("vec_id"), col("embedding")),
         centroids, "embedding", "vec_id", Seq("embedding"))
       .select(col("centroid_id"), col("vec_id"), col("casim"), col("embedding"))
@@ -262,33 +250,24 @@ object EmbeddingsStream {
 
   /** Filtered top-k against a label-subpartitioned standing index (the
     * q90 batch query's deployment shape): each query probes its
-    * `nprobe` centroid partitions AND only its own label's
-    * sub-directories — both keys arrive through the broadcast probe
-    * join, so dynamic partition pruning skips every
-    * (centroid, other-label) file at the scan. Pre-filter semantics:
-    * candidates are label-matching BEFORE ranking, so the top-k never
-    * comes back short while qualifying neighbors exist.
+    * `nprobe` centroid partitions, and a row is a candidate only for
+    * the queries of its own label. Probes and query labels are known on
+    * the driver, so the scan is filtered to `centroid_id IN (probed)`
+    * and `label IN (query labels)` — static pruning on BOTH partition
+    * levels skips every unprobed (centroid, label) directory. Rows keep
+    * their stored `centroid_id` as their cell ([[searchIndex]]).
+    * Pre-filter semantics: candidates are label-matching BEFORE
+    * ranking, so the top-k never comes back short while qualifying
+    * neighbors exist.
     * queries: (query_id: Long, qv: Array[Float], qlabel: Int). */
   def searchIndexFiltered(spark: SparkSession, indexDir: String,
                           queries: DataFrame, centroids: DataFrame, k: Int,
-                          nprobe: Int = 1): DataFrame = {
-    val index = spark.read.parquet(indexDir)
-      .select(col("centroid_id"), col("label"),
-        col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val probes = Similarity.assignProbes(queries, centroids, nprobe)
-    val cands = index
-      .join(broadcast(probes),
-        index("centroid_id") === probes("centroid_id") &&
-          index("label") === probes("qlabel"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", Similarity.guardedCosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank").cast("long"))
-  }
+                          nprobe: Int = 1): DataFrame =
+    Similarity.ivfRanked(queries,
+        spark.read.parquet(indexDir).select(col("centroid_id"), col("label").as("clabel"),
+          col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
+        centroids, k, nprobe, sameLabel = Some(true), storedCells = true)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
 
   /** Standing PCA moment state: the (i, j, sij, sid, cnt) second/first
     * moment table of every embedding seen so far — q98's distributed
@@ -312,17 +291,9 @@ object EmbeddingsStream {
     * not idempotent). */
   def momentIngest(spark: SparkSession, srcDir: String, momentsDir: String,
                    checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        momentBatch(batch, batchId, momentsDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      momentBatch(batch, batchId, momentsDir)
+    }
   }
 
   /** One momentIngest micro-batch — exposed so StreamingSpec can replay
@@ -385,26 +356,19 @@ object EmbeddingsStream {
   }
 
   /** Top-k cosine retrieval against the standing index: probe the
-    * `nprobe` nearest centroids per query, scan ONLY those index
-    * partitions (broadcast equi-join on the partition column → dynamic
-    * partition pruning), rank within. Output shape and values match
-    * [[Similarity.ivfTopK]] on the same corpus/centroids/k/nprobe.
-    * queries: (query_id: Long, qv: Array[Float]). */
+    * `nprobe` nearest centroids per query on the driver, scan ONLY those
+    * index partitions (a `centroid_id IN (probed)` filter — static
+    * partition pruning), rank within with the vector kernel. Each row's
+    * cell is its stored `centroid_id`, never a re-assignment. Output
+    * shape and values match [[Similarity.ivfTopK]] on the same
+    * corpus/centroids/k/nprobe when the index was built with these
+    * centroids. queries: (query_id: Long, qv: Array[Float]). */
   def searchIndex(spark: SparkSession, indexDir: String, queries: DataFrame,
-                  centroids: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val index = spark.read.parquet(indexDir)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"))
-    val probes = Similarity.assignProbes(queries, centroids, nprobe)
-    val cands = index.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", Similarity.guardedCosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
-  }
+                  centroids: DataFrame, k: Int, nprobe: Int = 1): DataFrame =
+    Similarity.ivfRanked(queries,
+      spark.read.parquet(indexDir).select(col("centroid_id"), col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv")),
+      centroids, k, nprobe, storedCells = true)
 
   /** Residual-PQ codes for an assigned micro-batch, packed one row per
     * vector: (vec_id, centroid_id, codes: Array[Int] ordered by sub).
@@ -440,11 +404,12 @@ object EmbeddingsStream {
     * (floored-micro subvector dot products against the broadcast
     * codebooks — batch q103's integer ADC verbatim), and score ONLY
     * the probed partitions' members by summing their M table entries.
-    * The probe table arrives through a broadcast equi-join on
-    * `centroid_id` — the index's partition column — so dynamic
-    * partition pruning skips every unprobed partition's files at the
-    * scan (PlanSpec pins the dynamicpruning expression), and each
-    * candidate costs M integer adds with no float vector ever read:
+    * The probes are chosen on the driver ([[Similarity.probePairs]]),
+    * so the scan is filtered to `centroid_id IN (probed)` — the index's
+    * partition column — and static partition pruning skips every
+    * unprobed partition's files (PlanSpec pins the partition filter),
+    * and each candidate costs M integer adds with no float vector ever
+    * read:
     * at 100 TB the search touches nprobe/k-th of an index that is
     * itself ~16× smaller than its raw-vector form. Results are
     * bit-equal to the batch ADC over the same corpus + artifacts
@@ -456,9 +421,11 @@ object EmbeddingsStream {
                      nprobe: Int = 2): DataFrame = {
     import graft.functions.VectorFunctions
     import graft.queries.VectorOps.{PqM, PqSubDim}
+    val pairs = Similarity.probePairs(queries, centroids, nprobe)
     val index = spark.read.parquet(indexDir)
       .select(col("centroid_id"), col("vec_id"), col("codes"))
-    val qtab = Similarity.assignProbes(queries, centroids, nprobe)
+      .filter(col("centroid_id").isin(pairs.map(_._2).distinct: _*))
+    val qtab = Similarity.probeFrame(queries, pairs)
       .join(broadcast(centroids), Seq("centroid_id"))
       .withColumn("qr", expr(
         "zip_with(qv, cvec, (a, b) -> CAST(a AS FLOAT) - CAST(b AS FLOAT))"))

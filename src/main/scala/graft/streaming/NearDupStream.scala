@@ -3,7 +3,7 @@ package graft.streaming
 import graft.queries.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming near-duplicate detection against a STANDING
   * MinHash band index — the approximate-dedup twin of
@@ -81,17 +81,9 @@ object NearDupStream {
 
   def ingest(spark: SparkSession, srcDir: String, dupDir: String,
              checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, dupDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      dedupBatch(batch, batchId, dupDir)
+    }
   }
 
   /** One ingest micro-batch. Replay-safe under foreachBatch's

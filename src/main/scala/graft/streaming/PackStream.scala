@@ -3,7 +3,7 @@ package graft.streaming
 import graft.queries.TrainingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming over the TRAINING-LAYOUT side of the pipeline:
   * incremental sequence packing — the streaming twin of the batch q81
@@ -63,17 +63,9 @@ object PackStream {
     * files. */
   def ingest(spark: SparkSession, srcDir: String, packDir: String,
              checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, batchId, packDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      packBatch(batch, batchId, packDir)
+    }
   }
 
   /** One ingest micro-batch. Replay-safe under foreachBatch's

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.queries.{Idioms, TrainingOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming corpus-statistics sketches — the standing twin
   * of batch q84 (KMV distinct vocabulary) and q85 (count–min gram
@@ -185,17 +185,9 @@ object SketchStream {
     * standing KMV and CMS states under `sketchDir`. */
   def ingest(spark: SparkSession, srcDir: String, sketchDir: String,
              checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sketchBatch(batch, batchId, sketchDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      sketchBatch(batch, batchId, sketchDir)
+    }
   }
 
   /** One ingest micro-batch: five independent standing-state folds.

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.queries.{Idioms, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the TEXT-RETRIEVAL side of the pipeline: a
@@ -84,17 +84,9 @@ object TextIndexStream {
     * never duplicates postings or stats rows. */
   def ingest(spark: SparkSession, srcDir: String, indexDir: String,
              checkpointDir: String): StreamingQuery = {
-    val q = source(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        indexBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    AtomicState.drain(source(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      indexBatch(batch, batchId, indexDir)
+    }
   }
 
   /** One ingest micro-batch — exposed so StreamingSpec can replay it

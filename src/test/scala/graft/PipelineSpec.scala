@@ -226,7 +226,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     def joinedBack(top: DataFrame): Seq[Seq[Any]] = top.join(corpus, "neighbor_id")
       .select(col("rank"), col("pk"), col("text"), col("cosine")).orderBy(col("rank"))
       .collect().map(_.toSeq).toSeq
-    assert(hits.length == 3 && hits.map(_.toSeq).toSeq == joinedBack(Similarity.topKWindow(q, vecs, 3)))
+    assert(hits.length == 3 && hits.map(_.toSeq).toSeq == joinedBack(RelationalTwins.topKWindow(q, vecs, 3)))
     val cents = RelationalTwins.kmeansCentroids(spark, vecs, 8, 3, "neighbor_id", "cv")
     assert(ivfHits.nonEmpty &&
       ivfHits.map(_.toSeq).toSeq == joinedBack(RelationalTwins.ivfTopK(q, vecs, cents, 3, 2)))

@@ -31,27 +31,25 @@ class PlanAuditSpec extends AnyFunSuite with LocalSpark {
     // q24 left this list in round 18: its plan is now the map-side
     // top-k (no BNLJ — pairs are scored and reduced inside the scan
     // stage; PlanSpec pins the shape)
+    // q35, q68, q90, q95 and q103 left it when their centroid
+    // assignment and probes moved to Similarity's kernel (a
+    // mapPartitions against broadcast centroids; probes on the driver)
     "q25_embedding_neardup",     // vec_id<2000 audit slice build side
-    "q35_ivf_assign",            // k=16 centroid build side
     "q45_ivf_topk",              // k-centroid probe
     "q46_tfidf_topterms",        // single-row corpus-N frame
     "q47_ivf_kmeans_topk",       // trained k-centroid probe
     "q58_mix_rebalance",         // single-row min-source frame
     "q86_temperature_mix",       // single-row min-language frame (q58's shape)
     "q89_sketch_jaccard",        // |sources|² pairing of ≤k-long sketch rows
-    "q90_filtered_ann",          // k=8 centroid build side (q45's shape)
-    "q68_semdedup",              // autoK(n) centroid build side
     "q69_quantized_ann",         // query batch vs SQ8 grid
     "q71_semantic_decontaminate",// broadcast held-out benchmark
     "q72_target_affinity_select",// single-row weight frames
     "q76_hybrid_rrf",            // dense arm: query batch vs corpus
     "q77_retrieval_eval",        // dense arm, shared with q76
     "q94_bpe_merges",            // single-row argmax merge frame per round
-    "q95_hard_negatives",        // k=8 centroid build side (q90's shape)
     "q97_embedding_report",      // |labels|² centroid pairing (q89's shape)
     "q98_pca_power",             // single-row max-abs / rayleigh frames over the d×d matrix
     "q100_bpe_apply",            // q94's argmax frames + single-row symbol-count totals
-    "q103_ivfadc",               // k-centroid coarse-assign/probe build sides (q45's shape)
     "q99_pmi_collocations"       // single-row corpus pair-total (nt) broadcast
   )
 

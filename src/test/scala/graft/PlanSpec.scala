@@ -138,11 +138,19 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(joins == 2, s"expected 2 joins (candidate->arrays), got $joins:\n$p")
   }
 
-  test("q35 centroid assignment uses map-side partial aggregation, not a window sort") {
-    val p = planOf("q35_ivf_assign")
-    assert(!p.contains("Window"), s"assignment degraded to the n×k window sort:\n$p")
-    assert(p.contains("partial_min") || p.contains("partial min"),
-      s"no map-side combine in assignment:\n$p")
+  test("q35 centroid assignment runs no Window and no Exchange") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    TempCaches.releaseAll(); spark.catalog.clearCache()
+    val df = SparkEntry.queries("q35_ivf_assign")(spark, dir)
+    assert(df.count() > 0)
+    // the vector kernel's mapPartitions over the scan: no n×k window
+    // sort and no agg-min shuffle
+    val nodes = allNodes(df.queryExecution.executedPlan)
+    assert(nodes.exists(_.isInstanceOf[MapPartitionsExec]), s"no assignment kernel:\n${nodes.head}")
+    assert(!nodes.exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[Exchange]),
+      s"assignment plans a window or an exchange:\n${nodes.head}")
   }
 
   test("q102/q103 PQ encode is agg-min partial aggregation, not a window sort") {
@@ -345,7 +353,25 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
   }
 
-  test("searchIndex prunes unprobed IVF partitions at the scan (DPP on centroid_id)") {
+  /** The executed index scan of `hits` (after it ran): its partition
+    * filter column names and its `numFiles` metric. */
+  private def indexScan(hits: DataFrame, idx: String): (Set[String], Long) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val scans = allNodes(hits.queryExecution.executedPlan).collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains(idx)) => f
+    }
+    assert(scans.length == 1, s"expected one index scan:\n${hits.queryExecution.executedPlan}")
+    (scans.head.partitionFilters.flatMap(_.references.map(_.name)).toSet,
+      scans.head.metrics("numFiles").value)
+  }
+
+  /** Parquet files under the index partition directories `parts`
+    * (relative paths such as `centroid_id=3/label=1`). */
+  private def filesUnder(idx: String, parts: Iterable[String]): Long =
+    parts.toSeq.map(p => Option(new java.io.File(s"$idx/$p").listFiles()).getOrElse(Array.empty)
+      .count(_.getName.endsWith(".parquet")).toLong).sum
+
+  test("searchIndex prunes unprobed IVF partitions at the scan (static partition filter on centroid_id)") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     import graft.streaming.EmbeddingsStream
@@ -353,25 +379,26 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val cents = corpus.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString + "/index"
-    Similarity.nearestCentroid(
+    Similarity.assign(
         corpus.select(col("vec_id"), col("embedding")), cents, "embedding", "vec_id",
         Seq("embedding"))
       .select(col("centroid_id"), col("vec_id"), col("casim"), col("embedding"))
       .write.partitionBy("centroid_id").parquet(idx)
     val queries = corpus.filter(col("vec_id") % 200 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    try {
-      val hits = EmbeddingsStream.searchIndex(spark, idx, queries, cents, k = 5, nprobe = 2)
-      val p = hits.queryExecution.executedPlan.toString
-      assert(p.contains("dynamicpruning"),
-        s"index scan reads unprobed partitions (no DPP):\n$p")
-      assert(hits.collect().nonEmpty)
-    } finally
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+    val hits = EmbeddingsStream.searchIndex(spark, idx, queries, cents, k = 5, nprobe = 2)
+    assert(hits.collect().nonEmpty)
+    // the probes are known on the driver: a static partition filter,
+    // and only the probed directories' files are read
+    val (filterCols, files) = indexScan(hits, idx)
+    assert(filterCols == Set("centroid_id"), s"partition filters on $filterCols")
+    val probed = Similarity.probePairs(queries, cents, 2).map(_._2).distinct
+    assert(probed.length < 8 && files == filesUnder(idx, probed.map(c => s"centroid_id=$c")),
+      s"read $files files for probed cells $probed")
+    assert(!spark.conf.getAll.contains("spark.sql.optimizer.dynamicPartitionPruning.useStats"))
   }
 
-  test("searchIndexAdc prunes unprobed partitions (DPP) and reads only codes, never raw vectors") {
+  test("searchIndexAdc prunes unprobed partitions statically and reads only codes, never raw vectors") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     import graft.queries.VectorOps
@@ -379,7 +406,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val corpus = Tables(spark, dir, "embeddings")
     val cents = corpus.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec")).cache()
-    val res = Similarity.nearestCentroid(
+    val res = Similarity.assign(
         corpus.select(col("vec_id"), col("embedding")), cents,
         "embedding", "vec_id", Seq("embedding"))
       .join(broadcast(cents), Seq("centroid_id"))
@@ -401,12 +428,9 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       .write.partitionBy("centroid_id").parquet(idx)
     val queries = corpus.filter(col("vec_id") % 200 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {
       val hits = EmbeddingsStream.searchIndexAdc(spark, idx, queries, cents, pcents, k = 5)
       val p = hits.queryExecution.executedPlan.toString
-      assert(p.contains("dynamicpruning"),
-        s"ADC index scan reads unprobed partitions (no DPP):\n$p")
       // column pruning: the index scan's ReadSchema carries the codes,
       // never the raw float vectors sitting beside them
       val reads = "ReadSchema: [^\\n]*".r.findAllIn(p).toList
@@ -414,13 +438,18 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       assert(reads.nonEmpty && reads.forall(!_.contains("embedding")),
         s"ADC search must not read raw vectors from the index:\n$p")
       assert(hits.collect().nonEmpty)
+      val (filterCols, files) = indexScan(hits, idx)
+      assert(filterCols == Set("centroid_id"), s"partition filters on $filterCols")
+      val probed = Similarity.probePairs(queries, cents, 2).map(_._2).distinct
+      assert(probed.length < 8 && files == filesUnder(idx, probed.map(c => s"centroid_id=$c")),
+        s"read $files files for probed cells $probed")
+      assert(!spark.conf.getAll.contains("spark.sql.optimizer.dynamicPartitionPruning.useStats"))
     } finally {
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
       pcents.unpersist(); cents.unpersist()
     }
   }
 
-  test("searchIndexFiltered prunes BOTH partition levels at the scan (DPP on centroid_id AND label)") {
+  test("searchIndexFiltered prunes BOTH partition levels at the scan (static filters on centroid_id AND label)") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     import graft.streaming.EmbeddingsStream
@@ -429,7 +458,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
     val idx = java.nio.file.Files.createTempDirectory("graft-fivf-plan").toString + "/index"
     // batch-build the layout ivfIngest(subpartitionByLabel = true) produces
-    Similarity.nearestCentroid(
+    Similarity.assign(
         corpus.select(col("vec_id"), col("embedding"), col("label")), cents,
         "embedding", "vec_id", Seq("embedding", "label"))
       .select(col("centroid_id"), col("label"), col("vec_id"), col("casim"), col("embedding"))
@@ -437,17 +466,20 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val queries = corpus.filter(col("vec_id") % 200 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("label").as("qlabel"))
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    try {
-      val hits = EmbeddingsStream.searchIndexFiltered(spark, idx, queries, cents, k = 5, nprobe = 2)
-      val p = hits.queryExecution.executedPlan.toString
-      // both join keys are partition columns fed by the broadcast probe
-      // side, so each gets its own dynamicpruning subquery at the scan
-      assert(p.sliding("dynamicpruning".length).count(_ == "dynamicpruning") >= 2,
-        s"index scan misses a pruning level (need DPP on centroid_id AND label):\n$p")
-      assert(hits.collect().nonEmpty)
-    } finally
-      spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+    val hits = EmbeddingsStream.searchIndexFiltered(spark, idx, queries, cents, k = 5, nprobe = 2)
+    assert(hits.collect().nonEmpty)
+    // both levels are filtered statically: the probed cells, crossed
+    // with the query labels, are the only directories read
+    val (filterCols, files) = indexScan(hits, idx)
+    assert(filterCols == Set("centroid_id", "label"), s"partition filters on $filterCols")
+    val probed = Similarity.probePairs(queries, cents, 2).map(_._2).distinct
+    val labels = queries.select(col("qlabel")).distinct().collect().map(_.getInt(0))
+    val dirs = for (c <- probed; l <- labels) yield s"centroid_id=$c/label=$l"
+    val all = new java.io.File(idx).listFiles().filter(_.isDirectory)
+      .flatMap(c => c.listFiles().filter(_.isDirectory).map(l => s"${c.getName}/${l.getName}"))
+    assert(dirs.length < all.length && files == filesUnder(idx, dirs),
+      s"read $files files for ${dirs.mkString(",")}")
+    assert(!spark.conf.getAll.contains("spark.sql.optimizer.dynamicPartitionPruning.useStats"))
   }
 
   test("TextIndexStream.search prunes unprobed term buckets at the scan (DPP on bucket)") {

@@ -16,7 +16,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       .repartition(7) // force multiple partitions so partial top-k matters
-    val a = Similarity.topKWindow(q, c, 5).collect().map(_.toSeq).toSet
+    val a = RelationalTwins.topKWindow(q, c, 5).collect().map(_.toSeq).toSet
     val b = Similarity.topKPartitioned(spark, q, c, 5).collect().map(_.toSeq).toSet
     assert(a.nonEmpty)
     assert(a == b)
@@ -38,7 +38,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
     }
     // IVF hits are a subset of the full corpus ordering semantics:
     // each hit's cosine must be <= the exact top-1 cosine for that query
-    val exact = Similarity.topKWindow(q, c, 1).collect()
+    val exact = RelationalTwins.topKWindow(q, c, 1).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     ivf.foreach(r => assert(r.getDouble(2) <= exact(r.getLong(0)) + 1e-12))
   }
@@ -263,7 +263,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     val cents = Similarity.kmeansCentroids(spark, e, k = 8, iters = 3)
-    val exact = Similarity.topKWindow(q, c, 5).collect()
+    val exact = RelationalTwins.topKWindow(q, c, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(nprobe: Int): Double = {
       val got = Similarity.ivfTopK(q, c, cents, 5, nprobe).collect()
@@ -295,7 +295,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
       .toDF("neighbor_id", "cv")
     val queries = Seq((1000L, unit(0)), (1001L, null.asInstanceOf[Array[Float]]))
       .toDF("query_id", "qv")
-    val win = Similarity.topKWindow(queries, corpus, 10).collect()
+    val win = RelationalTwins.topKWindow(queries, corpus, 10).collect()
     val part = Similarity.topKPartitioned(spark, queries, corpus.repartition(2), 10).collect()
     assert(win.nonEmpty)
     assert(win.map(_.toSeq).toSet == part.map(_.toSeq).toSet)
@@ -314,7 +314,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
       .toDF("neighbor_id", "cv")
     val queries = Seq((1000L, unit(0))).toDF("query_id", "qv")
 
-    val win = Similarity.topKWindow(queries, corpus, 3).collect()
+    val win = RelationalTwins.topKWindow(queries, corpus, 3).collect()
     assert(win.nonEmpty && !win.exists(_.getLong(1) == 99L),
       s"zero vector ranked in topKWindow: ${win.mkString(",")}")
     val part = Similarity.topKPartitioned(spark, queries, corpus.repartition(3), 3)
@@ -326,10 +326,12 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
     // prefer it (agg-min form) and ivfTopK must not surface id 99
     val cents = ((0L to 2L).map(i => (i, unit(i.toInt))) :+ (3L, Array.fill(dim)(0f)))
       .toDF("centroid_id", "cvec")
-    val assigned = Similarity.nearestCentroid(
-      corpus.filter(col("neighbor_id") =!= 99L), cents, "cv", "neighbor_id").collect()
-    assert(assigned.forall(_.getLong(1) != 3L),
-      s"zero centroid won assignment: ${assigned.mkString(",")}")
+    for (assignment <- Seq(RelationalTwins.nearestCentroid _, Similarity.assign _)) {
+      val assigned = assignment(
+        corpus.filter(col("neighbor_id") =!= 99L), cents, "cv", "neighbor_id", Nil).collect()
+      assert(assigned.nonEmpty && assigned.forall(_.getLong(1) != 3L),
+        s"zero centroid won assignment: ${assigned.mkString(",")}")
+    }
     val ivf = Similarity.ivfTopK(queries, corpus, cents, 3).collect()
     assert(ivf.nonEmpty && !ivf.exists(_.getLong(1) == 99L),
       s"zero vector ranked in ivfTopK: ${ivf.mkString(",")}")
@@ -442,7 +444,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
     val lexArm = VectorOps.bm25Ranked(spark, tmp, VectorOps.RrfArmK).collect()
       .map(r => r.getLong(1) -> r.getLong(3)).toMap
     val e = Tables(spark, tmp, "embeddings")
-    val denseArm = Similarity.topKWindow(
+    val denseArm = RelationalTwins.topKWindow(
         e.filter(col("vec_id") % VectorOps.BmQueryMod === 0)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
         e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
@@ -535,7 +537,7 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
     val q = e.filter(col("vec_id") % VectorOps.BmQueryMod === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val dense = Similarity.topKWindow(q, c, VectorOps.RrfArmK).collect()
+    val dense = RelationalTwins.topKWindow(q, c, VectorOps.RrfArmK).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
     val fused = (lex.keySet ++ dense.keySet).groupBy(_._1).flatMap { case (qid, keys) =>
       keys.map { k =>
@@ -1014,6 +1016,115 @@ class SimilaritySpec extends AnyFunSuite with LocalSpark {
     val ecents = Similarity.kmeansCentroids(spark, e, 8, 3)
     assert(rows(Similarity.ivfTopK(eq, ec, ecents, 5, 2)) ==
       rows(RelationalTwins.ivfTopK(eq, ec, ecents, 5, 2)))
+  }
+
+  /** [[edgeVectors]] grown into an embeddings table for the query-level
+    * kernel forms: ids 0..`n`-1 with seeded vectors (ids 0..23 are the
+    * edge fixture, so the first 8 — the q90/q95 centroids — hold a
+    * duplicate pair, a zero-norm vector and -0.0 components), exact
+    * duplicates of earlier vectors (cosine ties broken by id), labels
+    * 0..2, and one label held by only three rows so a query has fewer
+    * qualifying neighbours than k. */
+  private def edgeTable(seed: Int, n: Int = 420): Seq[(Long, Array[Float], Int)] = {
+    val rnd = new scala.util.Random(seed)
+    val edge = edgeVectors.toMap
+    Seq.tabulate(n) { i =>
+      val id = i.toLong
+      val v = edge.getOrElse(id,
+        if (i >= 300 && i < 340) edge(id % 24) else Array.fill(4)(rnd.nextFloat() * 2f - 1f))
+      val label = if (i == 350 || i == 351 || i == 352) 9 else rnd.nextInt(3)
+      (id, v, label)
+    }
+  }
+
+  test("vector kernel forms equal their relational twins: assign, q90/q95, stored-cell index search") {
+    import spark.implicits._
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    // assign ≡ nearestCentroid on unique ids, NULL and ragged vectors
+    // included: both give such a row the lowest centroid_id and a NULL
+    // casim; zero-norm and duplicate centroids tie to the lowest id
+    val nul = null.asInstanceOf[Array[Float]]
+    val withOdd = (edgeVectors ++ Seq(40L -> nul, 41L -> Array(1f, 2f, 3f),
+        42L -> Array(-0.0f, -0.0f, 0f, 0f), 43L -> edgeVectors(9)._2.clone()))
+      .map { case (id, v) => (id, v, (id % 3).toInt) }
+      .toDF("vec_id", "embedding", "label").repartition(3)
+    val trained = Similarity.kmeansCentroids(spark, edgeVectors.toDF("vec_id", "embedding"), 4, 1)
+      .union(Seq((4L, Array(0f, 0f, 0f, 0f))).toDF("centroid_id", "cvec"))
+    val edgeCents = edgeVectors.take(6).toDF("centroid_id", "cvec")
+    for (cents <- Seq(trained, edgeCents); carry <- Seq(Nil, Seq("label"), Seq("embedding"))) {
+      val got = rows(Similarity.assign(withOdd, cents, "embedding", "vec_id", carry))
+      val want = rows(RelationalTwins.nearestCentroid(withOdd, cents, "embedding", "vec_id", carry))
+      assert(got.size == 28 && got == want, s"carry=$carry: ${got diff want} / ${want diff got}")
+      for (id <- Seq(40L, 41L))
+        assert(got.exists(r => r.head == id && r(1) == 0L && r(2) == null), s"id $id")
+    }
+    // q90/q95 ≡ the nearestCentroid ⋈ assignProbes windows (non-NULL input)
+    for (seed <- Seq(11, 12, 13)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-kernel-twins").toString
+      edgeTable(seed).toDF("vec_id", "embedding", "label")
+        .repartition(3).write.parquet(s"$dir/embeddings.parquet")
+      val q90 = rows(SparkEntry.queries("q90_filtered_ann")(spark, dir))
+      assert(q90 == rows(RelationalTwins.q90(spark, dir)), s"q90 seed $seed")
+      // query 350 has only two other label-9 rows: its list is short
+      assert(q90.count(_.head == 350L) <= 2 && q90.count(_.head == 0L) == 5, s"seed $seed")
+      val q95 = rows(SparkEntry.queries("q95_hard_negatives")(spark, dir))
+      assert(q95.nonEmpty && q95 == rows(RelationalTwins.q95(spark, dir)), s"q95 seed $seed")
+    }
+    // searchIndex: an index built with centroids A, searched with
+    // recentered centroids B, ranks each row in its STORED cell
+    val corpus = edgeTable(17).toDF("vec_id", "embedding", "label").repartition(3)
+    val a = corpus.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
+    val b = Similarity.kmeansCentroids(spark, corpus, 8, 2)
+    val idx = java.nio.file.Files.createTempDirectory("graft-stored-cells").toString + "/index"
+    RelationalTwins.nearestCentroid(corpus, a, "embedding", "vec_id", Seq("embedding", "label"))
+      .write.partitionBy("centroid_id", "label").parquet(idx)
+    val queries = corpus.filter(col("vec_id") % 25 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("label").as("qlabel"))
+    val plain = queries.drop("qlabel")
+    for (cents <- Seq(a, b); k <- Seq(1, 5, 30); nprobe <- Seq(1, 3)) {
+      val got = rows(graft.streaming.EmbeddingsStream.searchIndex(spark, idx, plain, cents, k, nprobe))
+      assert(got.nonEmpty &&
+        got == rows(RelationalTwins.searchIndex(spark, idx, plain, cents, k, nprobe)), s"k=$k nprobe=$nprobe")
+      assert(rows(graft.streaming.EmbeddingsStream.searchIndexFiltered(spark, idx, queries, cents, k, nprobe)) ==
+        rows(RelationalTwins.searchIndexFiltered(spark, idx, queries, cents, k, nprobe)),
+        s"filtered k=$k nprobe=$nprobe")
+    }
+  }
+
+  test("warm count() job budgets: q35, q90, q95 and searchIndex") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernel-jobs").toString
+    edgeTable(11).toDF("vec_id", "embedding", "label")
+      .repartition(3).write.parquet(s"$dir/embeddings.parquet")
+    def warmJobs(body: => Long): Int = {
+      TempCaches.releaseAll(); body; TempCaches.releaseAll()
+      val (n, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(body)
+      TempCaches.releaseAll()
+      assert(n > 0)
+      jobs
+    }
+    def query(name: String) = warmJobs(SparkEntry.queries(name)(spark, dir).count())
+    val corpus = Tables(spark, dir, "embeddings")
+    val cents = corpus.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
+    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-jobs").toString + "/index"
+    Similarity.assign(corpus.select(col("vec_id"), col("embedding")), cents,
+        "embedding", "vec_id", Seq("embedding"))
+      .write.partitionBy("centroid_id").parquet(idx)
+    val queries = corpus.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val got = Map(
+      "q35" -> query("q35_ivf_assign"),
+      "q90" -> query("q90_filtered_ann"),
+      "q95" -> query("q95_hard_negatives"),
+      "searchIndex" -> warmJobs(graft.streaming.EmbeddingsStream.searchIndex(
+        spark, idx, queries, cents, k = 5, nprobe = 2).count()))
+    info(s"warm count() jobs: $got")
+    // measured: the driver collects (queries, centroids) plus the
+    // scan; q95 runs two kernel calls
+    val budget = Map("q35" -> 3, "q90" -> 5, "q95" -> 9, "searchIndex" -> 6)
+    assert(got.forall { case (q, n) => n <= budget(q) }, s"over budget: $got vs $budget")
   }
 
   test("top-k heap ties -0.0 with 0.0 exactly as Spark's rank window does") {

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   * registration on a fresh JVM, keeps its own builder. Measurement hooks
   * and probe mains stay out of `src/main`: A/B timing runs through
   * `graft.Bench` subsets on two trees and through `perfbench`. TxTable's
-  * writers share one optimistic commit loop. */
+  * writers share one optimistic commit loop. Vectors are scored against
+  * centroids or queries only by Similarity's kernel; the relational
+  * forms it replaced live in the test tree. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -46,5 +48,19 @@ class SourceTripwireSpec extends AnyFunSuite {
     assert(calls > 0 && calls <= 3,
       s"$calls tryCommitAnchored call sites: a writer hand-rolls its own retry loop " +
         "instead of returning an attempt to commitLoop")
+  }
+
+  test("the relational vector-scoring forms appear nowhere in src/main") {
+    val banned = Seq("nearestCentroid(", "assignProbes(", "topKWindow(")
+    val hits = for ((p, src) <- sources; b <- banned if src.contains(b)) yield s"$p: $b"
+    assert(hits.isEmpty, s"relational twin back in src/main: ${hits.mkString(", ")}")
+  }
+
+  test("Similarity keeps at most 3 rank windows: the top-k frame's and quantizedTopK's two") {
+    val src = sources.collectFirst { case ("graft/operators/Similarity.scala", s) => s }
+      .getOrElse(fail("graft/operators/Similarity.scala not found"))
+    val windows = "row_number\\(\\)".r.findAllMatchIn(src).length
+    assert(windows > 0 && windows <= 3,
+      s"$windows row_number() windows in Similarity: a vector ranking bypasses partitionTopK")
   }
 }

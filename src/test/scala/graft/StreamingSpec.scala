@@ -305,7 +305,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     val streamed = spark.read.parquet(idx)
       .select(col("vec_id"), col("centroid_id"), col("casim"))
       .collect().map(_.toSeq).toSet
-    val batch = Similarity.nearestCentroid(
+    val batch = RelationalTwins.nearestCentroid(
         corpus.select(col("vec_id"), col("embedding")), cents, "embedding", "vec_id")
       .select(col("vec_id"), col("centroid_id"), col("casim"))
       .collect().map(_.toSeq).toSet
@@ -350,11 +350,11 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
       .collect().map(_.toSeq).toSet
     // batch twin: q90's shape — predicate INSIDE the candidate scan,
     // before ranking (pre-filter semantics)
-    val corpusAssigned = Similarity.nearestCentroid(
+    val corpusAssigned = RelationalTwins.nearestCentroid(
         corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
           col("label").as("clabel")),
         cents, "cv", "neighbor_id", Seq("cv", "clabel")).drop("casim")
-    val probes = Similarity.assignProbes(queries, cents, 2)
+    val probes = RelationalTwins.assignProbes(queries, cents, 2)
     val cands = corpusAssigned.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("clabel") === col("qlabel") && col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", Similarity.guardedCosine(col("qv"), col("cv")))
@@ -422,7 +422,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     // centroids + residual codebooks from a batch pass; the stream then
     // encodes arrivals against these STATIC artifacts
     val cents = Similarity.kmeansCentroids(spark, corpus, 8, 2).cache()
-    val res = Similarity.nearestCentroid(
+    val res = RelationalTwins.nearestCentroid(
         corpus.select(col("vec_id"), col("embedding")), cents,
         "embedding", "vec_id", Seq("embedding"))
       .join(broadcast(cents), Seq("centroid_id"))
@@ -468,7 +468,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     val codesDf = VectorOps.pqEncode(
       VectorOps.pqSubvectors(res, "vec_id", "r", carry = Seq("centroid_id")),
       pcents, Seq("vec_id", "centroid_id"))
-    val qtab = Similarity.assignProbes(queries, cents, 2)
+    val qtab = RelationalTwins.assignProbes(queries, cents, 2)
       .join(broadcast(cents), Seq("centroid_id"))
       .withColumn("qr", expr(
         "zip_with(qv, cvec, (a, b) -> CAST(a AS FLOAT) - CAST(b AS FLOAT))"))
