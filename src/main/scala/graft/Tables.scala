@@ -40,13 +40,20 @@ object Tables {
   private[graft] val schemaCache = scala.collection.concurrent.TrieMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
-  private def readStamped(spark: SparkSession, path: String): DataFrame = {
+  /** The name:size:mtime of every file under `path`, in name order —
+    * one directory walk that reads no data. The schema memo compares it
+    * whole; `VectorOps.stampedKey` hashes it into the memo keys. */
+  private[graft] def fingerprint(path: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).map(_.sortBy(_.getName).toSeq).getOrElse(Nil).flatMap(walk)
       else Seq(f)
-    val sig = walk(new java.io.File(path))
+    walk(new java.io.File(path))
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
+  }
+
+  private def readStamped(spark: SparkSession, path: String): DataFrame = {
+    val sig = fingerprint(path)
     val sch = schemaCache.get(path) match {
       case Some((`sig`, cached)) => cached
       case _ =>

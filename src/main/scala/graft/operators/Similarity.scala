@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.plans.TopKRows
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *  - [[topKPartitioned]] (exact), [[ivfTopK]] (IVF-probed) and
   *    [[ivfRanked]] (IVF with a label predicate or stored cells: q90,
   *    q95, the standing-index searches): the heaps, then one rank
-  *    window over |partitions|·|queries|·k survivors;
+  *    ([[graft.plans.TopKRows.perGroup]]) over |partitions|·|queries|·k
+  *    survivors;
   *  - Gold.search/searchIvf run `partitionTopK` directly, and
   *    [[kmeansCentroids]] assigns with `nearest`.
   * The relational forms these replaced — a broadcast cross join ranked
@@ -35,7 +36,7 @@ object Similarity {
 
   /** Map-side top-k: each partition keeps a bounded worst-first heap per
     * query ([[partitionTopK]]), so only |partitions|·|queries|·k
-    * candidate rows shuffle into the final rank window. The dot/norm
+    * candidate rows shuffle into the final rank. The dot/norm
     * accumulation is sequential IEEE double, identical to
     * [[guardedCosine]].
     *
@@ -95,16 +96,28 @@ object Similarity {
     * pruning at the scan. */
   private[graft] def ivfRanked(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
                                k: Int, nprobe: Int = 1, sameLabel: Option[Boolean] = None,
-                               storedCells: Boolean = false): DataFrame = {
-    val (qids, qvs, qlabels) = collectQueries(queries, labeled = sameLabel.isDefined)
+                               storedCells: Boolean = false): DataFrame =
+    ivfRankedEach(queries, corpus, centroids, Seq(k -> sameLabel), nprobe, storedCells).head
+
+  /** One [[ivfRanked]] frame per (k, sameLabel) ranking, all from one
+    * collect of the queries and centroids and one probe (q95 ranks its
+    * negatives and its best positive over the same probes). Queries are
+    * collected with their labels when any ranking filters on them. */
+  private[graft] def ivfRankedEach(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
+                                   rankings: Seq[(Int, Option[Boolean])], nprobe: Int,
+                                   storedCells: Boolean = false): Seq[DataFrame] = {
+    val (qids, qvs, qlabels) = collectQueries(queries, labeled = rankings.exists(_._2.isDefined))
     val (cids, cents) = collectCentroids(centroids)
     val probe = ivfProbe(qvs, cents, nprobe)
     val probed = cids.indices.filter(probe.queriesOf(_).nonEmpty).map(cids)
-    val pruned = corpus
+    val cells = corpus
       .transform(c => if (storedCells) c.filter(col("centroid_id").isin(probed: _*)) else c)
-      .transform(c => if (sameLabel.contains(true)) c.filter(col("clabel").isin(qlabels.distinct: _*)) else c)
-    rankedFrame(pruned, qids, qvs, k, Some(probe), sameLabel.map((qlabels, _)),
-      if (storedCells) Some(cids) else None)
+    rankings.map { case (k, sameLabel) =>
+      val pruned = cells
+        .transform(c => if (sameLabel.contains(true)) c.filter(col("clabel").isin(qlabels.distinct: _*)) else c)
+      rankedFrame(pruned, qids, qvs, k, Some(probe), sameLabel.map((qlabels, _)),
+        if (storedCells) Some(cids) else None)
+    }
   }
 
   /** Nearest-centroid assignment: each row of `df` gets its max-guarded-
@@ -300,7 +313,7 @@ object Similarity {
   }
 
   /** The frame form of [[partitionTopK]] over a (neighbor_id, cv) corpus:
-    * heaps per partition, then a rank window over the survivors. With
+    * heaps per partition, then the rank helper over the survivors. With
     * `labels` — the queries' labels, and whether a row's `clabel` must
     * equal or differ from its query's — the heaps admit only qualifying
     * rows and the frame also carries (qlabel, clabel); with `cellIds`
@@ -328,11 +341,10 @@ object Similarity {
             keep, cell)
           .map { case (qi, nid, c, (l, _)) => (ids(qi), nid, c, ls.fold(0L)(_._1(qi)), l) }
       }.toDF("query_id", "neighbor_id", "cosine", "qlabel", "clabel")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     val labelled = if (labels.isDefined) Seq("qlabel", "neighbor_id", "clabel") else Seq("neighbor_id")
-    partial.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    // group bound: the collected query batch, ≤ partitions·k survivors each
+    TopKRows.perGroup(partial, Seq("query_id"),
+        Seq(col("cosine").desc, col("neighbor_id").asc), k, "rank")
       .select((col("query_id") +: labelled.map(col)) ++ Seq(col("cosine"), col("rank").cast("long")): _*)
   }
 
@@ -528,11 +540,10 @@ object Similarity {
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                     oversample: Int): DataFrame = {
     // phase 1 emits SCALARS ONLY (query_id, neighbor_id, approx) into
-    // the ranking shuffle — carrying the vectors through the window
-    // would put ~1 KB/row through the exchange (corpus×queries rows: a
-    // near-TB shuffle at the 100× replica); pruned, the same shuffle
-    // moves 24-byte rows. The full-precision vectors are joined back
-    // AFTER the shortlist, touching |queries|·oversample rows only.
+    // the ranking heaps — carrying the vectors through them would copy
+    // ~1 KB per kept row; pruned, a kept row is 24 bytes. The
+    // full-precision vectors are joined back AFTER the shortlist,
+    // touching |queries|·oversample rows only.
     // norms precomputed once per side (q25 trick): the pair loop runs
     // the codegen'd dot alone; dot/(qn·cn) is bit-identical to the full
     // cosine (qn = sqrt(sumsq) is the same double either way), and a
@@ -547,21 +558,19 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         nanvl(graft.plans.GraftExpressions.dotNative(col("qdv"), col("cdv"))
           / (col("qn") * col("cn")), lit(Double.NegativeInfinity)).as("approx"))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val shortlist = cands.withColumn("_ar", row_number().over(w1))
-      .filter(col("_ar") <= oversample)
+    // both rankings run on the rank helper; group bound: the broadcast
+    // query batch (q69: the Q25Cap slice)
+    val shortlist = TopKRows.perGroup(cands, Seq("query_id"),
+        Seq(col("approx").desc, col("neighbor_id").asc), oversample, "_ar")
       .select(col("query_id"), col("neighbor_id"))
     // rescore: tiny shortlist broadcasts against the corpus to fetch
     // cv; qv rides the (always-small) query batch
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    corpus.select(col("neighbor_id"), col("cv"))
+    val rescored = corpus.select(col("neighbor_id"), col("cv"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(queries.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .withColumn("cosine", guardedCosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), guardedCosine(col("qv"), col("cv")).as("cosine"))
+    TopKRows.perGroup(rescored, Seq("query_id"),
+        Seq(col("cosine").desc, col("neighbor_id").asc), k, "rank")
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long"))
   }
 

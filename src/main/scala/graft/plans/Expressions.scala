@@ -744,16 +744,6 @@ object GraftExpressions {
   def distinctShingles(text: Column, n: Int): Column =
     GraftBridge.column(DistinctShingles(GraftBridge.expression(text), n))
 
-  /** Column surface for the bounded per-group top-k aggregate
-    * ([[TopKRows]]): `groupBy(g).agg(topKRows(struct(orderCols...,
-    * payloadCols...), k))` keeps the k smallest structs in ascending
-    * lexicographic order and returns them as a sorted array —
-    * `posexplode` then yields exactly the window top-k rows with
-    * `pos = row_number() - 1`. */
-  def topKRows(s: Column, k: Int): Column =
-    GraftBridge.column(
-      TopKRows(GraftBridge.expression(s), k).toAggregateExpression())
-
   /** Column surface for the SQ8 side-car pack. */
   def sq8Blob(embedding: Column): Column =
     GraftBridge.column(Sq8Blob(GraftBridge.expression(embedding)))

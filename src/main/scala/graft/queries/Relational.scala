@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.TopKRows
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,38 +155,29 @@ object Relational {
         .agg(count(lit(1)).as("n_customers"), dsum(col("c_acctbal")).as("total_acctbal"))
     }),
 
-    // Window top-k per group (SURVEY §2.7; powers kNN A8 too).
-    // Round-20 optimization (verdict item 4): the row_number window is
-    // replaced by the bounded-heap aggregate (graft.plans.TopKRows).
-    // Spark's WindowGroupLimit did engage below the window's exchange,
-    // but its partial mode SORTS every map partition by the full
-    // (segment, price desc, orderkey) key before streaming the limit —
-    // at the ×100 replica that sort was 2/3 of the query (join-only
-    // 1.42 s vs 4.21 s full). The heap keeps 3 rows per segment per
-    // partition in O(n·log k) with no sort, and with 5 segments the
-    // ObjectHashAggregate never falls back to sort-based. Ordering
-    // (price desc, key asc) is expressed as ascending (-price, key);
-    // prices are positive, so negation is order-exact. rank = position
-    // in the sorted top-k array + 1 ≡ row_number (the (price, key)
-    // order is total — key is unique). Bit-equality with the window
-    // form is pinned in PlanSpec/ExpressionsSpec and the oracle.
-    // Measured 2.95 → 1.86 s at ×100, 0.43 → 0.29 s at sf0.1 (medians
-    // of 5 alternating same-JVM reps, 10/10 reps won). The same
-    // rewrite was measured and REJECTED for q46 (6.05 vs 5.25 at ×100):
-    // with corpus-many groups the object agg falls back to sort-based
-    // past 128 in-memory groups, losing the heap's advantage — the
-    // heap form is for FEW-group top-k; WindowGroupLimit stays the
-    // right plan for per-document top-k.
+    // Window top-k per group (SURVEY §2.7; powers kNN A8 too), on the
+    // bounded-heap rank helper (graft.plans.TopKRows.perGroup) — group
+    // bound: the 5 market segments. Spark's WindowGroupLimit did engage
+    // below the window's exchange, but its partial mode SORTS every map
+    // partition by the full (segment, price desc, orderkey) key before
+    // streaming the limit — at the ×100 replica that sort was 2/3 of the
+    // query (join-only 1.42 s vs 4.21 s full). The heap keeps 3 rows per
+    // segment per partition in O(n·log k) with no sort, and with 5
+    // segments the ObjectHashAggregate never falls back to sort-based.
+    // The (price desc, key asc) order is total — key is unique.
+    // Measured 2.95 → 1.86 s at ×100, 0.43 → 0.29 s at sf0.1 against the
+    // window (round 20). The same rewrite was measured and REJECTED for
+    // q46 (6.05 vs 5.25 at ×100): with corpus-many groups the object agg
+    // falls back to sort-based past 128 in-memory groups, losing the
+    // heap's advantage — WindowGroupLimit stays the right plan for
+    // per-document top-k.
     "q07_topk_per_group" -> ((s, dir) => {
       val orders = Tables(s, dir, "orders")
       val customer = Tables(s, dir, "customer")
-      orders.join(broadcast(customer), orders("o_custkey") === customer("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(graft.plans.GraftExpressions.topKRows(
-          struct((-col("o_totalprice")).as("ns"), col("o_orderkey"), col("o_totalprice")), 3).as("tk"))
-        .select(col("c_mktsegment"), posexplode(col("tk")))
-        .select(col("c_mktsegment"), col("col.o_orderkey").as("o_orderkey"),
-          col("col.o_totalprice").as("o_totalprice"), (col("pos") + lit(1)).as("rk"))
+      TopKRows.perGroup(
+        orders.join(broadcast(customer), orders("o_custkey") === customer("c_custkey"))
+          .select(col("c_mktsegment"), col("o_orderkey"), col("o_totalprice")),
+        Seq("c_mktsegment"), Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, "rk")
     }),
 
     // T2 explode / frontier expansion (reference crawl_web.py:144-158):

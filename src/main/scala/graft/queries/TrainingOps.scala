@@ -445,20 +445,17 @@ object TrainingOps {
     // Exactly-k-per-group deterministic sample: the k docs per source
     // with the smallest doc-id hash — reproducible like q53, but with a
     // HARD count guarantee per group (rate sampling only hits the
-    // target in expectation). One window over the source partitioning;
-    // hash collisions between distinct doc_ids are improbable at 60
-    // bits but possible — they are broken deterministically by the
-    // doc_id tiebreak in the ordering, so the result is reproducible
-    // regardless.
+    // target in expectation). One bounded heap per source (the rank
+    // helper; group bound: the 20 sources, at every sf); hash collisions
+    // between distinct doc_ids are improbable at 60 bits but possible —
+    // they are broken deterministically by the doc_id tiebreak in the
+    // ordering, so the result is reproducible regardless.
     "q64_topk_sample" -> ((s, dir) => {
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("h").asc, col("doc_id").asc)
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          hash60("CAST(doc_id AS STRING)").as("h"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 10)
-        .select(col("doc_id"), col("source"), col("rk").cast("long").as("rk"))
+      val hashed = Tables(s, dir, "documents")
+        .select(col("doc_id"), col("source"), hash60("CAST(doc_id AS STRING)").as("h"))
+      graft.plans.TopKRows.perGroup(hashed, Seq("source"),
+          Seq(col("h").asc, col("doc_id").asc), 10, "rk")
+        .select(col("doc_id"), col("source"), col("rk").cast("long"))
     }),
 
     // Rare-token ratio (novelty/noise signal): the fraction of a doc's

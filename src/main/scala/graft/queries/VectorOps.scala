@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
+import graft.plans.TopKRows
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -664,15 +665,16 @@ object VectorOps {
       val dense = Similarity.topKPartitioned(s, qv, cv, RrfArmK)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rank").as("rank_dense"))
-      lex.join(dense, Seq("query_id", "doc_id"), "full_outer")
+      val fused = lex.join(dense, Seq("query_id", "doc_id"), "full_outer")
         .withColumn("rrf_micro", expr(
           s"coalesce(1000000000 div ($RrfK + rank_lex), CAST(0 AS BIGINT)) + " +
             s"coalesce(1000000000 div ($RrfK + rank_dense), CAST(0 AS BIGINT))"))
-        .withColumn("fused_rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("rrf_micro").desc, col("doc_id").asc)).cast("long"))
-        .filter(col("fused_rank") <= BmTopK)
-        .select(col("query_id"), col("doc_id"), col("rrf_micro"), col("fused_rank"))
+        .select(col("query_id"), col("doc_id"), col("rrf_micro"))
+      // group bound: ≤ 2·RrfArmK fused rows per query, so the heap's
+      // input is |queries|·2·RrfArmK rows at any corpus size
+      TopKRows.perGroup(fused, Seq("query_id"),
+          Seq(col("rrf_micro").desc, col("doc_id").asc), BmTopK, "fused_rank")
+        .withColumn("fused_rank", col("fused_rank").cast("long"))
     }),
 
     // Distributed retrieval evaluation — nDCG@5 of the BM25 system
@@ -750,19 +752,19 @@ object VectorOps {
     // anchor's best same-label candidate (how hard the negative
     // actually is). q90's filtered-IVF shape with the predicate
     // negated, nprobe = 2 (negatives concentrate outside the anchor's
-    // own cluster, so a wider probe keeps recall): two kernel calls over
-    // the same probes — the negatives with k = 5 and `!=`, the best
-    // positive with k = 1 and `==` — so no candidate frame is ever
-    // materialized. Margin is a per-row subtraction of two cosines
+    // own cluster, so a wider probe keeps recall): one collect and one
+    // probe feed two kernel rankings — the negatives with k = 5 and
+    // `!=`, the best positive with k = 1 and `==` — so no candidate
+    // frame is ever materialized. Margin is a per-row subtraction of two cosines
     // computed by the same kernel on both engines — deterministic.
     // Anchor batch bounded by the audit-slice rule (vec_id < Q25Cap) —
     // a mining run pairs a FIXED anchor set against a growing corpus.
     "q95_hard_negatives" -> ((s, dir) => {
       val (q, c, cents) = labeledIvfInputs(s, dir)
-      val pos = Similarity.ivfRanked(q, c, cents, 1, nprobe = 2, sameLabel = Some(true))
-        .select(col("query_id"), col("cosine").as("pos_sim"))
-      Similarity.ivfRanked(q, c, cents, 5, nprobe = 2, sameLabel = Some(false))
-        .join(broadcast(pos), Seq("query_id"), "left")
+      val Seq(neg, pos) = Similarity.ivfRankedEach(q, c, cents,
+        Seq(5 -> Some(false), 1 -> Some(true)), nprobe = 2)
+      neg.join(broadcast(pos.select(col("query_id"), col("cosine").as("pos_sim"))),
+          Seq("query_id"), "left")
         .withColumn("margin", coalesce(col("pos_sim"), lit(0.0)) - col("cosine"))
         .select(col("query_id"), col("qlabel"), col("neighbor_id"), col("clabel"),
           col("cosine"), col("rank"), col("margin"))
@@ -797,8 +799,9 @@ object VectorOps {
       val bSide = cents.select(col("label").as("lb"), col("cv").as("cb"))
       val inter = aSide.join(broadcast(bSide), col("la") =!= col("lb"))
         .withColumn("inter_cos", expr(VectorFunctions.cosineExpr("ca", "cb")))
-      val w = Window.partitionBy(col("la")).orderBy(col("inter_cos").desc, col("lb").asc)
-      val nearest = inter.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      // group bound: one group per label (10 labels, 10×9 pairs)
+      val nearest = TopKRows.perGroup(inter.select(col("la"), col("lb"), col("inter_cos")),
+          Seq("la"), Seq(col("inter_cos").desc, col("lb").asc), 1, "rk")
         .select(col("la").as("label"), col("lb").as("nearest_label"), col("inter_cos"))
       val intra = e.join(broadcast(cents.select(col("label"), col("cv"))), Seq("label"))
         .withColumn("c_ppm", expr(
@@ -849,7 +852,8 @@ object VectorOps {
     // the 64 component values are baked in as integer literals
     // (element_at(m, i)·c_i sums — no HOF lambda, no join), so the
     // corpus pass is one narrow projection; the extremes are two
-    // TakeOrdered top-k reads, never a global sort. Integer-exact:
+    // global bounded heaps (TopKRows.perGroup with no keys), never a
+    // global sort. Integer-exact:
     // micro-unit embedding × 1e6-scale component, |term| ≤ 2^41,
     // d = 64 terms — far from overflow; ranks deterministic with
     // vec_id ties.
@@ -873,23 +877,18 @@ object VectorOps {
     // a BROADCAST query table on (sub, code) — the corpus never
     // shuffles, and the per-candidate cost is M integer adds instead
     // of a 64-dim float dot.
-    // Round-20 optimization: the per-query rank window is the
-    // bounded-heap aggregate (graft.plans.TopKRows — the q07 operator):
-    // groups = the bounded query batch, so the object agg stays pure
-    // hash, the map-side heap bounds the exchange to 5 rows per query
-    // per partition (the window shuffled and SORTED every ADC-scored
-    // candidate row), and rank = position in the sorted array
-    // (total order — vec_id tiebreak). Measured 0.89 → 0.67 s at
-    // sf0.1 (7/7 reps), 4.92 → 4.75 s at ×100; oracle identical.
+    // The per-query rank is the bounded-heap rank helper
+    // (graft.plans.TopKRows.perGroup — the q07 operator); group bound:
+    // the Q25Cap query batch (≤ 40 queries), so the object agg stays
+    // pure hash, and the map-side heap bounds the exchange to 5 rows per
+    // query per partition (the window shuffled and SORTED every
+    // ADC-scored candidate row). Measured 0.89 → 0.67 s at sf0.1 (7/7
+    // reps), 4.92 → 4.75 s at ×100 against the window (round 20).
     "q102_pq_ann" -> ((s, dir) =>
-      pqAdcScored(s, dir)
-        .groupBy(col("query_id"))
-        .agg(graft.plans.GraftExpressions.topKRows(
-          struct((-col("adc_micro")).as("ns"), col("vec_id"), col("adc_micro")), 5).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")))
-        .select(col("query_id"), col("col.vec_id").as("neighbor_id"),
-          col("col.adc_micro").as("adc_micro"),
-          (col("pos") + lit(1)).cast("long").as("rank"))),
+      TopKRows.perGroup(pqAdcScored(s, dir), Seq("query_id"),
+          Seq(col("adc_micro").desc, col("vec_id").asc), 5, "rank")
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_micro"),
+          col("rank").cast("long"))),
 
     // PQ + exact re-rank (the faiss IndexRefine composition — the
     // production answer to PQ's quantization loss): q102's integer ADC
@@ -913,28 +912,25 @@ object VectorOps {
     "q104_pq_refine" -> ((s, dir) => {
       import graft.functions.VectorFunctions
       val e = Tables(s, dir, "embeddings")
-      // Round-20: shortlist via the bounded-heap aggregate (see q102 —
-      // same operator, k = PqRefineR; only the candidate SET is needed
-      // here, the exact re-rank below re-orders it). 5.37 → 5.09 s at
-      // ×100 (5/5 reps), flat at sf0.1; oracle identical.
-      val short = pqAdcScored(s, dir)
-        .groupBy(col("query_id"))
-        .agg(graft.plans.GraftExpressions.topKRows(
-          struct((-col("adc_micro")).as("ns"), col("vec_id")), PqRefineR).as("tk"))
-        .select(col("query_id"), explode(col("tk")).as("r"))
-        .select(col("query_id"), col("r.vec_id").as("vec_id"))
+      // shortlist and final rank both run on the rank helper (see q102);
+      // group bound for both: the Q25Cap query batch. Only the shortlist's
+      // candidate SET is used; the exact re-rank below re-orders it. The
+      // heap shortlist measured 5.37 → 5.09 s at ×100 against the window
+      // (round 20).
+      val short = TopKRows.perGroup(pqAdcScored(s, dir), Seq("query_id"),
+          Seq(col("adc_micro").desc, col("vec_id").asc), PqRefineR, "r")
+        .select(col("query_id"), col("vec_id"))
       val qv = e.filter(col("vec_id") < Q25Cap && col("vec_id") % 50 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      e.select(col("vec_id"), col("embedding").as("cv"))
+      val rescored = e.select(col("vec_id"), col("embedding").as("cv"))
         .join(broadcast(short), Seq("vec_id"))
         .join(broadcast(qv), Seq("query_id"))
-        .withColumn("cos_micro",
-          floor(VectorFunctions.cosine("qv", "cv") * lit(1000000.0)))
-        .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_micro").desc, col("vec_id").asc)).cast("long"))
-        .filter(col("rank") <= 5)
+        .select(col("query_id"), col("vec_id"),
+          floor(VectorFunctions.cosine("qv", "cv") * lit(1000000.0)).as("cos_micro"))
+      TopKRows.perGroup(rescored, Seq("query_id"),
+          Seq(col("cos_micro").desc, col("vec_id").asc), 5, "rank")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("cos_micro"), col("rank"))
+          col("cos_micro"), col("rank").cast("long"))
     }),
 
     // IVFADC (Jégou et al. 2011 §IV — the production ANN composition
@@ -987,15 +983,15 @@ object VectorOps {
         .withColumn("t", expr(
           s"CAST(FLOOR((${VectorFunctions.dotExpr("sv", "cvec")}) * 1000000.0) AS BIGINT)"))
         .select(col("query_id"), col("centroid_id"), col("sub"), col("code"), col("t"))
-      codes.join(broadcast(qtab), Seq("centroid_id", "sub", "code"))
+      val adc = codes.join(broadcast(qtab), Seq("centroid_id", "sub", "code"))
         .filter(col("query_id") =!= col("vec_id"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(sum(col("t")).as("adc_micro"))
-        .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_micro").desc, col("vec_id").asc)).cast("long"))
-        .filter(col("rank") <= 5)
+      // group bound: the Q25Cap query batch (≤ 40 queries)
+      TopKRows.perGroup(adc, Seq("query_id"),
+          Seq(col("adc_micro").desc, col("vec_id").asc), 5, "rank")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("adc_micro"), col("rank"))
+          col("adc_micro"), col("rank").cast("long"))
     }),
 
     "q101_pca_extremes" -> ((s, dir) => {
@@ -1006,14 +1002,13 @@ object VectorOps {
           expr("transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))").as("m"))
         .withColumn("proj", expr(dotExpr))
         .select(col("vec_id"), col("label").cast("long").as("label"), col("proj"))
-      def ranked(df: DataFrame, side: String, ord: Seq[org.apache.spark.sql.Column]) =
-        df.orderBy(ord: _*).limit(10)
-          .withColumn("side", lit(side))
-          .withColumn("rank", row_number().over(
-            Window.partitionBy(col("side")).orderBy(ord: _*)).cast("long"))
-      ranked(proj, "max", Seq(col("proj").desc, col("vec_id").asc))
-        .union(ranked(proj, "min", Seq(col("proj").asc, col("vec_id").asc)))
-        .select(col("side"), col("rank"), col("vec_id"), col("label"), col("proj"))
+      // one global top-10 per side (no keys: one group)
+      def ranked(side: String, ord: Seq[org.apache.spark.sql.Column]) =
+        TopKRows.perGroup(proj, Nil, ord, 10, "rank")
+          .select(lit(side).as("side"), col("rank").cast("long"), col("vec_id"),
+            col("label"), col("proj"))
+      ranked("max", Seq(col("proj").desc, col("vec_id").asc))
+        .union(ranked("min", Seq(col("proj").asc, col("vec_id").asc)))
     })
   )
 
@@ -1180,7 +1175,7 @@ object VectorOps {
   private[graft] val memoHits = new java.util.concurrent.atomic.AtomicLong
   private[graft] val memoMisses = new java.util.concurrent.atomic.AtomicLong
 
-  /** `dir` + a fingerprint of the embeddings table's physical files.
+  /** `dir` + the hash of `table`'s [[graft.Tables.fingerprint]].
     * Listing footprint is one directory walk (few entries at any SF —
     * fingerprinting reads NO data), so the stamp costs microseconds
     * against a training run of corpus-scan jobs.
@@ -1197,12 +1192,7 @@ object VectorOps {
     * StageMemo.clear()/the artifact memos' clear hooks instead of
     * relying on sub-second mtime resolution. */
   private[graft] def stampedKey(dir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.sortBy(_.getName).toSeq).getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$dir/$table.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
+    val sig = Tables.fingerprint(s"$dir/$table.parquet")
     s"$dir@${Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))}"
   }
 

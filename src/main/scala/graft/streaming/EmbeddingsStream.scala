@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -439,17 +438,17 @@ object EmbeddingsStream {
         s"CAST(FLOOR((${VectorFunctions.dotExpr("sv", "cvec")}) * 1000000.0) AS BIGINT)"))
       .select(col("query_id"), col("centroid_id"), col("sub"),
         col("code").cast("int").as("code"), col("t"))
-    index
+    val adc = index
       .select(col("centroid_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("sub", "code")))
       .join(broadcast(qtab), Seq("centroid_id", "sub", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("t")).as("adc_micro"))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("adc_micro").desc, col("vec_id").asc)).cast("long"))
-      .filter(col("rank") <= k)
+    // group bound: the query batch, which probePairs collects on the driver
+    graft.plans.TopKRows.perGroup(adc, Seq("query_id"),
+        Seq(col("adc_micro").desc, col("vec_id").asc), k, "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_micro"), col("rank"))
+        col("adc_micro"), col("rank").cast("long"))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.plans.GraftExpressions
+import graft.plans.{GraftExpressions, TopKRows}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -401,12 +401,8 @@ class ExpressionsSpec extends AnyFunSuite with LocalSpark {
       val expected = df.withColumn("rk", row_number().over(win))
         .filter(col("rk") <= k)
         .select(col("g"), col("id"), col("score"), col("rk"))
-      val got = df.groupBy(col("g"))
-        .agg(GraftExpressions.topKRows(
-          struct((-col("score")).as("ns"), col("id"), col("score")), k).as("tk"))
-        .select(col("g"), posexplode(col("tk")))
-        .select(col("g"), col("col.id").as("id"), col("col.score").as("score"),
-          (col("pos") + lit(1)).as("rk"))
+      val got = TopKRows.perGroup(df, Seq("g"), Seq(col("score").desc, col("id").asc), k, "rk")
+        .select(col("g"), col("id"), col("score"), col("rk"))
       assert(got.schema == expected.schema, s"k=$k schema drifted")
       assert(expected.exceptAll(got).count() == 0 && got.exceptAll(expected).count() == 0,
         s"k=$k: bounded-heap top-k must equal the window top-k")
@@ -419,12 +415,85 @@ class ExpressionsSpec extends AnyFunSuite with LocalSpark {
       .orderBy(col("score").desc, col("word").asc)
     val exp2 = sdf.withColumn("rk", row_number().over(win2)).filter(col("rk") <= 3)
       .select(col("doc"), col("word"), col("rk"))
-    val got2 = sdf.groupBy(col("doc"))
-      .agg(GraftExpressions.topKRows(
-        struct((-col("score")).as("ns"), col("word")), 3).as("tk"))
-      .select(col("doc"), posexplode(col("tk")))
-      .select(col("doc"), col("col.word").as("word"), (col("pos") + lit(1)).as("rk"))
+    val got2 = TopKRows.perGroup(sdf, Seq("doc"), Seq(col("score").desc, col("word").asc), 3, "rk")
+      .select(col("doc"), col("word"), col("rk"))
     assert(exp2.exceptAll(got2).count() == 0 && got2.exceptAll(exp2).count() == 0,
       "string-tiebreak bounded-heap top-k must equal the window top-k")
+  }
+
+  test("TopKRows.perGroup equals the row_number window on NULL, NaN, ±Inf, -0.0 and tie keys") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import spark.implicits._
+    // (group, score, long tiebreak, string tiebreak); both tiebreaks are
+    // unique, so each window order is total and its top-k deterministic
+    final case class Case(rows: Seq[(Option[String], Option[Double], Long, String)],
+                          order: Int, byName: Boolean, tieDesc: Boolean, keyed: Boolean, k: Int)
+    val orders: Seq[(String, Column => Column)] = Seq(
+      "asc" -> (_.asc), "asc_nulls_last" -> (_.asc_nulls_last),
+      "desc" -> (_.desc), "desc_nulls_first" -> (_.desc_nulls_first))
+    val score = Gen.oneOf(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), Some(0.0), Some(-0.0), Some(1.5), Some(-2.0))
+    val cases = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 9 -> Gen.choose(1, 40))
+      groups <- Gen.listOfN(n, Gen.oneOf(None, Some("a"), Some("b"), Some("c")))
+      scores <- Gen.listOfN(n, score)
+      order <- Gen.choose(0, orders.length - 1)
+      byName <- Gen.oneOf(false, true)
+      tieDesc <- Gen.oneOf(false, true)
+      keyed <- Gen.frequency(3 -> true, 1 -> false)
+      k <- Gen.choose(1, 12)
+    } yield Case(groups.zip(scores).zipWithIndex.map { case ((g, sc), i) =>
+      (g, sc, (i * 37 % 101) - 50L, f"w${i * 53 % 101}%03d")
+    }, order, byName, tieDesc, keyed, k)
+
+    val covered = scala.collection.mutable.Set[String]()
+    def note(c: Case): Unit = {
+      val groups = if (c.keyed) c.rows.groupBy(_._1).values.toSeq else Seq(c.rows)
+      val scores = c.rows.flatMap(_._2)
+      covered ++= Seq(
+        "NULL score" -> c.rows.exists(_._2.isEmpty),
+        "NaN" -> scores.exists(_.isNaN),
+        "+Inf" -> scores.contains(Double.PositiveInfinity),
+        "-Inf" -> scores.contains(Double.NegativeInfinity),
+        "-0.0 with 0.0" -> groups.exists { g =>
+          val z = g.flatMap(_._2).filter(_ == 0.0).map(java.lang.Double.doubleToRawLongBits)
+          z.distinct.size == 2
+        },
+        "exact tie" -> groups.exists(g => g.flatMap(_._2).filterNot(_.isNaN)
+          .groupBy(identity).exists(_._2.size > 1)),
+        "NULL group key" -> (c.keyed && c.rows.exists(_._1.isEmpty)),
+        "k larger than a group" -> groups.exists(g => g.nonEmpty && g.size < c.k),
+        "empty frame" -> c.rows.isEmpty,
+        "no keys" -> !c.keyed,
+        (if (c.byName) "string tiebreak" else "long tiebreak") -> true,
+        orders(c.order)._1 -> true
+      ).collect { case (f, true) => f }
+    }
+    def render(d: DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+
+    val prop = Prop.forAllNoShrink(cases) { c =>
+      note(c)
+      // 8 partitions: partial heaps merge across the exchange
+      val df = c.rows.toDF("g", "score", "id", "name").repartition(8)
+      val tie = col(if (c.byName) "name" else "id")
+      val order = Seq(orders(c.order)._2(col("score")), if (c.tieDesc) tie.desc else tie.asc)
+      val keys = if (c.keyed) Seq("g") else Nil
+      val want = df.withColumn("r", row_number().over(
+          Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+        .filter(col("r") <= c.k)
+      val got = TopKRows.perGroup(df, keys, order, c.k, "r")
+      (got.schema == want.schema && render(got) == render(want)) :| s"$c"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+      .withInitialSeed(20261019L).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+    val all = Set("NULL score", "NaN", "+Inf", "-Inf", "-0.0 with 0.0", "exact tie",
+      "NULL group key", "k larger than a group", "empty frame", "no keys",
+      "string tiebreak", "long tiebreak") ++ orders.map(_._1)
+    assert(all.subsetOf(covered), s"the seed no longer covers ${all -- covered}")
   }
 }

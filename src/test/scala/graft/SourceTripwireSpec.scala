@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * `graft.Bench` subsets on two trees and through `perfbench`. TxTable's
   * writers share one optimistic commit loop. Vectors are scored against
   * centroids or queries only by Similarity's kernel; the relational
-  * forms it replaced live in the test tree. */
+  * forms it replaced live in the test tree. A bounded per-group top-k
+  * runs on `TopKRows.perGroup`, not a hand-written rank window. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -56,11 +57,30 @@ class SourceTripwireSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"relational twin back in src/main: ${hits.mkString(", ")}")
   }
 
-  test("Similarity keeps at most 3 rank windows: the top-k frame's and quantizedTopK's two") {
+  test("Similarity has no rank window: vector rankings run on partitionTopK") {
     val src = sources.collectFirst { case ("graft/operators/Similarity.scala", s) => s }
       .getOrElse(fail("graft/operators/Similarity.scala not found"))
     val windows = "row_number\\(\\)".r.findAllMatchIn(src).length
-    assert(windows > 0 && windows <= 3,
+    assert(windows == 0,
       s"$windows row_number() windows in Similarity: a vector ranking bypasses partitionTopK")
+  }
+
+  test("rank windows stay only where TopKRows.perGroup does not fit, and TopKRows is built only there") {
+    // code lines only: comments may name the idiom
+    def code(src: String) = src.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+    val windows = for ((p, src) <- sources; l <- code(src).toSeq if l.contains("row_number().over"))
+      yield p
+    // q46 (corpus-many groups), rankScored and q77's ideal rank (a BM25
+    // batch that grows with the corpus), q86 (k is a column) and
+    // Funnel.sessionized (a full numbering)
+    val allowed = Map("graft/queries/TextOps.scala" -> 1, "graft/queries/VectorOps.scala" -> 2,
+      "graft/queries/TrainingOps.scala" -> 1, "graft/operators/Funnel.scala" -> 1)
+    val counts = windows.groupBy(identity).map { case (p, hits) => p -> hits.size }
+    assert(counts.forall { case (p, n) => n <= allowed.getOrElse(p, 0) } && counts.values.sum <= 5,
+      s"row_number().over sites: $counts; a bounded per-group top-k belongs on TopKRows.perGroup")
+    val built = for ((p, src) <- sources if "TopKRows\\(".r.findFirstIn(src).isDefined) yield p
+    assert(built == Seq("graft/plans/TopKRows.scala"),
+      s"TopKRows constructed outside its companion: ${built.mkString(", ")}")
   }
 }
