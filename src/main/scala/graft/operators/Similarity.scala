@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.plans.TopKRows
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -21,8 +22,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *  - [[topKPartitioned]] (exact), [[ivfTopK]] (IVF-probed) and
   *    [[ivfRanked]] (IVF with a label predicate or stored cells: q90,
   *    q95, the standing-index searches): the heaps, then one rank
-  *    ([[graft.plans.TopKRows.perGroup]]) over |partitions|·|queries|·k
-  *    survivors;
+  *    window over |partitions|·|queries|·k survivors;
   *  - Gold.search/searchIvf run `partitionTopK` directly, and
   *    [[kmeansCentroids]] assigns with `nearest`.
   * The relational forms these replaced — a broadcast cross join ranked
@@ -36,7 +36,7 @@ object Similarity {
 
   /** Map-side top-k: each partition keeps a bounded worst-first heap per
     * query ([[partitionTopK]]), so only |partitions|·|queries|·k
-    * candidate rows shuffle into the final rank. The dot/norm
+    * candidate rows shuffle into the final rank window. The dot/norm
     * accumulation is sequential IEEE double, identical to
     * [[guardedCosine]].
     *
@@ -313,7 +313,7 @@ object Similarity {
   }
 
   /** The frame form of [[partitionTopK]] over a (neighbor_id, cv) corpus:
-    * heaps per partition, then the rank helper over the survivors. With
+    * heaps per partition, then a rank window over the survivors. With
     * `labels` — the queries' labels, and whether a row's `clabel` must
     * equal or differ from its query's — the heaps admit only qualifying
     * rows and the frame also carries (qlabel, clabel); with `cellIds`
@@ -341,10 +341,13 @@ object Similarity {
             keep, cell)
           .map { case (qi, nid, c, (l, _)) => (ids(qi), nid, c, ls.fold(0L)(_._1(qi)), l) }
       }.toDF("query_id", "neighbor_id", "cosine", "qlabel", "clabel")
+    // a window, not TopKRows.perGroup: one group per query, and q24's and
+    // q76's batches grow with the corpus (see TopKRows.perGroup)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     val labelled = if (labels.isDefined) Seq("qlabel", "neighbor_id", "clabel") else Seq("neighbor_id")
-    // group bound: the collected query batch, ≤ partitions·k survivors each
-    TopKRows.perGroup(partial, Seq("query_id"),
-        Seq(col("cosine").desc, col("neighbor_id").asc), k, "rank")
+    partial.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
       .select((col("query_id") +: labelled.map(col)) ++ Seq(col("cosine"), col("rank").cast("long")): _*)
   }
 
@@ -558,8 +561,8 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         nanvl(graft.plans.GraftExpressions.dotNative(col("qdv"), col("cdv"))
           / (col("qn") * col("cn")), lit(Double.NegativeInfinity)).as("approx"))
-    // both rankings run on the rank helper; group bound: the broadcast
-    // query batch (q69: the Q25Cap slice)
+    // both rankings run on the rank helper; groups: one per query of the
+    // broadcast batch (q69's Q25Cap slice: ≤ 40 queries at any sf)
     val shortlist = TopKRows.perGroup(cands, Seq("query_id"),
         Seq(col("approx").desc, col("neighbor_id").asc), oversample, "_ar")
       .select(col("query_id"), col("neighbor_id"))

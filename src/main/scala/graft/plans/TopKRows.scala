@@ -165,13 +165,17 @@ object TopKRows {
     * groups is bounded by the query's definition, not by the corpus.
     * Past 128 groups per task the object hash aggregate falls back to
     * sorting, and the window's `WindowGroupLimit` is then the better
-    * plan. Each caller names its bound in a comment. The rank windows
-    * that stay windows, and why:
+    * plan, even over a few rows per group. Each caller names its bound
+    * in a comment. The rank windows that stay windows, and why:
     *  - q46's per-document top terms (`TextOps`): corpus-many groups
     *    (measured at ×100: heap 6.05 s, window 5.25 s);
-    *  - `VectorOps.rankScored` and q77's ideal ranking: the scored frame
-    *    is corpus-sized and the BM25 query batch (`doc_id % 250`) grows
-    *    with the corpus;
+    *  - `VectorOps.rankScored`, q77's ideal ranking and q76's fused
+    *    rank: one group per BM25 query, and that batch (`doc_id % 250`)
+    *    grows with the corpus (20 queries at sf0.1, ~2,000 at ×100);
+    *  - `Similarity.rankedFrame`: one group per collected query, and
+    *    q24's batch (`vec_id % 50`) grows with the corpus (400 queries
+    *    at ×10, where the heap read q24 1.30 s against the window's
+    *    1.12 s on 4 cores);
     *  - q86's per-language sample (`TrainingOps`): `k` is a column;
     *  - `Funnel.sessionized`: a full numbering, not a top-k. */
   def perGroup(df: DataFrame, keys: Seq[String], order: Seq[Column], k: Int,

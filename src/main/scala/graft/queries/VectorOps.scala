@@ -665,16 +665,17 @@ object VectorOps {
       val dense = Similarity.topKPartitioned(s, qv, cv, RrfArmK)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rank").as("rank_dense"))
-      val fused = lex.join(dense, Seq("query_id", "doc_id"), "full_outer")
+      // a window, not TopKRows.perGroup: one group per BM25 query, and
+      // that batch grows with the corpus (20 at sf0.1, ~2,000 at ×100)
+      lex.join(dense, Seq("query_id", "doc_id"), "full_outer")
         .withColumn("rrf_micro", expr(
           s"coalesce(1000000000 div ($RrfK + rank_lex), CAST(0 AS BIGINT)) + " +
             s"coalesce(1000000000 div ($RrfK + rank_dense), CAST(0 AS BIGINT))"))
-        .select(col("query_id"), col("doc_id"), col("rrf_micro"))
-      // group bound: ≤ 2·RrfArmK fused rows per query, so the heap's
-      // input is |queries|·2·RrfArmK rows at any corpus size
-      TopKRows.perGroup(fused, Seq("query_id"),
-          Seq(col("rrf_micro").desc, col("doc_id").asc), BmTopK, "fused_rank")
-        .withColumn("fused_rank", col("fused_rank").cast("long"))
+        .withColumn("fused_rank", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("rrf_micro").desc, col("doc_id").asc)).cast("long"))
+        .filter(col("fused_rank") <= BmTopK)
+        .select(col("query_id"), col("doc_id"), col("rrf_micro"), col("fused_rank"))
     }),
 
     // Distributed retrieval evaluation — nDCG@5 of the BM25 system
@@ -851,8 +852,8 @@ object VectorOps {
     // curriculum ends). The projection is a fully CODEGEN dot product:
     // the 64 component values are baked in as integer literals
     // (element_at(m, i)·c_i sums — no HOF lambda, no join), so the
-    // corpus pass is one narrow projection; the extremes are two
-    // global bounded heaps (TopKRows.perGroup with no keys), never a
+    // corpus pass is one narrow projection; the extremes are one
+    // bounded heap per end (TopKRows.perGroup keyed by side), never a
     // global sort. Integer-exact:
     // micro-unit embedding × 1e6-scale component, |term| ≤ 2^41,
     // d = 64 terms — far from overflow; ranks deterministic with
@@ -878,8 +879,8 @@ object VectorOps {
     // shuffles, and the per-candidate cost is M integer adds instead
     // of a 64-dim float dot.
     // The per-query rank is the bounded-heap rank helper
-    // (graft.plans.TopKRows.perGroup — the q07 operator); group bound:
-    // the Q25Cap query batch (≤ 40 queries), so the object agg stays
+    // (graft.plans.TopKRows.perGroup — the q07 operator); groups: one
+    // per query of the Q25Cap batch (≤ 40 at any sf), so the object agg stays
     // pure hash, and the map-side heap bounds the exchange to 5 rows per
     // query per partition (the window shuffled and SORTED every
     // ADC-scored candidate row). Measured 0.89 → 0.67 s at sf0.1 (7/7
@@ -913,10 +914,10 @@ object VectorOps {
       import graft.functions.VectorFunctions
       val e = Tables(s, dir, "embeddings")
       // shortlist and final rank both run on the rank helper (see q102);
-      // group bound for both: the Q25Cap query batch. Only the shortlist's
-      // candidate SET is used; the exact re-rank below re-orders it. The
-      // heap shortlist measured 5.37 → 5.09 s at ×100 against the window
-      // (round 20).
+      // groups for both: one per query of the Q25Cap batch (≤ 40 at any
+      // sf). Only the shortlist's candidate SET is used; the exact
+      // re-rank below re-orders it. The heap shortlist measured 5.37 →
+      // 5.09 s at ×100 against the window (round 20).
       val short = TopKRows.perGroup(pqAdcScored(s, dir), Seq("query_id"),
           Seq(col("adc_micro").desc, col("vec_id").asc), PqRefineR, "r")
         .select(col("query_id"), col("vec_id"))
@@ -987,7 +988,7 @@ object VectorOps {
         .filter(col("query_id") =!= col("vec_id"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(sum(col("t")).as("adc_micro"))
-      // group bound: the Q25Cap query batch (≤ 40 queries)
+      // groups: one per query of the Q25Cap batch (≤ 40 at any sf)
       TopKRows.perGroup(adc, Seq("query_id"),
           Seq(col("adc_micro").desc, col("vec_id").asc), 5, "rank")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1002,13 +1003,13 @@ object VectorOps {
           expr("transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))").as("m"))
         .withColumn("proj", expr(dotExpr))
         .select(col("vec_id"), col("label").cast("long").as("label"), col("proj"))
-      // one global top-10 per side (no keys: one group)
-      def ranked(side: String, ord: Seq[org.apache.spark.sql.Column]) =
-        TopKRows.perGroup(proj, Nil, ord, 10, "rank")
-          .select(lit(side).as("side"), col("rank").cast("long"), col("vec_id"),
-            col("label"), col("proj"))
-      ranked("max", Seq(col("proj").desc, col("vec_id").asc))
-        .union(ranked("min", Seq(col("proj").asc, col("vec_id").asc)))
+      // every row once per end, one heap per side (group bound: 2 sides,
+      // one exchange); each side's order key is NULL on the other side
+      val side = col("side")
+      TopKRows.perGroup(proj.withColumn("side", explode(array(lit("max"), lit("min")))),
+          Seq("side"), Seq(when(side === "max", col("proj")).desc,
+            when(side === "min", col("proj")).asc, col("vec_id").asc), 10, "rank")
+        .select(side, col("rank").cast("long"), col("vec_id"), col("label"), col("proj"))
     })
   )
 

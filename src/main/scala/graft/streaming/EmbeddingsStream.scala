@@ -445,7 +445,8 @@ object EmbeddingsStream {
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("t")).as("adc_micro"))
-    // group bound: the query batch, which probePairs collects on the driver
+    // groups: one per query of the caller's batch, which probePairs
+    // collects on the driver
     graft.plans.TopKRows.perGroup(adc, Seq("query_id"),
         Seq(col("adc_micro").desc, col("vec_id").asc), k, "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

@@ -87,8 +87,9 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       assert(n > 0, name)
       jobs
     }
-    // measured on this gate; q101's two keyless heaps each add a shuffle
-    // stage (its TakeOrdered reads ran as 1 job)
+    // measured on this gate; q101's heap (keyed by side) plans one
+    // exchange, and count()'s global aggregate a second over its output
+    // (its former TakeOrdered reads ran as 1 job)
     val budget = Map("q07_topk_per_group" -> 4, "q64_topk_sample" -> 3,
       "q69_quantized_ann" -> 7, "q76_hybrid_rrf" -> 9, "q97_embedding_report" -> 13,
       "q101_pca_extremes" -> 3, "q102_pq_ann" -> 7, "q103_ivfadc" -> 10, "q104_pq_refine" -> 10)
@@ -291,6 +292,14 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
     assert(exchanges.nonEmpty && exchanges.forall(l => !l.contains("dv") && !l.contains("qv#")),
       s"ranking exchange carries vector payload:\n$p")
+  }
+
+  test("q101 ranks both ends in one heap keyed by side: one exchange, no window or sort") {
+    val p = planOf("q101_pca_extremes")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(side"),
+      s"expected one exchange on side:\n$p")
+    assert(!p.contains("Window") && !p.contains("Sort") && !p.contains("TakeOrdered"), p)
   }
 
   test("q70 tile blacklist rides a hash-key anti-join; no cartesian anywhere") {
