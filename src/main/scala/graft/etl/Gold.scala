@@ -88,20 +88,15 @@ object Gold {
     * reference's drop_old=True full refresh (seed_milvus.py:75): at
     * 100 TB you cannot rewrite the collection to update one day's drop.
     * Expressed as anti-join + union so Catalyst keeps both sides
-    * columnar: the anti-join's build side is just the incoming KEY
-    * column, broadcast when small (`broadcastKeys`, the landing-batch
-    * norm — no shuffle of the 100 TB side; flip it off when a backfill
-    * batch rivals the base table and AQE should plan the shuffle).
-    * `incoming` must carry one row per key (dedupe upstream — a landing
-    * batch with two writers for a key has no winner without a version
-    * column). */
-  def merge(existing: DataFrame, incoming: DataFrame, key: String,
-            broadcastKeys: Boolean = true): DataFrame = {
-    val keys = incoming.select(col(key))
-    val survivors = existing.join(
-      if (broadcastKeys) broadcast(keys) else keys, Seq(key), "left_anti")
-    incoming.unionByName(survivors)
-  }
+    * columnar: the anti-join's build side is just the incoming key
+    * columns, broadcast (the landing-batch norm — no shuffle of the
+    * 100 TB side). `keys` may be composite; a left-anti join needs no
+    * distinct copy of the key tuples. `incoming` must carry one row per
+    * key (dedupe upstream — a landing batch with two writers for a key
+    * has no winner without a version column). */
+  def merge(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    incoming.unionByName(
+      existing.join(broadcast(incoming.select(keys.map(col): _*)), keys, "left_anti"))
 
   /** [[merge]] against a table in place, committed through the
     * [[TxTable]] ordered log (round-15, verdict task 7 — previously a
@@ -116,10 +111,9 @@ object Gold {
     * become the log's first version before the merge commits. At scale,
     * [[TxTable.mergeUpsertPartitioned]] scopes the rewrite to only the
     * partitions the incoming keys touch. */
-  def upsert(spark: SparkSession, path: String, incoming: DataFrame,
-             key: String, broadcastKeys: Boolean = true): Unit = {
+  def upsert(spark: SparkSession, path: String, incoming: DataFrame, key: String): Unit = {
     migrateLegacy(spark, path)
-    TxTable.mergeUpsert(spark, path, incoming, key, broadcastKeys)
+    TxTable.mergeUpsert(spark, path, incoming, key)
   }
 
   /** Read a table whether TxTable-backed (snapshot read of latest) or a

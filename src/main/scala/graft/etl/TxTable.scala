@@ -49,10 +49,10 @@ import scala.jdk.CollectionConverters._
   * reading the base, the whole-table-on-scoped-layout refusal, appId
   * validation and the replay check, the txn tag, the fresh dirs' stats
   * and Bloom filters, the race for base+1, and on a loss dropping the
-  * fresh dirs (or, for a scoped merge whose winner is disjoint,
-  * re-basing them onto the winner) before the retry. Only the
-  * fixed-target commits ([[create]], [[migrate]], [[cloneTable]])
-  * commit outside it.
+  * fresh dirs (or, for a merge whose winner left every scope it
+  * touched unchanged, re-basing them onto the winner) before the
+  * retry. Only the fixed-target commits ([[create]], [[migrate]],
+  * [[cloneTable]]) commit outside it.
   *
   * Reads: [[read]] resolves the manifest at `version` (default:
   * latest) and scans exactly its listed dirs — old versions stay
@@ -176,11 +176,12 @@ object TxTable {
   private[graft] val manifestProbes = new java.util.concurrent.atomic.AtomicLong
   /** Manifest bodies read (snapshot resolutions). */
   private[graft] val manifestReads = new java.util.concurrent.atomic.AtomicLong
-  /** Scoped merges committed via partition-level conflict fast-forward
-    * (disjoint concurrent writer adopted without recompute). */
+  /** Merges committed via scope-level conflict fast-forward (a winner
+    * that left every touched scope unchanged, adopted without recompute). */
   private[graft] val fastForwardCommits = new java.util.concurrent.atomic.AtomicLong
-  /** Scoped merges that lost and had to recompute (overlap/whole-table
-    * conflict — the slow rebase path). */
+  /** Merges that lost a race and had to recompute: the winner changed a
+    * touched scope — for a whole-table merge, any entry at all (the slow
+    * rebase path). */
   private[graft] val rebaseRecomputes = new java.util.concurrent.atomic.AtomicLong
   /** Snapshot/stats resolutions served from the immutable-manifest
     * cache (no file read, no parse). */
@@ -1044,13 +1045,15 @@ object TxTable {
           "permanently break scoped merges; use mergeUpsertPartitioned (from a " +
           "streaming sink, through foreachBatch), or refresh to deliberately re-layout"))
       val replay = txn.exists { case (app, id) => base.exists(_.txns.get(app).exists(_ >= id)) }
+      // the txn tag rides the first proposal and every fast-forward of it
+      def tag(s: Snapshot) = txn.fold(s) { case (app, id) =>
+        val txns = s.txns + (app -> id)
+        s.copy(txnApps = txns.keys.toSeq, txnIds = txns.keys.toSeq.map(txns))
+      }
       (if (replay) NoOp(baseV) else attempt(base)) match {
         case NoOp(v) => committed = v
         case p: Proposal =>
-          val tagged = txn.fold(p.snap) { case (app, id) =>
-            val txns = p.snap.txns + (app -> id)
-            p.snap.copy(txnApps = txns.keys.toSeq, txnIds = txns.keys.toSeq.map(txns))
-          }
+          val tagged = tag(p.snap)
           val (st, strSt) = dirStatsOf(spark, root, p.fresh,
             tagged.statsCols.filterNot(p.statted.contains))
           buildBlooms(spark, root, p.fresh, tagged.bloomCols)
@@ -1059,7 +1062,7 @@ object TxTable {
             if (tryCommitAnchored(root, snap.get, p.stats ++ st, p.strStats ++ strSt)) {
               committed = snap.get.version
               if (committed > baseV + 1) fastForwardCommits.incrementAndGet()
-            } else snap = p.fastForward.flatMap(_(snapshot(root)))
+            } else snap = p.fastForward.flatMap(_(snapshot(root))).map(tag)
           }
           if (committed < 0) {
             if (p.fastForward.nonEmpty) rebaseRecomputes.incrementAndGet()
@@ -1106,14 +1109,14 @@ object TxTable {
       base.toSeq.flatMap(_.entries))
 
   /** Transactional keyed MERGE (last-writer-wins upsert, the
-    * [[Gold.merge]] semantics): a lost race REBASES the merge onto the
+    * [[Gold.merge]] semantics) of a whole-table table, whose one merge
+    * scope is the whole table: a lost race REBASES the merge onto the
     * winner's snapshot, so no concurrent writer's rows are ever lost.
     * Returns the committed version. */
   def mergeUpsert(spark: SparkSession, root: String, incoming: DataFrame,
-                  key: String, broadcastKeys: Boolean = true,
-                  evolve: Boolean = false): Long =
+                  key: String, evolve: Boolean = false): Long =
     commitLoop(spark, root, wholeTable = "merge")(
-      merging(spark, root, incoming, Seq(key), broadcastKeys, evolve))
+      merging(spark, root, incoming, Seq(key), evolve, Seq("" -> incoming)))
 
   /** Delta's RESTORE (`RESTORE TABLE t TO VERSION AS OF v`): make the
     * CURRENT table state equal `version`'s via ONE metadata commit
@@ -1150,38 +1153,19 @@ object TxTable {
     * keyed upserts lands exactly-once in the table across `addBatch`
     * replays, one `writeStream` instead of foreachBatch glue. Keys may
     * be composite — `keys` rows merge last-writer-wins per distinct
-    * key tuple (single-key delegates to [[Gold.merge]]'s broadcast
-    * path). */
+    * key tuple. */
   def mergeUpsertIdempotent(spark: SparkSession, root: String,
                             incoming: DataFrame, keys: Seq[String],
                             appId: String, batchId: Long,
                             evolve: Boolean = false): Long = {
     require(keys.nonEmpty, "mergeUpsertIdempotent needs at least one key column")
     commitLoop(spark, root, wholeTable = "merge", txn = Some(appId -> batchId))(
-      merging(spark, root, incoming, keys, broadcastKeys = true, evolve))
-  }
-
-  private def merging(spark: SparkSession, root: String, incoming: DataFrame,
-                      keys: Seq[String], broadcastKeys: Boolean, evolve: Boolean)(
-      base: Option[Snapshot]): Attempt = {
-    // gate the INCOMING frame before merging: unionByName would
-    // otherwise surface a mismatched schema as an AnalysisException
-    // instead of the contract's rejection
-    val ddl = resolveSchema(root, base, incoming, evolve)
-    val merged = base.fold(incoming) { s =>
-      val cur = read(spark, root, s.version)
-      if (keys.length == 1) Gold.merge(cur, incoming, keys.head, broadcastKeys)
-      else // composite key: anti-join the table against the batch's
-        // (small, broadcastable) key tuples, then union
-        cur.join(org.apache.spark.sql.functions.broadcast(
-          incoming.select(keys.map(col): _*).distinct()), keys, "left_anti")
-          .unionByName(incoming)
-    }
-    written(root, base, "merge", merged, ddl)
+      merging(spark, root, incoming, keys, evolve, Seq("" -> incoming)))
   }
 
   /** Partition-scoped MERGE — the commit shape the class doc promises
-    * for 100 TB: rewrite ONLY the partitions (`partCol` values) the
+    * for 100 TB: the same merge attempt as [[mergeUpsert]] with one
+    * scope per `partCol` value, so it rewrites ONLY the partitions the
     * incoming batch touches; every untouched partition's data dirs are
     * carried into the new manifest BY REFERENCE, zero bytes moved.
     * Partition values are compared in string form (the manifest is
@@ -1196,21 +1180,18 @@ object TxTable {
     * whole-table entry can hold any partition's rows, so a scoped
     * rewrite over it would drop the other partitions' rows it contains.
     *
-    * Concurrency (round-16, verdict task 5): losing the version race no
-    * longer forces a full recompute when the winner is DISJOINT. The
-    * loser diffs the new latest manifest against its base: if every
-    * partition IT touched still carries exactly its base's entries
-    * (the winner rewrote other partitions only), the loser's fresh dirs
-    * are still the correct merge results — it adopts the winner's
-    * entries for everything else and re-commits at latest+1 (a manifest
-    * merge, zero data recomputed; [[fastForwardCommits]] counts these).
-    * Only an overlapping writer — or a whole-table action like compact,
-    * which rewrites every partition's dirs — forces the rebase
-    * recompute ([[rebaseRecomputes]]). Two writers on disjoint
-    * partitions therefore both commit with one data write each. */
+    * Concurrency: a writer that loses the version race to a DISJOINT
+    * winner (one that left every partition this writer touched with
+    * exactly its base's entries) keeps its fresh dirs — they are still
+    * the correct merge results — adopts the winner's entries for
+    * everything else and re-commits at latest+1 (a manifest merge, zero
+    * data recomputed; [[fastForwardCommits]] counts these). Only an
+    * overlapping writer — or a whole-table action like compact, which
+    * rewrites every partition's dirs — forces the rebase recompute
+    * ([[rebaseRecomputes]]). Two writers on disjoint partitions
+    * therefore both commit with one data write each. */
   def mergeUpsertPartitioned(spark: SparkSession, root: String, incoming: DataFrame,
                              key: String, partCol: String,
-                             broadcastKeys: Boolean = true,
                              evolve: Boolean = false,
                              layout: String = ""): Long = {
     // touched partitions: one small distinct over the batch, bounded by
@@ -1227,6 +1208,7 @@ object TxTable {
     touched.foreach(p => require(p.nonEmpty && !p.contains("]"),
       s"partition value '$p' is not representable in the manifest encoding " +
         "(must be non-empty and must not contain ']')"))
+    val scopes = touched.map(p => p -> incoming.filter(col(partCol).cast("string") === p))
     commitLoop(spark, root) { base =>
       base.foreach { s =>
         require(s.entries.forall(_._2.nonEmpty),
@@ -1243,37 +1225,57 @@ object TxTable {
               s"[${s.layout}], this writer declares [$layout] — the " +
               "scoping constant is part of the persistent layout")
       }
-      val ddl = resolveSchema(root, base, incoming, evolve)
-      val baseEntries = base.toSeq.flatMap(_.entries)
-      def touchedOf(es: Seq[(String, String)]) = touched.map(p => es.filter(_._2 == p).toSet)
-      val fresh = touched.map { p =>
-        val baseDirsP = baseEntries.filter(_._2 == p).map(_._1)
-        val incP = incoming.filter(col(partCol).cast("string") === p)
-        val merged =
-          if (baseDirsP.isEmpty) incP
-          else Gold.merge(
-            spark.read.parquet(baseDirsP.map(d => s"$root/$d"): _*),
-            incP, key, broadcastKeys)
-        (writeData(root, base.fold(0L)(_.version + 1), merged), p)
-      }
-      def kept(es: Seq[(String, String)]) = es.filterNot(e => touched.contains(e._2)) ++ fresh
-      val proposal = next(base, "merge", kept(baseEntries)).copy(schemaDdl = ddl,
-        layout = base.map(_.layout).filter(_.nonEmpty).getOrElse(layout))
-      // a winner that rewrote none of the touched partitions (and kept
-      // the schema and the declared stats/bloom columns the fresh dirs
-      // were statted for) leaves the fresh dirs correct: adopt its
-      // entries for everything else (dir names keep the base's v<N>
-      // prefix — the name is cosmetic, the manifest is the binding
-      // reference)
-      Proposal(proposal, fresh.map(_._1), fastForward = Some(cur =>
-        if (cur.entries.forall(_._2.nonEmpty) &&
-            (cur.schemaDdl.isEmpty || cur.schemaDdl == ddl) &&
-            cur.statsCols == proposal.statsCols && cur.bloomCols == proposal.bloomCols &&
-            touchedOf(cur.entries) == touchedOf(baseEntries))
-          Some(next(Some(proposal), "merge", kept(cur.entries)).copy(
-            version = cur.version + 1, txnApps = cur.txnApps, txnIds = cur.txnIds))
-        else None))
+      merging(spark, root, incoming, Seq(key), evolve, scopes, layout)(base)
     }
+  }
+
+  /** The one keyed MERGE attempt behind [[mergeUpsert]],
+    * [[mergeUpsertIdempotent]] and [[mergeUpsertPartitioned]]. `scopes`
+    * pairs each manifest part the batch touches with the batch's rows
+    * for it: the single scope "" for a whole-table table, one partition
+    * value each for a partitioned one. Each scope's base dirs are read
+    * under the schema this commit records (a dir written before an
+    * evolve reads the added columns as NULL, as in [[rewriteDirs]]),
+    * merged with its rows through [[Gold.merge]] and written as one
+    * fresh dir; every other entry carries by reference. */
+  private def merging(spark: SparkSession, root: String, incoming: DataFrame,
+                      keys: Seq[String], evolve: Boolean,
+                      scopes: Seq[(String, DataFrame)], layout: String = "")(
+      base: Option[Snapshot]): Attempt = {
+    // gate the INCOMING frame before merging: unionByName would
+    // otherwise surface a mismatched schema as an AnalysisException
+    // instead of the contract's rejection
+    val ddl = resolveSchema(root, base, incoming, evolve)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    val touched = scopes.map(_._1)
+    val whole = touched == Seq("")
+    val baseEntries = base.toSeq.flatMap(_.entries)
+    def touchedOf(es: Seq[(String, String)]) = touched.map(p => es.filter(_._2 == p).toSet)
+    val fresh = scopes.map { case (p, rows) =>
+      val dirs = baseEntries.filter(_._2 == p).map(e => s"$root/${e._1}")
+      val merged =
+        if (dirs.isEmpty) rows
+        else Gold.merge(spark.read.schema(schema).parquet(dirs: _*), rows, keys)
+      (writeData(root, base.fold(0L)(_.version + 1), merged), p)
+    }
+    def kept(es: Seq[(String, String)]) = es.filterNot(e => touched.contains(e._2)) ++ fresh
+    val proposal = next(base, "merge", kept(baseEntries)).copy(schemaDdl = ddl,
+      layout = base.map(_.layout).filter(_.nonEmpty).getOrElse(layout))
+    // a winner of the same kind (whole-table or scoped) that left every
+    // touched scope's entries, the schema and the declared stats/bloom
+    // columns the fresh dirs were statted for unchanged leaves the fresh
+    // dirs correct: adopt its entries for everything else (dir names
+    // keep the base's v<N> prefix — the name is cosmetic, the manifest
+    // is the binding reference). For the whole-table scope that means a
+    // winner that changed no entry at all.
+    Proposal(proposal, fresh.map(_._1), fastForward = Some(cur =>
+      if (cur.entries.forall(_._2.isEmpty == whole) &&
+          (cur.schemaDdl.isEmpty || cur.schemaDdl == ddl) &&
+          cur.statsCols == proposal.statsCols && cur.bloomCols == proposal.bloomCols &&
+          touchedOf(cur.entries) == touchedOf(baseEntries))
+        Some(next(Some(proposal), "merge", kept(cur.entries)).copy(
+          version = cur.version + 1, txnApps = cur.txnApps, txnIds = cur.txnIds))
+      else None))
   }
 
   /** One-shot legacy adoption: commit `df` as version 0 iff no version

@@ -28,22 +28,27 @@ import org.apache.spark.sql.functions._
   */
 object Funnel {
 
-  /** Gap-rule sessionized events (q28's rule: a >gapSec silence starts a
-    * new session), with each event's position `r` in the session's
-    * (ts, event_id) order — the spine every funnel step matches against.
-    * Returns (user_id, session_id, event_type, us, r). */
-  def sessionized(events: DataFrame, gapSec: Long = 1800L): DataFrame = {
+  /** `events` with a gap-rule `session_id` per user (q28's rule: in
+    * (ts, event_id) order, a >gapSec silence starts a new session;
+    * session ids count from 1). */
+  def withSessionId(events: DataFrame, gapSec: Long = 1800L): DataFrame = {
     val wUser = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-    val sess = events
+    events
       .withColumn("prev_ts", lag(col("ts"), 1).over(wUser))
       .withColumn("new_session",
         when(col("prev_ts").isNull ||
           (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > gapSec, 1L).otherwise(0L))
       .withColumn("session_id", sum(col("new_session")).over(
         wUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** [[withSessionId]]'s sessions, with each event's position `r` in the
+    * session's (ts, event_id) order — the spine every funnel step
+    * matches against. Returns (user_id, session_id, event_type, us, r). */
+  def sessionized(events: DataFrame, gapSec: Long = 1800L): DataFrame = {
     val wSess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
-    sess
+    withSessionId(events, gapSec)
       .withColumn("r", row_number().over(wSess).cast("long"))
       .select(col("user_id"), col("session_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("r"))
@@ -63,23 +68,15 @@ object Funnel {
     * connected-components loop, Components.scala), so a k-step funnel
     * costs exactly k filter+join+agg passes over a materialized spine. */
   def stepReaches(sess: DataFrame, steps: Seq[String],
-                  persistIntermediates: Boolean = false,
-                  viaPersist: Boolean = false): Seq[DataFrame] = {
+                  persistIntermediates: Boolean = false): Seq[DataFrame] = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    // Two materialization backends (round-20 verdict item 8, A/B'd in
-    // OPTIMIZATION_r20.md §8): `localCheckpoint`
-    // truncates lineage into executor-local blocks — the fastest form,
-    // but on a CLUSTER an executor loss then fails the query instead of
-    // recomputing, and the eager checkpoint materializes the full
-    // sessionized spine. The tracked-persist form keeps lineage (an
-    // executor loss recomputes the lost partitions) and releases with
-    // the harness's TempCaches sweep; it is the cluster-deployment
-    // default posture. local[n] keeps localCheckpoint (no executor to
-    // lose; measured faster — see OPTIMIZATION_r20.md).
+    // `localCheckpoint` truncates lineage into executor-local blocks; on
+    // a cluster an executor loss then fails the query instead of
+    // recomputing. Its A/B against a tracked persist, which keeps
+    // lineage, is in OPTIMIZATION_r20.md §8 (localCheckpoint measured
+    // faster on local[n]).
     def cp(df: DataFrame): DataFrame =
-      if (!persistIntermediates) df
-      else if (viaPersist) graft.TempCaches.tracked(df)
-      else df.localCheckpoint(eager = true)
+      if (persistIntermediates) df.localCheckpoint(eager = true) else df
     val spine = cp(sess)
     val first = cp(spine.filter(col("event_type") === steps.head)
       .groupBy(col("user_id"), col("session_id")).agg(min(col("r")).as("t")))
@@ -96,10 +93,9 @@ object Funnel {
     * n_sessions that completed it in order). Deep funnels (k > 4)
     * auto-persist their intermediate reaches (see [[stepReaches]]). */
   def kStepFunnel(events: DataFrame, steps: Seq[String], gapSec: Long = 1800L,
-                  persistIntermediates: Option[Boolean] = None,
-                  viaPersist: Boolean = false): DataFrame =
+                  persistIntermediates: Option[Boolean] = None): DataFrame =
     stepReaches(sessionized(events, gapSec), steps,
-        persistIntermediates.getOrElse(steps.length > 4), viaPersist)
+        persistIntermediates.getOrElse(steps.length > 4))
       .zipWithIndex.map { case (r, i) =>
       r.agg(count(lit(1)).as("n_sessions"))
         .select(lit((i + 1).toLong).as("step"), lit(steps(i)).as("event_type"),

@@ -290,7 +290,7 @@ object Relational {
       val updates = base.filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey"), lit("U").as("o_orderstatus"),
           (col("o_totalprice") + lit(100000.0)).as("o_totalprice"))
-      graft.etl.Gold.merge(base, updates, "o_orderkey")
+      graft.etl.Gold.merge(base, updates, Seq("o_orderkey"))
     }),
 
     // Snapshot diff (q82): q79's audit-side complement — dataset
@@ -380,14 +380,7 @@ object Relational {
     // sum — the scalable replacement for the reference's driver-side
     // sequential loops (chunks_data.py:69).
     "q28_sessionize" -> ((s, dir) => {
-      val wUser = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-      Tables(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(wUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > 1800L, 1L).otherwise(0L))
-        .withColumn("session_id", sum(col("new_session")).over(
-          wUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      graft.operators.Funnel.withSessionId(Tables(s, dir, "events"))
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
           (unix_timestamp(max(col("ts"))) - unix_timestamp(min(col("ts")))).as("duration_sec"))
@@ -400,14 +393,7 @@ object Relational {
     // per-(user, session) conditional min/max aggregates (map-side
     // combinable); the funnel itself is one tiny global row.
     "q65_session_funnel" -> ((s, dir) => {
-      val wUser = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-      Tables(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(wUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > 1800L, 1L).otherwise(0L))
-        .withColumn("session_id", sum(col("new_session")).over(
-          wUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      graft.operators.Funnel.withSessionId(Tables(s, dir, "events"))
         .groupBy(col("user_id"), col("session_id"))
         .agg(
           // epoch MICROS, the engine-portable event-time granularity

@@ -22,12 +22,6 @@ object TextOps {
 
   /** non-empty whitespace tokens */
   private[graft] val toksExpr = Idioms.toksExpr
-  /** distinct word 3-gram shingles (guarded: <3 tokens → empty) */
-  private val shinglesExpr =
-    s"""CASE WHEN size($toksExpr) >= 3
-       |THEN array_distinct(transform(sequence(1, size($toksExpr) - 2),
-       |     i -> array_join(slice($toksExpr, i, 3), ' ')))
-       |ELSE array() END""".stripMargin
   /** 60-bit shingle hash reduced mod P */
   private[graft] val hmExpr = Idioms.hash60Expr("s") + " % 2147483647"
   /** the full 60-bit hash, un-reduced (q50's simhash votes: every one of

@@ -62,12 +62,6 @@ object TrainingOps {
     * dropped). */
   private val TopGramCut = 0.2
 
-  /** q80 arm split: docs with ≤ this many 2-grams take the zero-shuffle
-    * in-row top-1 (worst case cutoff² comparisons per doc ≈ 4M — a few
-    * ms); bigger docs take the explode + agg-min route. 2048 grams ≈ a
-    * 2k-token document, far above this corpus and most web pages. */
-  private val TopGramArrayCutoff = 2048L
-
   /** q63 posting-list cap: bounds both output width AND the aggregation
     * buffer (MinKLongsAggregator holds at most this many longs). */
   private[graft] val PostingsK = 20
@@ -431,7 +425,7 @@ object TrainingOps {
     // (TrainingOpsSpec pins the equality); emitted CSV-joined for the
     // cross-engine compare.
     "q63_inverted_index" -> ((s, dir) => {
-      val minK = udaf(graft.functions.MinKLongsAggregator(PostingsK))
+      val minK = udaf(graft.functions.MinKLongsAggregator(PostingsK, distinct = false))
       Tables(s, dir, "documents")
         .select(col("doc_id"), explode(expr(s"array_distinct($toksExpr)")).as("w"))
         .groupBy(col("w"))
@@ -484,24 +478,10 @@ object TrainingOps {
     // bucket-offset prefix sum over the tiny one-row-per-bucket frame,
     // broadcast back. Identical result (integer sums associate), and
     // the only single-task step handles |buckets| rows, not |docs|.
-    "q55_token_shards" -> ((s, dir) => {
-      val t = Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          expr(s"CAST(size($toksExpr) AS BIGINT)").as("n_tokens"),
-          (col("doc_id") / ShardBucket).cast("long").as("bucket"))
-      val wLocal = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = t.withColumn("local_before", coalesce(sum(col("n_tokens")).over(wLocal), lit(0L)))
-      val wBucket = Window.orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = t.groupBy(col("bucket")).agg(sum(col("n_tokens")).as("bt"))
-        .withColumn("offset", coalesce(sum(col("bt")).over(wBucket), lit(0L)))
-        .select(col("bucket"), col("offset"))
-      local.join(broadcast(offsets), Seq("bucket"))
-        .withColumn("cum_before", col("offset") + col("local_before"))
+    "q55_token_shards" -> ((s, dir) =>
+      tokensBefore(Tables(s, dir, "documents"))
         .select(col("doc_id"), col("n_tokens"),
-          expr(s"CAST(floor(cum_before / $ShardBudget.0) AS BIGINT)").as("shard_id"))
-    }),
+          expr(s"CAST(floor(cum_before / $ShardBudget.0) AS BIGINT)").as("shard_id"))),
 
     // Target-affinity data selection — the DSIR shape (Xie et al.,
     // "Data Selection for Language Models via Importance Resampling",
@@ -744,7 +724,7 @@ object TrainingOps {
     // KMV distinct-vocabulary sketch per data-card cell — approximate
     // distinct counting with a MERGEABLE bounded synopsis, the way a
     // 100 TB pipeline tracks per-(lang, source) vocabulary size without
-    // ever shuffling the token stream: KmvSketchAggregator's buffer is
+    // ever shuffling the token stream: MinKLongsAggregator's distinct buffer is
     // the k smallest distinct 60-bit token hashes (k longs, however hot
     // the group), merge folds sketch into sketch, so map-side partial
     // aggregation ships ONE ≤k array per (group, partition). The
@@ -758,7 +738,7 @@ object TrainingOps {
     // artifact. TrainingOpsSpec pins mergeability (shard-sketch union ≡
     // global sketch) and the duplicate-drop rule.
     "q84_kmv_distinct" -> ((s, dir) => {
-      val kmv = udaf(graft.functions.KmvSketchAggregator(KmvK))
+      val kmv = udaf(graft.functions.MinKLongsAggregator(KmvK, distinct = true))
       Tables(s, dir, "documents")
         .select(col("lang"), col("source"),
           explode(expr(s"array_distinct($toksExpr)")).as("tok"))
@@ -936,7 +916,7 @@ object TrainingOps {
     // every estimate EXACT — the spec proves that on a sub-k corpus,
     // and the oracle re-derives every array bit-for-bit.
     "q89_sketch_jaccard" -> ((s, dir) => {
-      val kmv = udaf(graft.functions.KmvSketchAggregator(KmvK))
+      val kmv = udaf(graft.functions.MinKLongsAggregator(KmvK, distinct = true))
       val sk = Tables(s, dir, "documents")
         .select(col("source"), explode(expr(s"array_distinct($toksExpr)")).as("tok"))
         .select(col("source"), hash60("tok").as("h"))
@@ -1159,12 +1139,27 @@ object TrainingOps {
     * every previously packed batch, so windows continue seamlessly
     * across micro-batches. Returns (doc_id, seq_id, tok_offset,
     * seg_len). */
-  private[graft] def sequencePack(docs: DataFrame, baseOffset: Long): DataFrame = {
-    val t = docs
-      .select(col("doc_id"),
-        expr(s"CAST(size($toksExpr) AS BIGINT)").as("n_tokens"),
-        (col("doc_id") / ShardBucket).cast("long").as("bucket"))
-      .filter(col("n_tokens") > 0)
+  private[graft] def sequencePack(docs: DataFrame, baseOffset: Long): DataFrame =
+    tokensBefore(docs.filter(expr(s"size($toksExpr) > 0")))
+      .withColumn("cum", col("cum_before") + lit(baseOffset))
+      .withColumn("seq_id", explode(expr(
+        s"sequence(cum div $PackWindow, (cum + n_tokens - 1) div $PackWindow)")))
+      .select(col("doc_id"), col("seq_id"),
+        expr(s"CAST(greatest(seq_id * $PackWindow - cum, 0) AS BIGINT)")
+          .as("tok_offset"),
+        expr(s"CAST(least(cum + n_tokens, (seq_id + 1) * $PackWindow)" +
+          s" - greatest(seq_id * $PackWindow, cum) AS BIGINT)").as("seg_len"))
+
+  /** (doc_id, n_tokens, cum_before) per document of `docs`: `cum_before`
+    * is the exclusive running token count in doc_id order, the two-level
+    * form q55 and q81 share — a windowed sum within each
+    * [[ShardBucket]]-wide doc_id bucket (parallel over buckets) plus a
+    * bucket-offset prefix sum over the one-row-per-bucket frame,
+    * broadcast back. */
+  private def tokensBefore(docs: DataFrame): DataFrame = {
+    val t = docs.select(col("doc_id"),
+      expr(s"CAST(size($toksExpr) AS BIGINT)").as("n_tokens"),
+      (col("doc_id") / ShardBucket).cast("long").as("bucket"))
     val wLocal = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = t.withColumn("local_before",
@@ -1175,14 +1170,8 @@ object TrainingOps {
       .withColumn("offset", coalesce(sum(col("bt")).over(wBucket), lit(0L)))
       .select(col("bucket"), col("offset"))
     local.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("cum", col("offset") + col("local_before") + lit(baseOffset))
-      .withColumn("seq_id", explode(expr(
-        s"sequence(cum div $PackWindow, (cum + n_tokens - 1) div $PackWindow)")))
-      .select(col("doc_id"), col("seq_id"),
-        expr(s"CAST(greatest(seq_id * $PackWindow - cum, 0) AS BIGINT)")
-          .as("tok_offset"),
-        expr(s"CAST(least(cum + n_tokens, (seq_id + 1) * $PackWindow)" +
-          s" - greatest(seq_id * $PackWindow, cum) AS BIGINT)").as("seg_len"))
+      .select(col("doc_id"), col("n_tokens"),
+        (col("offset") + col("local_before")).as("cum_before"))
   }
 
   /** The q78 body with the stride as a real parameter (q78 fixes it at

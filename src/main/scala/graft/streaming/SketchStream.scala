@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (StreamingSpec pins both equalities exactly — not approximately):
   *
   *  - KMV: the k smallest distinct hashes of (state ∪ batch) is
-  *    kmv(state-sketch ∪ batch-hashes) — one [[graft.functions
-  *    .KmvSketchAggregator]] pass over the exploded standing sketches
+  *    kmv(state-sketch ∪ batch-hashes) — one distinct [[graft.functions
+  *    .MinKLongsAggregator]] pass over the exploded standing sketches
   *    (≤ groups·k rows) unioned with the batch's own hash stream.
   *  - CMS: the sketch is LINEAR (Cormode & Muthukrishnan §4.1), so
   *    cells add: state cells + batch cells, grouped sum, never more
@@ -206,7 +206,7 @@ object SketchStream {
       if (!AtomicState.alreadyApplied(ss, path, batchId)) {
         AtomicState.swapIn(ss, path, merged, batchId)
       }
-    val kmv = udaf(graft.functions.KmvSketchAggregator(TrainingOps.KmvK))
+    val kmv = udaf(graft.functions.MinKLongsAggregator(TrainingOps.KmvK, distinct = true))
     // KMV: standing sketches re-enter as plain hash rows — kmv() of
     // the union IS the merged sketch (mergeability), so the standing
     // side costs ≤ groups·k rows, not a corpus re-scan

@@ -569,7 +569,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     // (group, partition) ships one ≤k array, never the hash stream.
     import org.apache.spark.sql.functions._
     TempCaches.releaseAll(); spark.catalog.clearCache() // cold cache, any suite order
-    val kmv = udaf(graft.functions.KmvSketchAggregator(64))
+    val kmv = udaf(graft.functions.MinKLongsAggregator(64, distinct = true))
     val df = Tables(spark, dir, "documents")
       .select(col("lang"), col("source"),
         explode(expr("array_distinct(filter(split(text, ' '), w -> w <> ''))")).as("tok"))
@@ -579,8 +579,8 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val p = df.queryExecution.executedPlan.toString
     assert(p.linesIterator.count(_.contains("Exchange")) == 1,
       s"sketch-only aggregation must shuffle exactly once:\n$p")
-    assert(p.contains("partial_kmvsketchaggregator"),
-      s"no map-side sketch combine:\n$p")
+    assert(p.contains("partial_minklongsaggregator") && p.contains("MinKLongsAggregator(64,true)"),
+      s"no map-side distinct sketch combine:\n$p")
   }
 
   test("q85 probes the CMS as a broadcast of the fixed 4096-cell table; probe set is TakeOrdered") {

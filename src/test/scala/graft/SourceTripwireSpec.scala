@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * writers share one optimistic commit loop. Vectors are scored against
   * centroids or queries only by Similarity's kernel; the relational
   * forms it replaced live in the test tree. A bounded per-group top-k
-  * runs on `TopKRows.perGroup`, not a hand-written rank window. */
+  * runs on `TopKRows.perGroup`, not a hand-written rank window. TxTable
+  * builds its keyed MERGE once, through `Gold.merge`. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -84,5 +85,16 @@ class SourceTripwireSpec extends AnyFunSuite {
     val built = for ((p, src) <- sources if "TopKRows\\(".r.findFirstIn(src).isDefined) yield p
     assert(built == Seq("graft/plans/TopKRows.scala"),
       s"TopKRows constructed outside its companion: ${built.mkString(", ")}")
+  }
+
+  test("TxTable builds its keyed MERGE once, through Gold.merge; retired knobs stay gone") {
+    val src = sources.collectFirst { case ("graft/etl/TxTable.scala", s) => s }
+      .getOrElse(fail("graft/etl/TxTable.scala not found"))
+    assert(!src.contains("left_anti"), "TxTable hand-rolls an anti-join beside Gold.merge")
+    val calls = "Gold\\.merge\\(".r.findAllMatchIn(src).length
+    assert(calls == 1, s"$calls Gold.merge call sites in TxTable: one merge attempt serves every upsert")
+    val banned = Seq("broadcastKeys", "viaPersist", "KmvSketchAggregator")
+    val hits = for ((p, src) <- sources; b <- banned if src.contains(b)) yield s"$p: $b"
+    assert(hits.isEmpty, s"retired code is back: ${hits.mkString(", ")}")
   }
 }

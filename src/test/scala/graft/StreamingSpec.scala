@@ -768,7 +768,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     SketchStream.ingest(spark, src, skDir, ckpt)
     // mergeability makes the standing state EXACTLY the batch sketch —
     // same arrays, not just close estimates
-    val kmv = udaf(graft.functions.KmvSketchAggregator(64))
+    val kmv = udaf(graft.functions.MinKLongsAggregator(64, distinct = true))
     val batchKmv = docs
       .select(col("lang"), col("source"),
         explode(expr("array_distinct(filter(split(text, ' '), w -> w <> ''))")).as("tok"))

@@ -232,7 +232,7 @@ class TrainingOpsSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("MinKLongsAggregator: reduce/merge keep the k smallest sorted, duplicates included") {
-    val agg = graft.functions.MinKLongsAggregator(5)
+    val agg = graft.functions.MinKLongsAggregator(5, distinct = false)
     // fold a hot group one element at a time — buffer must never exceed k
     val vals = Seq(9L, 3L, 7L, 3L, 100L, 1L, 50L, 2L, 8L, 4L)
     val buf = vals.foldLeft(agg.zero) { (b, v) =>
@@ -494,8 +494,8 @@ class TrainingOpsSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("KmvSketchAggregator: distinct min-k, bounded buffer, shard-merge ≡ global sketch") {
-    val agg = graft.functions.KmvSketchAggregator(5)
-    // duplicates are DROPPED (the one rule that differs from MinKLongs)
+    val agg = graft.functions.MinKLongsAggregator(5, distinct = true)
+    // duplicates are DROPPED (distinct = true, the one rule q63 does not set)
     val vals = Seq(9L, 3L, 7L, 3L, 100L, 1L, 50L, 2L, 8L, 4L, 1L, 2L)
     val buf = vals.foldLeft(agg.zero) { (b, v) =>
       val nb = agg.reduce(b, v); assert(nb.length <= 5); nb

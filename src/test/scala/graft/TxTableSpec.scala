@@ -532,6 +532,49 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(e2.getMessage.contains("schema mismatch"))
   }
 
+  /** (every column but `w`, w) per row of `root`'s latest snapshot, with
+    * `w` as an Option so a NULL read back shows as None. */
+  private def rowsWithW(root: String): Set[(Seq[Any], Option[Double])] =
+    TxTable.read(spark, root).collect().map { r =>
+      val w = r.fieldIndex("w")
+      (r.schema.fieldNames.toSeq.filterNot(_ == "w").map(f => r.get(r.fieldIndex(f))),
+        if (r.isNullAt(w)) None else Some(r.getDouble(w)))
+    }.toSet
+
+  test("mergeUpsert with evolve adds a column: old rows read back with NULL in it") {
+    import spark.implicits._
+    val root = tmp()
+    TxTable.refresh(spark, root, df(1L -> "a", 2L -> "b"))
+    val v = TxTable.mergeUpsert(spark, root,
+      Seq((2L, "B", 7.5)).toDF("k", "v", "w"), "k", evolve = true)
+    assert(TxTable.snapshot(root, v).schemaDdl.contains("w"))
+    assert(rowsWithW(root) == Set((Seq(1L, "a"), None), (Seq(2L, "B"), Some(7.5))))
+  }
+
+  test("mergeUpsertIdempotent with evolve adds a column on a composite key; a replay no-ops") {
+    import spark.implicits._
+    val root = tmp()
+    TxTable.refresh(spark, root, Seq((1L, "x", "a"), (1L, "y", "b")).toDF("k", "s", "v"))
+    val batch = Seq((1L, "y", "B", 7.5)).toDF("k", "s", "v", "w")
+    val v = TxTable.mergeUpsertIdempotent(spark, root, batch, Seq("k", "s"), "app", 0L,
+      evolve = true)
+    assert(TxTable.mergeUpsertIdempotent(spark, root, batch, Seq("k", "s"), "app", 0L,
+      evolve = true) == v, "a replayed batch must not commit")
+    assert(rowsWithW(root) == Set((Seq(1L, "x", "a"), None), (Seq(1L, "y", "B"), Some(7.5))))
+  }
+
+  test("mergeUpsertPartitioned with evolve adds a column: touched and carried partitions read NULL") {
+    import spark.implicits._
+    val root = tmp()
+    TxTable.mergeUpsertPartitioned(spark, root,
+      Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "y")).toDF("k", "v", "p"), "k", "p")
+    val v = TxTable.mergeUpsertPartitioned(spark, root,
+      Seq((2L, "B", "y", 7.5)).toDF("k", "v", "p", "w"), "k", "p", evolve = true)
+    assert(TxTable.snapshot(root, v).schemaDdl.contains("w"))
+    assert(rowsWithW(root) == Set((Seq(1L, "a", "x"), None), (Seq(2L, "B", "y"), Some(7.5)),
+      (Seq(3L, "c", "y"), None)))
+  }
+
   test("evolveSchema: append-only metadata commit; drops/retypes/reorders refused; idempotent") {
     import spark.implicits._
     val root = tmp()
