@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -13,10 +13,11 @@ import java.nio.file.Files
   * The reference collects the whole corpus into a Python list and batches
   * OpenAI/Milvus calls (seed_milvus.py:42-86 — the OOM-at-scale pattern
   * SURVEY §7.4 flags). Here the embed is a per-row deterministic function
-  * (T3 substitute), pk is Spark's `uuid()` (F9), defaults are coalesce
-  * (P5/P6), and the "collection" is a [[TxTable]]: [[refresh]] is the
-  * drop_old=True rebuild (S12) as a versioned commit, [[upsert]] the
-  * incremental MERGE. Embedding and commits run on the executors. A
+  * (T3 substitute), pk is a time-ordered UUID ([[build]], F9), defaults
+  * are coalesce (P5/P6), and the "collection" is a [[TxTable]] that
+  * declares `pk` as a stats column: [[refresh]] is the drop_old=True
+  * rebuild (S12) as a versioned commit, [[upsert]] the incremental MERGE,
+  * scoped by pk ranges. Embedding and commits run on the executors. A
   * search scans the snapshot once and merges the ≤ partitions·k
   * survivors on the driver; the IVF index's centroids are trained once
   * and stored with the table.
@@ -26,16 +27,43 @@ object Gold {
   val VectorDim = 64
 
   /** silver chunks → gold vector rows with metadata defaults
-    * (seed_milvus.py:52-60: title/description/content_type defaults). */
+    * (seed_milvus.py:52-60: title/description/content_type defaults).
+    *
+    * `pk` is an RFC 9562 version-7 UUID string: its first 48 bits are
+    * this call's clock in milliseconds, and its 74 free bits XOR random
+    * bits drawn once per call with the row's
+    * `monotonically_increasing_id()`, so no two rows of a build share a
+    * pk, re-evaluating the frame gives the same pks, and a later build's
+    * pks sort after an earlier one's (the clock never repeats a
+    * millisecond within a process). Two things follow. A day's pks lie
+    * above every stored pk, so [[upsert]]'s pk-range scoping finds no
+    * base dir to rewrite for an insert-only day. And the per-build
+    * values ride in a UDF's closure rather than in the generated code
+    * (`uuid()` inlines its random seed), so every build compiles to the
+    * same classes and Spark's codegen cache serves them. */
   def build(silver: DataFrame, dim: Int = VectorDim): DataFrame =
     silver.select(
-      expr("uuid()").as("pk"),
+      mintPks(),
       coalesce(col("metadata").getItem("source"), lit("unknown")).as("source"),
       coalesce(col("metadata").getItem("content_type"), lit("text/plain")).as("content_type"),
       coalesce(col("metadata").getItem("title"), lit("Untitled")).as("title"),
       coalesce(col("metadata").getItem("description"), lit("No description available")).as("description"),
       col("split_content").as("text"),
       VectorFunctions.hashEmbedUdf(col("split_content"), lit(dim)).as("vector"))
+
+  /** The last millisecond a build minted pks at. */
+  private val lastBuildMs = new java.util.concurrent.atomic.AtomicLong
+
+  private def mintPks(): Column = {
+    val ms = lastBuildMs.updateAndGet(last => math.max(last + 1, System.currentTimeMillis()))
+    val rnd = java.util.UUID.randomUUID()
+    val (randA, randB) = (rnd.getMostSignificantBits, rnd.getLeastSignificantBits)
+    val msb = (ms << 16) | 0x7000L // version 7
+    val mint = udf((id: Long) => new java.util.UUID(
+      msb | ((randA ^ (id >>> 62)) & 0xfffL),
+      Long.MinValue | ((randB ^ id) & 0x3fffffffffffffffL)).toString) // variant 0b10
+    mint(monotonically_increasing_id()).as("pk")
+  }
 
   /** drop_old=True collection refresh (seed_milvus.py:75) — committed
     * through the [[TxTable]] log since round 15: the "dropped" old
@@ -50,7 +78,8 @@ object Gold {
   def refresh(gold: DataFrame, path: String): Unit = {
     val spark = gold.sparkSession
     migrateLegacy(spark, path)
-    val v = TxTable.refresh(spark, path, gold)
+    val v = TxTable.refreshDeclaring(spark, path, gold, evolve = false,
+      Seq("pk").filter(gold.columns.contains))
     try buildIndex(path, v, TxTable.read(spark, path, v), IvfCentroids, IvfIters)
     catch { case scala.util.control.NonFatal(_) => () }
   }
@@ -110,10 +139,16 @@ object Gold {
     * plain-parquet table at `path` is migrated: its current contents
     * become the log's first version before the merge commits. At scale,
     * [[TxTable.mergeUpsertPartitioned]] scopes the rewrite to only the
-    * partitions the incoming keys touch. */
+    * partitions the incoming keys touch.
+    *
+    * A table this call or [[refresh]] creates declares the key as a stats
+    * column (an existing table keeps what it declared), so the MERGE
+    * rewrites only the dirs whose key range may hold an incoming key
+    * and appends the rest of the batch as one dir: with [[build]]'s
+    * time-ordered pks, a day's commit writes only the day's rows. */
   def upsert(spark: SparkSession, path: String, incoming: DataFrame, key: String): Unit = {
     migrateLegacy(spark, path)
-    TxTable.mergeUpsert(spark, path, incoming, key)
+    TxTable.mergeUpsertDeclaring(spark, path, incoming, key, evolve = false, Seq(key))
   }
 
   /** Read a table whether TxTable-backed (snapshot read of latest) or a

@@ -45,14 +45,15 @@ import scala.jdk.CollectionConverters._
   * current version, an evolve to the same schema) or a proposal — the
   * new manifest (whose metadata defaults to the base's: stats and bloom
   * columns, schema, layout, txn ledger), the fresh dirs the attempt
-  * wrote, and any stats it already computed. The loop owns the rest:
-  * reading the base, the whole-table-on-scoped-layout refusal, appId
-  * validation and the replay check, the txn tag, the fresh dirs' stats
-  * and Bloom filters, the race for base+1, and on a loss dropping the
-  * fresh dirs (or, for a merge whose winner left every scope it
-  * touched unchanged, re-basing them onto the winner) before the
-  * retry. Only the fixed-target commits ([[create]], [[migrate]],
-  * [[cloneTable]]) commit outside it.
+  * wrote with the stats their writes observed, and any other stats it
+  * has. The loop owns the rest: reading the base, the
+  * whole-table-on-scoped-layout refusal, appId validation and the
+  * replay check, the txn tag, the fresh dirs' Bloom filters, the race
+  * for base+1, and on a loss dropping the fresh dirs (or, for a merge
+  * whose winner kept every dir it replaced and added none its keys may
+  * hit, re-basing them onto the winner) before the retry. Only the
+  * fixed-target commits ([[create]], [[migrate]], [[cloneTable]])
+  * commit outside it.
   *
   * Reads: [[read]] resolves the manifest at `version` (default:
   * latest) and scans exactly its listed dirs — old versions stay
@@ -117,8 +118,10 @@ object TxTable {
     * Round-17 table contract fields (all optional — pre-contract
     * manifests parse with the empty defaults and stay unconstrained):
     *  - `statsCols`: the declared data-skipping column set
-    *    ([[setStatsColumns]]); every commit computes fresh-dir min/max
-    *    for these, so pruning works BETWEEN compactions too.
+    *    ([[setStatsColumns]]); every commit's writes observe fresh-dir
+    *    min/max for these, so pruning works BETWEEN compactions too, and
+    *    a keyed MERGE on a statted key rewrites only the dirs its key
+    *    range may hit.
     *  - `schemaDdl`: the table's schema fingerprint (nullable-normalized
     *    `StructType.toDDL`); commits with a different schema are
     *    rejected unless `evolve = true` — Delta's enforcement/evolution
@@ -176,12 +179,13 @@ object TxTable {
   private[graft] val manifestProbes = new java.util.concurrent.atomic.AtomicLong
   /** Manifest bodies read (snapshot resolutions). */
   private[graft] val manifestReads = new java.util.concurrent.atomic.AtomicLong
-  /** Merges committed via scope-level conflict fast-forward (a winner
-    * that left every touched scope unchanged, adopted without recompute). */
+  /** Merges committed via conflict fast-forward (a winner that kept
+    * every dir the merge replaces and added none its keys may hit,
+    * adopted without recompute). */
   private[graft] val fastForwardCommits = new java.util.concurrent.atomic.AtomicLong
-  /** Merges that lost a race and had to recompute: the winner changed a
-    * touched scope — for a whole-table merge, any entry at all (the slow
-    * rebase path). */
+  /** Merges that lost a race and had to recompute: the winner replaced a
+    * dir the merge replaces, or added one its keys may hit — without key
+    * stats, any change to a touched scope (the slow rebase path). */
   private[graft] val rebaseRecomputes = new java.util.concurrent.atomic.AtomicLong
   /** Snapshot/stats resolutions served from the immutable-manifest
     * cache (no file read, no parse). */
@@ -884,10 +888,22 @@ object TxTable {
     won
   }
 
-  /** Exact per-dir min/max for the declared stats columns — ONE min/max
-    * aggregation over each freshly-written dir (a columnar scan of just
-    * those columns; the write itself already cost a full pass, so this
-    * is a small constant factor on the commit). Three stat shapes:
+  /** The min/max aggregates behind a dir's stats on `cols` (those of
+    * `df`'s columns). Strings aggregate RAW (Spark's min/max on
+    * StringType is UTF8String = code-point order, matching strCompare);
+    * numerics keep the cast-to-double form. */
+  private def statAggs(df: DataFrame, cols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{min => fmin, max => fmax}
+    df.schema.fields.toSeq.filter(f => cols.contains(f.name)).flatMap { f =>
+      val v = if (f.dataType == org.apache.spark.sql.types.StringType) col(f.name)
+              else col(f.name).cast("double")
+      Seq(fmin(v).as(s"_mn_${f.name}"), fmax(v).as(s"_mx_${f.name}"))
+    }
+  }
+
+  /** `rel`'s stats from the values of [[statAggs]] over `df` (`agg`
+    * maps an aggregate's name to its value, null for NULL). Three stat
+    * shapes:
     *  - finite min/max: the normal range stat;
     *  - NULL aggregates (empty dir, or the column is all-NULL): the
     *    EMPTY-RANGE sentinel (min = +Inf, max = -Inf) — such a dir has
@@ -897,43 +913,41 @@ object TxTable {
     *  - NaN anywhere: NO stat (Spark's max() is NaN-greatest, so the
     *    range is meaningless) — an unstatted (dir, col) is always
     *    scanned, the sound default (r16 advisor's NaN finding). */
-  private def dirStatsOf(spark: SparkSession, root: String,
-                         rels: Seq[String],
-                         cols: Seq[String]): (Seq[DirStat], Seq[DirStrStat]) = {
-    if (cols.isEmpty) return (Nil, Nil)
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-    import org.apache.spark.sql.types.StringType
+  private def statsFrom(rel: String, df: DataFrame, cols: Seq[String],
+                        agg: String => Any): (Seq[DirStat], Seq[DirStrStat]) = {
+    val present = df.schema.fields.toSeq.filter(f => cols.contains(f.name))
+    val (str, num) = present.partition(_.dataType == org.apache.spark.sql.types.StringType)
+    (num.flatMap { f =>
+      (agg(s"_mn_${f.name}"), agg(s"_mx_${f.name}")) match {
+        case (mn: Double, mx: Double) =>
+          if (mn.isNaN || mx.isNaN) None else Some(DirStat(rel, f.name, mn, mx))
+        case _ => Some(DirStat(rel, f.name, Double.PositiveInfinity, Double.NegativeInfinity))
+      }
+    }, str.flatMap { f =>
+      (agg(s"_mn_${f.name}"), agg(s"_mx_${f.name}")) match {
+        case (mn: String, mx: String) => truncMax(mx).map(DirStrStat(rel, f.name, truncMin(mn), _))
+        case _ => Some(DirStrStat(rel, f.name, "￿", "")) // empty/all-NULL: sentinel
+      }
+    })
+  }
+
+  /** Exact per-dir min/max for `cols`, read back from each of `rels` —
+    * ONE min/max aggregation per dir, under `s`'s recorded schema (no
+    * footer-inference job; a dir written before an evolve reads the
+    * added columns as NULL). Commits take their fresh dirs' stats from
+    * the write itself ([[writeData]]); this serves [[setStatsColumns]],
+    * which stats dirs that already exist, and is the reference the
+    * observed stats are spec-pinned equal to. */
+  private[graft] def dirStatsOf(spark: SparkSession, root: String, s: Snapshot,
+                                rels: Seq[String],
+                                cols: Seq[String]): (Seq[DirStat], Seq[DirStrStat]) = {
     val acc = rels.map { rel =>
-      val df = spark.read.parquet(s"$root/$rel")
-      val typed = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      val present = cols.filter(typed.contains)
-      if (present.isEmpty) (Nil, Nil)
+      val df = readDirs(spark, root, s, Seq(rel))
+      val aggs = statAggs(df, cols)
+      if (aggs.isEmpty) (Nil, Nil)
       else {
-        // strings aggregate RAW (Spark's min/max on StringType is
-        // UTF8String = code-point order, matching strCompare); numerics
-        // keep the cast-to-double form
-        val aggs = present.flatMap { c =>
-          val v = if (typed(c) == StringType) col(c) else col(c).cast("double")
-          Seq(fmin(v).as(s"_mn_$c"), fmax(v).as(s"_mx_$c"))
-        }
         val r = df.agg(aggs.head, aggs.tail: _*).head()
-        val numS = scala.collection.mutable.ArrayBuffer.empty[DirStat]
-        val strS = scala.collection.mutable.ArrayBuffer.empty[DirStrStat]
-        present.foreach { c =>
-          val (i, j) = (r.fieldIndex(s"_mn_$c"), r.fieldIndex(s"_mx_$c"))
-          if (typed(c) == StringType) {
-            if (r.isNullAt(i) || r.isNullAt(j)) // empty/all-NULL: sentinel
-              strS += DirStrStat(rel, c, "￿", "")
-            else truncMax(r.getString(j)).foreach(mx =>
-              strS += DirStrStat(rel, c, truncMin(r.getString(i)), mx))
-          } else {
-            if (r.isNullAt(i) || r.isNullAt(j))
-              numS += DirStat(rel, c, Double.PositiveInfinity, Double.NegativeInfinity)
-            else if (!r.getDouble(i).isNaN && !r.getDouble(j).isNaN)
-              numS += DirStat(rel, c, r.getDouble(i), r.getDouble(j))
-          }
-        }
-        (numS.toSeq, strS.toSeq)
+        statsFrom(rel, df, cols, n => r.get(r.fieldIndex(n)))
       }
     }
     (acc.flatMap(_._1), acc.flatMap(_._2))
@@ -960,12 +974,24 @@ object TxTable {
     ddl
   }
 
-  /** Write `df` as a fresh immutable data dir; returns the dir name
-    * relative to root. Unreferenced until some manifest lists it. */
-  private def writeData(root: String, version: Long, df: DataFrame): String = {
+  /** A fresh data dir (relative to root) and what its write observed:
+    * its row count and its stats on the columns the write was asked for. */
+  private final case class Written(rel: String, rows: Long,
+                                   stats: Seq[DirStat], strStats: Seq[DirStrStat])
+
+  /** Write `df` as a fresh immutable data dir, unreferenced until some
+    * manifest lists it. The write's own job observes the dir's row count
+    * and its [[statsFrom]] stats on `cols` (`Dataset.observe`), so a
+    * commit stats its fresh dirs without reading them back. */
+  private def writeData(root: String, version: Long, df: DataFrame,
+                        cols: Seq[String] = Nil): Written = {
+    import org.apache.spark.sql.functions.{count, lit}
     val rel = s"data/v$version-${UUID.randomUUID().toString.take(8)}"
-    df.write.parquet(s"$root/$rel")
-    rel
+    val seen = org.apache.spark.sql.Observation()
+    df.observe(seen, count(lit(1)).as("_rows"), statAggs(df, cols): _*).write.parquet(s"$root/$rel")
+    val agg = seen.get
+    val (stats, strStats) = statsFrom(rel, df, cols, agg.getOrElse(_, null))
+    Written(rel, agg("_rows").asInstanceOf[Long], stats, strStats)
   }
 
   private def dropData(root: String, rel: String): Unit = {
@@ -983,15 +1009,14 @@ object TxTable {
   /** Nothing to commit: the writer returns `version`. */
   private final case class NoOp(version: Long) extends Attempt
   /** `snap` is the manifest to commit; the loop sets its version.
-    * `fresh` are the dirs the attempt wrote: the loop stats and blooms
-    * them and drops them on a loss. `stats`/`strStats` are stats the
-    * attempt already has; `statted` names the declared columns they
-    * cover on the fresh dirs. `fastForward` re-bases the same fresh
-    * dirs onto the winner's snapshot after a loss (None: recompute). */
-  private final case class Proposal(snap: Snapshot, fresh: Seq[String] = Nil,
+    * `fresh` are the dirs the attempt wrote, with the stats their writes
+    * observed: the loop records those stats, blooms the dirs and drops
+    * them on a loss. `stats`/`strStats` are further stats the attempt
+    * has. `fastForward` re-bases the same fresh dirs onto the winner's
+    * snapshot after a loss (None: recompute). */
+  private final case class Proposal(snap: Snapshot, fresh: Seq[Written] = Nil,
                                     stats: Seq[DirStat] = Nil,
                                     strStats: Seq[DirStrStat] = Nil,
-                                    statted: Seq[String] = Nil,
                                     fastForward: Option[Snapshot => Option[Snapshot]] = None)
     extends Attempt
 
@@ -1007,21 +1032,27 @@ object TxTable {
     base.get
   }
 
+  /** The stats columns a commit on `base` declares. */
+  private def declared(base: Option[Snapshot]): Seq[String] = base.toSeq.flatMap(_.statsCols)
+
   /** Write `df` as one fresh whole-table dir after `kept`. */
   private def written(root: String, base: Option[Snapshot], action: String,
                       df: DataFrame, ddl: String,
                       kept: Seq[(String, String)] = Nil): Proposal = {
-    val rel = writeData(root, base.fold(0L)(_.version + 1), df)
-    Proposal(next(base, action, kept :+ (rel -> "")).copy(schemaDdl = ddl), Seq(rel))
+    val w = writeData(root, base.fold(0L)(_.version + 1), df, declared(base))
+    Proposal(next(base, action, kept :+ (w.rel -> "")).copy(schemaDdl = ddl), Seq(w))
   }
 
   /** The optimistic commit loop every retrying writer runs (see "Commit
     * protocol" in the object doc). `wholeTable` names the action of a
     * writer that adds a whole-table entry, which a partition-scoped
     * layout refuses; `txn` tags the commit with (appId, batchId) and
-    * makes a replayed batch a no-op. */
+    * makes a replayed batch a no-op. On a table that does not exist yet,
+    * the attempt's base is an empty version -1 declaring `statsCols`, so
+    * the first commit declares them as [[create]] would, without
+    * create's empty version 0. */
   private def commitLoop(spark: SparkSession, root: String, wholeTable: String = "",
-                         txn: Option[(String, Long)] = None)(
+                         txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil)(
       attempt: Option[Snapshot] => Attempt): Long = {
     txn.foreach { case (appId, _) =>
       require(appId.nonEmpty, "appId must be non-empty")
@@ -1035,7 +1066,8 @@ object TxTable {
     var committed = -1L
     while (committed < 0) {
       val baseV = latestVersion(root)
-      val base = if (baseV < 0) None else Some(snapshot(root, baseV))
+      val base = if (baseV >= 0) Some(snapshot(root, baseV))
+                 else Option.when(statsCols.nonEmpty)(Snapshot(-1L, "create", Nil, statsCols = statsCols))
       // a whole-table ("") entry on a partition-scoped layout makes
       // every later scoped merge fail its partitioned-history check —
       // permanently. Fail THIS call instead (refresh is exempt: a full
@@ -1054,19 +1086,18 @@ object TxTable {
         case NoOp(v) => committed = v
         case p: Proposal =>
           val tagged = tag(p.snap)
-          val (st, strSt) = dirStatsOf(spark, root, p.fresh,
-            tagged.statsCols.filterNot(p.statted.contains))
-          buildBlooms(spark, root, p.fresh, tagged.bloomCols)
+          buildBlooms(spark, root, p.fresh.map(_.rel), tagged.bloomCols)
           var snap = Option(tagged.copy(version = baseV + 1))
           while (committed < 0 && snap.nonEmpty) {
-            if (tryCommitAnchored(root, snap.get, p.stats ++ st, p.strStats ++ strSt)) {
+            if (tryCommitAnchored(root, snap.get, p.stats ++ p.fresh.flatMap(_.stats),
+                p.strStats ++ p.fresh.flatMap(_.strStats))) {
               committed = snap.get.version
               if (committed > baseV + 1) fastForwardCommits.incrementAndGet()
             } else snap = p.fastForward.flatMap(_(snapshot(root))).map(tag)
           }
           if (committed < 0) {
             if (p.fastForward.nonEmpty) rebaseRecomputes.incrementAndGet()
-            p.fresh.foreach(dropData(root, _))
+            p.fresh.foreach(w => dropData(root, w.rel))
           }
       }
     }
@@ -1078,7 +1109,13 @@ object TxTable {
     * schema change (recorded for subsequent commits to enforce). */
   def refresh(spark: SparkSession, root: String, df: DataFrame,
               evolve: Boolean = false): Long =
-    commitLoop(spark, root) { base =>
+    refreshDeclaring(spark, root, df, evolve, Nil)
+
+  /** [[refresh]]; on a table that does not exist yet, the commit declares
+    * `statsCols` ([[Gold]] declares its key). */
+  private[etl] def refreshDeclaring(spark: SparkSession, root: String, df: DataFrame,
+                                    evolve: Boolean, statsCols: Seq[String]): Long =
+    commitLoop(spark, root, statsCols = statsCols) { base =>
       written(root, base, "refresh", df, resolveSchema(root, base, df, evolve))
     }
 
@@ -1115,7 +1152,15 @@ object TxTable {
     * Returns the committed version. */
   def mergeUpsert(spark: SparkSession, root: String, incoming: DataFrame,
                   key: String, evolve: Boolean = false): Long =
-    commitLoop(spark, root, wholeTable = "merge")(
+    mergeUpsertDeclaring(spark, root, incoming, key, evolve, Nil)
+
+  /** [[mergeUpsert]]; on a table that does not exist yet, the commit
+    * declares `statsCols` ([[Gold]] declares its key, so every later
+    * upsert scopes its MERGE by key ranges). */
+  private[etl] def mergeUpsertDeclaring(spark: SparkSession, root: String, incoming: DataFrame,
+                                        key: String, evolve: Boolean,
+                                        statsCols: Seq[String]): Long =
+    commitLoop(spark, root, wholeTable = "merge", statsCols = statsCols)(
       merging(spark, root, incoming, Seq(key), evolve, Seq("" -> incoming)))
 
   /** Delta's RESTORE (`RESTORE TABLE t TO VERSION AS OF v`): make the
@@ -1233,11 +1278,20 @@ object TxTable {
     * [[mergeUpsertIdempotent]] and [[mergeUpsertPartitioned]]. `scopes`
     * pairs each manifest part the batch touches with the batch's rows
     * for it: the single scope "" for a whole-table table, one partition
-    * value each for a partitioned one. Each scope's base dirs are read
-    * under the schema this commit records (a dir written before an
-    * evolve reads the added columns as NULL, as in [[rewriteDirs]]),
-    * merged with its rows through [[Gold.merge]] and written as one
-    * fresh dir; every other entry carries by reference. */
+    * value each for a partitioned one. A scope merges one of two ways:
+    *  - when a key column is a declared stats column and every base dir
+    *    of the scope carries a stat on it, its rows are written first as
+    *    a dir A, and A's observed key ranges prune the scope's dirs to
+    *    the candidates that may hold an incoming key ([[pruneSnapshot]]).
+    *    With no candidate, A is the scope's fresh dir: an insert-only
+    *    batch reads nothing of the base. Otherwise the candidates merge
+    *    with A into one fresh dir, and A goes;
+    *  - otherwise every base dir of the scope is a candidate, merged
+    *    with its rows into one fresh dir.
+    * Candidates are read under the schema this commit records (a dir
+    * written before an evolve reads the added columns as NULL, as in
+    * [[rewriteDirs]]) and merged through [[Gold.merge]]; every other
+    * entry carries by reference. */
   private def merging(spark: SparkSession, root: String, incoming: DataFrame,
                       keys: Seq[String], evolve: Boolean,
                       scopes: Seq[(String, DataFrame)], layout: String = "")(
@@ -1247,32 +1301,60 @@ object TxTable {
     // instead of the contract's rejection
     val ddl = resolveSchema(root, base, incoming, evolve)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    val touched = scopes.map(_._1)
-    val whole = touched == Seq("")
+    def read(dirs: Seq[String]) = spark.read.schema(schema).parquet(dirs.map(d => s"$root/$d"): _*)
+    val whole = scopes.map(_._1) == Seq("")
     val baseEntries = base.toSeq.flatMap(_.entries)
-    def touchedOf(es: Seq[(String, String)]) = touched.map(p => es.filter(_._2 == p).toSet)
-    val fresh = scopes.map { case (p, rows) =>
-      val dirs = baseEntries.filter(_._2 == p).map(e => s"$root/${e._1}")
-      val merged =
-        if (dirs.isEmpty) rows
-        else Gold.merge(spark.read.schema(schema).parquet(dirs: _*), rows, keys)
-      (writeData(root, base.fold(0L)(_.version + 1), merged), p)
+    val statsCols = declared(base)
+    val statted = base.toSeq.flatMap(s =>
+      readStats(root, s.version).map(st => (st.dir, st.col)) ++
+        readStrStats(root, s.version).map(st => (st.dir, st.col))).toSet
+    def write(df: DataFrame) = writeData(root, base.fold(0L)(_.version + 1), df, statsCols)
+    def mergeInto(dirs: Seq[String], rows: DataFrame) =
+      if (dirs.isEmpty) rows else Gold.merge(read(dirs), rows, keys)
+    type Span = (Map[String, (Double, Double)], Map[String, (String, Option[String])])
+    // the dirs among `dirs` whose stats at `s` admit a key in `span`
+    def admitted(s: Snapshot, dirs: Seq[String], span: Span) =
+      if (dirs.isEmpty) Nil else pruneSnapshot(root, s.copy(dirs = dirs, parts = Nil), span._1, span._2)._1
+    // per scope: (part, the base dirs it replaces, the key span of its
+    // rows — empty when unknown, which admits every dir —, its fresh dir)
+    val merged: Seq[(String, Seq[String], Span, Written)] = scopes.map { case (p, rows) =>
+      val dirs = baseEntries.filter(_._2 == p).map(_._1)
+      val keyed = keys.filter(k => statsCols.contains(k) && dirs.forall(d => statted((d, k))))
+      if (keyed.isEmpty) (p, dirs, (Map.empty, Map.empty), write(mergeInto(dirs, rows)))
+      else {
+        val a = write(rows)
+        val span: Span = (a.stats.filter(s => keyed.contains(s.col)).map(s => s.col -> (s.min, s.max)).toMap,
+          a.strStats.filter(s => keyed.contains(s.col)).map(s => s.col -> (s.min, Option(s.max))).toMap)
+        val candidates = admitted(base.get, dirs, span)
+        if (candidates.isEmpty) (p, Nil, span, a)
+        else {
+          val m = write(mergeInto(candidates, read(Seq(a.rel))))
+          dropData(root, a.rel)
+          (p, candidates, span, m)
+        }
+      }
     }
-    def kept(es: Seq[(String, String)]) = es.filterNot(e => touched.contains(e._2)) ++ fresh
+    val replaced = merged.flatMap { case (p, ds, _, _) => ds.map(_ -> p) }.toSet
+    def kept(es: Seq[(String, String)]) = es.filterNot(replaced) ++ merged.map(m => m._4.rel -> m._1)
     val proposal = next(base, "merge", kept(baseEntries)).copy(schemaDdl = ddl,
       layout = base.map(_.layout).filter(_.nonEmpty).getOrElse(layout))
-    // a winner of the same kind (whole-table or scoped) that left every
-    // touched scope's entries, the schema and the declared stats/bloom
-    // columns the fresh dirs were statted for unchanged leaves the fresh
-    // dirs correct: adopt its entries for everything else (dir names
+    // a winner of the same kind (whole-table or scoped), with the schema
+    // and the declared stats/bloom columns the fresh dirs were written
+    // for, leaves the fresh dirs correct when, in every scope, it kept
+    // each replaced dir and every dir it added holds no key of the
+    // scope's span: adopt its entries for everything else (dir names
     // keep the base's v<N> prefix — the name is cosmetic, the manifest
-    // is the binding reference). For the whole-table scope that means a
-    // winner that changed no entry at all.
-    Proposal(proposal, fresh.map(_._1), fastForward = Some(cur =>
+    // is the binding reference). For a scope without a span that means
+    // a winner that changed none of its entries.
+    Proposal(proposal, merged.map(_._4), fastForward = Some(cur =>
       if (cur.entries.forall(_._2.isEmpty == whole) &&
           (cur.schemaDdl.isEmpty || cur.schemaDdl == ddl) &&
           cur.statsCols == proposal.statsCols && cur.bloomCols == proposal.bloomCols &&
-          touchedOf(cur.entries) == touchedOf(baseEntries))
+          merged.forall { case (p, ds, span, _) =>
+            val now = cur.entries.filter(_._2 == p).map(_._1)
+            val before = baseEntries.filter(_._2 == p).map(_._1).toSet
+            ds.forall(now.contains) && admitted(cur, now.filterNot(before), span).isEmpty
+          })
         Some(next(Some(proposal), "merge", kept(cur.entries)).copy(
           version = cur.version + 1, txnApps = cur.txnApps, txnIds = cur.txnIds))
       else None))
@@ -1289,7 +1371,7 @@ object TxTable {
   def migrate(spark: SparkSession, root: String, df: DataFrame): Boolean = {
     if (exists(root)) return false
     val ddl = resolveSchema(root, None, df, evolve = false)
-    val rel = writeData(root, 0L, df)
+    val rel = writeData(root, 0L, df).rel
     val won = tryCommitAnchored(root,
       Snapshot(0L, "migrate", Seq(rel), Seq(""), Nil, ddl, ""))
     if (!won) dropData(root, rel)
@@ -1325,17 +1407,17 @@ object TxTable {
       // one re-layout dir per partition group (preserves the scoped
       // layout so later partition merges still rewrite only their slice)
       val groups = base.entries.groupBy(_._2).toSeq.sortBy(_._1)
-      val freshAll: Seq[((String, String), Seq[DirStat])] = groups.flatMap { case (p, es) =>
+      // the clustered pass stats the clusterBy columns itself
+      val observed = base.statsCols.filterNot(clusterBy.contains)
+      val freshAll: Seq[(Written, String, Seq[DirStat])] = groups.flatMap { case (p, es) =>
         val bytes = es.map(e => dirBytes(e._1)).sum
         val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
         val df = spark.read.parquet(es.map(e => s"$root/${e._1}"): _*)
-        if (clusterBy.isEmpty) Seq(((writeData(root, target, df.coalesce(nOut)), p), Nil))
-        else clusteredDirs(spark, root, target, p, df, nOut, clusterBy, zOrder)
+        if (clusterBy.isEmpty) Seq((writeData(root, target, df.coalesce(nOut), observed), p, Nil))
+        else clusteredDirs(spark, root, target, p, df, nOut, clusterBy, zOrder, observed)
       }
-      val fresh = freshAll.map(_._1)
-      // the clustered pass already stats the clusterBy columns
-      Proposal(next(b, "compact", fresh), fresh.map(_._1),
-        stats = freshAll.flatMap(_._2), statted = clusterBy)
+      Proposal(next(b, "compact", freshAll.map(f => f._1.rel -> f._2)), freshAll.map(_._1),
+        stats = freshAll.flatMap(_._3))
     }
   }
 
@@ -1361,8 +1443,8 @@ object TxTable {
     * columns must be numeric. */
   private def clusteredDirs(spark: SparkSession, root: String, target: Long,
                             part: String, df: DataFrame, nOut: Int,
-                            clusterBy: Seq[String],
-                            zOrder: Boolean = false): Seq[((String, String), Seq[DirStat])] = {
+                            clusterBy: Seq[String], zOrder: Boolean,
+                            observed: Seq[String]): Seq[(Written, String, Seq[DirStat])] = {
     import org.apache.spark.sql.functions.{lit, when, min => fmin, max => fmax, count => fcount}
     val useZ = zOrder && clusterBy.length >= 2
     // cache the INPUT before any quantile pass — zValue's rank bounds,
@@ -1393,7 +1475,7 @@ object TxTable {
         val slice = bucketed.filter(col("_cb") === b).drop("_cb")
           .coalesce(1).sortWithinPartitions(sortCols: _*)
           .drop("_zv") // no-op on the linear path
-        val rel = writeData(root, target, slice)
+        val w = writeData(root, target, slice, observed)
         // all-NULL cluster column in a bucket → null aggregate (getDouble
         // would NPE); NaN rows → NaN max (NaN-greatest ordering). Either
         // way: omit the stat — an unstatted (dir, col) is always scanned
@@ -1402,9 +1484,9 @@ object TxTable {
           val (i, j) = (r.fieldIndex(s"_min_$c"), r.fieldIndex(s"_max_$c"))
           if (r.isNullAt(i) || r.isNullAt(j) ||
               r.getDouble(i).isNaN || r.getDouble(j).isNaN) Nil
-          else Seq(DirStat(rel, c, r.getDouble(i), r.getDouble(j)))
+          else Seq(DirStat(w.rel, c, r.getDouble(i), r.getDouble(j)))
         }
-        ((rel, part), stats)
+        (w, part, stats)
       }.toSeq
     } finally src.unpersist()
   }
@@ -1587,7 +1669,7 @@ object TxTable {
         readStrStats(root, base.version).filter(s => cols.contains(s.col))
           .map(s => (s.dir, s.col))).toSet
       val needing = base.dirs.filter(d => !cols.forall(c => have((d, c))))
-      val (freshAll, freshStrAll) = dirStatsOf(spark, root, needing, cols)
+      val (freshAll, freshStrAll) = dirStatsOf(spark, root, base, needing, cols)
       Proposal(next(b, "setstats", base.entries).copy(statsCols = cols),
         stats = freshAll.filterNot(s => have((s.dir, s.col))),
         strStats = freshStrAll.filterNot(s => have((s.dir, s.col))))
@@ -1911,20 +1993,20 @@ object TxTable {
       val schema = tableSchema(spark, root, base.version)
       val f = rewrite(schema)
       val candidates = prune(base)
-      val rewritten: Seq[(String, Option[(String, String)])] =
+      val rewritten: Seq[(String, Option[(Written, String)])] =
         base.entries.filter(e => candidates(e._1)).map { case (dir, part) =>
-          val rel = writeData(root, base.version + 1,
-            f(spark.read.schema(schema).parquet(s"$root/$dir")))
-          // one scan per candidate: rewrite+write in a single pass, then
-          // a parquet METADATA count decides fully-deleted (a separate
-          // isEmpty probe would re-read the whole dir first)
-          if (dropEmpty && spark.read.parquet(s"$root/$rel").count() == 0L) {
-            dropData(root, rel)
+          // one scan per candidate: rewrite+write in a single pass, whose
+          // observed row count decides fully-deleted
+          val w = writeData(root, base.version + 1,
+            f(spark.read.schema(schema).parquet(s"$root/$dir")), base.statsCols)
+          if (dropEmpty && w.rows == 0L) {
+            dropData(root, w.rel)
             (dir, None)
-          } else (dir, Some((rel, part)))
+          } else (dir, Some((w, part)))
         }
       val replacement = rewritten.toMap
-      val entries = base.entries.flatMap(e => replacement.getOrElse(e._1, Some(e)))
+      val entries = base.entries.flatMap(e =>
+        replacement.get(e._1).fold(Option(e))(_.map { case (w, p) => w.rel -> p }))
       Proposal(next(b, action, entries), rewritten.flatMap(_._2).map(_._1))
     }
 

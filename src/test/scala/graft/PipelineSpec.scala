@@ -134,6 +134,41 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     assert(rows.forall(_.getAs[Seq[Float]]("vector").length == Gold.VectorDim))
   }
 
+  test("gold pks: unique canonical v7 UUIDs, stable per built frame, later builds sort after") {
+    val silverPath = s"$tmp/silver-pks"
+    Silver.chunk(Bronze.dedupByContent(fixtureBronze)).repartition(3).write.parquet(silverPath)
+    val silver = spark.read.parquet(silverPath)
+    val first = Gold.build(silver)
+    def pks(gold: DataFrame): Seq[(String, String)] =
+      gold.select("text", "pk").collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val a = pks(first)
+    assert(a.map(_._2).distinct.length == a.length, "two rows share a pk")
+    val canonical = "[0-9a-f]{8}-[0-9a-f]{4}-7[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}".r
+    assert(a.forall(p => canonical.matches(p._2)), s"not canonical v7 UUIDs: ${a.map(_._2)}")
+    assert(pks(first) == a, "re-evaluating the built frame changed its pks")
+    val b = pks(Gold.build(silver)).map(_._2)
+    assert(b.min > a.map(_._2).max, "a later build's pks must sort after an earlier build's")
+  }
+
+  test("a day's Gold.build + Gold.upsert appends one dir and compiles no new Janino class") {
+    import graft.etl.TxTable
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val silverPath = s"$tmp/silver-days"
+    val goldPath = s"$tmp/gold-days"
+    Silver.chunk(Bronze.dedupByContent(fixtureBronze)).write.parquet(silverPath)
+    def day(): DataFrame = Gold.build(spark.read.parquet(silverPath))
+    Gold.refresh(day(), goldPath)
+    Gold.upsert(spark, goldPath, day(), "pk")
+    val base = TxTable.snapshot(goldPath)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Gold.upsert(spark, goldPath, day(), "pk")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "the second day's upsert compiled new classes")
+    val after = TxTable.snapshot(goldPath)
+    assert(after.dirs.length == base.dirs.length + 1 && after.dirs.startsWith(base.dirs),
+      s"the day's upsert rewrote base dirs: ${base.dirs} -> ${after.dirs}")
+  }
+
   test("end-to-end: land -> refresh -> search returns relevant chunk first") {
     val bronzePath = s"$tmp/bronze"; val silverPath = s"$tmp/silver"; val goldPath = s"$tmp/gold"
     Bronze.land(Bronze.dedupByContent(fixtureBronze), bronzePath)

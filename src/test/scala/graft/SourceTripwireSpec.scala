@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * centroids or queries only by Similarity's kernel; the relational
   * forms it replaced live in the test tree. A bounded per-group top-k
   * runs on `TopKRows.perGroup`, not a hand-written rank window. TxTable
-  * builds its keyed MERGE once, through `Gold.merge`. */
+  * builds its keyed MERGE once, through `Gold.merge`, and takes a fresh
+  * dir's stats from its write. Gold mints pks without `uuid()`. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -27,6 +28,13 @@ class SourceTripwireSpec extends AnyFunSuite {
       .map(p => (mainSrc.relativize(p).toString, Files.readString(p))).toList
     finally walk.close()
   }
+
+  /** The code lines of `src`: comments may name the idiom. */
+  private def code(src: String) = src.linesIterator.map(_.trim)
+    .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+
+  private def txTable = sources.collectFirst { case ("graft/etl/TxTable.scala", s) => s }
+    .getOrElse(fail("graft/etl/TxTable.scala not found"))
 
   test("SparkSession.builder appears only in LocalSession and ExtensionsProbe") {
     assert(sources.exists(_._1 == "graft/Bench.scala"), "source scan found no mains")
@@ -42,8 +50,7 @@ class SourceTripwireSpec extends AnyFunSuite {
   }
 
   test("TxTable commits through one optimistic loop: tryCommitAnchored has at most 3 call sites") {
-    val src = sources.collectFirst { case ("graft/etl/TxTable.scala", s) => s }
-      .getOrElse(fail("graft/etl/TxTable.scala not found"))
+    val src = txTable
     // the definition aside: the shared loop, migrate and cloneTable
     val calls = "tryCommitAnchored\\(".r.findAllMatchIn(src)
       .count(m => !src.substring(0, m.start).endsWith("def "))
@@ -67,9 +74,6 @@ class SourceTripwireSpec extends AnyFunSuite {
   }
 
   test("rank windows stay only where TopKRows.perGroup does not fit, and TopKRows is built only there") {
-    // code lines only: comments may name the idiom
-    def code(src: String) = src.linesIterator.map(_.trim)
-      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
     val windows = for ((p, src) <- sources; l <- code(src).toSeq if l.contains("row_number().over"))
       yield p
     // q46 (corpus-many groups); rankScored, q77's ideal rank and q76's
@@ -88,13 +92,28 @@ class SourceTripwireSpec extends AnyFunSuite {
   }
 
   test("TxTable builds its keyed MERGE once, through Gold.merge; retired knobs stay gone") {
-    val src = sources.collectFirst { case ("graft/etl/TxTable.scala", s) => s }
-      .getOrElse(fail("graft/etl/TxTable.scala not found"))
+    val src = txTable
     assert(!src.contains("left_anti"), "TxTable hand-rolls an anti-join beside Gold.merge")
     val calls = "Gold\\.merge\\(".r.findAllMatchIn(src).length
     assert(calls == 1, s"$calls Gold.merge call sites in TxTable: one merge attempt serves every upsert")
     val banned = Seq("broadcastKeys", "viaPersist", "KmvSketchAggregator")
     val hits = for ((p, src) <- sources; b <- banned if src.contains(b)) yield s"$p: $b"
     assert(hits.isEmpty, s"retired code is back: ${hits.mkString(", ")}")
+  }
+
+  test("Gold mints pks without uuid(), whose per-query seed defeats the codegen cache") {
+    val hits = for ((p, src) <- sources if p.startsWith("graft/etl/");
+                    l <- code(src).toSeq if l.contains("uuid()")) yield p
+    assert(hits.isEmpty, s"uuid() under graft/etl: ${hits.mkString(", ")}")
+  }
+
+  test("a commit takes fresh dirs' stats from the write: dirStatsOf serves only setStatsColumns") {
+    val calls = for ((p, src) <- sources; m <- "dirStatsOf\\(".r.findAllMatchIn(src).toSeq
+                     if !src.substring(0, m.start).endsWith("def ")) yield (p, m.start)
+    val from = txTable.indexOf("def setStatsColumns(")
+    val to = txTable.indexOf("\n  def ", from)
+    assert(calls.nonEmpty && calls.forall { case (p, at) =>
+      p == "graft/etl/TxTable.scala" && at > from && at < to },
+      s"dirStatsOf called outside setStatsColumns: $calls")
   }
 }

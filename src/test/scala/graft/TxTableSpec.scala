@@ -1435,4 +1435,111 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       "cache served a stale snapshot after the manifest changed on disk")
   }
 
+  /** A whole-table table that declares `k` as its stats column, holding
+    * one dir per key range (`k` from `lo` until `hi`, v = "v<k>"). */
+  private def keyedTable(ranges: (Long, Long)*): String = {
+    val root = tmp()
+    TxTable.create(root, df().schema, statsCols = Seq("k"))
+    ranges.foreach { case (lo, hi) =>
+      TxTable.mergeUpsert(spark, root, df((lo until hi).map(i => i -> s"v$i"): _*), "k")
+    }
+    root
+  }
+
+  test("scoped MERGE: an insert-only upsert adds one dir and keeps every base dir by reference") {
+    val root = keyedTable((0L, 10L), (10L, 20L))
+    val base = TxTable.snapshot(root)
+    assert(base.dirs.length == 2, s"insert-only upserts rewrote the table: ${base.dirs}")
+    val v = TxTable.mergeUpsert(spark, root, df(20L -> "a", 25L -> "b"), "k")
+    val after = TxTable.snapshot(root, v)
+    assert(after.dirs.length == 3 && after.dirs.take(2) == base.dirs,
+      s"base dirs not kept by reference: ${base.dirs} -> ${after.dirs}")
+    assert(TxTable.readStats(root, v).exists(s =>
+      s.dir == after.dirs.last && s.col == "k" && s.min == 20.0 && s.max == 25.0))
+    assert(rowsOf(root).size == 22)
+  }
+
+  test("scoped MERGE: an upsert whose keys lie in one of three dirs rewrites only that dir") {
+    val root = keyedTable((0L, 10L), (10L, 20L), (20L, 30L))
+    val base = TxTable.snapshot(root)
+    val batch = df(12L -> "X", 15L -> "Y")
+    val want = graft.etl.Gold.merge(TxTable.read(spark, root), batch, Seq("k"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val v = TxTable.mergeUpsert(spark, root, batch, "k")
+    val after = TxTable.snapshot(root, v)
+    assert(after.dirs.length == 3)
+    assert(after.dirs.take(2) == Seq(base.dirs(0), base.dirs(2)),
+      s"untouched dirs not kept by reference: ${base.dirs} -> ${after.dirs}")
+    assert(!after.dirs.contains(base.dirs(1)), "the candidate dir was not rewritten")
+    val got = TxTable.read(spark, root).collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got == want, "the scoped MERGE differs from Gold.merge over the whole table")
+  }
+
+  test("scoped MERGE: upserts with disjoint key ranges that race both commit without recompute") {
+    val root = keyedTable((0L, 10L))
+    TxTable.resetCounters()
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    TxTable.beforeCommitHook = () =>
+      if (armed.compareAndSet(true, false)) TxTable.mergeUpsert(spark, root, df(5L -> "W"), "k")
+    try TxTable.mergeUpsert(spark, root, df(100L -> "l", 110L -> "m"), "k")
+    finally TxTable.beforeCommitHook = () => ()
+    assert(!armed.get, "the race never happened")
+    assert(TxTable.latestVersion(root) == 3, "both upserts must commit")
+    assert(TxTable.rebaseRecomputes.get() == 0, "a disjoint race must not recompute")
+    assert(TxTable.fastForwardCommits.get() == 1)
+    assert(rowsOf(root) == (0L until 10L).map(i => i -> (if (i == 5L) "W" else s"v$i")).toSet ++
+      Set(100L -> "l", 110L -> "m"))
+  }
+
+  test("scoped MERGE: a winner that adds a dir in the loser's key range forces a recompute") {
+    val root = keyedTable((0L, 10L))
+    TxTable.resetCounters()
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    TxTable.beforeCommitHook = () =>
+      if (armed.compareAndSet(true, false)) TxTable.mergeUpsert(spark, root, df(105L -> "winner"), "k")
+    try TxTable.mergeUpsert(spark, root, df(100L -> "l", 105L -> "loser", 110L -> "m"), "k")
+    finally TxTable.beforeCommitHook = () => ()
+    assert(TxTable.latestVersion(root) == 3)
+    assert(TxTable.rebaseRecomputes.get() == 1 && TxTable.fastForwardCommits.get() == 0)
+    val keys = TxTable.read(spark, root).collect().map(_.getLong(0))
+    assert(keys.length == keys.distinct.length, s"a key appears twice: ${keys.sorted.toSeq}")
+    assert(rowsOf(root).contains(105L -> "loser"), "the later writer must win key 105")
+  }
+
+  private type StatRow = (Option[Long], Option[Double], Option[String])
+
+  test("stats a write observes equal what dirStatsOf reads back, sentinels included") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    val cols = Seq("k", "x", "s")
+    val long = "q" * (TxTable.StrStatMaxLen + 10)
+    val rowGen: Gen[StatRow] = for {
+      k <- Gen.frequency(1 -> Gen.const(None), 4 -> Gen.choose(-1000L, 1000L).map(Some(_)))
+      x <- Gen.oneOf(None, Some(Double.NaN), Some(-0.5), Some(2.25), Some(1e300))
+      s <- Gen.oneOf(None, Some(""), Some("a"), Some("zz"), Some("é\"\\"), Some("😀"),
+        Some(long))
+    } yield (k, x, s)
+    val frames: Gen[List[StatRow]] = Gen.frequency(1 -> Gen.const(Nil),
+      1 -> Gen.const(List.fill[StatRow](3)((None, None, None))),
+      6 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, rowGen)))
+    val covered = scala.collection.mutable.Set[String]()
+    val prop = Prop.forAll(frames) { (rows: List[StatRow]) =>
+      covered ++= Seq("empty" -> rows.isEmpty, "all-NULL" -> (rows.nonEmpty && rows.forall(_._1.isEmpty)),
+        "NaN" -> rows.exists(_._2.exists(_.isNaN)), "numeric" -> rows.exists(_._1.nonEmpty),
+        "string" -> rows.exists(_._3.nonEmpty)).collect { case (n, true) => n }
+      val root = tmp()
+      val frame = rows.toDF("k", "x", "s")
+      TxTable.create(root, frame.schema, statsCols = cols)
+      val v = TxTable.append(spark, root, frame)
+      val snap = TxTable.snapshot(root, v)
+      val dir = snap.dirs.head
+      val (num, str) = TxTable.dirStatsOf(spark, root, snap, Seq(dir), cols)
+      TxTable.readStats(root, v).toSet == num.toSet && TxTable.readStrStats(root, v).toSet == str.toSet
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+      .withInitialSeed(20261020L).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+    assert(covered == Set("empty", "all-NULL", "NaN", "numeric", "string"), covered)
+  }
+
 }
