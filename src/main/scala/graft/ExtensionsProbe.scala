@@ -54,8 +54,7 @@ object ExtensionsProbe {
       spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("v")))
     graft.etl.TxTable.mergeUpsert(spark,  root,
       spark.range(5).select(col("id").as("k"), (col("id") * 1000).as("v")), "k")
-    val cv = graft.etl.TxTable.compact(spark, root,
-      targetBytes = 2048, clusterBy = Seq("k"))
+    graft.etl.TxTable.compact(spark, root, targetBytes = 2048, clusterBy = Seq("k"))
     // time travel: version 0 predates the upsert
     val v0 = spark.sql(s"SELECT sum(v) AS s FROM graft_table('$root', 0)")
       .head.getLong(0)
@@ -64,17 +63,19 @@ object ExtensionsProbe {
       .head.getLong(0)
     require(vLatest == (5L until 1000L).map(_ * 2).sum + (0L until 5L).map(_ * 1000).sum,
       "graft_table latest")
-    // pruned range scan: manifest-level skipping + the exact predicate
-    val (_, droppedDirs) = graft.etl.TxTable.pruneDirs(root, "k", 100, 110, cv)
-    require(droppedDirs > 0, "clustered compact produced nothing to prune")
+    // pruned range read: the WHERE clause reaches the connector's scan,
+    // which skips dirs at the manifest level; Spark applies the exact
+    // predicate on top
     val ranged = spark.sql(
-      s"SELECT k, v FROM graft_table_scan('$root', 'k', 100, 110) ORDER BY k").collect()
+      s"SELECT k, v FROM graft_table('$root') WHERE k BETWEEN 100 AND 110 ORDER BY k").collect()
+    val droppedDirs = graft.sources.GraftTableSource.lastPrunedDirs.get
+    require(droppedDirs > 0, "graft_table WHERE pruned no dirs of the clustered compact")
     require(ranged.length == 11 && ranged.forall(x => x.getLong(1) == 2 * x.getLong(0)),
-      "graft_table_scan range")
+      "graft_table range")
     require(spark.sql(
-      s"SELECT count(*) AS n FROM graft_table_scan('$root', 'k', 50000, 60000)")
-      .head.getLong(0) == 0, "graft_table_scan all-pruned range")
-    // round 17: string bounds dispatch to the DirStrStat scan
+      s"SELECT count(*) AS n FROM graft_table('$root') WHERE k BETWEEN 50000 AND 60000")
+      .head.getLong(0) == 0, "graft_table all-pruned range")
+    // string bounds prune on the DirStrStat records
     val sroot = java.nio.file.Files.createTempDirectory("graft-extprobe-s").toString + "/t"
     graft.etl.TxTable.refresh(spark, sroot, spark.range(3)
       .select(col("id").as("k"), org.apache.spark.sql.functions.lit("en").as("lang")))
@@ -82,8 +83,8 @@ object ExtensionsProbe {
     graft.etl.TxTable.append(spark, sroot, spark.range(2)
       .select(col("id").as("k"), org.apache.spark.sql.functions.lit("fr").as("lang")))
     require(spark.sql(
-      s"SELECT count(*) AS n FROM graft_table_scan('$sroot', 'lang', 'en', 'en')")
-      .head.getLong(0) == 3, "graft_table_scan string bounds")
+      s"SELECT count(*) AS n FROM graft_table('$sroot') WHERE lang BETWEEN 'en' AND 'en'")
+      .head.getLong(0) == 3, "graft_table string bounds")
     val hist = spark.sql(
       s"SELECT version, action FROM graft_table_history('$sroot') ORDER BY version").collect()
     require(hist.map(r => (r.getLong(0), r.getString(1))).toSeq ==

@@ -95,16 +95,17 @@ import scala.jdk.CollectionConverters._
   * `v<N>.stats.json` sidecar (written after the manifest wins; carried
   * forward for dirs a later commit keeps, since dirs are immutable).
   * [[compact]] with `clusterBy` range-clusters each partition group
-  * into per-bucket dirs with exact stats, and [[scan]] prunes
-  * non-overlapping dirs at the manifest level before Spark ever lists
-  * a file — the [[pruneDirs]] decision never drops a dir without a
-  * stat on the queried column, so skipping is always sound. Round 17
-  * extends the family: STRING columns record truncated code-point-order
-  * min/max ([[DirStrStat]]), and [[setBloomColumns]] adds per-dir Bloom
-  * filters for hash-like keys where every dir's range spans the whole
-  * key space — equality/IN predicates ([[lookup]], or WHERE clauses
-  * through `format("graft")`) prune on "no candidate might be
-  * contained", sound because Bloom filters have no false negatives.
+  * into per-bucket dirs with exact stats, and a filtered
+  * `spark.read.format("graft")` read prunes non-overlapping dirs at the
+  * manifest level before Spark ever lists a file — the
+  * [[pruneSnapshot]] decision never drops a dir without a stat on the
+  * queried column, so skipping is always sound. Round 17 extends the
+  * family: STRING columns record truncated code-point-order min/max
+  * ([[DirStrStat]]), and [[setBloomColumns]] adds per-dir Bloom filters
+  * for hash-like keys where every dir's range spans the whole key
+  * space — equality/IN predicates in a connector read's WHERE clause
+  * prune on "no candidate might be contained", sound because Bloom
+  * filters have no false negatives.
   *
   * The reference's `drop_old=True` full refresh (seed_milvus.py:75) is
   * the special case [[refresh]]: a commit whose manifest lists only
@@ -736,9 +737,10 @@ object TxTable {
   }
 
   /** Snapshot read — `version` -1 reads latest (time travel: pass any
-    * committed version). An empty table reads as an empty frame only if
-    * the caller supplies a prototype; otherwise it throws (no schema to
-    * invent). */
+    * committed version). It scans every listed dir and prunes nothing:
+    * a filtered read that should skip dirs by their stats goes through
+    * the connector, `spark.read.format("graft").load(root).where(...)`
+    * ([[graft.sources.GraftTableSource]]). */
   def read(spark: SparkSession, root: String, version: Long = -1L): DataFrame = {
     val s = snapshot(root, version)
     readDirs(spark, root, s, s.dirs)
@@ -1048,11 +1050,12 @@ object TxTable {
     * writer that adds a whole-table entry, which a partition-scoped
     * layout refuses; `txn` tags the commit with (appId, batchId) and
     * makes a replayed batch a no-op. On a table that does not exist yet,
-    * the attempt's base is an empty version -1 declaring `statsCols`, so
-    * the first commit declares them as [[create]] would, without
-    * create's empty version 0. */
+    * the attempt's base is an empty version -1 declaring `statsCols` and
+    * `bloomCols`, so the first commit declares them as [[create]] would,
+    * without create's empty version 0. */
   private def commitLoop(spark: SparkSession, root: String, wholeTable: String = "",
-                         txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil)(
+                         txn: Option[(String, Long)] = None, statsCols: Seq[String] = Nil,
+                         bloomCols: Seq[String] = Nil)(
       attempt: Option[Snapshot] => Attempt): Long = {
     txn.foreach { case (appId, _) =>
       require(appId.nonEmpty, "appId must be non-empty")
@@ -1067,7 +1070,8 @@ object TxTable {
     while (committed < 0) {
       val baseV = latestVersion(root)
       val base = if (baseV >= 0) Some(snapshot(root, baseV))
-                 else Option.when(statsCols.nonEmpty)(Snapshot(-1L, "create", Nil, statsCols = statsCols))
+                 else Option.when(statsCols.nonEmpty || bloomCols.nonEmpty)(
+                   Snapshot(-1L, "create", Nil, statsCols = statsCols, bloomCols = bloomCols))
       // a whole-table ("") entry on a partition-scoped layout makes
       // every later scoped merge fail its partitioned-history check —
       // permanently. Fail THIS call instead (refresh is exempt: a full
@@ -1112,17 +1116,27 @@ object TxTable {
     refreshDeclaring(spark, root, df, evolve, Nil)
 
   /** [[refresh]]; on a table that does not exist yet, the commit declares
-    * `statsCols` ([[Gold]] declares its key). */
-  private[etl] def refreshDeclaring(spark: SparkSession, root: String, df: DataFrame,
-                                    evolve: Boolean, statsCols: Seq[String]): Long =
-    commitLoop(spark, root, statsCols = statsCols) { base =>
+    * `statsCols` and `bloomCols` ([[Gold]] declares its key, a
+    * `df.write.format("graft")` its skipping options). */
+  private[graft] def refreshDeclaring(spark: SparkSession, root: String, df: DataFrame,
+                                      evolve: Boolean, statsCols: Seq[String],
+                                      bloomCols: Seq[String] = Nil): Long =
+    commitLoop(spark, root, statsCols = statsCols, bloomCols = bloomCols) { base =>
       written(root, base, "refresh", df, resolveSchema(root, base, df, evolve))
     }
 
   /** Append-only commit: prior snapshot's dirs + the new batch. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              evolve: Boolean = false): Long =
-    commitLoop(spark, root, wholeTable = "append")(appending(root, batch, evolve))
+    appendDeclaring(spark, root, batch, evolve, Nil, Nil)
+
+  /** [[append]]; on a table that does not exist yet, the commit declares
+    * `statsCols` and `bloomCols`. */
+  private[graft] def appendDeclaring(spark: SparkSession, root: String, batch: DataFrame,
+                                     evolve: Boolean, statsCols: Seq[String],
+                                     bloomCols: Seq[String]): Long =
+    commitLoop(spark, root, wholeTable = "append", statsCols = statsCols,
+      bloomCols = bloomCols)(appending(root, batch, evolve))
 
   /** Idempotent append for replayable writers (Delta's `txn` recipe —
     * the streaming-sink contract): commit `batch` tagged with
@@ -1525,36 +1539,19 @@ object TxTable {
       .reduce(_ + _)
   }
 
-  /** Manifest-level data skipping (the Delta paper's §4.3 read path):
-    * which of `version`'s dirs can contain rows with `col` in
-    * [lo, hi]? A dir with a recorded stat is dropped when its range
-    * cannot overlap; a dir WITHOUT a stat on `col` is always kept
-    * (stats are advisory). Returns (kept dirs, dropped count). */
-  def pruneDirs(root: String, col: String, lo: Double, hi: Double,
-                version: Long = -1L): (Seq[String], Int) =
-    pruneOf(root, snapshot(root, version), col, lo, hi)
-
-  /** [[pruneDirs]] against an already-resolved snapshot (so [[scan]]
-    * resolves exactly once — a concurrent commit or vacuum between two
-    * resolutions could otherwise mix versions; r16 advisor). The
-    * overlap test is the NEGATED-disjoint form `!(max < lo || min >
-    * hi)`: comparisons against a NaN stat are false, so a NaN-polluted
-    * sidecar KEEPS its dir — the direct `max >= lo && min <= hi` form
-    * silently dropped dirs whose finite rows overlap (r16 advisor's
-    * soundness finding; fresh stats never record NaN, this guards
-    * sidecars written by older builds). */
-  private def pruneOf(root: String, s: Snapshot, col: String,
-                      lo: Double, hi: Double): (Seq[String], Int) =
-    pruneSnapshot(root, s, Map(col -> (lo, hi)))
-
-  /** Multi-column conjunctive prune against a resolved snapshot: a dir
-    * is dropped iff SOME constrained column's recorded range cannot
-    * overlap its [lo, hi] — the manifest-level translation of a
-    * conjunction of range predicates (the shape a query's pushed
-    * filters take in the [[graft.sources.GraftTableSource]] connector).
-    * Per column the test is the same NaN-safe negated-disjoint form as
-    * [[pruneDirs]]; an unconstrained or unstatted (dir, col) never
-    * drops a dir, so skipping stays sound for ANY ranges map. */
+  /** Manifest-level data skipping (the Delta paper's §4.3 read path),
+    * the one prune decision of every reader and rewriter: which of the
+    * resolved snapshot's dirs can hold rows matching a conjunction of
+    * per-column [lo, hi] ranges, string ranges and point sets (the
+    * shape a query's pushed filters take in the
+    * [[graft.sources.GraftTableSource]] connector)? A dir is dropped iff
+    * SOME constrained column's recorded stat rules it out; an
+    * unconstrained or unstatted (dir, col) never drops a dir, so
+    * skipping stays sound for ANY constraint maps. The range test is
+    * the NEGATED-disjoint form `!(max < lo || min > hi)`: comparisons
+    * against a NaN stat are false, so a NaN-polluted sidecar KEEPS its
+    * dir (fresh stats never record NaN; this guards sidecars written by
+    * older builds). Returns (kept dirs, dropped count). */
   def pruneSnapshot(root: String, s: Snapshot,
                     ranges: Map[String, (Double, Double)],
                     strRanges: Map[String, (String, Option[String])] = Map.empty,
@@ -1591,23 +1588,6 @@ object TxTable {
     (kept, s.dirs.length - kept.length)
   }
 
-  /** Point lookup through the per-dir Bloom filters: reads ONLY the
-    * dirs whose filter might contain `value` (plus unfiltered dirs),
-    * then applies the exact predicate — the O(matching dirs) "is this
-    * key already present?" probe an ingest/dedup pipeline runs per
-    * batch, instead of an O(table) scan. Result ≡
-    * `read(...).filter(col === value)` by construction. */
-  def lookup(spark: SparkSession, root: String, column: String,
-             value: Any, version: Long = -1L): DataFrame = {
-    val s = snapshot(root, version)
-    val (kept, _) = pruneSnapshot(root, s, Map.empty, Map.empty,
-      Map(column -> Seq(value)))
-    val base =
-      if (kept.nonEmpty) readDirs(spark, root, s, kept)
-      else readDirs(spark, root, s, s.dirs).limit(0)
-    base.filter(col(column) === org.apache.spark.sql.functions.lit(value))
-  }
-
   /** The table's schema at `version`: the manifest's recorded DDL when
     * the contract is active (no file I/O beyond the manifest), else the
     * parquet footers of the snapshot's dirs (pre-contract tables). */
@@ -1616,39 +1596,6 @@ object TxTable {
     val s = snapshot(root, version)
     if (s.schemaDdl.nonEmpty) org.apache.spark.sql.types.StructType.fromDDL(s.schemaDdl)
     else spark.read.parquet(s.dirs.map(d => s"$root/$d"): _*).schema
-  }
-
-  /** Stats-pruned range scan: reads ONLY the dirs whose recorded
-    * min/max can overlap [lo, hi], then applies the exact predicate —
-    * result ≡ `read(...).filter(col between lo and hi)` by
-    * construction (pruned dirs cannot contain matching rows; kept dirs
-    * still filter row-by-row). After a [[compact]] with `clusterBy`,
-    * a narrow range touches O(range/bucket-width) dirs of the table
-    * however many dirs it has. */
-  def scan(spark: SparkSession, root: String, column: String,
-           lo: Double, hi: Double, version: Long = -1L): DataFrame = {
-    val s = snapshot(root, version)
-    val (kept, _) = pruneOf(root, s, column, lo, hi)
-    val base =
-      if (kept.nonEmpty) readDirs(spark, root, s, kept)
-      else // all dirs pruned: an empty frame still needs the table's schema
-        readDirs(spark, root, s, s.dirs).limit(0)
-    base.filter(col(column).cast("double").between(lo, hi))
-  }
-
-  /** [[scan]] for a STRING column: prunes on the [[DirStrStat]] sidecar
-    * records (code-point order — the order Spark's `BETWEEN` uses on
-    * strings, so the exact row predicate and the dir-level prune agree)
-    * then applies the exact predicate. Result ≡
-    * `read(...).filter(col between lo and hi)` by construction. */
-  def scanString(spark: SparkSession, root: String, column: String,
-                 lo: String, hi: String, version: Long = -1L): DataFrame = {
-    val s = snapshot(root, version)
-    val (kept, _) = pruneSnapshot(root, s, Map.empty, Map(column -> (lo, Some(hi))))
-    val base =
-      if (kept.nonEmpty) readDirs(spark, root, s, kept)
-      else readDirs(spark, root, s, s.dirs).limit(0)
-    base.filter(col(column).between(lo, hi))
   }
 
   /** Declare (or re-declare) the table's data-skipping stats columns —
@@ -1895,8 +1842,8 @@ object TxTable {
   }
 
   /** Row-level DELETE of a numeric range (`column` in [lo, hi]) —
-    * range stats prune the rewrite set the same way [[scan]] prunes
-    * reads; e.g. dropping a bad ingest day from a date-clustered
+    * range stats prune the rewrite set the same way they prune
+    * connector reads; e.g. dropping a bad ingest day from a date-clustered
     * table rewrites O(that day's dirs). NULLs never match a range and
     * are kept. */
   def deleteRange(spark: SparkSession, root: String, column: String,

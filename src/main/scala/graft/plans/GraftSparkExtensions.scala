@@ -30,15 +30,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Injected TABLE functions (round 17 — the [[graft.etl.TxTable]]
   * format's SQL surface, so time travel and data skipping are reachable
   * without Scala):
-  *  - `graft_table('path'[, version])` — snapshot read of a TxTable;
-  *    `version` = -1 / omitted reads latest, any committed version time
-  *    travels.
-  *  - `graft_table_scan('path', 'column', lo, hi[, version])` — the
-  *    stats-pruned range scan: dirs whose recorded min/max cannot
-  *    overlap [lo, hi] are pruned at the MANIFEST level before Spark
-  *    lists a file; the exact row predicate is part of the returned
-  *    plan, so the result ≡ `graft_table(path) WHERE column BETWEEN lo
-  *    AND hi`. String lo/hi literals dispatch to the string-stat scan.
+  *  - `graft_table('path'[, version])` — snapshot read of a TxTable
+  *    through the `format("graft")` connector; `version` = -1 / omitted
+  *    reads latest, any committed version time travels. A WHERE clause
+  *    on it pushes into the connector's scan, so `graft_table(p) WHERE
+  *    k BETWEEN lo AND hi` prunes dirs whose recorded stats cannot
+  *    match at the MANIFEST level before Spark lists a file.
   *  - `graft_table_history('path')` — the commit history, newest first
   *    (version, action, dir counts, partitions, commit time).
   * Arguments must be literals: a table function resolves to a logical
@@ -88,38 +85,13 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_table",
         "graft_table(path[, version]) - snapshot read of a TxTable (time travel via version)"),
       (exprs: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
+        val reader = org.apache.spark.sql.SparkSession.active.read.format("graft")
         val path = litStr(exprs, 0, "graft_table", "path")
         val version =
           if (exprs.length > 1) GraftExpressions.litLong(exprs(1), "graft_table", "version")
           else -1L
-        graft.etl.TxTable.read(spark, path, version).queryExecution.logical
-      }))
-    ext.injectTableFunction((FunctionIdentifier("graft_table_scan"),
-      info("graft_table_scan",
-        "graft_table_scan(path, column, lo, hi[, version]) - stats-pruned range scan of a TxTable"),
-      (exprs: Seq[Expression]) => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        val path = litStr(exprs, 0, "graft_table_scan", "path")
-        val column = litStr(exprs, 1, "graft_table_scan", "column")
-        val version =
-          if (exprs.length > 4) GraftExpressions.litLong(exprs(4), "graft_table_scan", "version")
-          else -1L
-        // bound type picks the stat family: string literals scan the
-        // DirStrStat (code-point order) sidecar records, numerics the
-        // numeric ones
-        val scanned =
-          if (exprs.length > 2 &&
-              exprs(2).dataType.isInstanceOf[org.apache.spark.sql.types.StringType]) {
-            val lo = litStr(exprs, 2, "graft_table_scan", "lo")
-            val hi = litStr(exprs, 3, "graft_table_scan", "hi")
-            graft.etl.TxTable.scanString(spark, path, column, lo, hi, version)
-          } else {
-            val lo = litNum(exprs, 2, "graft_table_scan", "lo")
-            val hi = litNum(exprs, 3, "graft_table_scan", "hi")
-            graft.etl.TxTable.scan(spark, path, column, lo, hi, version)
-          }
-        scanned.queryExecution.logical
+        (if (version >= 0) reader.option("versionAsOf", version) else reader)
+          .load(path).queryExecution.logical
       }))
     ext.injectTableFunction((FunctionIdentifier("graft_table_history"),
       info("graft_table_history",
@@ -148,16 +120,5 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     require(e.foldable && e.dataType.isInstanceOf[org.apache.spark.sql.types.StringType],
       s"$fn: '$arg' must be a literal string")
     e.eval().toString
-  }
-
-  private def litNum(exprs: Seq[Expression], i: Int, fn: String, arg: String): Double = {
-    require(i < exprs.length, s"$fn: missing argument '$arg'")
-    val e = exprs(i)
-    require(e.foldable, s"$fn: '$arg' must be a numeric literal")
-    e.eval() match {
-      case n: Number => n.doubleValue()
-      case d: java.math.BigDecimal => d.doubleValue()
-      case v => throw new IllegalArgumentException(s"$fn: '$arg' is not numeric: $v")
-    }
   }
 }

@@ -6,48 +6,138 @@ import org.apache.spark.sql.{GraftParquetBridge, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, SupportsAdmissionControl, Offset => V2Offset}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** The shared tail-semantics core behind BOTH graft streaming read
-  * paths — the DSv1 [[GraftTailSource]] (path loads under
-  * `useV1SourceList` / `disabledV2MicroBatchReaders`) and the DSv2
-  * [[GraftMicroBatchStream]] (the default for path loads and the only
-  * path for name-based `spark.readStream.table("graft.ns.t")`). One
-  * implementation of the three load-bearing contracts means the two
-  * engines cannot drift:
+/** A graft stream offset: the bare table version as JSON — byte-equal
+  * to Spark's `LongOffset` wire format, so a checkpoint whose offset
+  * log holds `LongOffset`s resumes unchanged. */
+private[sources] final case class GraftVersionOffset(version: Long)
+    extends V2Offset {
+  override def json: String = version.toString
+}
+
+/** The one tailing engine over a [[TxTable]] commit log: the DSv2
+  * micro-batch stream behind `spark.readStream.format("graft").load(path)`
+  * and `spark.readStream.table("graft.ns.t")`, reader options flowing
+  * through the scan builder. It follows the Delta streaming-source
+  * recipe (Armbrust et al. §4.4: "treat the log as a message queue"):
   *
-  *  - offset = table version, batch = dirs versions (from, to] ADDED
-  *    (immutable dirs + dense versions make the range replay-stable);
-  *  - the structural rewrite hazard (a version that DROPS a
-  *    predecessor dir fails the stream unless `ignoreChanges`
-  *    re-emits its fresh dirs at-least-once);
-  *  - vacuum interplay (a FRESH stream bootstraps past vacuumed
-  *    history — the first retained version is a full snapshot; a
-  *    RESUMED stream finding a vacuumed version fails loudly, because
-  *    the diff against already-emitted rows is lost).
+  *  - offset = table version, batch = the dirs versions (from, to]
+  *    ADDED (immutable dirs + dense versions make the range
+  *    replay-stable, so the checkpoint's offset log gives exactly-once
+  *    per committed dir across restarts);
+  *  - a version REWRITES rows iff it DROPS a dir its predecessor listed
+  *    (refresh/compact/merge/delete have this shape; an append, a
+  *    migrate, a metadata-only commit, or a first commit drop nothing).
+  *    Such a version fails the stream unless `ignoreChanges=true`
+  *    re-emits its fresh dirs (at-least-once on rewritten rows,
+  *    downstream dedupes by key — Delta's documented contract, with its
+  *    `ignoreDeletes` case folded into the one option);
+  *  - a FRESH stream bootstraps past vacuumed history (the first
+  *    retained version is a full snapshot); a RESUMED stream finding a
+  *    vacuumed version fails loudly, because the diff against
+  *    already-emitted rows is lost.
   *
-  * The two paths even share the offset WIRE FORMAT (the bare version
-  * number as the offset JSON) and the `startingVersion=latest` anchor
-  * file location (`<checkpoint>/sources/N/graft-latest-anchor`), so a
-  * checkpoint written by the V1 engine resumes exactly-once under the
-  * V2 engine and vice versa — spec-pinned in GraftSourceSpec.
-  */
-private[sources] object GraftStreamCore {
+  * Options: `startingVersion` = N (tail from version N inclusive;
+  * default: the full committed history) or `"latest"` (only versions
+  * committed after stream start, its anchor persisted under the
+  * checkpoint at `<checkpoint>/sources/N/graft-latest-anchor`);
+  * `ignoreChanges` as above; `maxVersionsPerBatch` = N (admission
+  * control, Delta's `maxFilesPerTrigger` role: a stream restarted after
+  * a week of commits drains the backlog in bounded batches).
+  *
+  * Admission control rides `SupportsAdmissionControl`: the engine
+  * hands [[latestOffset(start:V2Offset,limit:ReadLimit)*]] the PREVIOUS
+  * end offset, so the `maxVersionsPerBatch` cap is applied against
+  * exactly what the offset log has admitted — restart-safe with no
+  * source-side watermark state at all.
+  *
+  * Scale posture: planning a batch is O(versions in the batch) manifest
+  * reads (each O(1) via hinted discovery); the data read itself is
+  * Spark's own vectorized parquet reader over exactly the added dirs —
+  * the same columnar scan the batch connector delegates to, so a
+  * 1000-executor stream reads a micro-batch with the same per-file
+  * parallelism as a batch job over those dirs. */
+final class GraftMicroBatchStream(spark: SparkSession, root: String,
+                                  tableSchema: StructType,
+                                  options: CaseInsensitiveStringMap,
+                                  checkpointLocation: String)
+    extends MicroBatchStream with SupportsAdmissionControl {
 
-  /** Case-insensitive option lookup: V1 hands a `CaseInsensitiveMap`
-    * (already tolerant), the V2 scan hands `asCaseSensitiveMap` — one
-    * lookup rule keeps both paths accepting the documented spellings. */
-  private def opt(parameters: Map[String, String], key: String): Option[String] =
-    parameters.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
+  private val ignoreChanges = Option(options.get("ignoreChanges")).exists(_.trim.toBoolean)
+  private val maxVersions = Option(options.get("maxVersionsPerBatch")).map(_.trim.toLong).map { m =>
+    require(m > 0, s"maxVersionsPerBatch must be positive, got $m"); m
+  }
+  /** Resolved once per stream instance; for `startingVersion=latest`
+    * the durable anchor under the checkpoint makes the value stable
+    * across restarts even when the engine re-asks for initialOffset
+    * (crash before the first offset-log write). */
+  private val startExclusive: Long = GraftMicroBatchStream.resolveStartExclusive(
+    spark, root, Option(options.get("startingVersion")), checkpointLocation)
 
-  def ignoreChanges(parameters: Map[String, String]): Boolean =
-    opt(parameters, "ignoreChanges").exists(_.trim.toBoolean)
+  private def ver(o: V2Offset): Long = o match {
+    case GraftVersionOffset(v) => v
+    case other                 => other.json.trim.toLong
+  }
 
-  def maxVersionsPerBatch(parameters: Map[String, String]): Option[Long] =
-    opt(parameters, "maxVersionsPerBatch").map(_.trim.toLong).map { m =>
-      require(m > 0, s"maxVersionsPerBatch must be positive, got $m"); m
+  override def initialOffset(): V2Offset = GraftVersionOffset(startExclusive)
+
+  override def deserializeOffset(json: String): V2Offset =
+    GraftVersionOffset(json.trim.toLong)
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  /** The engine calls the admission-control overload below; this one
+    * is unreachable while SupportsAdmissionControl is implemented. */
+  override def latestOffset(): V2Offset = throw new UnsupportedOperationException(
+    "latestOffset(start, limit) is the admission-control entry")
+
+  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
+    val base = ver(start)
+    val latest = TxTable.latestVersion(root)
+    val capped = maxVersions match {
+      case Some(m) => math.min(latest, base + m)
+      case None    => latest
     }
+    if (capped <= base) start else GraftVersionOffset(capped)
+  }
 
-  /** Highest version NOT part of the stream (exclusive lower bound).
+  /** Uncapped head of the table, for progress reporting (the lag a
+    * capped stream still has to drain). */
+  override def reportLatestOffset(): V2Offset =
+    GraftVersionOffset(TxTable.latestVersion(root))
+
+  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
+    val from = ver(start)
+    val to = ver(end)
+    // bootstrap = the stream's first batch (fresh start, or a replay
+    // of batch 0 before anything was committed): from is exactly the
+    // initial exclusive bound — the engine hands every later batch a
+    // logged predecessor offset.
+    val fresh = GraftMicroBatchStream.freshDirs(root, from, to,
+      bootstrap = from == startExclusive, ignoreChanges = ignoreChanges)
+    if (fresh.isEmpty) Array.empty
+    else GraftParquetBridge.parquetScan(spark, fresh.map(d => s"$root/$d"),
+      tableSchema, tableSchema, Nil).toBatch.planInputPartitions()
+  }
+
+  /** One factory serves every batch: Spark's parquet reader factory
+    * carries the read schema + conf, not a file list — each batch's
+    * [[InputPartition]]s name their own files. */
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftParquetBridge.parquetScan(spark, Nil, tableSchema, tableSchema, Nil)
+      .toBatch.createReaderFactory()
+
+  override def commit(end: V2Offset): Unit = () // offsets live in the checkpoint
+  override def stop(): Unit = ()
+
+  override def toString: String = s"GraftMicroBatchStream[$root]"
+}
+
+private object GraftMicroBatchStream {
+
+  /** Highest version NOT part of the stream (exclusive lower bound) for
+    * the `startingVersion` option.
     * `latest` is resolved ONCE per stream and persisted in the
     * source's checkpoint metadata dir: re-deriving it on every source
     * re-creation would silently anchor a RESTART at the new latest —
@@ -58,10 +148,10 @@ private[sources] object GraftStreamCore {
     * checkpoint (hdfs:/s3a:) persists it too; a persist failure is
     * LOUD — falling back to re-deriving 'latest' would reintroduce the
     * exact restart data-loss mode the anchor prevents (r17 advisor). */
-  def resolveStartExclusive(spark: SparkSession, root: String,
-                            parameters: Map[String, String],
-                            metadataPath: String): Long =
-    opt(parameters, "startingVersion").map(_.trim) match {
+  private def resolveStartExclusive(spark: SparkSession, root: String,
+                                    startingVersion: Option[String],
+                                    metadataPath: String): Long =
+    startingVersion.map(_.trim) match {
       case None           => -1L // full history
       case Some("latest") =>
         import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -106,8 +196,8 @@ private[sources] object GraftStreamCore {
     * vacuumed predecessor needed for the diff) fails loudly instead —
     * rows were already emitted, so both skipping and re-emission would
     * silently break exactly-once. */
-  def freshDirs(root: String, from: Long, to: Long,
-                bootstrap: Boolean, ignoreChanges: Boolean): Seq[String] = {
+  private def freshDirs(root: String, from: Long, to: Long,
+                        bootstrap: Boolean, ignoreChanges: Boolean): Seq[String] = {
     def gone(v: Long): Nothing = throw new IllegalStateException(
       s"graft stream on $root: version $v was vacuumed under a running " +
         "stream — the diff against already-emitted data is lost; keep " +
@@ -137,105 +227,4 @@ private[sources] object GraftStreamCore {
       }
     }
   }
-}
-
-/** A graft stream offset: the bare table version as JSON — byte-equal
-  * to the DSv1 `LongOffset` wire format, so offset logs written by
-  * either engine deserialize under the other. */
-private[sources] final case class GraftVersionOffset(version: Long)
-    extends V2Offset {
-  override def json: String = version.toString
-}
-
-/** The DSv2 micro-batch read path over a [[TxTable]] commit log — the
-  * engine behind `spark.readStream.table("graft.ns.t")` (name-based,
-  * reader options flowing through the scan builder) and the default
-  * engine for `spark.readStream.format("graft").load(path)`. Semantics
-  * are [[GraftStreamCore]]'s, identical to the DSv1 tail source.
-  *
-  * Admission control rides `SupportsAdmissionControl`: the engine
-  * hands [[latestOffset(start:V2Offset,limit:ReadLimit)*]] the PREVIOUS
-  * end offset, so the `maxVersionsPerBatch` cap is applied against
-  * exactly what the offset log has admitted — restart-safe with no
-  * source-side watermark state at all (the V1 source needs a
-  * `seenThrough` var for the same guarantee).
-  *
-  * Scale posture: planning a batch is O(versions in the batch) manifest
-  * reads (each O(1) via hinted discovery); the data read itself is
-  * Spark's own vectorized parquet reader over exactly the added dirs —
-  * the same columnar scan the batch connector delegates to, so a
-  * 1000-executor stream reads a micro-batch with the same per-file
-  * parallelism as a batch job over those dirs. */
-final class GraftMicroBatchStream(spark: SparkSession, root: String,
-                                  tableSchema: StructType,
-                                  parameters: Map[String, String],
-                                  checkpointLocation: String)
-    extends MicroBatchStream with SupportsAdmissionControl {
-
-  private val ignoreChanges = GraftStreamCore.ignoreChanges(parameters)
-  private val maxVersions = GraftStreamCore.maxVersionsPerBatch(parameters)
-  /** Resolved once per stream instance; for `startingVersion=latest`
-    * the durable anchor under the checkpoint makes the value stable
-    * across restarts even when the engine re-asks for initialOffset
-    * (crash before the first offset-log write). */
-  private val startExclusive: Long = GraftStreamCore.resolveStartExclusive(
-    spark, root, parameters, checkpointLocation)
-
-  private def ver(o: V2Offset): Long = o match {
-    case GraftVersionOffset(v) => v
-    case other                 => other.json.trim.toLong
-  }
-
-  override def initialOffset(): V2Offset = GraftVersionOffset(startExclusive)
-
-  override def deserializeOffset(json: String): V2Offset =
-    GraftVersionOffset(json.trim.toLong)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  /** The engine calls the admission-control overload below; this one
-    * is unreachable while SupportsAdmissionControl is implemented. */
-  override def latestOffset(): V2Offset = throw new UnsupportedOperationException(
-    "latestOffset(start, limit) is the admission-control entry")
-
-  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
-    val base = ver(start)
-    val latest = TxTable.latestVersion(root)
-    val capped = maxVersions match {
-      case Some(m) => math.min(latest, base + m)
-      case None    => latest
-    }
-    if (capped <= base) start else GraftVersionOffset(capped)
-  }
-
-  /** Uncapped head of the table, for progress reporting (the lag a
-    * capped stream still has to drain). */
-  override def reportLatestOffset(): V2Offset =
-    GraftVersionOffset(TxTable.latestVersion(root))
-
-  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
-    val from = ver(start)
-    val to = ver(end)
-    // bootstrap = the stream's first batch (fresh start, or a replay
-    // of batch 0 before anything was committed): from is exactly the
-    // initial exclusive bound. Matches the V1 source's start.isEmpty —
-    // the engine hands every later batch a logged predecessor offset.
-    val fresh = GraftStreamCore.freshDirs(root, from, to,
-      bootstrap = from == startExclusive, ignoreChanges = ignoreChanges)
-    if (fresh.isEmpty) Array.empty
-    else GraftParquetBridge.parquetScan(spark, fresh.map(d => s"$root/$d"),
-      tableSchema, tableSchema, Nil).toBatch.planInputPartitions()
-  }
-
-  /** One factory serves every batch: Spark's parquet reader factory
-    * carries the read schema + conf, not a file list — each batch's
-    * [[InputPartition]]s name their own files. */
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftParquetBridge.parquetScan(spark, Nil, tableSchema, tableSchema, Nil)
-      .toBatch.createReaderFactory()
-
-  override def commit(end: V2Offset): Unit = () // offsets live in the checkpoint
-  override def stop(): Unit = ()
-
-  override def toString: String = s"GraftMicroBatchStream[$root]"
 }

@@ -7,14 +7,14 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.streaming.OutputMode
 
 /** `df.writeStream.format("graft")` — the transactional sink half of
-  * the streaming story (the source half is [[GraftTailSource]]): each
-  * micro-batch commits through the manifest's txn ledger tagged
+  * the streaming story (the source half is [[GraftMicroBatchStream]]):
+  * each micro-batch commits through the manifest's txn ledger tagged
   * (appId, batchId), so the engine's at-least-once `addBatch` replay
   * (crash after the table commit, before the engine's own batch
   * commit) lands EXACTLY ONCE in the table — the replayed batch id is
   * already recorded in the manifest's txn map and the call no-ops.
   * This is Delta's documented sink recipe (txn action + idempotent
-  * writes); together with the tail source, a standing pipeline can
+  * writes); together with the tail stream, a standing pipeline can
   * read a TxTable incrementally, transform, and write a TxTable, with
   * exactly-once on BOTH edges.
   *

@@ -47,9 +47,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    translation does.
   *
   * DSv1 fallback: the same class still implements `RelationProvider`
-  * (a `PrunedFilteredScan` over the identical pruning logic), selected
-  * by adding `graft` to `spark.sql.sources.useV1SourceList` — the
-  * standard per-source V1 escape hatch. `CREATE TEMPORARY VIEW ...
+  * (a `PrunedFilteredScan` over the same [[GraftTableSource.keptDirs]]
+  * prune), selected for batch reads by adding `graft` to
+  * `spark.sql.sources.useV1SourceList` — the standard per-source V1
+  * escape hatch; there is no V1 streaming source. `CREATE TEMPORARY VIEW ...
   * USING graft` always resolves through the V1 relation (Spark's
   * `CreateTempViewUsing` is a V1 path); such a view pins its snapshot
   * AND schema at view creation — later commits, including the view's
@@ -68,20 +69,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `evolve=true` permits a schema change (the table contract's
   * enforcement/evolution split). Options `statsColumns` /
   * `bloomColumns` (comma-separated) declare the table's data-skipping
-  * columns as part of the FIRST write — the pure-SQL/DataFrame route to
-  * [[TxTable.setStatsColumns]]/[[TxTable.setBloomColumns]], so a
-  * connector-only user gets skipping without Scala calls; on an
-  * existing table they re-declare (idempotent if unchanged).
+  * columns, so a connector-only user gets skipping without Scala calls:
+  * a write that creates the table declares them in its own commit
+  * (version 0 carries the stats its write observed and the Bloom
+  * filters of its dir); on an existing table that declares other
+  * columns, [[TxTable.setStatsColumns]]/[[TxTable.setBloomColumns]]
+  * re-declare them after the data commit.
+  *
+  * Streaming: `readStream.format("graft")` plans the table's
+  * `MICRO_BATCH_READ` capability, the DSv2 [[GraftMicroBatchStream]] —
+  * the one tailing engine, for path and name-based reads alike; the
+  * streaming sink is [[GraftTableSink]] (`writeStream`).
   *
   * Options: `path` (required), `versionAsOf` (read; default latest),
-  * `evolve`, `statsColumns`, `bloomColumns` (write). Streaming reads
-  * live in [[GraftTailSource]]; the streaming sink in
-  * [[GraftTableSink]] (same format name via `readStream`/
-  * `writeStream`).
+  * `evolve`, `statsColumns`, `bloomColumns` (write).
   */
 class GraftTableSource extends TableProvider
     with RelationProvider with CreatableRelationProvider
-    with StreamSourceProvider with StreamSinkProvider with DataSourceRegister {
+    with StreamSinkProvider with DataSourceRegister {
 
   override def shortName(): String = "graft"
 
@@ -134,45 +139,28 @@ class GraftTableSource extends TableProvider
     val spark = data.sparkSession
     def cols(key: String): Seq[String] = parameters.get(key).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val (stats, blooms) = (cols("statsColumns"), cols("bloomColumns"))
     val wrote: Boolean = mode match {
-      case SaveMode.Append    => TxTable.append(spark, root, data, evolve); true
-      case SaveMode.Overwrite => TxTable.refresh(spark, root, data, evolve); true
-      case SaveMode.ErrorIfExists =>
-        if (TxTable.exists(root)) throw new IllegalStateException(
-          s"graft table at $root already exists (SaveMode.ErrorIfExists)")
-        TxTable.refresh(spark, root, data, evolve); true
-      case SaveMode.Ignore =>
-        if (!TxTable.exists(root)) { TxTable.refresh(spark, root, data, evolve); true }
-        else false
+      case SaveMode.Append =>
+        TxTable.appendDeclaring(spark, root, data, evolve, stats, blooms); true
+      case SaveMode.Ignore if TxTable.exists(root) => false
+      case _ => // Overwrite, ErrorIfExists, Ignore on a new table
+        if (mode == SaveMode.ErrorIfExists && TxTable.exists(root))
+          throw new IllegalStateException(
+            s"graft table at $root already exists (SaveMode.ErrorIfExists)")
+        TxTable.refreshDeclaring(spark, root, data, evolve, stats, blooms); true
     }
-    // declare AFTER the data commit: setStats/setBloom backfill stats
-    // for every existing dir (dirs are immutable, so backfilled stats
-    // are exact), so the just-written dirs are covered too and every
-    // later commit stats its own fresh dirs
+    // a write that created the table declared the columns in its own
+    // commit; on a table that declares others, re-declare AFTER the data
+    // commit: setStats/setBloom backfill every dir that lacks them (dirs
+    // are immutable, so backfilled stats are exact)
     if (wrote) {
-      val stats = cols("statsColumns")
-      val blooms = cols("bloomColumns")
-      if (stats.nonEmpty) TxTable.setStatsColumns(spark, root, stats)
-      if (blooms.nonEmpty) TxTable.setBloomColumns(spark, root, blooms)
+      val s = TxTable.snapshot(root)
+      if (stats.nonEmpty && s.statsCols != stats) TxTable.setStatsColumns(spark, root, stats)
+      if (blooms.nonEmpty && s.bloomCols != blooms) TxTable.setBloomColumns(spark, root, blooms)
     }
     GraftTableRelation(sqlContext, root, GraftTableSource.resolveVersion(root, -1L))
   }
-
-  // --- streaming (readStream.format("graft")): see GraftTailSource ---
-
-  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String]): (String, StructType) = {
-    val root = pathOf(parameters)
-    val resolved = schema.getOrElse(
-      TxTable.tableSchema(sqlContext.sparkSession, root))
-    (s"graft[$root]", resolved)
-  }
-
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source =
-    GraftTailSource(sqlContext, pathOf(parameters), schema, parameters, metadataPath)
 
   // --- streaming write (writeStream.format("graft")): see GraftTableSink ---
 
@@ -228,8 +216,8 @@ class GraftTableSource extends TableProvider
   * the same transactional append/refresh commits, while `df.write`
   * keeps falling back to the V1 `CreatableRelationProvider` SaveMode
   * path (ErrorIfExists/Ignore semantics, skip-column options);
-  * `readStream`/`writeStream` fall back to the V1 streaming
-  * source/sink. */
+  * `readStream` plans [[GraftMicroBatchStream]] through the scan, and
+  * `writeStream` falls back to the V1 sink. */
 final case class GraftTable(root: String, versionAsOf: Long)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -455,19 +443,7 @@ final class GraftScan(spark: SparkSession, root: String,
   @volatile private var cachedInner: Scan = null
 
   private def buildInner(): Scan = {
-    val all = pushed ++ runtimeFilters
-    val ranges = GraftTableSource.conjunctiveRanges(all)
-    val strRanges = GraftTableSource.conjunctiveStrRanges(all)
-    // Bloom point-probing is per-value-per-dir: a runtime join side can
-    // carry millions of distinct keys, where probing costs more than it
-    // saves — cap the list (dropping a points constraint only KEEPS
-    // more dirs, always sound; the min/max ranges above still prune
-    // from the same IN list at any size)
-    val points = GraftTableSource.conjunctivePoints(all)
-      .filter(_._2.length <= GraftScan.MaxBloomProbeValues)
-    val (kept, pruned) = TxTable.pruneSnapshot(root, snap, ranges, strRanges, points)
-    GraftTableSource.lastKeptDirs.set(kept.length)
-    GraftTableSource.lastPrunedDirs.set(pruned)
+    val kept = GraftTableSource.keptDirs(root, snap, pushed ++ runtimeFilters)
     val attrs = tableSchema.fields
       .map(f => f.name -> ce.AttributeReference(f.name, f.dataType, f.nullable)())
       .toMap
@@ -495,19 +471,13 @@ final class GraftScan(spark: SparkSession, root: String,
   override def toBatch: org.apache.spark.sql.connector.read.Batch = this
 
   /** The DSv2 streaming read: `spark.readStream.table("graft.ns.t")`
-    * and (by default) `readStream.format("graft").load(path)` both
+    * and `readStream.format("graft").load(path)` both
     * land here — reader options (`startingVersion`, `ignoreChanges`,
-    * `maxVersionsPerBatch`) flow through this scan's options, which
-    * the name-based path could never deliver to a V1 fallback source
-    * (Spark builds the fallback relation with EMPTY options).
-    * Semantics are [[GraftStreamCore]]'s, shared verbatim with the V1
-    * tail source; the micro-batch stream tails LATEST, not this scan's
-    * pinned snapshot — streams follow the log, snapshots pin reads. */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    import scala.jdk.CollectionConverters._
-    new GraftMicroBatchStream(spark, root, tableSchema,
-      options.asCaseSensitiveMap().asScala.toMap, checkpointLocation)
-  }
+    * `maxVersionsPerBatch`) flow through this scan's options. The
+    * micro-batch stream tails LATEST, not this scan's pinned snapshot —
+    * streams follow the log, snapshots pin reads. */
+  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new GraftMicroBatchStream(spark, root, tableSchema, options, checkpointLocation)
   override def planInputPartitions(): Array[InputPartition] =
     inner.toBatch.planInputPartitions()
   override def createReaderFactory(): PartitionReaderFactory =
@@ -561,12 +531,7 @@ final case class GraftTableRelation(sqlContext: SQLContext, root: String,
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    val ranges = GraftTableSource.conjunctiveRanges(filters)
-    val strRanges = GraftTableSource.conjunctiveStrRanges(filters)
-    val points = GraftTableSource.conjunctivePoints(filters)
-    val (kept, pruned) = TxTable.pruneSnapshot(root, snap, ranges, strRanges, points)
-    GraftTableSource.lastKeptDirs.set(kept.length)
-    GraftTableSource.lastPrunedDirs.set(pruned)
+    val kept = GraftTableSource.keptDirs(root, snap, filters)
     val base =
       if (kept.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -678,11 +643,29 @@ object GraftScan {
 
 object GraftTableSource {
 
-  /** Last buildScan's manifest-level skip counts (test/probe
-    * observability, same role as TxTable's resolution counters). Set by
-    * both the DSv2 scan build and the DSv1 buildScan. */
+  /** Last scan's manifest-level skip counts (test/probe observability,
+    * same role as TxTable's resolution counters), set by [[keptDirs]]. */
   private[graft] val lastKeptDirs = new java.util.concurrent.atomic.AtomicInteger
   private[graft] val lastPrunedDirs = new java.util.concurrent.atomic.AtomicInteger
+
+  /** The snapshot's dirs a conjunction of filters can match — the one
+    * filter-to-prune translation of both batch scans (the DSv2
+    * [[GraftScan]] and the DSv1 [[GraftTableRelation]]): numeric ranges,
+    * string ranges and Bloom point sets into [[TxTable.pruneSnapshot]].
+    * Bloom point-probing is per-value-per-dir, and a runtime join side
+    * can carry millions of distinct keys, where probing costs more than
+    * it saves: a point set past [[GraftScan.MaxBloomProbeValues]] is
+    * dropped (that only KEEPS more dirs, always sound; the min/max
+    * ranges still prune from the same IN list at any size). */
+  private[graft] def keptDirs(root: String, snap: TxTable.Snapshot,
+                              filters: Array[Filter]): Seq[String] = {
+    val points = conjunctivePoints(filters).filter(_._2.length <= GraftScan.MaxBloomProbeValues)
+    val (kept, pruned) = TxTable.pruneSnapshot(root, snap,
+      conjunctiveRanges(filters), conjunctiveStrRanges(filters), points)
+    lastKeptDirs.set(kept.length)
+    lastPrunedDirs.set(pruned)
+    kept
+  }
 
   /** Pin `latest` to a concrete version at relation/table CREATION
     * (O(1) hinted discovery), so the pinned version participates in the

@@ -5,23 +5,17 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` API surface for graft's native
   * Catalyst expressions (Column <-> Expression conversion and function
-  * registration) and its V1 streaming source (batch plan -> streaming
-  * frame, the same `internalCreateDataFrame(isStreaming = true)` call
-  * Spark's own FileStreamSource.getBatch makes). Kept to one-liners so
-  * the private-API contact area is explicit and auditable. */
+  * registration) and its V1 streaming sink (streaming batch -> writable
+  * batch frame). Kept to one-liners so the private-API contact area is
+  * explicit and auditable. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def register(spark: SparkSession, name: String,
                builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-  def streamingFrame(df: Dataset[Row]): DataFrame = {
-    val c = df.asInstanceOf[classic.Dataset[Row]]
-    c.sparkSession.internalCreateDataFrame(c.queryExecution.toRdd, c.schema, isStreaming = true)
-  }
-  // the reverse direction, for a V1 Sink's addBatch frame: re-wrap the
-  // incremental plan's rows as a writable BATCH frame (df.write on the
-  // streaming frame itself throws)
+  // a V1 Sink's addBatch frame: re-wrap the incremental plan's rows as
+  // a writable BATCH frame (df.write on the streaming frame itself throws)
   def batchFrame(df: Dataset[Row]): DataFrame = {
     val c = df.asInstanceOf[classic.Dataset[Row]]
     c.sparkSession.internalCreateDataFrame(c.queryExecution.toRdd, c.schema, isStreaming = false)

@@ -944,4 +944,83 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
     assert(n("hdfs://nn:8020/ckpt/q1/") == "hdfs://nn:8020/ckpt/q1")
     assert(n("hdfs://nn2:8020/warehouse/ckpt") == "hdfs://nn2:8020/warehouse/ckpt")
   }
+
+  test("a write that creates the table declares statsColumns/bloomColumns in version 0, stats from the write") {
+    import spark.implicits._
+    val rows = (0L until 100L).map(k => (k, f"h-$k%03d")).toDF("k", "sha")
+    def jobs(body: => Unit): Int = org.apache.spark.JobCounter(spark.sparkContext)(body)._2
+    val plainJobs = jobs(rows.write.format("graft").save(tmp("decl-plain")))
+    // stats only: the data commit's own write observes them, no read-back
+    for (mode <- Seq(SaveMode.ErrorIfExists, SaveMode.Append)) {
+      val root = tmp(s"decl-$mode")
+      val n = jobs(rows.write.format("graft").mode(mode).option("statsColumns", "k").save(root))
+      assert(n == plainJobs, s"$mode: $n jobs against $plainJobs for a plain write")
+      val s = TxTable.snapshot(root)
+      assert(TxTable.latestVersion(root) == 0 && s.statsCols == Seq("k"))
+      assert(TxTable.readStats(root, 0).map(st => (st.dir, st.col, st.min, st.max)) ==
+        Seq((s.dirs.head, "k", 0.0, 99.0)))
+    }
+    // stats and bloom: still one version, the dir carries both
+    val root = tmp("decl-both")
+    rows.write.format("graft").option("statsColumns", "k").option("bloomColumns", "sha").save(root)
+    val s = TxTable.snapshot(root)
+    assert(TxTable.latestVersion(root) == 0 && s.action == "refresh" &&
+      s.statsCols == Seq("k") && s.bloomCols == Seq("sha"))
+    assert(TxTable.readStats(root, 0).exists(st => st.col == "k" && st.max == 99.0))
+    assert(TxTable.readBloom(root, s.dirs.head, "sha").exists(_.mightContain("h-042")))
+    // the same options on a table that declares them commit nothing more
+    rows.write.format("graft").mode(SaveMode.Append)
+      .option("statsColumns", "k").option("bloomColumns", "sha").save(root)
+    assert(TxTable.latestVersion(root) == 1 && TxTable.snapshot(root).action == "append")
+  }
+
+  test("BIGINT at 2^53: typed bounds prune and return exact rows; Double bounds read unpruned") {
+    import spark.implicits._
+    val p53 = 1L << 53
+    val root = tmp("p53")
+    Seq(1L, 2L).toDF("k").write.format("graft").option("statsColumns", "k").save(root)
+    // 2^53 + 1 has no Double: its dir's stat rounds onto 2^53; 2^53 + 4 is exact
+    for (k <- Seq(p53, p53 + 1, p53 + 4))
+      Seq(k).toDF("k").write.format("graft").mode(SaveMode.Append).save(root)
+    val t = spark.read.format("graft").load(root)
+    def keys(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+    def pruning = (GraftTableSource.lastKeptDirs.get, GraftTableSource.lastPrunedDirs.get)
+    assert(keys(t.where($"k" === p53)) == Set(p53))
+    assert(pruning == (2, 2)) // the dirs of 2^53 and 2^53 + 1 share one stat
+    assert(keys(t.where($"k" === (p53 + 1))) == Set(p53 + 1))
+    assert(pruning == (2, 2))
+    assert(keys(t.where($"k".between(p53, p53 + 1))) == Set(p53, p53 + 1))
+    assert(pruning == (2, 2))
+    // Spark does not unwrap a Long->Double cast (SPARK-39476): the
+    // predicate on cast(k as double) reaches no scan, nothing prunes, and
+    // the rows are the ones that predicate holds for
+    val asDouble = t.where($"k" === p53.toDouble)
+    assert(keys(asDouble) == Set(p53, p53 + 1))
+    assert(pruning == (4, 0))
+    assert(keys(asDouble) == keys(TxTable.read(spark, root).where($"k" === p53.toDouble)))
+  }
+
+  test("graft_table(p) WHERE ... reaches the connector scan and prunes its dirs") {
+    val root = ingestTable("tvf", 4)
+    val ext = org.apache.spark.sql.GraftBridge.sessionWithInjected(spark)(ext =>
+      new graft.plans.GraftSparkExtensions().apply(ext))
+    val got = ext.sql(s"SELECT k, v FROM graft_table('$root') WHERE k BETWEEN 150 AND 249")
+    assert(ks(got) == (150L until 250L).map(k => k -> s"v$k").toSet)
+    assert(GraftTableSource.lastPrunedDirs.get == 2 && GraftTableSource.lastKeptDirs.get == 2)
+    // time travel through the version argument: version 2 holds batches 0 and 1
+    assert(ext.sql(s"SELECT count(*) FROM graft_table('$root', 2) WHERE k >= 200").head.getLong(0) == 0L)
+    assert(GraftTableSource.lastPrunedDirs.get == 2 && GraftTableSource.lastKeptDirs.get == 0)
+  }
+
+  test("readStream.format(\"graft\") on a path runs on GraftMicroBatchStream") {
+    val root = tmp("engine")
+    kv(1L -> "a").write.format("graft").save(root)
+    val q = spark.readStream.format("graft").load(root)
+      .writeStream.format("noop").option("checkpointLocation", tmp("engine-ckpt")).start()
+    try {
+      q.processAllAvailable()
+      assert(q.lastProgress.sources(0).description == s"GraftMicroBatchStream[$root]")
+      assert(q.recentProgress.map(_.numInputRows).sum == 1L)
+    } finally q.stop()
+  }
 }

@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * forms it replaced live in the test tree. A bounded per-group top-k
   * runs on `TopKRows.perGroup`, not a hand-written rank window. TxTable
   * builds its keyed MERGE once, through `Gold.merge`, and takes a fresh
-  * dir's stats from its write. Gold mints pks without `uuid()`. */
+  * dir's stats from its write. Gold mints pks without `uuid()`. A
+  * filtered read prunes dirs only in the `format("graft")` connector,
+  * and a table is tailed only by its DSv2 micro-batch stream. */
 class SourceTripwireSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -115,5 +117,20 @@ class SourceTripwireSpec extends AnyFunSuite {
     assert(calls.nonEmpty && calls.forall { case (p, at) =>
       p == "graft/etl/TxTable.scala" && at > from && at < to },
       s"dirStatsOf called outside setStatsColumns: $calls")
+  }
+
+  test("one read path per mode: pruned reads only in the connector, tailing only in the DSv2 stream") {
+    val banned = Seq("GraftTailSource", "StreamSourceProvider", "streamingFrame", "graft_table_scan",
+      "def scan(", "def scanString(", "def lookup(", "def pruneDirs(")
+    val hits = for ((p, src) <- sources; b <- banned if src.contains(b)) yield s"$p: $b"
+    assert(hits.isEmpty, s"a second read path is back: ${hits.mkString(", ")}")
+    val prunes = for ((p, src) <- sources if p.startsWith("graft/sources/");
+                      _ <- "TxTable\\.pruneSnapshot\\(".r.findAllMatchIn(src)) yield p
+    assert(prunes == Seq("graft/sources/GraftTableSource.scala"),
+      s"TxTable.pruneSnapshot( under graft/sources: $prunes; both batch scans prune through keptDirs")
+    val helper = sources.collectFirst { case ("graft/sources/GraftTableSource.scala", s) => s }.get
+    val at = helper.indexOf("TxTable.pruneSnapshot(")
+    assert(helper.lastIndexOf("def ", at) == helper.indexOf("def keptDirs("),
+      "the one TxTable.pruneSnapshot( call under graft/sources sits outside keptDirs")
   }
 }

@@ -23,6 +23,28 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     TxTable.read(spark, root, version).collect()
       .map(r => (r.getLong(r.fieldIndex("k")), r.getString(r.fieldIndex("v")))).toSet
 
+  private def connector(root: String, version: Long) = {
+    val r = spark.read.format("graft")
+    (if (version >= 0) r.option("versionAsOf", version) else r).load(root)
+  }
+
+  /** `c BETWEEN lo AND hi` read through the connector, whose scan prunes
+    * dirs by their stats before Spark filters the rows. */
+  private def rangeRead(root: String, c: String, lo: Any, hi: Any,
+                        version: Long = -1L): org.apache.spark.sql.DataFrame =
+    connector(root, version).where(org.apache.spark.sql.functions.col(c).between(lo, hi))
+
+  /** `c = v` read through the connector (Bloom filters prune its dirs). */
+  private def pointRead(root: String, c: String, v: Any): org.apache.spark.sql.DataFrame =
+    connector(root, -1L).where(org.apache.spark.sql.functions.col(c) === v)
+
+  /** The manifest prune decision for one closed range on `c`. */
+  private def pruneRange(root: String, c: String, lo: Double, hi: Double,
+                         version: Long = -1L): (Seq[String], Int) =
+    TxTable.pruneSnapshot(root, TxTable.snapshot(root, version), Map(c -> (lo, hi)))
+
+  private def lastKept = graft.sources.GraftTableSource.lastKeptDirs.get
+
   test("refresh/append/merge commit monotonically increasing versions") {
     val root = tmp()
     assert(!TxTable.exists(root))
@@ -409,7 +431,7 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(stats.forall(st => st.max - st.min < 3999.0 / 2),
       s"clustered ranges not tight: ${stats.map(st => (st.min, st.max))}")
     // a narrow range prunes most dirs at the MANIFEST level…
-    val (kept, dropped) = TxTable.pruneDirs(root, "k", 100, 300)
+    val (kept, dropped) = pruneRange(root, "k", 100, 300)
     assert(dropped > 0 && kept.length < s.dirs.length,
       s"no manifest-level pruning: kept ${kept.length} of ${s.dirs.length}")
     // …and the pruned scan is value-identical to the unpruned filter
@@ -417,10 +439,12 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val want = asSet(TxTable.read(spark, root)
       .filter(org.apache.spark.sql.functions.col("k").between(100, 300)))
-    assert(want.size == 201 && asSet(TxTable.scan(spark, root, "k", 100, 300)) == want)
+    assert(want.size == 201 && asSet(rangeRead(root, "k", 100, 300)) == want)
+    assert(lastKept == kept.length, s"the connector scan kept $lastKept dirs, the prune ${kept.length}")
     // an all-pruned range returns an EMPTY frame with the table schema
-    val empty = TxTable.scan(spark, root, "k", 100000, 200000)
+    val empty = rangeRead(root, "k", 100000, 200000)
     assert(empty.count() == 0 && empty.columns.toSeq == Seq("k", "v"))
+    assert(lastKept == 0)
     // rows are physically clustered inside each dir too (the in-dir sort)
     assert(TxTable.compact(spark, root, clusterBy = Seq("k")) == cv + 1)
   }
@@ -443,7 +467,7 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       "carried partition lost its stats across a scoped merge")
     // pruning still honors the unstatted rewritten dirs (always kept):
     // the updated row (k=1 in the new x dir) must survive a pruned scan
-    val got = TxTable.scan(spark, root, "k", 0, 10).select("k", "v").collect()
+    val got = rangeRead(root, "k", 0, 10).select("k", "v").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got.contains(1L -> "X"), s"pruned scan lost the unstatted dir's rows: $got")
     assert(got == (0L to 10L).map(i => (i, if (i == 1) "X" else s"v$i")).toSet)
@@ -494,13 +518,14 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       s.col == "k" && s.min == 3000.0 && s.max == 3000.0))
     // a narrow range over this never-compacted table prunes at the
     // manifest level, with result identity vs the unpruned filter
-    val (kept, dropped) = TxTable.pruneDirs(root, "k", 1000, 1049)
+    val (kept, dropped) = pruneRange(root, "k", 1000, 1049)
     assert(dropped >= 3 && kept.length == 1,
       s"merge-committed table did not prune: kept ${kept.length}, dropped $dropped")
     def asSet(df: org.apache.spark.sql.DataFrame) = df.select("k", "v").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val want = asSet(TxTable.read(spark, root).filter(col("k").between(1000, 1049)))
-    assert(want.size == 50 && asSet(TxTable.scan(spark, root, "k", 1000, 1049)) == want)
+    assert(want.size == 50 && asSet(rangeRead(root, "k", 1000, 1049)) == want)
+    assert(lastKept == 1)
   }
 
   test("schema contract: mismatched commit rejected up front; evolve records the new schema") {
@@ -658,10 +683,11 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     // predicate, so the dir gets the (+Inf, -Inf) sentinel and every
     // range scan prunes it forever
     TxTable.append(spark, root, df(1L -> "x").limit(0))
-    val (kept, dropped) = TxTable.pruneDirs(root, "k", -1e18, 1e18)
+    val (kept, dropped) = pruneRange(root, "k", -1e18, 1e18)
     assert(dropped == 1 && kept.length == 1,
       s"empty dir not pruned: kept ${kept.length}, dropped $dropped")
-    assert(TxTable.scan(spark, root, "k", 0, 10).count() == 1)
+    assert(rangeRead(root, "k", 0, 10).count() == 1)
+    assert(lastKept == 1)
     assert(rowsOf(root) == Set(1L -> "a"))
   }
 
@@ -675,9 +701,10 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root, "_txlog", "v00000000.stats.json"),
       s"""{"version":0,"stats":[{"dir":"$dir","col":"k","min":NaN,"max":NaN}]}""")
-    val (kept, dropped) = TxTable.pruneDirs(root, "k", 0, 10)
+    val (kept, dropped) = pruneRange(root, "k", 0, 10)
     assert(kept == Seq(dir) && dropped == 0, "a NaN stat must never prune a dir")
-    assert(TxTable.scan(spark, root, "k", 0, 10).count() == 1)
+    assert(rangeRead(root, "k", 0, 10).count() == 1)
+    assert(lastKept == 1)
   }
 
   test("all-NULL cluster column: compact omits the stat instead of failing") {
@@ -692,9 +719,9 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     val stats = TxTable.readStats(root, cv)
     assert(stats.exists(_.col == "k") && !stats.exists(_.col == "w"))
     // the unstatted column never prunes — all rows stay reachable
-    val (_, dropped) = TxTable.pruneDirs(root, "w", 0, 1)
+    val (_, dropped) = pruneRange(root, "w", 0, 1)
     assert(dropped == 0)
-    assert(TxTable.scan(spark, root, "w", 0, 1).count() == 0) // exact filter still applies
+    assert(rangeRead(root, "w", 0, 1).count() == 0) // exact filter still applies
   }
 
   test("a stale hint re-seeds after the forward probe (read-heavy write-idle table)") {
@@ -780,8 +807,8 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
       .filter($"sha" === "doc-01-05").count() == 1)
     // rewritten dirs got fresh blooms: surviving neighbors still found,
     // deleted keys prune everywhere
-    assert(TxTable.lookup(spark, root, "sha", "doc-01-06").count() == 1)
-    assert(TxTable.lookup(spark, root, "sha", "doc-01-05").count() == 0)
+    assert(pointRead(root, "sha", "doc-01-06").count() == 1)
+    assert(pointRead(root, "sha", "doc-01-05").count() == 0)
   }
 
   test("updateKeys/updateRange: scoped rewrite applies assignments only to matching rows/dirs") {
@@ -808,7 +835,7 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(carried.size == 4,
       s"${carried.size} of 5 dirs carried — update rewrote non-matching dirs")
     // fresh stats cover the rewritten dir: k-range pruning still exact
-    assert(TxTable.scan(spark, root, "k", 25, 25).count() == 1)
+    assert(rangeRead(root, "k", 25, 25).count() == 1)
     // time travel reads the pre-update value
     assert(TxTable.read(spark, root, before.version).filter($"k" === 25L)
       .head().getString(1) == "doc-01-05")
@@ -889,12 +916,12 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(rows.exists(_.isNullAt(0)), "NULL row must survive a range delete")
     // partial delete rewrites just that dir, stats stay prunable
     TxTable.deleteRange(spark, root, "k", 0, 4)
-    assert(TxTable.scan(spark, root, "k", 0, 9).collect()
+    assert(rangeRead(root, "k", 0, 9).collect()
       .map(_.getString(1)).toSet == (5 until 10).map(j => s"v0-$j").toSet)
     // a range delete on a STRING column must delete NOTHING (the
     // double cast is NULL for every row — NULL is not a match; the
-    // un-coalesced form deleted every such row, the read-side scan()'s
-    // exact opposite)
+    // un-coalesced form deleted every such row, the exact opposite of a
+    // filtered read)
     val nBefore = TxTable.read(spark, root).count()
     TxTable.deleteRange(spark, root, "v", 0, 100)
     assert(TxTable.read(spark, root).count() == nBefore,
@@ -958,9 +985,9 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     assert(java.nio.file.Files.getAttribute(aFile, "unix:nlink")
       .asInstanceOf[Number].intValue >= 2, "clone copied instead of linking")
     // re-keyed stats prune on the clone; carried blooms serve lookups
-    val (keptC, prunedC) = TxTable.pruneDirs(dst, "k", 0, 19)
+    val (keptC, prunedC) = pruneRange(dst, "k", 0, 19)
     assert(prunedC >= 2 && keptC.length == 1)
-    assert(TxTable.lookup(spark, dst, "sha", "h-1-5").count() == 1)
+    assert(pointRead(dst, "sha", "h-1-5").count() == 1)
     // divergence is isolated both ways
     TxTable.append(spark, dst, batch(9))
     TxTable.deleteKeys(spark, src, "sha", Seq("h-0-0"))
@@ -1130,22 +1157,23 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     val lDirs = TxTable.snapshot(lroot, lv).dirs.length
     assert(zDirs >= 8, s"need a multi-dir layout to test pruning, got $zDirs")
     // z-order: a narrow slice on x AND a narrow slice on y each prune
-    val (keptZx, _) = TxTable.pruneDirs(zroot, "x", 0, 4, zv)
-    val (keptZy, _) = TxTable.pruneDirs(zroot, "y", 0, 4, zv)
+    val (keptZx, _) = pruneRange(zroot, "x", 0, 4, zv)
+    val (keptZy, _) = pruneRange(zroot, "y", 0, 4, zv)
     assert(keptZx.length <= zDirs / 2, s"x-slice kept ${keptZx.length} of $zDirs")
     assert(keptZy.length <= zDirs / 2, s"y-slice kept ${keptZy.length} of $zDirs")
     // linear: leading column prunes, the second column cannot (every
     // x-bucket spans the full y range)
-    val (keptLx, _) = TxTable.pruneDirs(lroot, "x", 0, 4, lv)
-    val (keptLy, _) = TxTable.pruneDirs(lroot, "y", 0, 4, lv)
+    val (keptLx, _) = pruneRange(lroot, "x", 0, 4, lv)
+    val (keptLy, _) = pruneRange(lroot, "y", 0, 4, lv)
     assert(keptLx.length <= lDirs / 2)
     assert(keptLy.length == lDirs, "linear layout should not prune the non-leading column")
     // identity on both axes through the pruned scan
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSet
-    assert(ids(TxTable.scan(spark, zroot, "x", 0, 4, zv)) ==
+    assert(ids(rangeRead(zroot, "x", 0, 4, zv)) ==
       ids(TxTable.read(spark, zroot, zv).filter($"x".between(0L, 4L))))
-    assert(ids(TxTable.scan(spark, zroot, "y", 0, 4, zv)) ==
+    assert(lastKept == keptZx.length)
+    assert(ids(rangeRead(zroot, "y", 0, 4, zv)) ==
       ids(TxTable.read(spark, zroot, zv).filter($"y".between(0L, 4L))))
   }
 
@@ -1163,7 +1191,7 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     // every present key is FOUND (no false negatives), each in one dir
     (0 until 6).foreach { i =>
       val probe = f"sha-${(3 * 7 + i) % 40}%02d-$i%02d"
-      val hit = TxTable.lookup(spark, root, "sha", probe).collect()
+      val hit = pointRead(root, "sha", probe).collect()
       assert(hit.length == 1 && hit.head.getString(1) == probe,
         s"lookup lost present key $probe")
     }
@@ -1174,7 +1202,8 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     val (keptMiss, _) = TxTable.pruneSnapshot(root, sMiss, Map.empty, Map.empty,
       Map("sha" -> Seq("sha-not-present-anywhere")))
     assert(keptMiss.length <= 3, s"miss kept ${keptMiss.length} of 6 dirs")
-    assert(TxTable.lookup(spark, root, "sha", "sha-not-present-anywhere").count() == 0)
+    assert(pointRead(root, "sha", "sha-not-present-anywhere").count() == 0)
+    assert(lastKept == keptMiss.length)
     // a dir without a filter is always kept: a raw tryCommit-style dir
     // (simulated by deleting one bloom file) must not be pruned
     val victim = sMiss.dirs.head
@@ -1214,8 +1243,8 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     // scoped merge rewrites partition x: its fresh dir gets a fresh
     // filter, and the new key is immediately findable
     TxTable.mergeUpsertPartitioned(spark, root, pdf((3L, "h-cc", "x")), "k", "p")
-    assert(TxTable.lookup(spark, root, "sha", "h-cc").count() == 1)
-    assert(TxTable.lookup(spark, root, "sha", "h-aa").count() == 1) // carried dir
+    assert(pointRead(root, "sha", "h-cc").count() == 1)
+    assert(pointRead(root, "sha", "h-aa").count() == 1) // carried dir
     val sBefore = TxTable.snapshot(root)
     val (keptCc, _) = TxTable.pruneSnapshot(root, sBefore, Map.empty, Map.empty,
       Map("sha" -> Seq("h-cc")))
@@ -1230,7 +1259,7 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     val before = bloomCount
     TxTable.vacuum(root, TxTable.latestVersion(root), graceMs = 0)
     assert(bloomCount < before, "vacuum left orphaned bloom files")
-    assert(TxTable.lookup(spark, root, "sha", "h-cc").count() == 1)
+    assert(pointRead(root, "sha", "h-cc").count() == 1)
   }
 
   test("string-stat primitives: code-point order, prefix increment, truncation bounds") {
@@ -1285,19 +1314,20 @@ class TxTableSpec extends AnyFunSuite with LocalSpark {
     // must keep batch A (its recorded max is the incremented prefix,
     // which bounds every full-length value from above)
     val probe = "a" * 80 + "3"
-    val hitA = TxTable.scanString(spark, root, "s", probe, probe)
+    val hitA = rangeRead(root, "s", probe, probe)
     assert(hitA.count() == 1L, "truncated max wrongly pruned the dir holding the value")
     // a z-range query prunes batch A and the null batch, keeps B only
     val (keptZ, prunedZ) = TxTable.pruneSnapshot(root, TxTable.snapshot(root, latest),
       Map.empty, Map("s" -> ("z", Some("zz"))))
     assert(keptZ.length == 1 && prunedZ == 2,
       s"expected 1 kept / 2 pruned, got ${keptZ.length} / $prunedZ")
-    assert(TxTable.scanString(spark, root, "s", "z", "zz")
+    assert(rangeRead(root, "s", "z", "zz")
       .collect().map(_.getString(1)).toSet == Set("zeta", "zulu"))
-    // identity contract: scanString ≡ full read + exact filter
+    assert(lastKept == 1)
+    // identity contract: the pruned string read ≡ full read + exact filter
     val full = TxTable.read(spark, root).filter($"s".between("a", "b"))
       .collect().map(_.getLong(0)).toSet
-    val pruned = TxTable.scanString(spark, root, "s", "a", "b")
+    val pruned = rangeRead(root, "s", "a", "b")
       .collect().map(_.getLong(0)).toSet
     assert(pruned == full && full == (0L until 5L).toSet)
   }
